@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /** TPC-H q-family scale rehearsal (local iteration; not part of the
   * driver contract): union-multiplies the sf0.1 relational set into
   * `copies` disjoint key ranges — 10 copies ≈ a real sf1 (6M-row
@@ -61,7 +63,7 @@ object ScaleRehearsalQ {
     // stay fixed — TPC-H dims that do NOT scale with SF.
     def shifted(t: String, keys: Seq[String], names: Seq[String]): DataFrame =
       (0 until copies).map { k =>
-        val base = spark.read.parquet(s"$sfDir/$t.parquet")
+        val base = Tables.readDeclared(spark, sfDir, t)
         val withKeys = keys.foldLeft(base)((d, c) =>
           d.withColumn(c, col(c) + lit(k * Off)))
         names.foldLeft(withKeys)((d, c) =>
@@ -79,10 +81,10 @@ object ScaleRehearsalQ {
       shifted("part", Seq("p_partkey"), Nil)
         .write.mode("overwrite").parquet(s"$scratch/part.parquet")
       Seq("nation", "region", "events", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet")
+        Tables.readDeclared(spark, sfDir, t)
           .write.mode("overwrite").parquet(s"$scratch/$t.parquet")
       }
-      spark.read.parquet(s"$scratch/lineitem.parquet").count()
+      Tables.readDeclared(spark, scratch, "lineitem").count()
     }
 
     // ---- the full q-family through the gate's own query functions -----

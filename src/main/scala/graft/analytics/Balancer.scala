@@ -193,9 +193,12 @@ object Balancer {
     def intervals(ns: Seq[(Long, String, Long)])
         : Map[String, IndexedSeq[(Long, Long, Long)]] = {
       // (id, start, end) per rack key ("" = global), ids ascending —
-      // Window.partitionBy(location).orderBy(id) / Window.orderBy(id)
+      // Window.partitionBy(location).orderBy(id) / Window.orderBy(id).
+      // A null location has no rack: packPass's rack-equality join never
+      // matches NULL, so same-rack passes skip those nodes (cross-rack
+      // passes still pair them).
       val grouped =
-        if (sameRack) ns.filter(_._3 > 0).groupBy(_._2)
+        if (sameRack) ns.filter(n => n._3 > 0 && n._2 != null).groupBy(_._2)
         else Map("" -> ns.filter(_._3 > 0))
       grouped.map { case (k, g) =>
         var cum = 0L

@@ -2,15 +2,20 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.model.TestdataSchema
+
 /** Loaders for the driver-provided TPC-H-ish testdata
   * (see /root/repo/TESTDATA.md). Each table is one parquet file under
-  * `sfDir`. Kept as plain `spark.read.parquet` so Catalyst can push
-  * filters/projections into the scan — callers must NOT cache here.
+  * `sfDir`, read with its declared schema ([[TestdataSchema]]) so that
+  * no read launches a footer-inference job. Kept as a plain parquet
+  * scan so Catalyst can push filters/projections into it — callers
+  * must NOT cache here.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** The one read of a raw testdata table: its parquet file under
+    * `sfDir`, with the declared schema instead of an inferred one. */
+  def readDeclared(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(TestdataSchema(name)).parquet(s"$sfDir/$name.parquet")
 
   /** The raw tables with a materialized cluster layout
     * ([[Scale.writeRelationalTables]]). ONLY these shadow under
@@ -39,7 +44,7 @@ object Tables {
           s"${written.getOrElse("<unrecorded>")}, not the requested $sfDir — " +
           s"set $LayoutDirKey when activating the layout, or load via views")
       spark.table(s"graft_state_$name")
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else readDeclared(spark, sfDir, name)
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

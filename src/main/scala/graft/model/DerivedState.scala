@@ -203,8 +203,8 @@ object DerivedState {
     * events.ts is ALWAYS BIGINT nanos here (normalizeEventTs). */
   def register(spark: SparkSession, sfDir: String): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    graft.core.Tables.names.foreach { t =>
-      val raw = spark.read.parquet(s"$sfDir/$t.parquet")
+    TestdataSchema.names.foreach { t =>
+      val raw = graft.core.Tables.readDeclared(spark, sfDir, t)
       val df = if (t == "events") normalizeEventTs(raw) else raw
       df.createOrReplaceTempView(t)
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.functions.{Dedup, Events, Shuffles, TextFunctions, Vectors}
-import graft.model.DerivedState
+import graft.model.{DerivedState, TestdataSchema}
 
 /** The record type the F5 encoder-round-trip gate entry serializes —
   * top-level so both the product and kryo Encoders can resolve it. */
@@ -1302,7 +1302,6 @@ object DataOpsQueries {
     // oracle is identical to e2's: stream/batch parity is the check.
     "e4_stream_window_parity" -> { (s, dir) =>
       DerivedState.register(s, dir) // sets the nanosAsLong conf for events
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
       val sinkName = "e4sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
@@ -1313,7 +1312,7 @@ object DataOpsQueries {
         srcDir.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet"))
       val stream = DerivedState.normalizeEventTs(
-          s.readStream.schema(schema).parquet(srcDir.toString))
+          s.readStream.schema(TestdataSchema("events")).parquet(srcDir.toString))
         .withColumn("day", expr("ts div 86400000000000"))
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),

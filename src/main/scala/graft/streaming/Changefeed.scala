@@ -109,17 +109,6 @@ object Changefeed {
     docs.withWatermark(timeCol, watermark)
       .dropDuplicatesWithinWatermark(idCol)
 
-  /** Streaming NEAR-dup classification: the streaming twin of
-    * [[graft.functions.Dedup.incrementalLsh]]. The standing corpus's
-    * banded signature frame is computed ONCE, up front, and persisted
-    * (in production: the maintained banded signature table, reloaded per
-    * restart) — foreachBatch re-executes the static side's plan every
-    * micro-batch, so handing it the raw corpus would re-tokenize and
-    * re-minhash the whole standing corpus per batch. With the persisted
-    * signature frame, each batch pays only its own signature map work +
-    * the band join, and state never grows with the stream. The
-    * classified rows land in `sink` per batch (the caller's parquet
-    * append / index-maintenance hook). */
   /** Start a streaming query whose every batch reads the PINNED
     * `standing` frame, releasing the cache exactly once when THIS run
     * terminates — repeated start/stop in one session (tests, restarts)
@@ -170,6 +159,17 @@ object Changefeed {
     query
   }
 
+  /** Streaming NEAR-dup classification: the streaming twin of
+    * [[graft.functions.Dedup.incrementalLsh]]. The standing corpus's
+    * banded signature frame is computed ONCE, up front, and persisted
+    * (in production: the maintained banded signature table, reloaded per
+    * restart) — foreachBatch re-executes the static side's plan every
+    * micro-batch, so handing it the raw corpus would re-tokenize and
+    * re-minhash the whole standing corpus per batch. With the persisted
+    * signature frame, each batch pays only its own signature map work +
+    * the band join, and state never grows with the stream. The
+    * classified rows land in `sink` per batch (the caller's parquet
+    * append / index-maintenance hook). */
   def streamingIncrementalLsh(docs: DataFrame, existing: DataFrame,
                               idCol: String, textCol: String,
                               sink: (DataFrame, Long) => Unit,

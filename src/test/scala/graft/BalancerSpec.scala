@@ -110,6 +110,33 @@ class BalancerSpec extends SparkSpec {
     assert(fast == slow)
   }
 
+  test("pairs: null-location nodes skip same-rack passes on both paths") {
+    // capacity 10000, avg 26%: over {n1 /rackA, n3 null}, under
+    // {n2 /rackA, n4 null, n5 /rackB}, every quota 1000. The dataflow's
+    // rack-equality join never matches NULL, so n3/n4 must not pair in
+    // the same-rack pass (and a null rack beside a named one must not
+    // break the driver path's rack ordering); they meet cross-rack.
+    val mixed = Seq(
+      dn(1L, 5000L, "/rackA"),
+      dn(2L, 1000L, "/rackA"),
+      dn(3L, 5000L, null),
+      dn(4L, 1000L, null),
+      dn(5L, 1000L, "/rackB"),
+    ).toDF("id", "capacity", "dfsUsed", "remaining", "lastUpdated",
+      "location", "adminState", "version")
+    val fast = rows(Balancer.pairs(mixed, now, t)
+      .orderBy(col("pass"), col("sourceId"), col("targetId")))
+    assert(fast == Seq(
+      Seq(1L, 1L, 2L, 1000L),   // rackA same-rack
+      Seq(4L, 3L, 4L, 1000L)))  // null-rack n3 only pairs cross-rack
+    val slow = rows(Balancer.pairsDataflow(
+        Balancer.classify(mixed, now, t)
+          .select(col("id"), col("location"), col("nodeClass"),
+            col("maxSizeToMove")))
+      .orderBy(col("pass"), col("sourceId"), col("targetId")))
+    assert(fast == slow)
+  }
+
   test("movePlan: claim-once, target-exclusion, rack rule, byte budget") {
     // blocks on n1 (source of pairs 1→2 and 1→5, both same-rack) and on
     // n3 (source of 3→4, 3→6 same-rack and 3→5 cross-rack)
