@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times SparkEntry.benchQueries on
-  * SPARK_GRAFT_SF_DIR at local[32] and prints one JSON line.
+  * SPARK_GRAFT_SF_DIR in a [[graft.core.Sessions.local]] session and
+  * prints one JSON line.
   *
   * Methodology: one untimed warmup query amortizes session/codegen
   * startup; caches are cleared between repetitions so each runs cold from
@@ -35,17 +34,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated subset for local iteration (driver sets
+    // neither). An explicit subset may name ANY gate query — new-entry
+    // familiarization timings use this — while the default run times
+    // exactly the headline set.
+    val only = SparkEntry.subset(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val names = only.fold(SparkEntry.benchQueries)(_.toSeq.sorted)
+    val spark = graft.core.Sessions.local()
 
     // warmup (untimed): session, codegen, parquet footer caches
     SparkEntry.queries("q6_revenue_forecast")(spark, sfDir).count()
@@ -63,36 +59,9 @@ object Bench {
     require(layout == "views" || layout == "bucketed",
       s"SPARK_GRAFT_BENCH_LAYOUT must be 'views' or 'bucketed', got '$layout'")
     val layoutWriteSec =
-      if (layout == "bucketed") {
-        graft.model.DerivedState.register(spark, sfDir)
-        val t0 = System.nanoTime()
-        graft.core.Scale.writeStateTables(spark.table("file"),
-          spark.table("block"), spark.table("datanode"))
-        // r16: the bucketed pass now materializes the SAME layout set
-        // the bucketed gate runs on — events (user_id) and the TPC-H
-        // facts (orderkey) alongside the state tables, so the e- and
-        // q-family headline lines read their cluster layouts too
-        // (layoutWriteSec grows accordingly; tracked separately as
-        // always, never folded into a query's time)
-        graft.core.Scale.writeEventsTable(spark.table("events"))
-        graft.core.Scale.writeRelationalTables(
-          spark.table("lineitem"), spark.table("orders"))
-        spark.conf.set("graft.layout", "bucketed")
-        // provenance for the raw-table shadow (Tables.LayoutDirKey):
-        // the bucketed lineitem/orders only serve THIS dir
-        spark.conf.set(graft.core.Tables.LayoutDirKey, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } else 0.0
+      if (layout == "bucketed") graft.core.Scale.activateBucketedLayout(spark, sfDir)
+      else 0.0
 
-    // optional comma-separated subset for local iteration (driver sets
-    // neither). An explicit subset may name ANY gate query — new-entry
-    // familiarization timings use this — while the default run times
-    // exactly the headline set.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = (if (only.isDefined) SparkEntry.queries.keys.toSeq.sorted
-                 else SparkEntry.benchQueries)
-      .filter(SparkEntry.queries.contains)
-      .filter(n => only.forall(_.contains(n)))
     // true median: midpoint average for even rep counts — ts(size/2) would
     // report the WORSE of two runs under REPS=2, defeating the purpose
     def median(ts: Seq[Double]): Double =
@@ -125,10 +94,7 @@ object Bench {
     // comfortably above what a saturated self-load sustains, and the
     // field remains advisory: an uncorroborated fallback must be read
     // as a possible real regression. Sampled cheaply from /proc/loadavg.
-    def loadAvg1m(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    import RehearsalUtil.loadAvg1m
     def measure(name: String): (String, Vector[Double], Boolean, Vector[Double], Int, Double) = {
       var failed = false
       def once(): Double = {

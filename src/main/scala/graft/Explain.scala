@@ -11,12 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q3_shipping_priority", "s8_block_entries", "n1_block_locations", "p1_indexed_find")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")
@@ -46,11 +41,9 @@ object Explain {
       },
       "n_block_received_ops_pinned" -> { (s, dir) =>
         graft.model.DerivedState.register(s, dir)
-        val pin = graft.store.StateStore.live(s.table("block")).localCheckpoint()
-        pin.createOrReplaceTempView("graft_block_pin")
-        s.sql(graft.model.DerivedState.reportedSqlFrom("graft_block_pin"))
-          .createOrReplaceTempView("graft_reported_pin")
+        val (_, _, blockView, reportedView) =
+          graft.queries.AnalyticsQueries.pinnedBlockReported(s)
         s.sql(graft.queries.AnalyticsQueries.blockReceivedOpsSqlFrom(
-          "graft_reported_pin", "graft_block_pin"))
+          reportedView, blockView))
       })
 }

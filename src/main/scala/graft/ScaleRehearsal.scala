@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Order-of-magnitude rehearsal main (local iteration; not part of the
@@ -19,14 +19,7 @@ object ScaleRehearsal {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     RehearsalUtil.enforceHeapRule(copies.toDouble)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     graft.model.DerivedState.register(spark, sfDir)
     val now = graft.model.DerivedState.NowMs
     val scratch = graft.core.Caching.scratchDir("rehearsal").toString

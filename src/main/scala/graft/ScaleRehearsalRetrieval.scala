@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Retrieval-family scale rehearsal (local iteration; not part of the
@@ -28,14 +28,7 @@ import org.apache.spark.sql.functions._
 object ScaleRehearsalRetrieval {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     import graft.functions.{Dedup, TextFunctions}
     val scratch = graft.core.Caching.scratchDir("rehearsal_ret").toString
     val reps = RehearsalUtil.reps(default = 2)

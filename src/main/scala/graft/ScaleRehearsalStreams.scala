@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The last-mile scale rehearsal (local iteration; not part of the
@@ -21,14 +21,7 @@ object ScaleRehearsalStreams {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     // Streams runs at base scale: the oversized-heap trap applies
     RehearsalUtil.enforceHeapRule(1.0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     val scratch = graft.core.Caching.scratchDir("rehearsal_streams").toString
     val Off = 1000000000L
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The 100×-class rehearsal main (local iteration; not part of the
@@ -29,14 +29,8 @@ object ScaleRehearsalXL {
     val inner = 14
     require(copies % inner == 0, s"copies must be a multiple of $inner")
     val outer = copies / inner
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     graft.model.DerivedState.register(spark, sfDir)
     val now = graft.model.DerivedState.NowMs
     val scratch = graft.core.Caching.scratchDir("rehearsal_xl").toString

@@ -128,6 +128,20 @@ object SparkEntry {
     "sim8_ivf_train_gain", "sim9_ivfpq_adc", "sim10_ivfpq_recall",
     "sim11_ivfpq_ingest", "d7_dup_clusters", "d16_cluster_best")
 
+  /** The optional comma-separated subset a main runs instead of its full
+    * set (Bench's `SPARK_GRAFT_BENCH_ONLY`, Verify's
+    * `SPARK_GRAFT_VERIFY_ONLY`). Names are trimmed and empty tokens
+    * dropped; an unset or empty value means no filter (None). Every name
+    * must be a gate entry: a typo would otherwise run nothing and print
+    * an empty result that reads as a pass or a speedup. */
+  def subset(value: Option[String]): Option[Set[String]] = {
+    val names = value.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty,
+      s"not gate entries: ${unknown.toSeq.sorted.mkString(", ")}")
+    Some(names).filter(_.nonEmpty)
+  }
+
   /** Headline queries timed by Bench (a representative mix: scans/aggs,
     * multi-way joins, windows, recursion, reconciliation, dedup, ANN). */
   val benchQueries: Seq[String] = Seq(

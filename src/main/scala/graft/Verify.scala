@@ -1,22 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional comma-separated subset for local iteration (driver sets
+    // neither); see SparkEntry.subset. The SAME filter applies to
+    // oracle_sql.json below, so a subset run can never pair fresh oracles
+    // with stale parquet (or vice versa) for the skipped queries.
+    val only = SparkEntry.subset(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = graft.core.Sessions.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_LAYOUT=bucketed: materialize the cluster layout
-    // ONCE (Scale.writeStateTables) and run the gate over it — every
+    // ONCE (Scale.activateBucketedLayout) and run the gate over it — every
     // state-table query then reads real bucketed parquet, so keyPrune's
     // scan pushdown and the co-located join paths are ORACLE-gated, not
     // just bench/spec-verified. The oracle side is unchanged (DuckDB
@@ -25,31 +22,7 @@ object Verify {
     val layout = sys.env.getOrElse("SPARK_GRAFT_VERIFY_LAYOUT", "views")
     require(layout == "views" || layout == "bucketed",
       s"SPARK_GRAFT_VERIFY_LAYOUT must be 'views' or 'bucketed', got '$layout'")
-    if (layout == "bucketed") {
-      graft.model.DerivedState.register(spark, sfDir)
-      graft.core.Scale.writeStateTables(spark.table("file"),
-        spark.table("block"), spark.table("datanode"))
-      // events rides the bucketed gate too (user_id buckets) — the
-      // e-family's joins/windows then read real bucketed parquet
-      graft.core.Scale.writeEventsTable(spark.table("events"))
-      // the TPC-H facts ride it since r16 (orderkey buckets): the
-      // q-family's l⋈o joins and q18's groupBy then run co-located
-      graft.core.Scale.writeRelationalTables(
-        spark.table("lineitem"), spark.table("orders"))
-      spark.conf.set("graft.layout", "bucketed")
-      // provenance for the raw-table shadow: Tables.load only serves the
-      // bucketed lineitem/orders for THIS dir (fails loudly otherwise)
-      spark.conf.set(graft.core.Tables.LayoutDirKey, sfDir)
-    }
-    // optional comma-separated subset for local iteration (driver sets
-    // neither). Tokens are trimmed and empties dropped — a whitespace-padded
-    // or empty value must not silently match nothing; an empty set means
-    // "no filter". The SAME filter applies to oracle_sql.json below, so a
-    // subset run can never pair fresh oracles with stale parquet (or vice
-    // versa) for the skipped queries.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    if (layout == "bucketed") graft.core.Scale.activateBucketedLayout(spark, sfDir)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

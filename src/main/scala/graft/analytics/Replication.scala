@@ -259,28 +259,17 @@ object Replication {
   def blockReceived(block: DataFrame, file: DataFrame, datanode: DataFrame,
                     opsIn: DataFrame, pending: Option[DataFrame] = None,
                     corrupt: Option[DataFrame] = None): DataFrame = {
-    // local profiling hook (SPARK_GRAFT_PROFILE_BR3=1): times each
-    // internal action; zero-cost no-op otherwise
-    val prof = sys.env.get("SPARK_GRAFT_PROFILE_BR3").contains("1")
-    def t[T](name: String)(f: => T): T =
-      if (!prof) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[br3] $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
     val b = live(block)
     // pin the receipt batch: it feeds the block prune, the stored-row
     // join and the post-op holder union — a view-backed ops frame (the
     // gate derives it from the reported view) would re-derive per
     // reference. Batch-sized by contract, so the checkpoint is bounded.
-    val ops = t("ops_ckpt")(opsIn.localCheckpoint())
+    val ops = opsIn.localCheckpoint()
     // ONE pruned scan feeds stored-row lookup, entry primary and holders;
     // the op batch's blockIds PUSH into the scan (keyPrune row-group
     // pruning) instead of semi-filtering after it
-    val pruned = t("pruned_ckpt")(
-      graft.core.Scale.keyPrune(b, "id", ops, "blockId")
-      .localCheckpoint())
+    val pruned = graft.core.Scale.keyPrune(b, "id", ops, "blockId")
+      .localCheckpoint()
     val freshest = pruned.groupBy(col("id").as("__bid"))
       .agg(max(col("generationStamp")).as("maxGenStamp"),
         max_by(col("length"), struct(col("generationStamp"), col("version")))
@@ -327,7 +316,7 @@ object Replication {
       // feeds the valid-op holder union below AND the final join — a
       // plain view would re-run the whole classification ladder twice;
       // op-batch-sized by contract, so the checkpoint is bounded
-      .transform(df => t("classified_ckpt")(df.localCheckpoint()))
+      .localCheckpoint()
     // post-op holder set per block, with rack/space for the excess pick —
     // the op node becomes a holder only after a VALID receipt: a corrupt
     // or rejected reporter never enters the block map in the reference
@@ -383,7 +372,7 @@ object Replication {
       .withColumn("__pri", count(lit(1)).over(wRack) > 1)
       .withColumn("__stdRank", row_number().over(wBlk.orderBy(
         col("__pri").desc, col("__rem").asc_nulls_last, col("datanodeId").asc)))
-      .transform { df => if (prof && sys.env.get("SPARK_GRAFT_PROFILE_BR3_PLAN").contains("1")) df.explain("formatted"); t("ranked_ckpt")(df.localCheckpoint()) } // feeds three probes below; holder-set-sized
+      .localCheckpoint() // feeds three probes below; holder-set-sized
     val stdPick = ranked.filter(col("__stdRank") === 1)
       .select(col("__hb").as("__sb"), col("datanodeId").as("__stdDrop"))
     val cnts = ranked.groupBy(col("__hb").as("__cb"))

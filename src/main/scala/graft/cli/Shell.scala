@@ -60,12 +60,7 @@ import graft.store.StateStore
 object Shell {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Shell <sfDir> <verb> [args...]")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-shell")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     run(spark, args(0), args(1), args.drop(2).toSeq).show(50, truncate = false)
     spark.stop()

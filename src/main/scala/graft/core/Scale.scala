@@ -151,6 +151,26 @@ object Scale {
     Seq(s"${prefix}_lineitem", s"${prefix}_orders")
   }
 
+  /** Switch the session to the bucketed layout for `sfDir`: register the
+    * derived views, write the state, events and relational tables from
+    * them, then set `graft.layout=bucketed` together with the provenance
+    * record [[Tables.LayoutDirKey]]. Every later `DerivedState.register`
+    * and `Tables.load` of `sfDir` reads the written tables. Returns the
+    * write time in seconds (view registration excluded). Must start from
+    * the views layout: writing the tables from their own shadow would
+    * read and overwrite the same files. */
+  def activateBucketedLayout(spark: SparkSession, sfDir: String): Double = {
+    graft.model.DerivedState.register(spark, sfDir)
+    val t0 = System.nanoTime()
+    writeStateTables(spark.table("file"), spark.table("block"),
+      spark.table("datanode"))
+    writeEventsTable(spark.table("events"))
+    writeRelationalTables(spark.table("lineitem"), spark.table("orders"))
+    spark.conf.set("graft.layout", "bucketed")
+    spark.conf.set(Tables.LayoutDirKey, sfDir)
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Cluster layout for the BM25 posting index: bucketed by term — the
     * serve join's key ([[graft.functions.TextFunctions.bm25TopKAgainst]]
     * joins the query melt on term), so on this layout the corpus-sized
@@ -351,13 +371,4 @@ object Scale {
     * operations over the same key reuses one shuffle. */
   def coPartition(df: DataFrame, key: String, partitions: Int): DataFrame =
     df.repartition(partitions, col(key))
-
-  /** Session defaults for the target cluster shape — documents the knobs
-    * the engine expects at scale (AQE incl. skew-join splitting). */
-  def tuned(builder: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    builder
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
 }

@@ -26,7 +26,7 @@ object Tables {
   private val BucketedRaw = Set("lineitem", "orders")
 
   /** Conf key recording WHICH sfDir the bucketed shadow tables were
-    * written from (set by the gate/bench mains next to
+    * written from (set by [[Scale.activateBucketedLayout]] next to
     * `graft.layout=bucketed`). The shadow only engages when it matches
     * the requested dir — a caller loading lineitem/orders from a
     * DIFFERENT directory in the same session must not silently get the

@@ -838,9 +838,6 @@ object Dedup {
         "graph has a path longer than maxRounds. Raise maxRounds, or for " +
         "adversarial long-chain graphs use a large-star/small-star variant " +
         "(labels would be silently wrong if returned here).")
-    if (sys.env.get("SPARK_GRAFT_PROFILE_CC").contains("1"))
-      println(s"[dupClusters] converged in $round rounds " +
-        s"(maxRounds=$maxRounds)")
     val out = labels.select(col("id"), col("label").as("clusterId"))
     graft.core.Caching.materializeAndRelease(out, Seq(edges, labels))
     } catch { case e: Throwable =>

@@ -34,7 +34,7 @@ object AnalyticsQueries {
     *
     * Returns (block, reported, blockViewName, reportedViewName); the view
     * names let SQL scripts (BlockReceivedOpsSql) re-point too. */
-  private def pinnedBlockReported(s: SparkSession)
+  private[graft] def pinnedBlockReported(s: SparkSession)
       : (DataFrame, DataFrame, String, String) =
     if (s.conf.getOption("graft.layout").contains("bucketed"))
       (s.table("block"), s.table("reported"), "block", "reported")

@@ -186,16 +186,6 @@ object Mutations {
   def rename(file: DataFrame, renames: DataFrame, nowMs: Long,
              versionBump: Long = 1000000000L, maxDepth: Int = 64,
              dirBroadcastLimit: Long = 2000000L): DataFrame = {
-    // local profiling hook (SPARK_GRAFT_PROFILE_RENAME=1): times each
-    // internal action; zero-cost no-op otherwise
-    val profR = sys.env.get("SPARK_GRAFT_PROFILE_RENAME").contains("1")
-    def tr[T](name: String)(fn: => T): T =
-      if (!profR) fn else {
-        val t0 = System.nanoTime()
-        val r = fn
-        println(f"[ren] $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
     // maxDepth 64 (vs the BFS ops' 16): the ancestry walk is O(depth)
     // per DESTINATION dir — driver-trivial on the fast path — so the cap
     // exists only to refuse corrupt cycles, and a legal deep namespace
@@ -268,9 +258,9 @@ object Mutations {
     // is being renamed at all; a file-only batch (the overwhelming case —
     // every BenchOps rename, most real traffic) skips the walk, its
     // joins, and the extra cache entirely
-    val hasDirRenames = tr("seed_probe")(seed.limit(1).count() > 0)
-    val validated = if (!hasDirRenames) baseValidated else tr("dir_validate")(validateDirMoves(
-      f, baseValidated, seed, sp, maxDepth, dirBroadcastLimit))
+    val hasDirRenames = seed.limit(1).count() > 0
+    val validated = if (!hasDirRenames) baseValidated else validateDirMoves(
+      f, baseValidated, seed, sp, maxDepth, dirBroadcastLimit)
     val ok = validated.filter(col("reject").isNull)
     // broadcast: the accepted-rename side is batch-bounded; the planner
     // sees a stats-less persisted frame and would shuffle both sides
@@ -300,7 +290,7 @@ object Mutations {
     // plus two batch frames pinned with no handle for the caller to drop
     // (the returned persisted frame is the caller's, per the Caching
     // contract, like dupClusters)
-    tr("rename_out_mat")(graft.core.Caching.materializeAndRelease(out, Seq(f, baseValidated, validated)))
+    graft.core.Caching.materializeAndRelease(out, Seq(f, baseValidated, validated))
   }
 
   /** The dir-rename ancestry/entanglement pass of [[rename]] — only
@@ -730,16 +720,6 @@ object Mutations {
     * persisted frame the caller must unpersist (the rename convention). */
   def copy(file: DataFrame, block: DataFrame, requests: DataFrame,
            idBase: Long, blockIdBase: Long, maxDepth: Int = 16): DataFrame = {
-    // local profiling hook (SPARK_GRAFT_PROFILE_COPY=1): times each
-    // internal action; zero-cost no-op otherwise
-    val profC = sys.env.get("SPARK_GRAFT_PROFILE_COPY").contains("1")
-    def tc[T](name: String)(fn: => T): T =
-      if (!profC) fn else {
-        val t0 = System.nanoTime()
-        val r = fn
-        println(f"[copy] $name%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
     val f = live(file)
     val reqs = requests.select(col("srcId").as("__rsrc"),
       col("dstParentId").as("__rdst"), col("newName").as("__rname"))
@@ -781,7 +761,7 @@ object Mutations {
         .filter(col("id") =!= 0L).drop("__fp")
       frontier.persist()
       persisted += frontier
-      n = tc(s"bfs_count_l$lvl")(frontier.count())
+      n = frontier.count()
       if (n > 0) members = members.unionByName(frontier)
       lvl += 1
     }
@@ -791,16 +771,16 @@ object Mutations {
         s"copy exceeded maxDepth=$maxDepth with an unfinished frontier - " +
         "a truncated copy would silently drop the deeper levels")
     }
-    val allMembers = tc("members_mat")(graft.core.Caching
-      .materializeAndRelease(members, persisted.toSeq))
+    val allMembers = graft.core.Caching
+      .materializeAndRelease(members, persisted.toSeq)
     // FileUtil.checkDependencies: the destination parent inside the
     // source subtree (or the source itself) refuses the whole request
     val cyc = allMembers.filter(col("id") === col("__rdst"))
       .select(col("__rsrc"), col("__rdst"), col("__rname")).distinct()
     val good = allMembers.join(cyc,
       Seq("__rsrc", "__rdst", "__rname"), "left_anti")
-    val rankedRows = tc("file_rank")(globalRank(good, "__rk",
-        col("__rsrc"), col("__rdst"), col("__rname"), col("id")))
+    val rankedRows = globalRank(good, "__rk",
+        col("__rsrc"), col("__rdst"), col("__rname"), col("id"))
       .withColumn("__newId", lit(idBase) + col("__rk"))
     val rankMap = rankedRows.select(col("__rsrc").as("__m1"),
       col("__rdst").as("__m2"), col("__rname").as("__m3"),
@@ -833,11 +813,11 @@ object Mutations {
     val replicas = graft.core.Scale.keyPrune(live(block), "fileId",
         copiedFiles.select(col("__cfOld")), "__cfOld")
       .join(broadcast(copiedFiles), col("fileId") === col("__cfOld"))
-      .transform(df => tc("replicas_ckpt")(df.localCheckpoint()))
-    val blockKeys = tc("block_rank")(globalRank(
+      .localCheckpoint()
+    val blockKeys = globalRank(
         replicas.select(col("__rsrc"), col("__rdst"), col("__rname"),
           col("id").as("__ob")).distinct(),
-        "__brk", col("__rsrc"), col("__rdst"), col("__rname"), col("__ob")))
+        "__brk", col("__rsrc"), col("__rdst"), col("__rname"), col("__ob"))
       .withColumn("__newBid", lit(blockIdBase) + col("__brk"))
       .select(col("__rsrc").as("__b1"), col("__rdst").as("__b2"),
         col("__rname").as("__b3"), col("__ob"), col("__newBid"))
@@ -869,7 +849,7 @@ object Mutations {
     // a frame that merely references it would leak one cached DataFrame
     // per call. The returned persisted frame is the caller's to
     // unpersist (the rename convention; Shell cp releases in finally).
-    tc("out_mat")(graft.core.Caching.materializeAndRelease(out, Seq(allMembers)))
+    graft.core.Caching.materializeAndRelease(out, Seq(allMembers))
   }
 
   /** Trash.moveToTrash (fs/Trash.java:103-152 — FsShell delete calls it

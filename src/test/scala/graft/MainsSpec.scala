@@ -1,0 +1,49 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The plumbing the mains share: the `*_ONLY` subset parser, and source
+  * checks that keep session building in one place and timing out of the
+  * operators. */
+class MainsSpec extends AnyFunSuite {
+
+  test("subset: names are trimmed, empties dropped, unknown names rejected") {
+    assert(SparkEntry.subset(None).isEmpty)
+    assert(SparkEntry.subset(Some("")).isEmpty)
+    assert(SparkEntry.subset(Some(" , ")).isEmpty)
+    assert(SparkEntry.subset(Some(" q1_pricing_summary, n11_fsck ,")) ==
+      Some(Set("q1_pricing_summary", "n11_fsck")))
+    // Bench's default set no longer passes through a contains filter
+    assert(SparkEntry.subset(Some(SparkEntry.benchQueries.mkString(","))) ==
+      Some(SparkEntry.benchQueries.toSet))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.subset(Some("q1_pricing_summary,no_such_entry"))
+    }
+    assert(e.getMessage.contains("no_such_entry"))
+  }
+
+  private val mainSources: Seq[(Path, String)] = {
+    val stream = Files.walk(Paths.get("src/main/scala"))
+    try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> Files.readString(p))
+    finally stream.close()
+  }
+
+  test("SparkSession.builder appears only in core/Sessions.scala") {
+    val builders = mainSources.collect {
+      case (p, src) if src.contains("SparkSession.builder") => p.toString
+    }
+    assert(builders == Seq("src/main/scala/graft/core/Sessions.scala"))
+  }
+
+  test("no SPARK_GRAFT_PROFILE_ hooks in main code") {
+    val hooks = mainSources.collect {
+      case (p, src) if src.contains("SPARK_GRAFT_PROFILE_") => p.toString
+    }
+    assert(hooks.isEmpty)
+  }
+}

@@ -288,6 +288,35 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
+  test("activateBucketedLayout: gate entries return the same rows as under views") {
+    // one entry per shadow: the state tables (state_checksum, n11_fsck)
+    // and the relational Tables.load shadow (q3)
+    val sf = "/root/testdata/sf0.001"
+    val names = Seq("state_checksum", "n11_fsck", "q3_shipping_priority")
+    def run(n: String) = SparkEntry.queries(n)(spark, sf)
+    def bag(n: String) = {
+      val df = run(n)
+      (df.columns.toSeq, rows(df).groupBy(identity).view.mapValues(_.size).toMap)
+    }
+    val views = names.map(bag)
+    try {
+      assert(Scale.activateBucketedLayout(spark, sf) > 0.0)
+      assert(spark.conf.get(graft.core.Tables.LayoutDirKey) == sf)
+      names.zip(views).foreach { case (n, v) =>
+        assert(bag(n) == v, s"$n differs between the views and bucketed layouts")
+      }
+      // the comparison is only meaningful if the shadows were read
+      assert(run("state_checksum").queryExecution.executedPlan.toString
+        .contains("graft_state_block"))
+      assert(run("q3_shipping_priority").queryExecution.executedPlan.toString
+        .contains("graft_state_lineitem"))
+    } finally {
+      spark.conf.unset("graft.layout")
+      spark.conf.unset(graft.core.Tables.LayoutDirKey)
+      graft.model.DerivedState.register(spark, sf)
+    }
+  }
+
   test("N5 genstamp arbiter over an id-bucketed block table aggregates shuffle-free") {
     // same id-bucketed block layout as the S8 case: the per-block
     // max-genstamp arbiter groupBy is satisfied straight off the bucketed
