@@ -24,7 +24,8 @@ package graft
   * per-query min/median/max spread is printed in the same JSON line so a
   * contaminated run is visible. A whole-run drift guard on top: when the
   * full views-layout set's contract total exceeds the committed
-  * reference (tools/bench_reference.json) by >10%, the entire set
+  * reference (tools/bench_reference.json, pinned for one core count and
+  * applied only on a session of that count) by >12%, the entire set
   * re-runs once and each query keeps its faster window — the per-query
   * guard cannot see a run that lands wholly in a slow window (the r14
   * canonical artifact read 25% above a same-tree pair; the r15 one
@@ -32,6 +33,18 @@ package graft
   * round's own paired runs put the uniform box-dip magnitude at 8-11%,
   * so the threshold sits at the top of that band). */
 object Bench {
+
+  /** The reference total of a `tools/bench_reference.json` text when its
+    * `cpus` field equals `cpus`, else None: a total pinned on another
+    * core count, or on an unrecorded one, says nothing about this box. */
+  def pinnedReference(json: String, cpus: Int): Option[Double] = {
+    def field(k: String) = ("\"" + k + "\"\\s*:\\s*([0-9.]+)").r
+      .findFirstMatchIn(json).map(_.group(1))
+    if (field("cpus").contains(cpus.toString))
+      field("viewsContractTotal").map(_.toDouble)
+    else None
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
@@ -151,13 +164,20 @@ object Bench {
       if (isContended(ts)) ts.head else median(ts)
     def contractTotal(rs: Seq[(String, Vector[Double], Boolean, Vector[Double], Int, Double)]): Double =
       rs.collect { case (_, ts, false, _, _, _) => contractVal(ts) }.sum
-    val refTotal: Option[Double] =
-      try {
-        val txt = scala.io.Source.fromFile("tools/bench_reference.json").mkString
-        "\"viewsContractTotal\"\\s*:\\s*([0-9.]+)".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-      } catch { case _: Throwable => None }
-    val crossRunRetry = layout == "views" && only.isEmpty &&
+    val guarded = layout == "views" && only.isEmpty
+    val refTotal: Option[Double] = {
+      val cpus = graft.core.Sessions.cpus
+      val pin =
+        try {
+          val src = scala.io.Source.fromFile("tools/bench_reference.json")
+          try pinnedReference(src.mkString, cpus) finally src.close()
+        } catch { case scala.util.control.NonFatal(_) => None }
+      if (pin.isEmpty && guarded)
+        System.err.println(s"[bench] cross-run guard off: " +
+          s"tools/bench_reference.json holds no pin for $cpus cores")
+      pin
+    }
+    val crossRunRetry = guarded &&
       !results.exists(_._3) &&
       refTotal.exists(r => contractTotal(results) > r * 1.12)
     if (crossRunRetry) {

@@ -1,7 +1,15 @@
 package graft.model
 
+import java.io.FileNotFoundException
+import java.lang.ref.WeakReference
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, TemporaryViewRelation}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
+
+import graft.core.Tables
 
 /** Deterministic derivation of the four ADFS state tables (SURVEY §1.2)
   * from the driver's TPC-H-ish testdata, written in a SQL dialect subset
@@ -188,23 +196,104 @@ object DerivedState {
     sql.replaceAll("(?m)^([a-zA-Z_][a-zA-Z0-9_]*) AS \\(",
       "$1 AS MATERIALIZED (")
 
-  /** events.ts normalized to BIGINT epoch-nanos whatever the parquet
-    * encoding: TIMESTAMP(NANOS) testdata arrives as BIGINT via the
-    * nanosAsLong legacy conf and passes through; TIMESTAMP(MICROS)
-    * (driver generators vary by round) arrives as a timestamp column and
-    * is converted (UTC session) — the DuckDB oracle side's epoch_ns(ts)
-    * yields the same nanos either way. */
-  def normalizeEventTs(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType) df
-    else df.withColumn("ts",
-      unix_micros(col("ts").cast("timestamp")) * lit(1000L))
+  /** events.ts as BIGINT epoch-nanos: the declared TIMESTAMP_NTZ column
+    * converted in the UTC session — the DuckDB oracle side's
+    * epoch_ns(ts) yields the same nanos. */
+  def normalizeEventTs(df: DataFrame): DataFrame =
+    df.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * lit(1000L))
+
+  /** The tables the bucketed layout shadows with `graft_state_<t>`. */
+  private val shadowed =
+    Seq("file", "block", "datanode", "events", "lineitem", "orders")
+
+  /** Everything a registration reads besides the SQL text: the dir, the
+    * layout confs, each testdata path's (mtime, length) — None when
+    * missing — and, under the bucketed layout, each shadow table's
+    * catalog entry. */
+  private final case class Inputs(
+      sfDir: String, layout: Option[String], layoutDir: Option[String],
+      files: Seq[Option[(Long, Long)]], shadows: Seq[Option[CatalogTable]])
+
+  private object Inputs {
+    def apply(spark: SparkSession, sfDir: String, bucketed: Boolean): Inputs = {
+      val hadoopConf = spark.sparkContext.hadoopConfiguration
+      val files = TestdataSchema.names.map { t =>
+        val p = new Path(s"$sfDir/$t.parquet")
+        try {
+          val st = p.getFileSystem(hadoopConf).getFileStatus(p)
+          Some((st.getModificationTime, st.getLen))
+        } catch { case _: FileNotFoundException => None }
+      }
+      val catalog = spark.sessionState.catalog
+      val shadows =
+        if (!bucketed) Nil
+        else shadowed.map { t =>
+          val id = TableIdentifier(s"graft_state_$t")
+          Option.when(catalog.tableExists(id))(catalog.getTableMetadata(id))
+        }
+      Inputs(sfDir, spark.conf.getOption("graft.layout"),
+        spark.conf.getOption(Tables.LayoutDirKey), files, shadows)
+    }
+  }
+
+  /** What [[register]] last installed in a session: its inputs and the
+    * view objects it left in the catalog. The views are held weakly, so
+    * the record keeps no plan, and through a plan no session, alive. */
+  private final case class Registration(
+      inputs: Inputs, views: Seq[(String, WeakReference[TemporaryViewRelation])]) {
+    def holds(spark: SparkSession, now: Inputs): Boolean =
+      !spark.sparkContext.isStopped && inputs == now && views.forall {
+        case (n, v) => spark.sessionState.catalog.getRawTempView(n).exists(_ eq v.get)
+      }
+  }
+
+  private val registrations = new java.util.WeakHashMap[SparkSession, Registration]
 
   /** Register base parquet views + derived temp views in the session.
-    * events.ts is ALWAYS BIGINT nanos here (normalizeEventTs). */
-  def register(spark: SparkSession, sfDir: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * events.ts is ALWAYS BIGINT nanos here (normalizeEventTs).
+    *
+    * A call is a no-op when the session still holds, as the identical
+    * objects, every view its last call installed, and none of that
+    * call's inputs changed: `sfDir`, `graft.layout`,
+    * [[Tables.LayoutDirKey]], the modification time and length of each
+    * `<sfDir>/<t>.parquet`, and under the bucketed layout the catalog
+    * entry (or absence) of each `graft_state_*` shadow table. Replacing
+    * or dropping any of the views, switching the layout, rewriting a
+    * shadow table or a testdata file, a new session or a stopped one all
+    * make the next call register again. Sessions are held weakly. The
+    * bucketed provenance check runs on every call. */
+  def register(spark: SparkSession, sfDir: String): Unit =
+    registrations.synchronized {
+      val bucketed = spark.conf.getOption("graft.layout").contains("bucketed")
+      if (bucketed) {
+        // provenance guard (ADVICE r17): the shadow swaps SQL views for
+        // catalog tables materialized from SOME sfDir — without this
+        // check a same-session register() with a DIFFERENT sfDir would
+        // silently serve the other dataset's rows on the SQL path (q25
+        // etc.), the exact hazard Tables.load already fails loudly on
+        // for the DataFrame path. Same contract: the activating main
+        // records the written-from dir under Tables.LayoutDirKey.
+        val written = spark.conf.getOption(Tables.LayoutDirKey)
+        require(written.contains(sfDir),
+          s"bucketed layout active but the graft_state_* shadow tables were " +
+            s"written from ${written.getOrElse("<unrecorded>")}, not the " +
+            s"requested $sfDir — set ${Tables.LayoutDirKey} when " +
+            s"activating the layout, or register via views")
+      }
+      val inputs = Inputs(spark, sfDir, bucketed)
+      if (!Option(registrations.get(spark)).exists(_.holds(spark, inputs))) {
+        install(spark, sfDir, bucketed)
+        val catalog = spark.sessionState.catalog
+        val views = (TestdataSchema.names ++ derived.map(_._1)).map { n =>
+          n -> new WeakReference(catalog.getRawTempView(n).orNull)
+        }
+        registrations.put(spark, Registration(inputs, views))
+      }
+    }
+
+  private def install(spark: SparkSession, sfDir: String, bucketed: Boolean): Unit = {
     TestdataSchema.names.foreach { t =>
-      val raw = graft.core.Tables.readDeclared(spark, sfDir, t)
+      val raw = Tables.readDeclared(spark, sfDir, t)
       val df = if (t == "events") normalizeEventTs(raw) else raw
       df.createOrReplaceTempView(t)
     }
@@ -228,27 +317,12 @@ object DerivedState {
     // bucketed layout (Scale.writeRelationalTables) must serve the SQL
     // view path (q25's GROUPING SETS) exactly like Tables.load serves
     // the DataFrame path.
-    if (spark.conf.getOption("graft.layout").contains("bucketed")) {
-      // provenance guard (ADVICE r17): the shadow swaps SQL views for
-      // catalog tables materialized from SOME sfDir — without this
-      // check a same-session register() with a DIFFERENT sfDir would
-      // silently serve the other dataset's rows on the SQL path (q25
-      // etc.), the exact hazard Tables.load already fails loudly on
-      // for the DataFrame path. Same contract: the activating main
-      // records the written-from dir under Tables.LayoutDirKey.
-      val written = spark.conf.getOption(graft.core.Tables.LayoutDirKey)
-      require(written.contains(sfDir),
-        s"bucketed layout active but the graft_state_* shadow tables were " +
-          s"written from ${written.getOrElse("<unrecorded>")}, not the " +
-          s"requested $sfDir — set ${graft.core.Tables.LayoutDirKey} when " +
-          s"activating the layout, or register via views")
-      Seq("file", "block", "datanode", "events", "lineitem", "orders")
-        .foreach { t =>
-          val tbl = s"graft_state_$t"
-          if (spark.catalog.tableExists(tbl))
-            spark.table(tbl).createOrReplaceTempView(t)
-        }
-    }
+    if (bucketed)
+      shadowed.foreach { t =>
+        val tbl = s"graft_state_$t"
+        if (spark.catalog.tableExists(tbl))
+          spark.table(tbl).createOrReplaceTempView(t)
+      }
   }
 
   def file(spark: SparkSession, sfDir: String): DataFrame = { register(spark, sfDir); spark.table("file") }

@@ -111,9 +111,9 @@ object AnalyticsQueries {
       // hash-partition the feed by datanodeId so no report SPANS files —
       // the wholeness invariant reconcileReportBatch depends on then holds
       // for ANY file-granularity batching (e.g. maxFilesPerTrigger)
-      s.table("reported").repartition(col("datanodeId")).write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
-      val q = s.readStream.schema(schema).parquet(feedDir)
+      val feed = s.table("reported").repartition(col("datanodeId"))
+      feed.write.parquet(feedDir)
+      val q = s.readStream.schema(feed.schema).parquet(feedDir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           Dataflows.reconcileReportBatch(batch.sparkSession.table("block"), batch)

@@ -1301,7 +1301,6 @@ object DataOpsQueries {
     // parquet → stateful agg → AvailableNow trigger → memory sink. The
     // oracle is identical to e2's: stream/batch parity is the check.
     "e4_stream_window_parity" -> { (s, dir) =>
-      DerivedState.register(s, dir) // sets the nanosAsLong conf for events
       val sinkName = "e4sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
@@ -1896,10 +1895,10 @@ object DataOpsQueries {
       val feedDir = tmp.resolve("feed").toString
       val outDir = tmp.resolve("out").toString
       val d = Tables.documents(s, dir)
-      d.filter(col("doc_id") % 97 === 0L)
+      val feed = d.filter(col("doc_id") % 97 === 0L)
         .select(col("doc_id"), col("text"))
-        .repartition(4).write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
+        .repartition(4)
+      feed.write.parquet(feedDir)
       val corpus = d.filter(col("doc_id") % 97 =!= 0L)
       val maintained = TextFunctions.bm25IndexAppend(
         TextFunctions.bm25Postings(
@@ -1908,7 +1907,7 @@ object DataOpsQueries {
         maxDfPpm = 900000L)
       val q = graft.streaming.Changefeed.streamingBm25ServeIndex(
         s.readStream.option("maxFilesPerTrigger", "1")
-          .schema(schema).parquet(feedDir),
+          .schema(feed.schema).parquet(feedDir),
         maintained, "doc_id", "text", k = 5,
         sink = (b, _) => b.write.mode("append").parquet(outDir))
       q.processAllAvailable(); q.stop()
@@ -1964,13 +1963,13 @@ object DataOpsQueries {
       TextFunctions.bm25Postings(
           d.filter(col("doc_id") % 5 =!= 0L), "doc_id", "text")
         .write.parquet(storeDir)
-      d.filter(col("doc_id") % 5 === 0L || col("doc_id") % 679 === 0L)
+      val feed = d.filter(col("doc_id") % 5 === 0L || col("doc_id") % 679 === 0L)
         .select(col("doc_id"), col("text"))
-        .repartition(4).write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
+        .repartition(4)
+      feed.write.parquet(feedDir)
       val q = graft.streaming.Changefeed.streamingBm25Ingest(
         s.readStream.option("maxFilesPerTrigger", "1")
-          .schema(schema).parquet(feedDir),
+          .schema(feed.schema).parquet(feedDir),
         storeDir, "doc_id", "text", sink = (_, _) => ())
       q.processAllAvailable(); q.stop()
       s.read.parquet(storeDir).orderBy(col("term"), col("did"))
@@ -2041,9 +2040,8 @@ object DataOpsQueries {
       // the same integer-exact α = 1/2 budgets the batch op derives
       val totals = d.groupBy(col("src")).agg(sum(col("tok")).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val schema = s.read.parquet(feedDir).schema
       val q = s.readStream.option("maxFilesPerTrigger", "1")
-        .schema(schema).parquet(feedDir)
+        .schema(d.schema).parquet(feedDir)
         .as[graft.streaming.Changefeed.MixDoc]
         .transform(graft.streaming.Changefeed.streamingTemperatureMix(
           _, totals, totalBudget = 7000L, nShards = 4))
@@ -2099,9 +2097,8 @@ object DataOpsQueries {
       val budgets = stages.flatMap { case (st, m) =>
         m.map { case (g, b) => s"$st|$g" -> b }
       }.toMap
-      val schema = s.read.parquet(feedDir).schema
       val q = s.readStream.option("maxFilesPerTrigger", "1")
-        .schema(schema).parquet(feedDir)
+        .schema(d.schema).parquet(feedDir)
         .as[graft.streaming.Changefeed.MixDoc]
         .transform(graft.streaming.Changefeed.streamingBudgetedMix(
           _, budgets, nShards = 4))
@@ -2138,16 +2135,16 @@ object DataOpsQueries {
       val d = Tables.documents(s, dir)
       val evalSlice = d.filter(col("doc_id") % 97 === 0L)
         .select(col("doc_id"), col("text"))
-      d.filter(col("doc_id") % 97 =!= 0L)
+      val feed = d.filter(col("doc_id") % 97 =!= 0L)
         .select(col("doc_id"), col("text"))
         .unionByName(evalSlice.select(
           (col("doc_id") + 2000000L).as("doc_id"),
           concat(col("text"), lit(" " + T35LeakSuffix)).as("text")))
-        .repartition(8).write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
+        .repartition(8)
+      feed.write.parquet(feedDir)
       val q = graft.streaming.Changefeed.streamingDecontaminate(
         s.readStream.option("maxFilesPerTrigger", "1")
-          .schema(schema).parquet(feedDir),
+          .schema(feed.schema).parquet(feedDir),
         evalSlice, "doc_id", "text", k = 8, margin = 8,
         sink = (b, _) => b.write.mode("append").parquet(outDir))
       q.processAllAvailable(); q.stop()

@@ -218,8 +218,8 @@ object MutationQueries {
       DerivedState.register(s, dir)
       val tmp = graft.core.Caching.scratchDir("nput-stream")
       val feedDir = tmp.resolve("feed").toString
-      s.sql(putReqsSql).repartition(4).write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
+      val feed = s.sql(putReqsSql).repartition(4)
+      feed.write.parquet(feedDir)
       val fileCols = Seq("id", "parentId", "name", "length", "leaseHolder", "version")
       var fileSnap = s.table("file").select(fileCols.map(col): _*)
       var idBase = fileSnap.filter(col("version") > 0)
@@ -229,7 +229,7 @@ object MutationQueries {
         .empty[(Long, Long, String, Long)] // id, parentId, name, length
       val blockRows = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long)] // fileId, fileIndex, length
-      val q = s.readStream.schema(schema)
+      val q = s.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", "1") // force several micro-batches
         .parquet(feedDir)
         .writeStream

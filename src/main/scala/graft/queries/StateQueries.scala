@@ -287,14 +287,13 @@ object StateQueries {
       DerivedState.register(s, dir)
       val tmp = graft.core.Caching.scratchDir("r9-stream")
       val feedDir = tmp.resolve("feed").toString
-      s.table("ops")
+      val feed = s.table("ops")
         .select(col("opKey").as("key"), col("op"),
           col("opVersion").as("version"), col("payload"))
-        .write.parquet(feedDir)
-      val schema = s.read.parquet(feedDir).schema
+      feed.write.parquet(feedDir)
       val sinkName = "r9sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName")
-      val opsStream = s.readStream.schema(schema).parquet(feedDir)
+      val opsStream = s.readStream.schema(feed.schema).parquet(feedDir)
         .as[graft.streaming.Changefeed.Op]
       val q = graft.streaming.Changefeed.applyOps(s, opsStream).toDF()
         .writeStream.format("memory").queryName(sinkName)

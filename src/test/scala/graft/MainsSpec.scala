@@ -26,6 +26,15 @@ class MainsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no_such_entry"))
   }
 
+  test("pinnedReference: a pin applies only on the core count it was taken on") {
+    val pin = """{"viewsContractTotal": 23.98, "cpus": 32, "note": "n"}"""
+    assert(Bench.pinnedReference(pin, 32).contains(23.98))
+    assert(Bench.pinnedReference(pin, 4).isEmpty)
+    assert(Bench.pinnedReference("""{"viewsContractTotal": 23.98}""", 32).isEmpty)
+    assert(Bench.pinnedReference(
+      Files.readString(Paths.get("tools/bench_reference.json")), 32).contains(23.98))
+  }
+
   private val mainSources: Seq[(Path, String)] = {
     val stream = Files.walk(Paths.get("src/main/scala"))
     try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList

@@ -16,3 +16,16 @@ trait SparkSpec extends AnyFunSuite {
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 }
+
+/** The testdata dirs TESTDATA.md lists, in its order. */
+object TestdataDirs {
+  val documented: Seq[String] = {
+    val src = scala.io.Source.fromFile("TESTDATA.md", "UTF-8")
+    try "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(src.mkString)
+      .map(_.group(1)).toSeq
+    finally src.close()
+  }
+
+  /** The documented dir of one scale, e.g. `scale("sf0.001")`. */
+  def scale(sf: String): String = documented.find(_.endsWith(s"/$sf")).get
+}

@@ -18,12 +18,7 @@ import graft.model.{DerivedState, TestdataSchema}
   * table registration. */
 class TestdataSchemaSpec extends SparkSpec {
 
-  private val documentedDirs: Seq[String] = {
-    val src = scala.io.Source.fromFile("TESTDATA.md", "UTF-8")
-    try "`([^`]*/sf[0-9.]+)/?`".r.findAllMatchIn(src.mkString)
-      .map(_.group(1)).toSeq
-    finally src.close()
-  }
+  private val documentedDirs = TestdataDirs.documented
   private val dirs = documentedDirs :+ "perfbench/data/sf0.1"
 
   test("TESTDATA.md lists the three testdata scales") {
@@ -43,7 +38,7 @@ class TestdataSchemaSpec extends SparkSpec {
     }
 
   test("DerivedState.register and Tables.load launch no Spark job") {
-    val sf = documentedDirs.find(_.endsWith("sf0.001")).get
+    val sf = TestdataDirs.scale("sf0.001")
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]
     val listener = new SparkListener {
