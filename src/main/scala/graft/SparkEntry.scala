@@ -30,41 +30,6 @@ object SparkEntry {
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast(DecimalType(18, 4))).cast("double")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map[String, (SparkSession, String) => DataFrame](
-    "q1_pricing_summary" -> { (s, dir) =>
-      import s.implicits._
-      Tables.lineitem(s, dir)
-        .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(
-          dsum($"l_quantity").as("sum_qty"),
-          dsum($"l_extendedprice").as("sum_base_price"),
-          dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy($"l_returnflag", $"l_linestatus")
-    },
-    "q6_revenue_forecast" -> { (s, dir) =>
-      import s.implicits._
-      Tables.lineitem(s, dir)
-        .filter(
-          $"l_shipdate" >= lit("1996-01-01").cast("timestamp") &&
-          $"l_shipdate" < lit("1997-01-01").cast("timestamp") &&
-          $"l_discount" >= 0.03 && $"l_discount" <= 0.07 &&
-          $"l_quantity" < 24)
-        .agg(dsum($"l_extendedprice" * $"l_discount").as("revenue"),
-             count(lit(1)).as("n_items"))
-    },
-    "state_checksum" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      s.sql(stateChecksumSql)
-    },
-  ) ++ graft.queries.StateQueries.queries ++
-    graft.queries.AnalyticsQueries.queries ++
-    graft.queries.DataOpsQueries.queries ++
-    graft.queries.RelationalQueries.queries ++
-    graft.queries.MutationQueries.queries
-
   /** Per-table row counts + id/version checksums of the derived state
     * tables — guards the Spark/DuckDB derivation against drift. Runs
     * verbatim in both engines. */
@@ -82,8 +47,20 @@ object SparkEntry {
       |  SELECT 'ops', COUNT(*), CAST(SUM(opKey) AS BIGINT), CAST(SUM(opVersion) AS BIGINT) FROM ops
       |) u ORDER BY tbl""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  /** Every gate entry, in registry order. */
+  lazy val entries: Seq[GateEntry] = GateEntry.registry(Seq(
+    GateEntry("q1_pricing_summary", { (s, dir) =>
+      import s.implicits._
+      Tables.lineitem(s, dir)
+        .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
+        .groupBy($"l_returnflag", $"l_linestatus")
+        .agg(
+          dsum($"l_quantity").as("sum_qty"),
+          dsum($"l_extendedprice").as("sum_base_price"),
+          dsum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("sum_disc_price"),
+          count(lit(1)).as("count_order"))
+        .orderBy($"l_returnflag", $"l_linestatus")
+    },
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
@@ -92,41 +69,44 @@ object SparkEntry {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q6_revenue_forecast" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin, headline = true),
+    GateEntry("q6_revenue_forecast", { (s, dir) =>
+      import s.implicits._
+      Tables.lineitem(s, dir)
+        .filter(
+          $"l_shipdate" >= lit("1996-01-01").cast("timestamp") &&
+          $"l_shipdate" < lit("1997-01-01").cast("timestamp") &&
+          $"l_discount" >= 0.03 && $"l_discount" <= 0.07 &&
+          $"l_quantity" < 24)
+        .agg(dsum($"l_extendedprice" * $"l_discount").as("revenue"),
+             count(lit(1)).as("n_items"))
+    },
       """SELECT
         |  CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount >= 0.03 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-    "state_checksum" -> DerivedState.oracle(stateChecksumSql),
-  ) ++ (graft.queries.StateQueries.oracles ++
-    graft.queries.AnalyticsQueries.oracles ++
-    graft.queries.DataOpsQueries.oracles ++
-    graft.queries.RelationalQueries.oracles ++
-    graft.queries.MutationQueries.oracles)
-    .map { case (k, sql) =>
-      k -> (if (MaterializedReplays(k)) DerivedState.materializeCtes(sql)
-            else sql)
-    }
+      headline = true),
+    GateEntry("state_checksum", { (s, dir) =>
+      DerivedState.register(s, dir)
+      s.sql(stateChecksumSql)
+    }, DerivedState.oracle(stateChecksumSql)),
+  ), graft.queries.StateQueries.entries,
+    graft.queries.AnalyticsQueries.entries,
+    graft.queries.DataOpsQueries.entries,
+    graft.queries.RelationalQueries.entries,
+    graft.queries.MutationQueries.entries)
 
-  /** Oracles whose DuckDB replay was dominated by per-reference CTE
-    * re-inlining (DuckDB 1.0 inlines every CTE reference, so a chain
-    * re-reading a mid-chain CTE k times re-evaluates everything beneath
-    * it k times). Blanket AS MATERIALIZED, applied at assembly, is
-    * row-identical by definition and was verified + measured per entry
-    * at sf0.1 (r15): n_trash 66→0.9 s, sim10 29→0.7 s, sim9 21→0.6 s,
-    * sim7 25→16 s, n_block_received 34→18 s, n_block_sync 4.1→0.8 s,
-    * sim3/sim4/sim8/sim11 ~3-4→≤1 s, d7 3.5→1.2 s, d16 3.4→1.3 s,
-    * bal4 2.9→2.1 s. NOT applied globally: some oracles are faster
-    * inlined (filter pushdown into the CTE — n11_fsck_move measured
-    * 2.5→3.3 s under blanket marks and keeps hand-placed ones). */
-  private val MaterializedReplays: Set[String] = Set(
-    "n_trash", "n_block_received", "n_block_sync", "bal4_moves",
-    "sim3_ivf", "sim4_ivf_recall", "sim7_ann_multiprobe",
-    "sim8_ivf_train_gain", "sim9_ivfpq_adc", "sim10_ivfpq_recall",
-    "sim11_ivfpq_ingest", "d7_dup_clusters", "d16_cluster_best")
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
+
+  /** The SQL DuckDB replays per entry: its oracle, with every CTE
+    * materialized where the entry asks for it. */
+  lazy val oracleSql: Map[String, String] =
+    entries.map(e => e.name ->
+      (if (e.materializeOracle) DerivedState.materializeCtes(e.oracle) else e.oracle))
+      .toMap
 
   /** The optional comma-separated subset a main runs instead of its full
     * set (Bench's `SPARK_GRAFT_BENCH_ONLY`, Verify's
@@ -144,14 +124,5 @@ object SparkEntry {
 
   /** Headline queries timed by Bench (a representative mix: scans/aggs,
     * multi-way joins, windows, recursion, reconciliation, dedup, ANN). */
-  val benchQueries: Seq[String] = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q4_order_priority",
-    "q5_local_supplier", "q6_revenue_forecast", "q16_supplier_variety",
-    "q18_large_orders",
-    "s1_path_resolution", "s2_paths", "s8_block_entries",
-    "n1_block_locations", "n5_block_report", "n6_under_replicated",
-    "n11_fsck", "n15_content_summary", "r9_replay",
-    "d1_exact_dedup", "d2_minhash_lsh", "d3_simhash",
-    "sim1_knn_brute", "sim2_ann_lsh", "t2_quality_score",
-    "e1_sessionize", "e2_window_agg")
+  lazy val benchQueries: Seq[String] = entries.filter(_.headline).map(_.name)
 }

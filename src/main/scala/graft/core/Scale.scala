@@ -366,9 +366,4 @@ object Scale {
       explode(sequence(lit(0), lit(salts - 1))))
     bigSalted.join(smallExploded, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Repartition a fact frame by its join/aggregation key so a chain of
-    * operations over the same key reuses one shuffle. */
-  def coPartition(df: DataFrame, key: String, partitions: Int): DataFrame =
-    df.repartition(partitions, col(key))
 }

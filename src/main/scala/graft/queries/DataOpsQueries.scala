@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GateEntry
 import graft.core.Tables
 import graft.functions.{Dedup, Events, Shuffles, TextFunctions, Vectors}
 import graft.model.{DerivedState, TestdataSchema}
@@ -12,13 +13,11 @@ import graft.model.{DerivedState, TestdataSchema}
   * top-level so both the product and kryo Encoders can resolve it. */
 final case class F16Rec(id: Long, name: String)
 
-/** queries()+oracleSql() for the training-data-pipeline operators:
-  * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
-  * search (brute-force kNN / LSH-bucketed ANN), text analysis and
-  * multimodal metadata — each with a value-identical DuckDB oracle. */
+/** Gate entries ([[graft.GateEntry]]) for the training-data-pipeline
+  * operators: dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
+  * similarity search (brute-force kNN / LSH-bucketed ANN), text analysis
+  * and multimodal metadata — each with a value-identical DuckDB oracle. */
 object DataOpsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** The percentile_disc ORDER-STATISTIC pick shared by t18/t22: the
     * value at row ⌈p·n⌉ in per-group sorted order — picked values, no
@@ -583,28 +582,37 @@ object DataOpsQueries {
       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2, nid) AS rank
       |  FROM exl2)""".stripMargin
 
-  def queries: Map[String, Q] = Map(
+  def entries: Seq[GateEntry] = Seq(
     // exact dedup: sha-256 group-by, min-id keeper
-    "d1_exact_dedup" -> { (s, dir) =>
+    GateEntry("d1_exact_dedup", { (s, dir) =>
       Dedup.exact(corpus(s, dir), "doc_id", "text")
         .filter(col("isDuplicate"))
         .select(col("doc_id").as("id"), col("keepId"))
         .orderBy(col("id"))
     },
+      s"""WITH $CorpusSql,
+        |h AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY sha256(text)) AS keepId
+        |      FROM corpus)
+        |SELECT doc_id AS id, keepId FROM h WHERE doc_id <> keepId ORDER BY id""".stripMargin, headline = true),
     // MinHash + LSH banded candidate pairs
-    "d2_minhash_lsh" -> { (s, dir) =>
+    GateEntry("d2_minhash_lsh", { (s, dir) =>
       Dedup.lshCandidates(corpus(s, dir), "doc_id", "text")
         .filter(col("estJaccard") >= 0.5)
         .orderBy(col("id1"), col("id2"))
     },
+      s"""WITH $MinhashSql
+        |SELECT id1, id2, estJaccard FROM pairs WHERE estJaccard >= 0.5
+        |ORDER BY id1, id2""".stripMargin, headline = true),
     // 16-bit SimHash per document
-    "d3_simhash" -> { (s, dir) =>
+    GateEntry("d3_simhash", { (s, dir) =>
       Dedup.simhash16(Tables.documents(s, dir), "doc_id", "text")
         .orderBy(col("doc_id"))
     },
+      s"""WITH $SimhashSql
+        |SELECT doc_id, simhash FROM sim16 ORDER BY doc_id""".stripMargin, headline = true),
     // the flagship training-data cleaning pipeline: exact dedup →
     // LSH near-dup removal → quality gate → token stats, end to end
-    "t5_clean_corpus" -> { (s, dir) =>
+    GateEntry("t5_clean_corpus", { (s, dir) =>
       val c = corpus(s, dir)
       // stage 1: exact dedup — keep the min-id copy of identical texts
       val keep = Dedup.exact(c, "doc_id", "text")
@@ -623,19 +631,67 @@ object DataOpsQueries {
         .filter(col("score") >= 75.0)
         .orderBy(col("doc_id"))
     },
+      s"""WITH $MinhashSql,
+        |keep AS (
+        |  SELECT doc_id, text FROM (
+        |    SELECT doc_id, text, MIN(doc_id) OVER (PARTITION BY sha256(text)) AS k
+        |    FROM corpus) z WHERE doc_id = k),
+        |drop2 AS (
+        |  SELECT DISTINCT p.id2 AS doc_id FROM pairs p
+        |  JOIN keep k1 ON p.id1 = k1.doc_id WHERE p.estJaccard >= 0.75),
+        |surv AS (
+        |  SELECT k.doc_id, k.text FROM keep k
+        |  LEFT JOIN drop2 d ON k.doc_id = d.doc_id WHERE d.doc_id IS NULL),
+        |sc AS (
+        |  SELECT doc_id, wsTokens,
+        |    meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
+        |  FROM (
+        |    SELECT doc_id, len(w) AS wsTokens,
+        |      CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
+        |      CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
+        |        ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
+        |      CASE WHEN length(text) > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END AS punctRatio,
+        |      CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
+        |    FROM (SELECT doc_id, text,
+        |            regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |          FROM surv) t) f)
+        |SELECT doc_id, wsTokens, score FROM sc
+        |WHERE score >= 75.0 ORDER BY doc_id""".stripMargin),
     // SimHash near-dup pairs: banded bucketing + exact hamming filter
-    "d6_simhash_neardup" -> { (s, dir) =>
+    GateEntry("d6_simhash_neardup", { (s, dir) =>
       Dedup.simhashNearDups(Tables.documents(s, dir), "doc_id", "text")
         .orderBy(col("id1"), col("id2"))
     },
+      s"""WITH $SimhashSql,
+        |m AS (
+        |  SELECT doc_id, b AS bandIdx, (simhash >> (4*b)) % 16 AS bandVal, simhash
+        |  FROM sim16 CROSS JOIN (SELECT 0 AS b UNION ALL SELECT 1
+        |                         UNION ALL SELECT 2 UNION ALL SELECT 3) bb)
+        |SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
+        |  CAST(bit_count(xor(a.simhash, c.simhash)) AS INT) AS hamming
+        |FROM m a JOIN m c ON a.bandIdx = c.bandIdx AND a.bandVal = c.bandVal
+        |  AND a.doc_id < c.doc_id
+        |WHERE bit_count(xor(a.simhash, c.simhash)) <= 3
+        |ORDER BY id1, id2""".stripMargin),
     // 64-bit SimHash with 16-bit bands — the corpus-scale width; run on
     // the dup-bearing corpus so exact duplicates surface at hamming 0
-    "d9_simhash64_neardup" -> { (s, dir) =>
+    GateEntry("d9_simhash64_neardup", { (s, dir) =>
       Dedup.simhashNearDups64(corpus(s, dir), "doc_id", "text")
         .orderBy(col("id1"), col("id2"))
     },
+      s"""WITH $CorpusSql,
+        |$Simhash64Sql,
+        |m64 AS (
+        |  SELECT doc_id, b AS bandIdx, (simhash >> (16*b)) & 65535 AS bandVal, simhash
+        |  FROM sim64f CROSS JOIN (SELECT UNNEST(range(0,4)) AS b) bb)
+        |SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
+        |  CAST(bit_count(xor(a.simhash, c.simhash)) AS INT) AS hamming
+        |FROM m64 a JOIN m64 c ON a.bandIdx = c.bandIdx AND a.bandVal = c.bandVal
+        |  AND a.doc_id < c.doc_id
+        |WHERE bit_count(xor(a.simhash, c.simhash)) <= 3
+        |ORDER BY id1, id2""".stripMargin),
     // exact n-gram Jaccard verification of LSH candidates
-    "d4_ngram_jaccard" -> { (s, dir) =>
+    GateEntry("d4_ngram_jaccard", { (s, dir) =>
       val c = corpus(s, dir)
       val cand = Dedup.lshCandidates(c, "doc_id", "text")
         .filter(col("estJaccard") >= 0.25)
@@ -645,6 +701,26 @@ object DataOpsQueries {
         .select(col("id1"), col("id2"), col("jaccard"))
         .orderBy(col("id1"), col("id2"))
     },
+      s"""WITH $MinhashSql,
+        |dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
+        |szs AS (SELECT doc_id, COUNT(*) AS sz FROM dsh GROUP BY doc_id),
+        |cand AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.25),
+        |icnt AS (
+        |  SELECT c.id1, c.id2, COUNT(*) AS i FROM cand c
+        |  JOIN dsh a ON a.doc_id = c.id1
+        |  JOIN dsh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
+        |  GROUP BY c.id1, c.id2)
+        |SELECT c.id1, c.id2,
+        |  CAST(COALESCE(i.i,0) AS DOUBLE) /
+        |    (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) AS jaccard
+        |FROM cand c
+        |LEFT JOIN icnt i ON i.id1 = c.id1 AND i.id2 = c.id2
+        |LEFT JOIN szs sa ON sa.doc_id = c.id1
+        |LEFT JOIN szs sb ON sb.doc_id = c.id2
+        |WHERE COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0) > 0
+        |  AND CAST(COALESCE(i.i,0) AS DOUBLE) /
+        |    (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) >= 0.5
+        |ORDER BY c.id1, c.id2""".stripMargin),
     // asymmetric shingle containment (Broder 1997): every %89 doc gets
     // a planted half-excerpt twin (first ⌈n/2⌉ tokens, id + 3000000) —
     // the pair's containB lands at 1.0 while its Jaccard sits near 0.5,
@@ -652,7 +728,7 @@ object DataOpsQueries {
     // = the d2 LSH pairs ∪ the planted pairs, scored over the corpus
     // plus the excerpts. Excerpts shorter than the shingle width keep
     // their pair with NULL ratios (the d4 LEFT-join contract).
-    "d17_containment" -> { (s, dir) =>
+    GateEntry("d17_containment", { (s, dir) =>
       val c = corpus(s, dir)
       val ex = c.filter(col("doc_id") % 89 === 0)
         .withColumn("__w", TextFunctions.tokens(col("text")))
@@ -672,34 +748,119 @@ object DataOpsQueries {
           col("szB"), col("jaccard"), col("containA"), col("containB"))
         .orderBy(col("id1"), col("id2"))
     },
+      // containment: d4's intersection/size algebra over corpus ∪ planted
+      // half-excerpts, candidates = LSH pairs ∪ planted pairs; the two
+      // asymmetric ratios alongside the symmetric Jaccard
+      s"""WITH $MinhashSql,
+        |ex AS (
+        |  SELECT doc_id + 3000000 AS doc_id,
+        |    array_to_string(w[1:CAST(ceil(len(w) / 2.0) AS INT)], ' ') AS text
+        |  FROM words WHERE doc_id % 89 = 0),
+        |exw AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w FROM ex),
+        |exsh AS (
+        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 3
+        |    THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w)-1)]
+        |    ELSE [] END) AS shingle
+        |  FROM exw),
+        |dsh AS (
+        |  SELECT DISTINCT doc_id, shingle FROM sh
+        |  UNION
+        |  SELECT DISTINCT doc_id, shingle FROM exsh),
+        |szs AS (SELECT doc_id, COUNT(*) AS sz FROM dsh GROUP BY doc_id),
+        |cand AS (
+        |  SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.25
+        |  UNION
+        |  SELECT doc_id AS id1, doc_id + 3000000 AS id2
+        |  FROM corpus WHERE doc_id % 89 = 0),
+        |icnt AS (
+        |  SELECT c.id1, c.id2, COUNT(*) AS i FROM cand c
+        |  JOIN dsh a ON a.doc_id = c.id1
+        |  JOIN dsh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
+        |  GROUP BY c.id1, c.id2)
+        |SELECT c.id1, c.id2,
+        |  CAST(COALESCE(i.i, 0) AS BIGINT) AS inter,
+        |  CAST(COALESCE(sa.sz, 0) AS BIGINT) AS szA,
+        |  CAST(COALESCE(sb.sz, 0) AS BIGINT) AS szB,
+        |  CASE WHEN COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0) > 0
+        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) /
+        |      (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) END
+        |    AS jaccard,
+        |  CASE WHEN COALESCE(sa.sz,0) > 0
+        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) / sa.sz END AS containA,
+        |  CASE WHEN COALESCE(sb.sz,0) > 0
+        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) / sb.sz END AS containB
+        |FROM cand c
+        |LEFT JOIN icnt i ON i.id1 = c.id1 AND i.id2 = c.id2
+        |LEFT JOIN szs sa ON sa.doc_id = c.id1
+        |LEFT JOIN szs sb ON sb.doc_id = c.id2
+        |ORDER BY c.id1, c.id2""".stripMargin),
     // brute-force cosine top-k neighbors
-    "sim1_knn_brute" -> { (s, dir) =>
+    GateEntry("sim1_knn_brute", { (s, dir) =>
       Vectors.knnBrute(Tables.embeddings(s, dir), col("vec_id") % 100 === 0, k = 5)
         .orderBy(col("qid"), col("rank"))
     },
+      s"""WITH $NormsSql,
+        |$BruteSql
+        |SELECT qid, nid, cosine, rank FROM bruteRanked WHERE rank <= 5
+        |ORDER BY qid, rank""".stripMargin, headline = true),
     // k-NN label classification: majority vote over the exact cosine
     // top-5 (ties → votes DESC, label ASC), the curation-classifier
     // eval — queries vote among the corpus excluding themselves, and
     // the queries×k top-k frame broadcasts into the label join (never
     // the corpus-sized reverse)
-    "sim13_knn_classify" -> { (s, dir) =>
+    GateEntry("sim13_knn_classify", { (s, dir) =>
       Vectors.knnClassify(Tables.embeddings(s, dir),
           col("vec_id") % 100 === 0, k = 5)
         .orderBy(col("qid"))
     },
+      // majority vote over the same brute top-5 chain: tally neighbor
+      // labels per query, pick (votes DESC, label ASC)
+      s"""WITH $NormsSql,
+        |$BruteSql,
+        |topk AS (SELECT qid, nid FROM bruteRanked WHERE rank <= 5),
+        |tally AS (
+        |  SELECT t.qid, CAST(e.label AS BIGINT) AS nlabel,
+        |    COUNT(*) AS votes
+        |  FROM topk t JOIN embeddings e ON e.vec_id = t.nid
+        |  GROUP BY t.qid, CAST(e.label AS BIGINT)),
+        |pick AS (
+        |  SELECT qid, nlabel, votes,
+        |    ROW_NUMBER() OVER (PARTITION BY qid
+        |      ORDER BY votes DESC, nlabel ASC) AS rk
+        |  FROM tally)
+        |SELECT q.vec_id AS qid, CAST(q.label AS BIGINT) AS trueLabel,
+        |  p.nlabel AS predLabel, CAST(p.votes AS BIGINT) AS votes,
+        |  CAST(CASE WHEN p.nlabel = CAST(q.label AS BIGINT)
+        |    THEN 1 ELSE 0 END AS BIGINT) AS correct
+        |FROM embeddings q LEFT JOIN pick p ON p.qid = q.vec_id AND p.rk = 1
+        |WHERE q.vec_id % 100 = 0
+        |ORDER BY qid""".stripMargin),
     // LSH-bucketed ANN near-duplicate pairs
-    "sim2_ann_lsh" -> { (s, dir) =>
+    GateEntry("sim2_ann_lsh", { (s, dir) =>
       Vectors.annPairs(Tables.embeddings(s, dir), dims = 64, minCosine = 0.2)
         .orderBy(col("id1"), col("id2"))
     },
+      s"""WITH $AnnCoreSql
+        |SELECT d.bucket, d.id1, d.id2, d.dot / (na.nrm * nb.nrm) AS cosine
+        |FROM dots d JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
+        |WHERE d.dot / (na.nrm * nb.nrm) >= 0.2
+        |ORDER BY d.id1, d.id2""".stripMargin, headline = true),
     // embedding-cosine near-dup dedup: drop vectors with a lower-id
     // near-duplicate (keeper = min neighbor id over the LSH pair set)
-    "d5_embedding_neardup" -> { (s, dir) =>
+    GateEntry("d5_embedding_neardup", { (s, dir) =>
       Vectors.annPairs(Tables.embeddings(s, dir), dims = 64, minCosine = 0.2)
         .groupBy(col("id2").as("id"))
         .agg(min(col("id1")).as("keepId"), count(lit(1)).as("nearDups"))
         .orderBy(col("id"))
     },
+      s"""WITH $AnnCoreSql,
+        |pairs AS (
+        |  SELECT d.id1, d.id2
+        |  FROM dots d JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
+        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2)
+        |SELECT id2 AS id, MIN(id1) AS keepId, COUNT(*) AS nearDups
+        |FROM pairs GROUP BY id2 ORDER BY id""".stripMargin),
     // Johnson-Lindenstrauss ±1 random projection (Achlioptas 2003):
     // 64 → 16 dims in EXACT integer arithmetic (1e6 fixed-point
     // components, md5-parity sign matrix regenerable by any engine, ±
@@ -713,7 +874,7 @@ object DataOpsQueries {
     // non-vacuous at every SF, and the gate reads as the fidelity
     // contract: preserved where it matters, honestly lost where no
     // signal exists
-    "sim12_jl_recall" -> { (s, dir) =>
+    GateEntry("sim12_jl_recall", { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"))
       val corpus = emb.unionByName(
@@ -724,10 +885,89 @@ object DataOpsQueries {
           inDims = 64, outDims = 16)
         .orderBy(col("qid"))
     },
+      // the same md5-parity sign matrix, scaled-long ± sums, reduced-space
+      // top-1 vs the full-space truth over the twin-planted corpus (the
+      // shared Norms/Brute CTEs read the bare table, so this entry carries
+      // its own corpus-parameterized copies)
+      s"""WITH jl_corpus AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings
+        |  WHERE vec_id % 200 = 0),
+        |jl_norms AS (
+        |  SELECT vec_id, sqrt(CAST(SUM(CAST(ROUND(CAST(embedding[k] AS DOUBLE)
+        |    * CAST(embedding[k] AS DOUBLE) * 1000000000000) AS BIGINT))
+        |    AS DOUBLE) / 1e12) AS nrm
+        |  FROM (SELECT vec_id, embedding,
+        |          UNNEST(range(1, len(embedding) + 1)) AS k
+        |        FROM jl_corpus) t
+        |  GROUP BY vec_id),
+        |jl_p AS (
+        |  SELECT q.vec_id AS qid, c.vec_id AS nid,
+        |    q.embedding AS qv, c.embedding AS nv
+        |  FROM jl_corpus q JOIN jl_corpus c ON q.vec_id <> c.vec_id
+        |  WHERE q.vec_id % 100 = 0 AND q.vec_id < 1000000),
+        |jl_fdots AS (
+        |  SELECT qid, nid, CAST(SUM(CAST(ROUND(CAST(qv[k] AS DOUBLE)
+        |    * CAST(nv[k] AS DOUBLE) * 1000000000000) AS BIGINT))
+        |    AS DOUBLE) / 1e12 AS dot
+        |  FROM (SELECT qid, nid, qv, nv, UNNEST(range(1, len(qv) + 1)) AS k
+        |        FROM jl_p) t
+        |  GROUP BY qid, nid),
+        |jl_brute AS (
+        |  SELECT qid, nid, cosine, ROW_NUMBER() OVER (
+        |    PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
+        |  FROM (
+        |    SELECT qid, nid, dot / (na.nrm * nb.nrm) AS cosine
+        |    FROM jl_fdots
+        |    JOIN jl_norms na ON na.vec_id = qid
+        |    JOIN jl_norms nb ON nb.vec_id = nid)),
+        |jl_signs AS (
+        |  SELECT CAST(i.i AS BIGINT) AS i, CAST(j.j AS BIGINT) AS j,
+        |    CASE WHEN (strpos('0123456789abcdef',
+        |        substr(md5('jl-' || i.i || '-' || j.j), 1, 1)) - 1) % 2 = 0
+        |      THEN 1 ELSE -1 END AS s
+        |  FROM (SELECT UNNEST(range(0, 64)) AS i) i,
+        |       (SELECT UNNEST(range(0, 16)) AS j) j),
+        |jl_melt AS (
+        |  SELECT vec_id, CAST(k - 1 AS BIGINT) AS i,
+        |    CAST(ROUND(CAST(embedding[CAST(k AS INT)] AS DOUBLE) * 1000000)
+        |      AS BIGINT) AS xs
+        |  FROM (SELECT vec_id, embedding,
+        |          UNNEST(range(1, len(embedding) + 1)) AS k
+        |        FROM jl_corpus)),
+        |jl_red AS (
+        |  SELECT vec_id, j, CAST(SUM(xs * s) AS BIGINT) AS rv
+        |  FROM jl_melt JOIN jl_signs USING (i) GROUP BY vec_id, j),
+        |jl_n2 AS (
+        |  SELECT vec_id, CAST(SUM(rv * rv) AS BIGINT) AS n2
+        |  FROM jl_red GROUP BY vec_id),
+        |jl_dots AS (
+        |  SELECT q.vec_id AS qid, c.vec_id AS nid,
+        |    CAST(SUM(q.rv * c.rv) AS BIGINT) AS dot
+        |  FROM jl_red q JOIN jl_red c ON q.j = c.j AND q.vec_id <> c.vec_id
+        |  WHERE q.vec_id % 100 = 0 AND q.vec_id < 1000000
+        |  GROUP BY q.vec_id, c.vec_id),
+        |jl_cos AS (
+        |  SELECT d.qid, d.nid,
+        |    CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq.n2 AS DOUBLE))
+        |      * sqrt(CAST(nn.n2 AS DOUBLE))) AS redCosine
+        |  FROM jl_dots d
+        |  JOIN jl_n2 nq ON nq.vec_id = d.qid
+        |  JOIN jl_n2 nn ON nn.vec_id = d.nid),
+        |jl_top AS (
+        |  SELECT qid, nid AS redNn, redCosine FROM (
+        |    SELECT *, ROW_NUMBER() OVER (
+        |      PARTITION BY qid ORDER BY redCosine DESC, nid) AS rn
+        |    FROM jl_cos) WHERE rn = 1)
+        |SELECT b.qid, b.nid AS fullNn, b.cosine AS fullCosine,
+        |  t.redNn, t.redCosine, b.nid = t.redNn AS matched
+        |FROM (SELECT qid, nid, cosine FROM jl_brute WHERE rank = 1) b
+        |JOIN jl_top t USING (qid) ORDER BY b.qid""".stripMargin),
     // multi-probe (band-OR) LSH recall gate: true near-dup pairs found by
     // 1 vs 4 independent plane-sets against the exact all-pairs truth —
     // demonstrates the recall dial the single-set index lacks
-    "sim7_ann_multiprobe" -> { (s, dir) =>
+    GateEntry("sim7_ann_multiprobe", { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val truth = Vectors.bruteCosinePairs(emb, minCosine = 0.2)
       val single = Vectors.annPairsMulti(emb, dims = 64, minCosine = 0.2,
@@ -741,12 +981,57 @@ object DataOpsQueries {
           (col("found1").cast("double") / col("truePairs")).as("recall1"),
           (col("foundMulti").cast("double") / col("truePairs")).as("recallMulti"))
     },
+      s"""WITH $NormsSql,
+        |plM AS (
+        |  SELECT vec_id, j,
+        |    SUM(CAST(ROUND(CAST(embedding[i] AS DOUBLE) *
+        |      CAST(((((j*31 + (i-1)*17 + j*(i-1)*13) % 101) % 7) - 3) AS DOUBLE) * 1000000000000) AS BIGINT)) AS d
+        |  FROM (SELECT vec_id, embedding, UNNEST(range(1, len(embedding)+1)) AS i
+        |        FROM embeddings) t
+        |  CROSS JOIN (SELECT UNNEST(range(0,32)) AS j) u
+        |  GROUP BY vec_id, j),
+        |buckM AS (
+        |  SELECT vec_id, j // 8 AS setIdx,
+        |    CAST(SUM(CASE WHEN d >= 0 THEN (1 << (j % 8)) ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM plM GROUP BY vec_id, j // 8),
+        |candM AS (
+        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
+        |  FROM buckM a JOIN buckM b ON a.setIdx = b.setIdx AND a.bucket = b.bucket
+        |    AND a.vec_id < b.vec_id),
+        |cand1 AS (
+        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
+        |  FROM buckM a JOIN buckM b ON a.setIdx = b.setIdx AND a.bucket = b.bucket
+        |    AND a.vec_id < b.vec_id
+        |  WHERE a.setIdx = 0),
+        |ap AS (
+        |  SELECT a.vec_id AS id1, b.vec_id AS id2, a.embedding AS v1, b.embedding AS v2
+        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
+        |apd AS (
+        |  SELECT id1, id2,
+        |    CAST(SUM(CAST(ROUND(CAST(v1[i] AS DOUBLE) * CAST(v2[i] AS DOUBLE)
+        |      * 1000000000000) AS BIGINT)) AS DOUBLE) / 1e12 AS dot
+        |  FROM (SELECT id1, id2, v1, v2, UNNEST(range(1, 65)) AS i FROM ap) z
+        |  GROUP BY id1, id2),
+        |tp AS (
+        |  SELECT d.id1, d.id2 FROM apd d
+        |  JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
+        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2),
+        |f1 AS (SELECT t.id1 FROM tp t JOIN cand1 c ON c.id1 = t.id1 AND c.id2 = t.id2),
+        |fM AS (SELECT t.id1 FROM tp t JOIN candM c ON c.id1 = t.id1 AND c.id2 = t.id2)
+        |SELECT
+        |  (SELECT COUNT(*) FROM tp) AS truePairs,
+        |  (SELECT COUNT(*) FROM f1) AS found1,
+        |  (SELECT COUNT(*) FROM fM) AS foundMulti,
+        |  CAST((SELECT COUNT(*) FROM f1) AS DOUBLE)
+        |    / (SELECT COUNT(*) FROM tp) AS recall1,
+        |  CAST((SELECT COUNT(*) FROM fM) AS DOUBLE)
+        |    / (SELECT COUNT(*) FROM tp) AS recallMulti""".stripMargin, materializeOracle = true),
     // k-means training gate: the spherical objective Σ dot(v, unit
     // centroid) must strictly improve seed → trained. recall@nProbe
     // (sim4) is noise on the structureless synthetic fixture (0.40-0.56
     // across iteration counts); the objective is monotone under Lloyd
     // rounds by construction, so it proves training works anywhere.
-    "sim8_ivf_train_gain" -> { (s, dir) =>
+    GateEntry("sim8_ivf_train_gain", { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Vectors.ivfObjective(emb, Vectors.seedCentroids(emb, 8))
         .select(col("objective").as("seedObjective"))
@@ -755,19 +1040,38 @@ object DataOpsQueries {
         .select(col("seedObjective"), col("trainedObjective"),
           (col("trainedObjective") > col("seedObjective")).as("improved"))
     },
+      s"""WITH $NormsSql,
+        |${ivfSql(3)},
+        |obj0 AS (
+        |  SELECT CAST(SUM(CAST(FLOOR(a.dot / c.cnrm * 1000000) AS BIGINT)) AS DOUBLE) / 1e6 AS o
+        |  FROM rk0 r JOIN ad0 a ON a.vec_id = r.vec_id AND a.cellId = r.cellId
+        |  JOIN cn0 c ON c.cellId = r.cellId
+        |  WHERE r.rn = 1),
+        |obj3 AS (
+        |  SELECT CAST(SUM(CAST(FLOOR(a.dot / c.cnrm * 1000000) AS BIGINT)) AS DOUBLE) / 1e6 AS o
+        |  FROM rk3 r JOIN ad3 a ON a.vec_id = r.vec_id AND a.cellId = r.cellId
+        |  JOIN cn3 c ON c.cellId = r.cellId
+        |  WHERE r.rn = 1)
+        |SELECT o0.o AS seedObjective, o3.o AS trainedObjective,
+        |  o3.o > o0.o AS improved
+        |FROM obj0 o0, obj3 o3""".stripMargin, materializeOracle = true),
     // IVF-bucketed ANN: Lloyd-trained coarse quantizer + probed top-k
-    "sim3_ivf" -> { (s, dir) =>
+    GateEntry("sim3_ivf", { (s, dir) =>
       Vectors.ivfSearch(Tables.embeddings(s, dir), nCells = 8, nProbe = 2,
           col("vec_id") % 100 === 0, k = 5, iters = 3)
         .orderBy(col("qid"), col("rank"))
     },
+      s"""WITH $NormsSql,
+        |${ivfSql(3)}
+        |SELECT qid, nid, cellId, cosine, rank FROM ivfRanked
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin, materializeOracle = true),
     // ANN quality measurement: recall@5 of the probed IVF search against
     // the exact brute-force top-5 — the accept/reject dial for any
     // approximate index before it ships. NB: on this synthetic fixture
     // the embeddings are uniform (no cluster structure), so this number
     // is a noisy ~0.4-0.6 regardless of training; sim8 gates training
     // quality via the monotone k-means objective instead
-    "sim4_ivf_recall" -> { (s, dir) =>
+    GateEntry("sim4_ivf_recall", { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val pred = col("vec_id") % 100 === 0
       val brute = Vectors.knnBrute(emb, pred, k = 5).select(col("qid"), col("nid"))
@@ -781,52 +1085,91 @@ object DataOpsQueries {
           (count(col("__hit")).cast("double") / count(lit(1))).as("recall"))
         .orderBy(col("qid"))
     },
+      s"""WITH $NormsSql,
+        |$BruteSql,
+        |${ivfSql(3)}
+        |SELECT b.qid, CAST(COUNT(i.nid) AS BIGINT) AS hits,
+        |  CAST(COUNT(i.nid) AS DOUBLE) / COUNT(*) AS recall
+        |FROM (SELECT qid, nid FROM bruteRanked WHERE rank <= 5) b
+        |LEFT JOIN (SELECT qid, nid FROM ivfRanked WHERE rank <= 5) i
+        |  ON b.qid = i.qid AND b.nid = i.nid
+        |GROUP BY b.qid ORDER BY b.qid""".stripMargin, materializeOracle = true),
     // product-quantization ADC search: corpus reduced to 8 one-byte
     // codes per vector (Lloyd-trained codebook), queries ranked by
     // exact-BIGINT table lookups
-    "sim5_pq_adc" -> { (s, dir) =>
+    GateEntry("sim5_pq_adc", { (s, dir) =>
       Vectors.pqAdcSearch(Tables.embeddings(s, dir), m = 8, dsub = 8, kCode = 4,
           col("vec_id") % 100 === 0, k = 5, iters = 3)
         .orderBy(col("qid"), col("rank"))
     },
+      s"""WITH ${pqSql(3)}
+        |SELECT qid, vec_id AS nid, adcDist, rank FROM adcRanked
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin),
     // PQ quality measurement: recall@5 vs the exact full-vector L2 truth
-    "sim6_pq_recall" -> { (s, dir) =>
+    GateEntry("sim6_pq_recall", { (s, dir) =>
       Vectors.pqRecall(Tables.embeddings(s, dir), m = 8, dsub = 8, kCode = 4,
           col("vec_id") % 100 === 0, k = 5, iters = 3)
         .orderBy(col("qid"))
     },
+      s"""WITH ${pqSql(3)},
+        |$ExactL2Sql
+        |SELECT e.qid, COUNT(a.vec_id) AS hits,
+        |  CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*) AS recall
+        |FROM (SELECT qid, nid FROM exRanked WHERE rank <= 5) e
+        |LEFT JOIN (SELECT qid, vec_id FROM adcRanked WHERE rank <= 5) a
+        |  ON a.qid = e.qid AND a.vec_id = e.nid
+        |GROUP BY e.qid ORDER BY e.qid""".stripMargin),
     // composed IVF-PQ (FAISS-style IVFADC): Lloyd-trained coarse cells,
     // PQ codes over the cell RESIDUALS, probed-cell-restricted ADC scan
-    "sim9_ivfpq_adc" -> { (s, dir) =>
+    GateEntry("sim9_ivfpq_adc", { (s, dir) =>
       Vectors.ivfPqSearch(Tables.embeddings(s, dir), nCells = 8, nProbe = 2,
           col("vec_id") % 100 === 0, k = 5, m = 8, dsub = 8, kCode = 4,
           iters = 3, pqIters = 0)
         .orderBy(col("qid"), col("rank"))
     },
+      s"""WITH $NormsSql,
+        |${ivfPqSql(3)}
+        |SELECT qid, vec_id AS nid, adcDist, rank FROM ivfadcRanked
+        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin, materializeOracle = true),
     // IVF-PQ quality gate: recall@5 vs exact L2 — coarse pruning and
     // residual quantization measured together
-    "sim10_ivfpq_recall" -> { (s, dir) =>
+    GateEntry("sim10_ivfpq_recall", { (s, dir) =>
       Vectors.ivfPqRecall(Tables.embeddings(s, dir), nCells = 8, nProbe = 2,
           col("vec_id") % 100 === 0, k = 5, m = 8, dsub = 8, kCode = 4,
           iters = 3, pqIters = 0)
         .orderBy(col("qid"))
     },
+      s"""WITH $NormsSql,
+        |${ivfPqSql(3)},
+        |$ExactL2Sql
+        |SELECT e.qid, COUNT(a.vec_id) AS hits,
+        |  CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*) AS recall
+        |FROM (SELECT qid, nid FROM exRanked WHERE rank <= 5) e
+        |LEFT JOIN (SELECT qid, vec_id FROM ivfadcRanked WHERE rank <= 5) a
+        |  ON a.qid = e.qid AND a.vec_id = e.nid
+        |GROUP BY e.qid ORDER BY e.qid""".stripMargin, materializeOracle = true),
     // incremental ANN ingest: the standing corpus (6/7 of vectors) trains
     // and populates the IVF-PQ index ONCE; the new batch (vec_id % 7 = 3)
     // only probes — each batch vector's top-3 standing neighbors, O(batch)
     // work against the standing structure (the vector-side twin of d8/d10)
-    "sim11_ivfpq_ingest" -> { (s, dir) =>
+    GateEntry("sim11_ivfpq_ingest", { (s, dir) =>
       Vectors.ivfPqSearch(Tables.embeddings(s, dir), nCells = 8, nProbe = 2,
           col("vec_id") % 7 === 3, k = 3, m = 8, dsub = 8, kCode = 4,
           iters = 2, pqIters = 0, corpusPred = col("vec_id") % 7 =!= 3)
         .orderBy(col("qid"), col("rank"))
     },
+      s"""WITH $NormsSql,
+        |${ivfPqSql(2, trainFilter = "vec_id % 7 <> 3",
+                    corpusFilter = "vec_id % 7 <> 3",
+                    queryFilter = "vec_id % 7 = 3")}
+        |SELECT qid, vec_id AS nid, adcDist, rank FROM ivfadcRanked
+        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin, materializeOracle = true),
     // the k-NN vote SERVED BY the IVF-PQ index (sim13's serve path,
     // differentially gated end-to-end: coarse quantizer + residual
     // codebook + ADC ranking + majority vote all replayed by the
     // oracle) — sim11's incremental-ingest split: the %7≠3 corpus
     // trains and populates, the %7=3 batch probes and classifies
-    "sim14_knn_classify_ivf" -> { (s, dir) =>
+    GateEntry("sim14_knn_classify_ivf", { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       Vectors.knnClassifyFrom(
           Vectors.ivfPqSearch(emb, nCells = 8, nProbe = 2,
@@ -835,23 +1178,75 @@ object DataOpsQueries {
           emb, col("vec_id") % 7 === 3)
         .orderBy(col("qid"))
     },
+      // the served vote: sim11's full IVF-PQ oracle chain, then the
+      // sim13 tally on the ADC top-3
+      s"""WITH $NormsSql,
+        |${ivfPqSql(2, trainFilter = "vec_id % 7 <> 3",
+                    corpusFilter = "vec_id % 7 <> 3",
+                    queryFilter = "vec_id % 7 = 3")},
+        |topk AS (SELECT qid, vec_id AS nid FROM ivfadcRanked WHERE rank <= 3),
+        |tally AS (
+        |  SELECT t.qid, CAST(e.label AS BIGINT) AS nlabel, COUNT(*) AS votes
+        |  FROM topk t JOIN embeddings e ON e.vec_id = t.nid
+        |  GROUP BY t.qid, CAST(e.label AS BIGINT)),
+        |pick AS (
+        |  SELECT qid, nlabel, votes,
+        |    ROW_NUMBER() OVER (PARTITION BY qid
+        |      ORDER BY votes DESC, nlabel ASC) AS rk
+        |  FROM tally)
+        |SELECT q.vec_id AS qid, CAST(q.label AS BIGINT) AS trueLabel,
+        |  p.nlabel AS predLabel, CAST(p.votes AS BIGINT) AS votes,
+        |  CAST(CASE WHEN p.nlabel = CAST(q.label AS BIGINT)
+        |    THEN 1 ELSE 0 END AS BIGINT) AS correct
+        |FROM embeddings q LEFT JOIN pick p ON p.qid = q.vec_id AND p.rk = 1
+        |WHERE q.vec_id % 7 = 3
+        |ORDER BY qid""".stripMargin),
     // language ID heuristic
-    "t1_lang_id" -> { (s, dir) =>
+    GateEntry("t1_lang_id", { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"),
           TextFunctions.langId(col("text")).as("predLang"))
         .orderBy(col("doc_id"))
     },
+      """WITH t AS (
+        |  SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM documents),
+        |sc AS (
+        |  SELECT doc_id, lang,
+        |    len(list_filter(w, x -> x IN ('the','a','of','and','to'))) AS en,
+        |    len(list_filter(w, x -> x IN ('data','row','query','tabla','fila'))) AS es,
+        |    len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS de
+        |  FROM t)
+        |SELECT doc_id, lang,
+        |  CASE WHEN en >= es AND en >= de AND en > 0 THEN 'en'
+        |       WHEN es >= de AND es > 0 THEN 'es'
+        |       WHEN de > 0 THEN 'de'
+        |       ELSE 'und' END AS predLang
+        |FROM sc ORDER BY doc_id""".stripMargin),
     // quality scoring
-    "t2_quality_score" -> { (s, dir) =>
+    GateEntry("t2_quality_score", { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"),
           TextFunctions.wsTokenCount(col("text")).as("nTokens"),
           TextFunctions.qualityScore(col("text"), col("n_chars")).as("score"))
         .orderBy(col("doc_id"))
     },
+      """WITH t AS (
+        |  SELECT doc_id, n_chars, text,
+        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS w FROM documents),
+        |f AS (
+        |  SELECT doc_id, len(w) AS nTokens,
+        |    CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
+        |    CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
+        |      ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
+        |    CASE WHEN n_chars > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END AS punctRatio,
+        |    CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
+        |  FROM t)
+        |SELECT doc_id, nTokens,
+        |  meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
+        |FROM f ORDER BY doc_id""".stripMargin, headline = true),
     // token counting (whitespace-ish, BPE-ish, chars/4)
-    "t3_token_count" -> { (s, dir) =>
+    GateEntry("t3_token_count", { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"),
           TextFunctions.wsTokenCount(col("text")).as("wsTokens"),
@@ -859,10 +1254,15 @@ object DataOpsQueries {
           TextFunctions.approxTokenCount(col("n_chars")).as("approxTokens"))
         .orderBy(col("doc_id"))
     },
+      """SELECT doc_id,
+        |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS wsTokens,
+        |  len(regexp_extract_all(lower(text), '[a-z]{1,4}|[0-9]|[^a-z0-9 ]')) AS bpeTokens,
+        |  CAST(ceil(CAST(n_chars AS DOUBLE) / 4.0) AS BIGINT) AS approxTokens
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // document fingerprint (bottom-4 md5 sketch)
     // decontamination: training docs sharing >=2 distinct 3-gram shingles
     // with the eval slice (doc_id % 97 = 0) — train/test overlap report
-    "t6_decontaminate" -> { (s, dir) =>
+    GateEntry("t6_decontaminate", { (s, dir) =>
       val d = Tables.documents(s, dir)
       Dedup.contamination(
           d.filter(col("doc_id") % 97 =!= 0L),
@@ -870,13 +1270,33 @@ object DataOpsQueries {
           "doc_id", "text", minShared = 2)
         .orderBy(col("trainId"), col("evalId"))
     },
-    "t4_fingerprint" -> { (s, dir) =>
+      """WITH words AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM documents),
+        |sh AS (
+        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 3
+        |    THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w)-1)]
+        |    ELSE [] END) AS shingle
+        |  FROM words),
+        |shd AS (SELECT DISTINCT doc_id, shingle FROM sh)
+        |SELECT t.doc_id AS trainId, e.doc_id AS evalId,
+        |       COUNT(*) AS sharedShingles
+        |FROM shd t JOIN shd e ON t.shingle = e.shingle
+        |WHERE t.doc_id % 97 <> 0 AND e.doc_id % 97 = 0
+        |GROUP BY 1, 2 HAVING COUNT(*) >= 2
+        |ORDER BY trainId, evalId""".stripMargin),
+    GateEntry("t4_fingerprint", { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), TextFunctions.fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id"))
     },
+      """SELECT doc_id,
+        |  array_to_string((list_sort(list_transform(
+        |    list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')),
+        |    x -> md5(x))))[1:4], ',') AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // multimodal: binary payload metadata extraction
-    "m1_media_meta" -> { (s, dir) =>
+    GateEntry("m1_media_meta", { (s, dir) =>
       val media = graft.multimodal.Multimodal.asMedia(Tables.documents(s, dir))
       val headers = Tables.documents(s, dir).select(col("doc_id"),
         hex(encode(substring(col("text"), 1, 4), "UTF-8")).as("headerHex"))
@@ -885,6 +1305,11 @@ object DataOpsQueries {
         .join(headers, Seq("doc_id"))
         .orderBy(col("doc_id"))
     },
+      """SELECT doc_id,
+        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
+        |  octet_length(encode(text)) AS byteLen,
+        |  hex(encode(substr(text, 1, 4))) AS headerHex
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // m5 binary-payload dedup: the asset-level analog of d1/d2 over a
     // media corpus with planted exact copies (%7, re-keyed) AND planted
     // aligned near-dups (%11, a 3-byte suffix — every full chunk still
@@ -904,7 +1329,7 @@ object DataOpsQueries {
     // (a LENGTH-changing edit shifts every sample, hamming ~18+: the
     // stub grid is content-addressed, not shift-tolerant; real pixel
     // grids get shift tolerance from the resample)
-    "m7_phash_neardup" -> { (s, dir) =>
+    GateEntry("m7_phash_neardup", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val md = d.select(col("doc_id"), col("text"))
         .unionByName(d.filter(col("doc_id") % 7 === 0)
@@ -917,6 +1342,40 @@ object DataOpsQueries {
           graft.multimodal.Multimodal.asMedia(md), "doc_id")
         .orderBy(col("id1"), col("id2"))
     },
+      // the same sampled grid, 64-term dHash sum (k=63 spelled as the
+      // signed-long min expression), byte-band melt with the bucket cap,
+      // exact-hamming filter on candidates
+      s"""WITH m7_m AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000,
+        |    substr(text, 1, greatest(length(text) - 5, 0)) || 'qqqqq'
+        |  FROM documents WHERE doc_id % 11 = 0),
+        |m7_g AS (
+        |  SELECT doc_id,
+        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
+        |     FOR k IN range(0, 72)] AS g
+        |  FROM m7_m),
+        |m7_h AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m7_g),
+        |m7_melt AS (
+        |  SELECT doc_id, dh, t AS bandIdx,
+        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
+        |  FROM m7_h, (SELECT UNNEST(range(0, 8)) AS t)),
+        |m7_keep AS (
+        |  SELECT bandIdx, bandVal FROM m7_melt
+        |  GROUP BY 1, 2 HAVING COUNT(*) <= 256),
+        |m7_km AS (SELECT m7_melt.* FROM m7_melt JOIN m7_keep
+        |  USING (bandIdx, bandVal))
+        |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
+        |  CAST(bit_count(CAST(xor(a.dh, b.dh) AS BIT)) AS INT) AS hamming,
+        |  a.dh = b.dh AS exactHash
+        |FROM m7_km a JOIN m7_km b
+        |  ON a.bandIdx = b.bandIdx AND a.bandVal = b.bandVal
+        |  AND a.doc_id < b.doc_id
+        |WHERE bit_count(CAST(xor(a.dh, b.dh) AS BIT)) <= 6
+        |ORDER BY id1, id2""".stripMargin),
     // incremental perceptual ingest: arriving assets classified against
     // the STANDING phashIndex (%3 slice) — exact_phash (%15
     // re-deliveries, hamming 0), near_dup (tail-perturbed %3∖%5 docs,
@@ -925,7 +1384,7 @@ object DataOpsQueries {
     // perceptual verdict), unique (%5∖%3 docs). All three verdicts
     // non-vacuous at every SF; O(batch) melt + bucket-local probes,
     // the corpus never re-pairs
-    "m8_phash_incremental" -> { (s, dir) =>
+    GateEntry("m8_phash_incremental", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val asM = (df: org.apache.spark.sql.DataFrame) =>
         graft.multimodal.Multimodal.asMedia(df)
@@ -946,7 +1405,65 @@ object DataOpsQueries {
       graft.multimodal.Multimodal.phashNearDupsAgainst(idx, batch, "doc_id")
         .orderBy(col("doc_id"))
     },
-    "m5_payload_dedup" -> { (s, dir) =>
+      // the same grid/dHash; index-side band melt with the cap, batch
+      // bands probe it, best match = min (hamming, id) within threshold
+      s"""WITH m8_s AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+        |m8_b AS (
+        |  SELECT doc_id + 3000000 AS doc_id, text FROM documents
+        |  WHERE doc_id % 15 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 4000000,
+        |    substr(text, 1, greatest(length(text) - 5, 0)) || 'qqqqq'
+        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0
+        |  UNION ALL
+        |  SELECT doc_id + 5000000, text FROM documents
+        |  WHERE doc_id % 5 = 0 AND doc_id % 3 <> 0),
+        |m8_sg AS (
+        |  SELECT doc_id,
+        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
+        |     FOR k IN range(0, 72)] AS g
+        |  FROM m8_s),
+        |m8_bg AS (
+        |  SELECT doc_id,
+        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
+        |     FOR k IN range(0, 72)] AS g
+        |  FROM m8_b),
+        |m8_sh AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m8_sg),
+        |m8_bh AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m8_bg),
+        |m8_im AS (
+        |  SELECT doc_id, dh, t AS bandIdx,
+        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
+        |  FROM m8_sh, (SELECT UNNEST(range(0, 8)) AS t)),
+        |m8_keep AS (
+        |  SELECT bandIdx, bandVal FROM m8_im
+        |  GROUP BY 1, 2 HAVING COUNT(*) <= 256),
+        |m8_ik AS (SELECT m8_im.* FROM m8_im JOIN m8_keep
+        |  USING (bandIdx, bandVal)),
+        |m8_bm AS (
+        |  SELECT doc_id, dh, t AS bandIdx,
+        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
+        |  FROM m8_bh, (SELECT UNNEST(range(0, 8)) AS t)),
+        |m8_best AS (
+        |  SELECT doc_id, matchId, hamming FROM (
+        |    SELECT b.doc_id, i.doc_id AS matchId,
+        |      CAST(bit_count(CAST(xor(b.dh, i.dh) AS BIT)) AS INT)
+        |        AS hamming,
+        |      ROW_NUMBER() OVER (PARTITION BY b.doc_id
+        |        ORDER BY bit_count(CAST(xor(b.dh, i.dh) AS BIT)),
+        |          i.doc_id) AS rn
+        |    FROM m8_bm b JOIN m8_ik i
+        |      ON b.bandIdx = i.bandIdx AND b.bandVal = i.bandVal
+        |    WHERE bit_count(CAST(xor(b.dh, i.dh) AS BIT)) <= 6)
+        |  WHERE rn = 1)
+        |SELECT b.doc_id,
+        |  CASE WHEN e.hamming = 0 THEN 'exact_phash'
+        |       WHEN e.hamming IS NOT NULL THEN 'near_dup'
+        |       ELSE 'unique' END AS verdict,
+        |  e.matchId, e.hamming
+        |FROM m8_bh b LEFT JOIN m8_best e USING (doc_id)
+        |ORDER BY b.doc_id""".stripMargin),
+    GateEntry("m5_payload_dedup", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val md = d.select(col("doc_id"), col("text"))
         .unionByName(d.filter(col("doc_id") % 7 === 0)
@@ -958,6 +1475,33 @@ object DataOpsQueries {
           graft.multimodal.Multimodal.asMedia(md), "doc_id")
         .orderBy(col("id1"), col("id2"))
     },
+      // same corpus derivation; DuckDB md5(VARCHAR) hashes the same utf-8
+      // bytes Spark's md5(BINARY payload) does for this ASCII corpus
+      """WITH m5_corp AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, text || ' v2' FROM documents WHERE doc_id % 11 = 0),
+        |m5_full AS (SELECT doc_id, md5(text) AS h FROM m5_corp),
+        |m5_ch AS (
+        |  SELECT doc_id, i - 1 AS ci,
+        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
+        |  FROM (SELECT doc_id, text,
+        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
+        |        FROM m5_corp)),
+        |m5_b AS (SELECT ci, ch FROM m5_ch GROUP BY ci, ch HAVING COUNT(*) <= 64),
+        |m5_chp AS (SELECT c.doc_id, c.ci, c.ch FROM m5_ch c JOIN m5_b USING (ci, ch)),
+        |m5_p AS (
+        |  SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS sharedChunks
+        |  FROM m5_chp a JOIN m5_chp b ON a.ci = b.ci AND a.ch = b.ch
+        |    AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
+        |SELECT p.id1, p.id2, p.sharedChunks, fa.h = fb.h AS exactDup
+        |FROM m5_p p
+        |JOIN m5_full fa ON fa.doc_id = p.id1
+        |JOIN m5_full fb ON fb.doc_id = p.id2
+        |ORDER BY id1, id2""".stripMargin),
     // m6 incremental asset ingest: a batch of arriving media classified
     // against the STANDING asset index (payloadIndex over the %3 slice)
     // — exact_dup (%15 re-deliveries), near_dup (re-keyed %3∖%5 docs
@@ -966,7 +1510,7 @@ object DataOpsQueries {
     // O(batch) equi-joins against the index; the streaming twin
     // (Changefeed.streamingPayloadDedup) runs this same body per
     // micro-batch against the pinned index.
-    "m6_payload_incremental" -> { (s, dir) =>
+    GateEntry("m6_payload_incremental", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val asM = (df: org.apache.spark.sql.DataFrame) =>
         graft.multimodal.Multimodal.asMedia(df)
@@ -984,12 +1528,63 @@ object DataOpsQueries {
           batch, "doc_id")
         .orderBy(col("doc_id"))
     },
+      // the ARRAY_AGG(x ORDER BY shared DESC, cid ASC)[1] pick is the
+      // oracle's argmax — same (sharedChunks desc, id asc) best-match
+      // rule the Spark struct-max encodes
+      """WITH m6_stand AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
+        |m6_batch AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 15 = 0
+        |  UNION ALL
+        |  SELECT doc_id, text FROM documents
+        |  WHERE doc_id % 5 = 0 AND doc_id % 3 <> 0
+        |  UNION ALL
+        |  SELECT doc_id + 3000000, text || ' v2' FROM documents
+        |  WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0),
+        |m6_if AS (SELECT doc_id AS cid, md5(text) AS h FROM m6_stand),
+        |m6_ic AS (
+        |  SELECT doc_id AS cid, i - 1 AS ci,
+        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
+        |  FROM (SELECT doc_id, text,
+        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
+        |        FROM m6_stand)),
+        |m6_okb AS (SELECT ci, ch FROM m6_ic GROUP BY ci, ch HAVING COUNT(*) <= 64),
+        |m6_icp AS (SELECT c.cid, c.ci, c.ch FROM m6_ic c JOIN m6_okb USING (ci, ch)),
+        |m6_bf AS (SELECT doc_id, md5(text) AS bh FROM m6_batch),
+        |m6_bc AS (
+        |  SELECT doc_id, i - 1 AS ci,
+        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
+        |  FROM (SELECT doc_id, text,
+        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
+        |        FROM m6_batch)),
+        |m6_ex AS (
+        |  SELECT b.doc_id, MIN(i.cid) AS exactOf
+        |  FROM m6_bf b JOIN m6_if i ON b.bh = i.h GROUP BY 1),
+        |m6_nr0 AS (
+        |  SELECT b.doc_id, i.cid, COUNT(*) AS shared
+        |  FROM m6_bc b JOIN m6_icp i ON b.ci = i.ci AND b.ch = i.ch
+        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+        |m6_nr AS (
+        |  SELECT doc_id,
+        |    (ARRAY_AGG(cid ORDER BY shared DESC, cid ASC))[1] AS nearOf,
+        |    (ARRAY_AGG(shared ORDER BY shared DESC, cid ASC))[1] AS nearShared
+        |  FROM m6_nr0 GROUP BY doc_id)
+        |SELECT b.doc_id,
+        |  CASE WHEN e.exactOf IS NOT NULL THEN 'exact_dup'
+        |       WHEN n.nearOf IS NOT NULL THEN 'near_dup'
+        |       ELSE 'unique' END AS verdict,
+        |  COALESCE(e.exactOf, n.nearOf) AS matchId,
+        |  CASE WHEN e.exactOf IS NULL THEN n.nearShared END AS sharedChunks
+        |FROM m6_batch b
+        |LEFT JOIN m6_ex e USING (doc_id)
+        |LEFT JOIN m6_nr n USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
     // F1 in the gate: documents → Hadoop SequenceFile[Text,Text] on disk
     // → read back — the differential check validates the round-trip
     // F4 codec matrix: one real write+read per supported codec, each
     // asserting the SAME row count and checksums — a codec that
     // corrupted, truncated, or dropped rows diverges on its line
-    "f13_codec_matrix" -> { (s, dir) =>
+    GateEntry("f13_codec_matrix", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f13").toString
       val src = Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_name"))
@@ -1001,12 +1596,20 @@ object DataOpsQueries {
           .select(lit(c).as("codec"), col("n"), col("keySum"), col("nameLen"))
       }.reduce(_ unionByName _).orderBy(col("codec"))
     },
+      s"""SELECT c.codec, s.n, s.keySum, s.nameLen
+        |FROM (VALUES ${graft.sources.Formats.Codecs.sorted
+            .map(c => s"('$c')").mkString(", ")}) AS c(codec)
+        |CROSS JOIN (
+        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS keySum,
+        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
+        |  FROM supplier) s
+        |ORDER BY c.codec""".stripMargin),
     // F6 Record I/O: the schema'd record stream through TEXT serial
     // forms — csv (with a payload carrying the separator and a quote,
     // so the writer must quote and the reader must unquote) and json —
     // read back under the explicit StructType; checksums must survive
     // both trips byte-identically
-    "f14_record_io" -> { (s, dir) =>
+    GateEntry("f14_record_io", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f14").toString
       val src = Tables.supplier(s, dir).select(
         col("s_suppkey").as("id"),
@@ -1025,13 +1628,21 @@ object DataOpsQueries {
         .unionByName(sums("json", s.read.schema(src.schema).json(s"$tmp/json")))
         .orderBy(col("format"))
     },
+      """SELECT f.format, s.n, s.idSum, s.payloadLen, s.distinctPayloads
+        |FROM (VALUES ('csv'), ('json')) AS f(format)
+        |CROSS JOIN (
+        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS idSum,
+        |         CAST(SUM(length(s_name) + 3) AS BIGINT) AS payloadLen,
+        |         COUNT(DISTINCT s_name || ',"q') AS distinctPayloads
+        |  FROM supplier) s
+        |ORDER BY f.format""".stripMargin),
     // F8 in the gate: the two alternative-filesystem schemes the spec
     // drives end-to-end, each carrying the SAME supplier checksums —
     // har:// reads a createHar-written archive through HarFileSystem
     // (list + open + seek against the packed part file), viewfs://
     // resolves a mount-table link. A scheme that dropped, duplicated,
     // or corrupted rows diverges on its line.
-    "f15_fs_schemes" -> { (s, dir) =>
+    GateEntry("f15_fs_schemes", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f15").toString
       val src = Tables.supplier(s, dir).select(col("s_suppkey"), col("s_name"))
       src.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -1058,13 +1669,20 @@ object DataOpsQueries {
       sums("har", har).unionByName(sums("viewfs", view))
         .orderBy(col("scheme"))
     },
+      """SELECT f.scheme, s.n, s.keySum, s.nameLen
+        |FROM (VALUES ('har'), ('viewfs')) AS f(scheme)
+        |CROSS JOIN (
+        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS keySum,
+        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
+        |  FROM supplier) s
+        |ORDER BY f.scheme""".stripMargin),
     // F5 in the gate: the two serializer frameworks (SURVEY §2.5 F5 —
     // Writable/pluggable serialization → Encoders): every supplier row
     // round-trips through the PRODUCT encoder (typed Dataset map) and
     // through the KRYO binary encoder (whole-object serialize →
     // deserialize), then re-aggregates — a serializer that mangled a
     // field diverges on its checksums line.
-    "f16_encoder_roundtrip" -> { (s, dir) =>
+    GateEntry("f16_encoder_roundtrip", { (s, dir) =>
       import s.implicits._
       val src = Tables.supplier(s, dir)
         .select(col("s_suppkey").as("id"), col("s_name").as("name"))
@@ -1081,7 +1699,14 @@ object DataOpsQueries {
       sums("kryo", viaKryo).unionByName(sums("product", viaProduct))
         .orderBy(col("codec"))
     },
-    "f1_seqfile_roundtrip" -> { (s, dir) =>
+      """SELECT f.codec, s.n, s.idSum, s.nameLen
+        |FROM (VALUES ('kryo'), ('product')) AS f(codec)
+        |CROSS JOIN (
+        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS idSum,
+        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
+        |  FROM supplier) s
+        |ORDER BY f.codec""".stripMargin),
+    GateEntry("f1_seqfile_roundtrip", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f1").toString
       val kv = Tables.documents(s, dir)
         .select(col("doc_id").cast("string").as("key"), col("text").as("value"))
@@ -1089,10 +1714,12 @@ object DataOpsQueries {
       graft.sources.Formats.readSequenceFile(s, s"$tmp/seq")
         .orderBy(col("key"))
     },
+      """SELECT CAST(doc_id AS STRING) AS key, text AS value
+        |FROM documents ORDER BY key""".stripMargin),
     // F1 Sorter.merge in the gate: two overlapping pre-sorted runs of the
     // documents table merged into one sorted sequence file — docs on both
     // the %2 and %3 grids appear TWICE (merge keeps duplicates)
-    "f2_seqfile_merge" -> { (s, dir) =>
+    GateEntry("f2_seqfile_merge", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f2").toString
       val docs = Tables.documents(s, dir)
       val kv = (pred: org.apache.spark.sql.Column) => docs.filter(pred)
@@ -1106,10 +1733,17 @@ object DataOpsQueries {
       graft.sources.Formats.readSequenceFile(s, s"$tmp/merged")
         .orderBy(col("key"), col("value"))
     },
+      """SELECT key, value FROM (
+        |  SELECT CAST(doc_id AS STRING) AS key, text AS value
+        |  FROM documents WHERE doc_id % 2 = 0
+        |  UNION ALL
+        |  SELECT CAST(doc_id AS STRING), text
+        |  FROM documents WHERE doc_id % 3 = 0) u
+        |ORDER BY key, value""".stripMargin),
     // F2/F3 interop in the gate: supplier rows written driver-side
     // through the REAL Hadoop MapFile.Writer (bounded: the supplier
     // dimension), then read back by the distributed MapFile-dir reader
-    "f3_mapfile_read" -> { (s, dir) =>
+    GateEntry("f3_mapfile_read", { (s, dir) =>
       import org.apache.hadoop.io.Text
       val tmp = graft.core.Caching.scratchDir("f3").toString
       val mfDir = s"$tmp/mapfile"
@@ -1126,39 +1760,47 @@ object DataOpsQueries {
       finally w.close()
       graft.sources.Formats.readMapFileDir(s, mfDir).orderBy(col("key"))
     },
+      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
+        |FROM supplier ORDER BY key""".stripMargin),
     // F3 interop in the gate: part rows written distributed as a dir of
     // REAL gz-compressed binary TFiles (one sorted part per task), read
     // back by the distributed TFile scanner
-    "f4_tfile_roundtrip" -> { (s, dir) =>
+    GateEntry("f4_tfile_roundtrip", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f4").toString
       val kv = Tables.part(s, dir)
         .select(col("p_partkey").cast("string").as("key"), col("p_name").as("value"))
       graft.sources.Formats.writeTFileDir(kv, s"$tmp/tf", compression = "gz")
       graft.sources.Formats.readTFileDir(s, s"$tmp/tf").orderBy(col("key"))
     },
+      """SELECT CAST(p_partkey AS VARCHAR) AS key, p_name AS value
+        |FROM part ORDER BY key""".stripMargin),
     // F3 seek in the gate: block-index point lookup (createScannerByKey)
     // over a sorted TFile dir — only the probe key's block decompresses
-    "f5_tfile_seek" -> { (s, dir) =>
+    GateEntry("f5_tfile_seek", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f5").toString
       val kv = Tables.supplier(s, dir)
         .select(col("s_suppkey").cast("string").as("key"), col("s_name").as("value"))
       graft.sources.Formats.writeTFileDir(kv, s"$tmp/tf")
       graft.sources.Formats.tfileGet(s, s"$tmp/tf", "7").orderBy(col("key"))
     },
+      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
+        |FROM supplier WHERE s_suppkey = 7 ORDER BY key""".stripMargin),
     // F2 WRITE interop in the gate: customers written distributed as a
     // dir of REAL part-MapFiles (range-tiled, one MapFile per task),
     // read back by the distributed parts reader
-    "f8_mapfile_write" -> { (s, dir) =>
+    GateEntry("f8_mapfile_write", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("f8").toString
       val kv = Tables.customer(s, dir)
         .select(col("c_custkey").cast("string").as("key"), col("c_name").as("value"))
       graft.sources.Formats.writeMapFileDir(kv, s"$tmp/mf")
       graft.sources.Formats.readMapFileParts(s, s"$tmp/mf").orderBy(col("key"))
     },
+      """SELECT CAST(c_custkey AS VARCHAR) AS key, c_name AS value
+        |FROM customer ORDER BY key""".stripMargin),
     // F2 SetFile interop in the gate: nation names appended through the
     // REAL SetFile.Writer (bounded: the nation dimension), read back as
     // the key column by the distributed reader
-    "f6_setfile_keys" -> { (s, dir) =>
+    GateEntry("f6_setfile_keys", { (s, dir) =>
       import org.apache.hadoop.io.Text
       val tmp = graft.core.Caching.scratchDir("f6").toString
       val setDir = s"$tmp/set"
@@ -1171,10 +1813,11 @@ object DataOpsQueries {
       try keys.foreach(k => w.append(new Text(k))) finally w.close()
       graft.sources.Formats.readSetFileDir(s, setDir).orderBy(col("key"))
     },
+      "SELECT n_name AS key FROM nation ORDER BY key"),
     // F2 BloomMapFile interop in the gate: the on-disk bloom consulted
     // before the distributed get — the hit path lands here; the miss
     // path (no job at all) is pinned in FormatsSpec
-    "f7_bloom_get" -> { (s, dir) =>
+    GateEntry("f7_bloom_get", { (s, dir) =>
       import org.apache.hadoop.io.{BloomMapFile, MapFile, Text}
       val tmp = graft.core.Caching.scratchDir("f7").toString
       val bmDir = s"$tmp/bloom"
@@ -1190,9 +1833,11 @@ object DataOpsQueries {
       finally w.close()
       graft.sources.Formats.bloomMapFileGet(s, bmDir, "9").orderBy(col("key"))
     },
+      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
+        |FROM supplier WHERE s_suppkey = 9 ORDER BY key""".stripMargin),
     // M: batched stub decode through the mapPartitions plumbing — the
     // oracle recomputes the deterministic fake features from byte stats
-    "m2_decode_meta" -> { (s, dir) =>
+    GateEntry("m2_decode_meta", { (s, dir) =>
       import s.implicits._
       val d = requirePlantHeadroom(Tables.documents(s, dir))
       val media = graft.multimodal.Multimodal.asMedia(d)
@@ -1223,6 +1868,24 @@ object DataOpsQueries {
             .as("lumaOk"))
         .orderBy(col("doc_id"))
     },
+      // planted JPEG rows: geometry is pinned exactly (id-derived dims),
+      // the luma band is pinned as TRUE, byteLen NULL on both sides
+      """SELECT doc_id,
+        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
+        |  CAST(octet_length(encode(text)) AS BIGINT) AS byteLen,
+        |  CAST(16 + octet_length(encode(text)) % 64 AS INT) AS width,
+        |  CAST(CASE WHEN doc_id % 3 = 1 THEN 1
+        |       ELSE 16 + (octet_length(encode(text)) // 64) % 64 END AS INT) AS height,
+        |  CAST(NULL AS BOOLEAN) AS lumaOk
+        |FROM documents
+        |UNION ALL
+        |SELECT doc_id + 6000000 AS doc_id, 'image' AS modality,
+        |  CAST(NULL AS BIGINT) AS byteLen,
+        |  CAST(16 + doc_id % 13 AS INT) AS width,
+        |  CAST(8 + doc_id % 7 AS INT) AS height,
+        |  TRUE AS lumaOk
+        |FROM documents WHERE doc_id % 97 = 0
+        |ORDER BY doc_id""".stripMargin),
     // M: resize plumbing through the batched mapPartitions path — the
     // stub's stride-sampled thumbnail is recomputed by the oracle from
     // the same byte stream (hash + length checked per doc); the planted
@@ -1231,7 +1894,7 @@ object DataOpsQueries {
     // same batched path: geometry and the luma band survive the round
     // trip (jpegRoundtrip = true, oracle-pinned), while the PNG bytes
     // themselves — an encoder detail — deliberately do not gate
-    "m4_resize" -> { (s, dir) =>
+    GateEntry("m4_resize", { (s, dir) =>
       import s.implicits._
       val d = requirePlantHeadroom(Tables.documents(s, dir))
       val media = graft.multimodal.Multimodal.asMedia(d)
@@ -1262,9 +1925,37 @@ object DataOpsQueries {
         .join(back, Seq("doc_id"), "left")
         .orderBy(col("doc_id"))
     },
+      // stride sampling mirror: stride = max(1, len div 8); positions
+      // 0, stride, 2*stride, ... capped at 8 samples (w*h = 4*2)
+      """WITH m AS (
+        |  SELECT doc_id,
+        |    (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
+        |    text, length(text) AS len
+        |  FROM documents),
+        |p AS (
+        |  SELECT doc_id, modality, text, len,
+        |    GREATEST(1, len // 8) AS stride
+        |  FROM m),
+        |t AS (
+        |  SELECT doc_id, modality,
+        |    array_to_string([substr(text, 1 + i*stride, 1)
+        |      FOR i IN range(0, LEAST(8,
+        |        CAST(CEIL(CAST(len AS DOUBLE) / stride) AS BIGINT)))], '') AS thumb
+        |  FROM p)
+        |SELECT doc_id, modality, 4 AS width, 2 AS height,
+        |  md5(thumb) AS thumbHash, length(thumb) AS thumbBytes,
+        |  CAST(NULL AS BOOLEAN) AS jpegRoundtrip
+        |FROM t
+        |UNION ALL
+        |SELECT doc_id + 6000000 AS doc_id, 'image' AS modality,
+        |  4 AS width, 2 AS height,
+        |  CAST(NULL AS VARCHAR) AS thumbHash, CAST(NULL AS BIGINT) AS thumbBytes,
+        |  TRUE AS jpegRoundtrip
+        |FROM documents WHERE doc_id % 97 = 0
+        |ORDER BY doc_id""".stripMargin),
     // M: video frame sampling — one payload fans out to frame rows; the
     // differential check covers kept-frame counts + the first frame bytes
-    "m3_frame_sample" -> { (s, dir) =>
+    GateEntry("m3_frame_sample", { (s, dir) =>
       val media = graft.multimodal.Multimodal.asMedia(Tables.documents(s, dir))
       graft.multimodal.Multimodal.sampleFrames(s, media, frameBytes = 256, everyN = 2)
         .toDF()
@@ -1273,8 +1964,16 @@ object DataOpsQueries {
           max(when(col("frameIdx") === 0, hex(col("payload")))).as("firstFrameHex"))
         .orderBy(col("doc_id"))
     },
+      // NB: char-substr == byte-substr here because the documents corpus is
+      // pure ASCII at every sf (verified); DuckDB lacks substring-on-BLOB
+      """SELECT doc_id,
+        |  (CAST(CEIL(octet_length(encode(text)) / 256.0) AS BIGINT) + 1) // 2 AS nFrames,
+        |  hex(encode(substr(text, 1, 256))) AS firstFrameHex
+        |FROM documents
+        |WHERE doc_id % 3 = 2 AND length(text) > 0 -- empty payload → no frames
+        |ORDER BY doc_id""".stripMargin),
     // sessionization over the events stream table (30-min gap rule)
-    "e1_sessionize" -> { (s, dir) =>
+    GateEntry("e1_sessionize", { (s, dir) =>
       DerivedState.register(s, dir)
       val ev = s.table("events")
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -1286,8 +1985,18 @@ object DataOpsQueries {
         .agg(count(lit(1)).as("events"), sum(col("newSession")).as("sessions"))
         .orderBy(col("user_id"))
     },
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_ns(ts) AS tsn FROM events),
+        |l AS (
+        |  SELECT user_id,
+        |    LAG(tsn, 1) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS prevTs,
+        |    tsn
+        |  FROM e)
+        |SELECT user_id, COUNT(*) AS events,
+        |  CAST(SUM(CASE WHEN prevTs IS NULL OR tsn - prevTs > 1800000000000 THEN 1 ELSE 0 END) AS BIGINT) AS sessions
+        |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin, headline = true),
     // semi-structured props: JSON field extraction + aggregation
-    "e3_json_extract" -> { (s, dir) =>
+    GateEntry("e3_json_extract", { (s, dir) =>
       DerivedState.register(s, dir)
       s.table("events")
         .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
@@ -1296,11 +2005,15 @@ object DataOpsQueries {
           max(col("k")).as("maxK"))
         .orderBy(col("event_type"))
     },
+      """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS totalK,
+        |  CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS maxK
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
     // the SAME daily-window aggregation as e2 but executed by the real
     // Structured Streaming engine: file streaming source over the events
     // parquet → stateful agg → AvailableNow trigger → memory sink. The
     // oracle is identical to e2's: stream/batch parity is the check.
-    "e4_stream_window_parity" -> { (s, dir) =>
+    GateEntry("e4_stream_window_parity", { (s, dir) =>
       val sinkName = "e4sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
@@ -1324,8 +2037,14 @@ object DataOpsQueries {
       q.awaitTermination()
       s.table(sinkName).orderBy(col("day"), col("event_type"))
     },
+      // identical to e2's oracle — the streamed aggregation must land on
+      // exactly the batch result
+      """SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS totalValue
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
     // tumbling daily windows per event type
-    "e2_window_agg" -> { (s, dir) =>
+    GateEntry("e2_window_agg", { (s, dir) =>
       DerivedState.register(s, dir)
       s.table("events")
         .withColumn("day", expr("ts div 86400000000000"))
@@ -1334,10 +2053,14 @@ object DataOpsQueries {
           sum(col("value").cast("decimal(18,4)")).cast("double").as("totalValue"))
         .orderBy(col("day"), col("event_type"))
     },
+      """SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS totalValue
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin, headline = true),
     // near-dup CLUSTERS: connected components over the LSH pair graph —
     // transitive closure turns pairwise near-dups into keep-one-per-cluster
     // (pairwise keeps A,C of A~B~C; clustering keeps only A)
-    "d7_dup_clusters" -> { (s, dir) =>
+    GateEntry("d7_dup_clusters", { (s, dir) =>
       val c = corpus(s, dir)
       val pairs = Dedup.lshCandidates(c, "doc_id", "text")
         .filter(col("estJaccard") >= 0.5)
@@ -1348,6 +2071,21 @@ object DataOpsQueries {
         .select(col("id").as("doc_id"), col("clusterId"), col("clusterSize"))
         .orderBy(col("doc_id"))
     },
+      // transitive closure via recursive CTE = the label-propagation loop's
+      // fixpoint: min reachable id per node
+      s"""WITH RECURSIVE $MinhashSql,
+        |edges AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
+        |und AS (SELECT id1 AS a, id2 AS b FROM edges
+        |        UNION ALL SELECT id2, id1 FROM edges),
+        |nodes AS (SELECT DISTINCT a AS id FROM und),
+        |reach AS (
+        |  SELECT id, id AS r FROM nodes
+        |  UNION
+        |  SELECT u.a AS id, reach.r FROM und u JOIN reach ON u.b = reach.id),
+        |lab AS (SELECT id AS doc_id, MIN(r) AS clusterId FROM reach GROUP BY id)
+        |SELECT doc_id, clusterId,
+        |  COUNT(*) OVER (PARTITION BY clusterId) AS clusterSize
+        |FROM lab ORDER BY doc_id""".stripMargin, materializeOracle = true),
     // keep-BEST cluster representative: real pipelines keep the
     // highest-quality member of each near-dup cluster, not the minimum
     // id — d7's connected components joined with the t2 quality score,
@@ -1355,7 +2093,7 @@ object DataOpsQueries {
     // Docs with no near-dup edge form singleton self-clusters via
     // coalesce, WITHOUT touching the pair graph. Scale: the label-prop
     // clusters and the window are pair-graph-sized; scoring is map work.
-    "d16_cluster_best" -> { (s, dir) =>
+    GateEntry("d16_cluster_best", { (s, dir) =>
       val c = corpus(s, dir)
       val pairs = Dedup.lshCandidates(c, "doc_id", "text")
         .filter(col("estJaccard") >= 0.5)
@@ -1374,12 +2112,46 @@ object DataOpsQueries {
           col("score"))
         .orderBy(col("doc_id"))
     },
+      // d7's recursive components + the t2 quality formula (nChars =
+      // length(text) for the re-keyed corpus rows), FIRST_VALUE argmax
+      s"""WITH RECURSIVE $MinhashSql,
+        |edges AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
+        |und AS (SELECT id1 AS a, id2 AS b FROM edges
+        |        UNION ALL SELECT id2, id1 FROM edges),
+        |nodes AS (SELECT DISTINCT a AS id FROM und),
+        |reach AS (
+        |  SELECT id, id AS r FROM nodes
+        |  UNION
+        |  SELECT u.a AS id, reach.r FROM und u JOIN reach ON u.b = reach.id),
+        |lab AS (SELECT id AS doc_id, MIN(r) AS clusterId FROM reach GROUP BY id),
+        |d16_f AS (
+        |  SELECT doc_id, len(w) AS nTok, text,
+        |    CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
+        |    CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
+        |      ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
+        |    CASE WHEN length(text) > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END AS punctRatio,
+        |    CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
+        |  FROM words JOIN corpus USING (doc_id)),
+        |d16_scored AS (
+        |  SELECT doc_id,
+        |    meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
+        |  FROM d16_f),
+        |d16_lab AS (
+        |  SELECT s.doc_id, COALESCE(lab.clusterId, s.doc_id) AS clusterId, s.score
+        |  FROM d16_scored s LEFT JOIN lab ON lab.doc_id = s.doc_id),
+        |d16_rep AS (
+        |  SELECT doc_id, clusterId, score,
+        |    FIRST_VALUE(doc_id) OVER (PARTITION BY clusterId
+        |      ORDER BY score DESC, doc_id ASC) AS repId
+        |  FROM d16_lab)
+        |SELECT doc_id, clusterId, repId, doc_id = repId AS keep, score
+        |FROM d16_rep ORDER BY doc_id""".stripMargin, materializeOracle = true),
     // sequence packing for training: concat docs in shard order, chunk
     // into 512-token context windows; each doc reports its start/end
     // window and whether it straddles a boundary. Shard-local windows
     // (never a global sort) — at 100 TB the shard count scales with the
     // cluster and each packer partition stays bounded.
-    "t7_pack_sequences" -> { (s, dir) =>
+    GateEntry("t7_pack_sequences", { (s, dir) =>
       val cap = 512.0
       val d = Tables.documents(s, dir).select(col("doc_id"),
         (col("doc_id") % 8).as("shard"),
@@ -1396,10 +2168,25 @@ object DataOpsQueries {
           col("startBin"), col("endBin"), col("straddles"))
         .orderBy(col("doc_id"))
     },
+      """WITH t AS (
+        |  SELECT doc_id, doc_id % 8 AS shard,
+        |    GREATEST(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT), 1) AS tok
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, shard, tok,
+        |    SUM(tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumEnd
+        |  FROM t)
+        |SELECT doc_id, shard, tok, CAST(cumEnd AS BIGINT) AS cumEnd,
+        |  CAST(FLOOR(CAST(cumEnd - tok AS DOUBLE) / 512.0) AS BIGINT) AS startBin,
+        |  CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS endBin,
+        |  CAST(FLOOR(CAST(cumEnd - tok AS DOUBLE) / 512.0) AS BIGINT) <>
+        |    CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS straddles
+        |FROM c ORDER BY doc_id""".stripMargin),
     // PII scrub: deterministic synthetic contact block appended, then
     // email/phone redaction + whitespace normalization; the oracle
     // recomputes the scrubbed text's md5 with the same RE2-safe patterns
-    "t8_pii_scrub" -> { (s, dir) =>
+    GateEntry("t8_pii_scrub", { (s, dir) =>
       val dirty = concat(col("text"),
         lit(" Contact: user"), col("doc_id").cast("string"),
         lit("@example.com or +1-555-"),
@@ -1412,9 +2199,29 @@ object DataOpsQueries {
           md5(TextFunctions.piiScrub(col("dirty"))).as("cleanHash"))
         .orderBy(col("doc_id"))
     },
+      """WITH d AS (
+        |  SELECT doc_id, text || ' Contact: user' || CAST(doc_id AS VARCHAR)
+        |    || '@example.com or +1-555-'
+        |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS dirty
+        |  FROM documents),
+        |s AS (
+        |  SELECT doc_id,
+        |    len(regexp_extract_all(lower(dirty),
+        |      '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS nEmails,
+        |    len(regexp_extract_all(lower(dirty),
+        |      '(\+?[0-9]{1,3}[-. ])?(\([0-9]{3}\)[ ]?|[0-9]{3}[-. ])?[0-9]{3}[-. ][0-9]{4}')) AS nPhones,
+        |    trim(regexp_replace(
+        |      regexp_replace(
+        |        regexp_replace(lower(dirty),
+        |          '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<email>', 'g'),
+        |        '(\+?[0-9]{1,3}[-. ])?(\([0-9]{3}\)[ ]?|[0-9]{3}[-. ])?[0-9]{3}[-. ][0-9]{4}', '<phone>', 'g'),
+        |      '\s+', ' ', 'g')) AS clean
+        |  FROM d)
+        |SELECT doc_id, nEmails, nPhones, md5(clean) AS cleanHash
+        |FROM s ORDER BY doc_id""".stripMargin),
     // repetition-based quality signals (Gopher-style): distinct-token
     // ratio, top-token fraction, duplicate-bigram fraction per doc
-    "t9_repetition" -> { (s, dir) =>
+    GateEntry("t9_repetition", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val tok = d.select(col("doc_id"),
         explode(TextFunctions.tokens(col("text"))).as("w"))
@@ -1444,10 +2251,40 @@ object DataOpsQueries {
             .as("dupBigramRatio"))
         .orderBy(col("doc_id"))
     },
+      """WITH w AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM documents),
+        |tok AS (SELECT doc_id, UNNEST(w) AS t FROM w),
+        |pt AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY doc_id, t),
+        |ts AS (
+        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS nTok,
+        |    COUNT(*) AS distinctTok, MAX(c) AS topCnt
+        |  FROM pt GROUP BY doc_id),
+        |g2 AS (
+        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 2
+        |    THEN [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]
+        |    ELSE [] END) AS s
+        |  FROM w),
+        |p2 AS (SELECT doc_id, s, COUNT(*) AS c2 FROM g2 GROUP BY doc_id, s),
+        |s2 AS (
+        |  SELECT doc_id, CAST(SUM(c2) AS BIGINT) AS n2, COUNT(*) AS distinct2
+        |  FROM p2 GROUP BY doc_id)
+        |SELECT d.doc_id,
+        |  COALESCE(ts.nTok, 0) AS nTok,
+        |  CASE WHEN ts.nTok > 0
+        |    THEN CAST(ts.distinctTok AS DOUBLE) / ts.nTok ELSE 0.0 END AS distinctRatio,
+        |  CASE WHEN ts.nTok > 0
+        |    THEN CAST(ts.topCnt AS DOUBLE) / ts.nTok ELSE 0.0 END AS topTokenRatio,
+        |  CASE WHEN s2.n2 > 0
+        |    THEN CAST(s2.n2 - s2.distinct2 AS DOUBLE) / s2.n2 ELSE 0.0 END AS dupBigramRatio
+        |FROM documents d
+        |LEFT JOIN ts ON d.doc_id = ts.doc_id
+        |LEFT JOIN s2 ON d.doc_id = s2.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
     // distinctive terms per document: rank tokens by tf/df (the
     // integer-exact tf-idf core — no log, so the oracle matches
     // bit-for-bit); df table is vocabulary-sized and reusable
-    "t11_distinctive_terms" -> { (s, dir) =>
+    GateEntry("t11_distinctive_terms", { (s, dir) =>
       val tok = Tables.documents(s, dir)
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("w"))
       val tf = tok.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
@@ -1461,10 +2298,23 @@ object DataOpsQueries {
         .select(col("doc_id"), col("w"), col("tf"), col("df"), col("score"), col("rank"))
         .orderBy(col("doc_id"), col("rank"))
     },
+      """WITH tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        |  FROM documents),
+        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY doc_id, w),
+        |docFreq AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+        |r AS (
+        |  SELECT tf.doc_id, tf.w, tf.tf, docFreq.df,
+        |    CAST(tf.tf AS DOUBLE) / docFreq.df AS score,
+        |    ROW_NUMBER() OVER (PARTITION BY tf.doc_id
+        |      ORDER BY CAST(tf.tf AS DOUBLE) / docFreq.df DESC, tf.w) AS rank
+        |  FROM tf JOIN docFreq ON tf.w = docFreq.w)
+        |SELECT doc_id, w, tf, df, score, rank FROM r
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
     // incremental dedup: classify the ingest batch (doc_id % 3 == 0)
     // against the standing corpus — no corpus self-pairing, one hash
     // join against the (hash, minId) dedup index
-    "d8_incremental_dedup" -> { (s, dir) =>
+    GateEntry("d8_incremental_dedup", { (s, dir) =>
       val c = corpus(s, dir)
       Dedup.incrementalExact(
           c.filter(col("doc_id") % 3 =!= 0L),
@@ -1473,9 +2323,24 @@ object DataOpsQueries {
         .select(col("doc_id"), col("status"), col("keepId"))
         .orderBy(col("doc_id"))
     },
+      s"""WITH $CorpusSql,
+        |idx AS (
+        |  SELECT sha256(text) AS contentHash, MIN(doc_id) AS existingKeepId
+        |  FROM corpus WHERE doc_id % 3 <> 0 GROUP BY sha256(text)),
+        |b AS (
+        |  SELECT doc_id, sha256(text) AS contentHash,
+        |    MIN(doc_id) OVER (PARTITION BY sha256(text)) AS batchKeepId
+        |  FROM corpus WHERE doc_id % 3 = 0)
+        |SELECT b.doc_id,
+        |  CASE WHEN idx.existingKeepId IS NOT NULL THEN 'dup_of_existing'
+        |       WHEN b.doc_id <> b.batchKeepId THEN 'dup_in_batch'
+        |       ELSE 'unique' END AS status,
+        |  COALESCE(idx.existingKeepId, b.batchKeepId) AS keepId
+        |FROM b LEFT JOIN idx ON b.contentHash = idx.contentHash
+        |ORDER BY b.doc_id""".stripMargin),
     // incremental NEAR-dup classification: the ingest batch against the
     // standing corpus's banded signature index — the LSH analog of d8
-    "d10_incremental_lsh" -> { (s, dir) =>
+    GateEntry("d10_incremental_lsh", { (s, dir) =>
       val c = corpus(s, dir)
       Dedup.incrementalLsh(
           c.filter(col("doc_id") % 3 =!= 0L),
@@ -1483,6 +2348,52 @@ object DataOpsQueries {
           "doc_id", "text")
         .orderBy(col("doc_id"))
     },
+      s"""WITH $MinhashSql,
+        |mlt AS (
+        |  SELECT doc_id, bandIdx,
+        |    CASE bandIdx WHEN 0 THEN b0 WHEN 1 THEN b1 WHEN 2 THEN b2 ELSE b3 END AS bandKey
+        |  FROM band CROSS JOIN (SELECT UNNEST(range(0,4)) AS bandIdx) u),
+        |candI AS (
+        |  SELECT DISTINCT bt.doc_id AS bid, ex.doc_id AS exId
+        |  FROM mlt bt JOIN mlt ex ON bt.bandIdx = ex.bandIdx AND bt.bandKey = ex.bandKey
+        |  WHERE bt.doc_id % 3 = 0 AND ex.doc_id % 3 <> 0),
+        |estI AS (
+        |  SELECT c.bid, c.exId,
+        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
+        |    ) / 8.0 AS est
+        |  FROM candI c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.exId),
+        |aggI AS (
+        |  SELECT bid, MIN(exId) AS matchId, MAX(est) AS bestEst, COUNT(*) AS nearDups
+        |  FROM estI WHERE est >= 0.5 GROUP BY bid),
+        |candB AS (
+        |  SELECT DISTINCT bt.doc_id AS bid, kp.doc_id AS kbid
+        |  FROM mlt bt JOIN mlt kp ON bt.bandIdx = kp.bandIdx AND bt.bandKey = kp.bandKey
+        |  WHERE bt.doc_id % 3 = 0 AND kp.doc_id % 3 = 0 AND kp.doc_id < bt.doc_id),
+        |estB AS (
+        |  SELECT c.bid, c.kbid,
+        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
+        |    ) / 8.0 AS est
+        |  FROM candB c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.kbid),
+        |aggB AS (
+        |  SELECT bid, MIN(kbid) AS bMatchId, MAX(est) AS bBest, COUNT(*) AS bN
+        |  FROM estB WHERE est >= 0.5 GROUP BY bid)
+        |SELECT t.doc_id,
+        |  CASE WHEN a.matchId IS NOT NULL THEN 'near_dup'
+        |       WHEN g.bMatchId IS NOT NULL THEN 'near_dup_in_batch'
+        |       ELSE 'unique' END AS status,
+        |  COALESCE(a.matchId, g.bMatchId) AS matchId,
+        |  CASE WHEN a.matchId IS NOT NULL THEN a.bestEst ELSE g.bBest END AS bestEst,
+        |  COALESCE(a.nearDups, 0) + COALESCE(g.bN, 0) AS nearDups
+        |FROM (SELECT doc_id FROM corpus WHERE doc_id % 3 = 0) t
+        |LEFT JOIN aggI a ON a.bid = t.doc_id
+        |LEFT JOIN aggB g ON g.bid = t.doc_id
+        |ORDER BY t.doc_id""".stripMargin),
     // the LSH serve gate — sim14's end-to-end-serve contract applied to
     // the text side: the standing 2/3 corpus's banded signature index
     // serves the arriving 1/3 batch (the d10 ingest path), and EACH row
@@ -1493,7 +2404,7 @@ object DataOpsQueries {
     // implies any partner is a LARGER batch doc (correctly invisible to
     // first-seen-wins ingest — the one designed divergence). Both chains
     // replay in the oracle, so the relation itself is hash-gated.
-    "d18_lsh_serve" -> { (s, dir) =>
+    GateEntry("d18_lsh_serve", { (s, dir) =>
       val c = corpus(s, dir)
       val served = Dedup.incrementalLsh(
         c.filter(col("doc_id") % 3 =!= 0L),
@@ -1511,10 +2422,74 @@ object DataOpsQueries {
             col("batchMinNbr") > col("doc_id"), 1L).otherwise(0L)))
         .orderBy(col("doc_id"))
     },
+      // the d10 serve chain + the d2 full-corpus pair truth in one replay:
+      // the agree column's consistency contract is itself hash-gated
+      s"""WITH $MinhashSql,
+        |mlt AS (
+        |  SELECT doc_id, bandIdx,
+        |    CASE bandIdx WHEN 0 THEN b0 WHEN 1 THEN b1 WHEN 2 THEN b2 ELSE b3 END AS bandKey
+        |  FROM band CROSS JOIN (SELECT UNNEST(range(0,4)) AS bandIdx) u),
+        |candI AS (
+        |  SELECT DISTINCT bt.doc_id AS bid, ex.doc_id AS exId
+        |  FROM mlt bt JOIN mlt ex ON bt.bandIdx = ex.bandIdx AND bt.bandKey = ex.bandKey
+        |  WHERE bt.doc_id % 3 = 0 AND ex.doc_id % 3 <> 0),
+        |estI AS (
+        |  SELECT c.bid, c.exId,
+        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
+        |    ) / 8.0 AS est
+        |  FROM candI c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.exId),
+        |aggI AS (
+        |  SELECT bid, MIN(exId) AS matchId, MAX(est) AS bestEst, COUNT(*) AS nearDups
+        |  FROM estI WHERE est >= 0.5 GROUP BY bid),
+        |candB AS (
+        |  SELECT DISTINCT bt.doc_id AS bid, kp.doc_id AS kbid
+        |  FROM mlt bt JOIN mlt kp ON bt.bandIdx = kp.bandIdx AND bt.bandKey = kp.bandKey
+        |  WHERE bt.doc_id % 3 = 0 AND kp.doc_id % 3 = 0 AND kp.doc_id < bt.doc_id),
+        |estB AS (
+        |  SELECT c.bid, c.kbid,
+        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
+        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
+        |    ) / 8.0 AS est
+        |  FROM candB c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.kbid),
+        |aggB AS (
+        |  SELECT bid, MIN(kbid) AS bMatchId, MAX(est) AS bBest, COUNT(*) AS bN
+        |  FROM estB WHERE est >= 0.5 GROUP BY bid),
+        |served AS (
+        |  SELECT t.doc_id,
+        |    CASE WHEN a.matchId IS NOT NULL THEN 'near_dup'
+        |         WHEN g.bMatchId IS NOT NULL THEN 'near_dup_in_batch'
+        |         ELSE 'unique' END AS status,
+        |    COALESCE(a.matchId, g.bMatchId) AS matchId,
+        |    CASE WHEN a.matchId IS NOT NULL THEN a.bestEst ELSE g.bBest END AS bestEst,
+        |    COALESCE(a.nearDups, 0) + COALESCE(g.bN, 0) AS nearDups
+        |  FROM (SELECT doc_id FROM corpus WHERE doc_id % 3 = 0) t
+        |  LEFT JOIN aggI a ON a.bid = t.doc_id
+        |  LEFT JOIN aggB g ON g.bid = t.doc_id),
+        |hits AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
+        |nbrs AS (
+        |  SELECT doc_id, MIN(nbr) AS batchMinNbr FROM (
+        |    SELECT id1 AS doc_id, id2 AS nbr FROM hits
+        |    UNION ALL
+        |    SELECT id2 AS doc_id, id1 AS nbr FROM hits) u
+        |  GROUP BY doc_id)
+        |SELECT s.doc_id, s.status, s.matchId, s.bestEst, s.nearDups,
+        |  n.batchMinNbr,
+        |  CAST(CASE WHEN s.status <> 'unique'
+        |    THEN CASE WHEN n.batchMinNbr IS NOT NULL THEN 1 ELSE 0 END
+        |    ELSE CASE WHEN n.batchMinNbr IS NULL OR n.batchMinNbr > s.doc_id
+        |         THEN 1 ELSE 0 END
+        |  END AS BIGINT) AS agree
+        |FROM served s LEFT JOIN nbrs n ON n.doc_id = s.doc_id
+        |ORDER BY s.doc_id""".stripMargin),
     // stratified deterministic sampling: md5-bucket each doc, keep a
     // per-language rate — reproducible corpus downsampling with a
     // per-stratum checksum of the kept ids
-    "t10_stratified_sample" -> { (s, dir) =>
+    GateEntry("t10_stratified_sample", { (s, dir) =>
       val bucket = (expr("cast(conv(substring(md5(cast(doc_id as string)),1,4),16,10) as bigint)") % 100)
       val rate = when(col("lang") === "en", 25L)
         .when(col("lang") === "es", 50L)
@@ -1529,25 +2504,89 @@ object DataOpsQueries {
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
     },
+      """WITH b AS (
+        |  SELECT doc_id, lang,
+        |    ((instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)*4096 +
+        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1)*256 +
+        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),3,1))-1)*16 +
+        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),4,1))-1)) % 100 AS bucket
+        |  FROM documents),
+        |k AS (
+        |  SELECT doc_id, lang, bucket,
+        |    bucket < (CASE lang WHEN 'en' THEN 25 WHEN 'es' THEN 50
+        |              WHEN 'de' THEN 75 ELSE 100 END) AS keep
+        |  FROM b)
+        |SELECT lang, COUNT(*) AS total,
+        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
+        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+        |FROM k GROUP BY lang ORDER BY lang""".stripMargin),
     // content-defined chunking sub-document dedup: boundaries from the
     // token content itself (shift-resistant), chunk hashes deduped across
     // docs — catches shared passages whole-doc/near-dup dedup both miss
-    "d11_cdc_chunks" -> { (s, dir) =>
+    GateEntry("d11_cdc_chunks", { (s, dir) =>
       Dedup.cdcChunks(corpus(s, dir), "doc_id", "text")
         .orderBy(col("doc_id"))
     },
+      s"""WITH $CorpusSql,
+        |words AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM corpus),
+        |tok AS (
+        |  SELECT doc_id, i, w[i] AS token
+        |  FROM (SELECT doc_id, w, UNNEST(range(1, len(w)+1)) AS i FROM words) t),
+        |tb AS (
+        |  SELECT doc_id, i, token,
+        |    CASE WHEN strpos('0123456789abcdef', substr(md5(token), 1, 1)) <= 2
+        |      THEN 1 ELSE 0 END AS b
+        |  FROM tok),
+        |tc AS (
+        |  SELECT doc_id, i, token,
+        |    COALESCE(SUM(b) OVER (PARTITION BY doc_id ORDER BY i
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunkId
+        |  FROM tb),
+        |chunks AS (
+        |  SELECT doc_id, chunkId,
+        |    md5(array_to_string(list(token ORDER BY i), ' ')) AS chunkHash
+        |  FROM tc GROUP BY doc_id, chunkId),
+        |dpc AS (
+        |  SELECT chunkHash, COUNT(DISTINCT doc_id) AS nDocs
+        |  FROM chunks GROUP BY chunkHash),
+        |perDoc AS (
+        |  SELECT c.doc_id, COUNT(*) AS nChunks,
+        |    SUM(CASE WHEN d.nDocs > 1 THEN 1 ELSE 0 END) AS nShared
+        |  FROM chunks c JOIN dpc d ON d.chunkHash = c.chunkHash
+        |  GROUP BY c.doc_id)
+        |SELECT x.doc_id,
+        |  CAST(COALESCE(p.nChunks, 0) AS BIGINT) AS nChunks,
+        |  CAST(COALESCE(p.nShared, 0) AS BIGINT) AS nSharedChunks
+        |FROM corpus x LEFT JOIN perDoc p ON p.doc_id = x.doc_id
+        |ORDER BY x.doc_id""".stripMargin),
     // exact duplicated-substring spans (the suffix-array dedup family):
     // maximal runs of >= 8 tokens occurring more than once in the
     // corpus, as per-doc 0-based token ranges — the spans a training
     // pipeline cuts, at sub-document precision whole-doc dedup lacks
-    "d12_dup_spans" -> { (s, dir) =>
+    GateEntry("d12_dup_spans", { (s, dir) =>
       Dedup.duplicateSpans(corpus(s, dir), "doc_id", "text")
         .orderBy(col("doc_id"), col("spanStart"))
     },
+      s"""WITH $SpanGramSql,
+        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > 1),
+        |flg AS (
+        |  SELECT g.doc_id, g.pos,
+        |    CASE WHEN g.pos - LAG(g.pos) OVER (PARTITION BY g.doc_id
+        |      ORDER BY g.pos) <= 8 THEN 0 ELSE 1 END AS ni
+        |  FROM grams g JOIN dup USING (gram)),
+        |isl AS (
+        |  SELECT doc_id, pos, SUM(ni) OVER (PARTITION BY doc_id
+        |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM flg)
+        |SELECT doc_id, MIN(pos) AS spanStart, MAX(pos) + 7 AS spanEnd,
+        |  MAX(pos) - MIN(pos) + 8 AS spanTokens
+        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, spanStart""".stripMargin),
     // incremental span dedup: a new batch's duplicated spans against the
     // standing corpus's gram index (or within the batch), no corpus-wide
     // recompute — the additive-ingest variant of d12
-    "d14_incremental_spans" -> { (s, dir) =>
+    GateEntry("d14_incremental_spans", { (s, dir) =>
       val c = corpus(s, dir)
       Dedup.incrementalSpans(
           c.filter(col("doc_id") % 3 =!= 0L),
@@ -1555,30 +2594,99 @@ object DataOpsQueries {
           "doc_id", "text")
         .orderBy(col("doc_id"), col("spanStart"))
     },
+      s"""WITH $SpanGramSql,
+        |exIdx AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 3 <> 0),
+        |bg AS (SELECT doc_id, pos, gram FROM grams WHERE doc_id % 3 = 0),
+        |cnt AS (SELECT gram, COUNT(*) AS bn FROM bg GROUP BY gram),
+        |marked AS (
+        |  SELECT b.doc_id, b.pos, (e.gram IS NOT NULL) AS ex
+        |  FROM bg b JOIN cnt c USING (gram)
+        |  LEFT JOIN exIdx e USING (gram)
+        |  WHERE c.bn > 1 OR e.gram IS NOT NULL),
+        |flg AS (
+        |  SELECT doc_id, pos, ex,
+        |    CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id
+        |      ORDER BY pos) <= 8 THEN 0 ELSE 1 END AS ni
+        |  FROM marked),
+        |isl AS (
+        |  SELECT doc_id, pos, ex, SUM(ni) OVER (PARTITION BY doc_id
+        |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM flg)
+        |SELECT doc_id, MIN(pos) AS spanStart, MAX(pos) + 7 AS spanEnd,
+        |  MAX(pos) - MIN(pos) + 8 AS spanTokens, MAX(ex) AS vsExisting
+        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, spanStart""".stripMargin),
     // the cut companion: first occurrence of every duplicated 8-gram
     // survives, later occurrences' tokens are removed — per-doc token
     // counts + a fingerprint of the cleaned text (the actual transform
     // a dedup pipeline applies, hashable without shipping full texts)
-    "d13_span_cut" -> { (s, dir) =>
+    GateEntry("d13_span_cut", { (s, dir) =>
       Dedup.cutDuplicateSpans(corpus(s, dir), "doc_id", "text")
         .orderBy(col("doc_id"))
     },
+      s"""WITH $SpanGramSql,
+        |occ AS (
+        |  SELECT doc_id, pos,
+        |    ROW_NUMBER() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS occ
+        |  FROM grams),
+        |cutPos AS (
+        |  SELECT DISTINCT doc_id, UNNEST(range(pos, pos + 8)) AS tokPos
+        |  FROM occ WHERE occ > 1),
+        |toks AS (
+        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS tokPos, w[i] AS token
+        |  FROM (SELECT doc_id, UNNEST(range(1, len(w) + 1)) AS i, w
+        |        FROM words) t),
+        |tot AS (SELECT doc_id, COUNT(*) AS total FROM toks GROUP BY doc_id),
+        |kept AS (
+        |  SELECT t.doc_id, COUNT(*) AS kept,
+        |    md5(string_agg(t.token, ' ' ORDER BY t.tokPos)) AS fp
+        |  FROM toks t
+        |  WHERE NOT EXISTS (SELECT 1 FROM cutPos c
+        |                    WHERE c.doc_id = t.doc_id AND c.tokPos = t.tokPos)
+        |  GROUP BY t.doc_id)
+        |SELECT x.doc_id,
+        |  CAST(COALESCE(tt.total, 0) AS BIGINT) AS totalTokens,
+        |  CAST(COALESCE(kp.kept, 0) AS BIGINT) AS keptTokens,
+        |  CAST(COALESCE(tt.total, 0) - COALESCE(kp.kept, 0) AS BIGINT)
+        |    AS cutTokens,
+        |  COALESCE(kp.fp, md5('')) AS cleanedFingerprint
+        |FROM corpus x
+        |LEFT JOIN tot tt ON tt.doc_id = x.doc_id
+        |LEFT JOIN kept kp ON kp.doc_id = x.doc_id
+        |ORDER BY x.doc_id""".stripMargin),
     // deterministic corpus shuffle: a replayable global permutation with
     // NO global sort — md5-hash shard assignment + shard-local rank
     // (the pre-packing shuffle every training pipeline runs; a new salt
     // is a fresh epoch permutation)
-    "t12_shard_shuffle" -> { (s, dir) =>
+    GateEntry("t12_shard_shuffle", { (s, dir) =>
       Shuffles.shardShuffle(Tables.documents(s, dir).select(col("doc_id")),
           "doc_id", nShards = 8)
         .select(col("doc_id"), col("shard"), col("pos"))
         .orderBy(col("doc_id"))
     },
+      """WITH h AS (
+        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || 'epoch0') AS hx
+        |  FROM documents),
+        |k AS (
+        |  SELECT doc_id,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM h)
+        |SELECT doc_id, hkey % 8 AS shard,
+        |  CAST(ROW_NUMBER() OVER (PARTITION BY hkey % 8 ORDER BY hkey, doc_id)
+        |    AS BIGINT) AS pos
+        |FROM k ORDER BY doc_id""".stripMargin),
     // deterministic HLL cardinality of distinct (doc, token) pairs —
     // ~10k distinct values, well above m = 64 so the raw estimate is in
     // its valid regime (the corpus's ~31-token vocabulary alone would
     // sit in the small-range zone raw HLL is biased in) — gated against
     // the exact count; the 64-row-shuffle alternative to COUNT(DISTINCT)
-    "t14_hll_tokens" -> { (s, dir) =>
+    GateEntry("t14_hll_tokens", { (s, dir) =>
       // the sketch and the exact gate both read the tokenized frame:
       // cache it for ONE tokenize pass, materialize the 1-row result,
       // release the cache (Caching contract — a bare persist here would
@@ -1595,10 +2703,47 @@ object DataOpsQueries {
               col("exactDistinct").cast("double")).as("relErr")),
         Seq(tok))
     },
+      """WITH tokr AS (
+        |  SELECT CAST(doc_id AS VARCHAR) || ':' ||
+        |    UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
+        |  FROM documents),
+        |hh AS (SELECT token, md5(CAST(token AS VARCHAR)) AS h FROM tokr),
+        |br AS (
+        |  SELECT
+        |    ((CAST(strpos('0123456789abcdef', h[1]) - 1 AS BIGINT)) * 16
+        |      + (CAST(strpos('0123456789abcdef', h[2]) - 1 AS BIGINT))) % 64 AS bucket,
+        |    CAST(strpos('0123456789abcdef', h[3]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', h[4]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', h[5]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', h[6]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', h[7]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', h[8]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', h[9]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', h[10]) - 1 AS BIGINT) AS w
+        |  FROM hh),
+        |rr AS (
+        |  SELECT bucket,
+        |    CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END AS rank
+        |  FROM br),
+        |regs AS (SELECT bucket, MAX(rank) AS M FROM rr GROUP BY bucket),
+        |terms AS (
+        |  SELECT (CAST(1 AS BIGINT) << CAST(33 - COALESCE(r.M, 0) AS INT)) AS term
+        |  FROM (SELECT UNNEST(range(0, 64)) AS bucket) b
+        |  LEFT JOIN regs r ON r.bucket = b.bucket),
+        |s AS (SELECT CAST(SUM(term) AS BIGINT) AS sumInt FROM terms),
+        |ex AS (SELECT CAST(COUNT(DISTINCT token) AS BIGINT) AS exactDistinct FROM tokr)
+        |SELECT s.sumInt,
+        |  CAST(0.709 AS DOUBLE) * 4096 * CAST(8589934592 AS DOUBLE)
+        |    / CAST(s.sumInt AS DOUBLE) AS hllEstimate,
+        |  ex.exactDistinct,
+        |  (CAST(0.709 AS DOUBLE) * 4096 * CAST(8589934592 AS DOUBLE)
+        |    / CAST(s.sumInt AS DOUBLE) - CAST(ex.exactDistinct AS DOUBLE))
+        |    / CAST(ex.exactDistinct AS DOUBLE) AS relErr
+        |FROM s, ex""".stripMargin),
     // token-budgeted mixture: per-language token budgets filled in
     // deterministic hash order, budget split across 4 shards so no
     // per-source global sort exists; per-stratum summary + id checksum
-    "t13_budget_mix" -> { (s, dir) =>
+    GateEntry("t13_budget_mix", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       Shuffles.budgetedMix(d, "doc_id", "lang", "tok",
@@ -1610,6 +2755,35 @@ object DataOpsQueries {
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
     },
+      """WITH h AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'mix0') AS hx
+        |  FROM documents),
+        |k AS (
+        |  SELECT doc_id, lang, tok,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM h),
+        |c AS (
+        |  SELECT doc_id, lang, tok,
+        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
+        |      ORDER BY hkey, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+        |    (CASE lang WHEN 'en' THEN 4000 WHEN 'es' THEN 2000
+        |      WHEN 'de' THEN 1000 ELSE 0 END) / CAST(4 AS DOUBLE) AS keep
+        |  FROM k)
+        |SELECT lang, COUNT(*) AS total,
+        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
+        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
+        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
     // multi-stage curriculum mixture (two-phase pretraining / annealing
     // mix): each stage carries its OWN per-source budgets — the warm
     // stage samples broadly, the anneal stage reweights toward de and
@@ -1617,7 +2791,7 @@ object DataOpsQueries {
     // of (stage, source, shard) windows (stage count is bounded, so the
     // corpus explodes ×2 once; one shuffle total). The stage folds into
     // the hash input, so each stage draws a fresh permutation.
-    "t34_curriculum_mix" -> { (s, dir) =>
+    GateEntry("t34_curriculum_mix", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       Shuffles.curriculumMix(d, "doc_id", "lang", "tok",
@@ -1630,14 +2804,14 @@ object DataOpsQueries {
           sum(when(col("keep"), col("tok")).otherwise(0L)).as("keptTokens"),
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("stage"), col("lang"))
-    },
+    }, T34OracleSql),
     // temperature-weighted mixture, the multilingual α-sampling of
     // fastText/mC4/XLM-R at α = 1/2: per-source budgets ∝ isqrt(source
     // tokens) — integer-exact via the ±1-corrected double sqrt both
     // engines replay — then the t13 sharded admission. The flattening
     // is REAL here: the biggest source (en) takes ~28% of the budget vs
     // its ~39% proportional share, and every source keeps ≥1 doc.
-    "t32_temperature_mix" -> { (s, dir) =>
+    GateEntry("t32_temperature_mix", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       Shuffles.temperatureMix(d, "doc_id", "lang", "tok",
@@ -1649,14 +2823,14 @@ object DataOpsQueries {
           sum(when(col("keep"), col("tok")).otherwise(0L)).as("keptTokens"),
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
-    },
+    }, T32OracleSql),
     // general-α temperature mixing at mC4's α = 0.3 (= 3/10): weights
     // w = floor(n^(3/10)), EXACT integers via the BigInt-verified
     // corrected-pow (irootPow) — the oracle replays it as a ±2 candidate
     // window around floor(pow(n, 0.3)) checked in 128-bit integer math
     // (w^10 ≤ n^3). Flatter than α = 1/2: small sources keep an even
     // larger over-proportional share. Fresh salt → its own permutation.
-    "t32b_temperature_alpha" -> { (s, dir) =>
+    GateEntry("t32b_temperature_alpha", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       Shuffles.temperatureMixAlpha(d, "doc_id", "lang", "tok",
@@ -1669,13 +2843,71 @@ object DataOpsQueries {
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
     },
+      // α = 3/10 weights: w = the UNIQUE candidate in [w0−2, w0+2] with
+      // w^10 ≤ n^3 < (w+1)^10 in HUGEINT (exact 128-bit two-sided floor
+      // check — the upper bound makes a double-pow seed w0 that lands
+      // OUTSIDE the window yield ZERO candidates, i.e. a missing lang row
+      // and an identifiable oracle-side failure, instead of silently
+      // accepting a too-small weight), then the t32 budget split and
+      // admission verbatim under the 'tempa0' salt
+      """WITH h AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'tempa0') AS hx
+        |  FROM documents),
+        |tb_tot AS (
+        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
+        |tb_seed AS (
+        |  SELECT lang, n,
+        |    CAST(floor(pow(CAST(n AS DOUBLE), 0.3)) AS BIGINT) AS w0,
+        |    CAST(n AS HUGEINT) * n * n AS np
+        |  FROM tb_tot),
+        |tb_w AS (
+        |  SELECT lang, n, CAST(MAX(w0 + d) AS BIGINT) AS w
+        |  FROM tb_seed, (SELECT UNNEST([-2, -1, 0, 1, 2]) AS d)
+        |  WHERE w0 + d >= 0
+        |    AND CAST(w0 + d AS HUGEINT) * (w0 + d) * (w0 + d) * (w0 + d)
+        |      * (w0 + d) * (w0 + d) * (w0 + d) * (w0 + d) * (w0 + d)
+        |      * (w0 + d) <= np
+        |    AND CAST(w0 + d + 1 AS HUGEINT) * (w0 + d + 1) * (w0 + d + 1)
+        |      * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1)
+        |      * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1) > np
+        |  GROUP BY lang, n),
+        |tb_sw AS (SELECT CAST(SUM(w) AS BIGINT) AS sw FROM tb_w),
+        |tb_b AS (
+        |  SELECT lang, n, w,
+        |    CAST(CAST(7000 AS HUGEINT) * w // sw AS BIGINT) AS budget
+        |  FROM tb_w CROSS JOIN tb_sw),
+        |k AS (
+        |  SELECT doc_id, h.lang, tok, b.budget,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM h JOIN tb_b b ON h.lang = b.lang),
+        |c AS (
+        |  SELECT doc_id, lang, tok, budget,
+        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
+        |      ORDER BY hkey, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+        |    budget / CAST(4 AS DOUBLE) AS keep
+        |  FROM k)
+        |SELECT lang, CAST(MAX(budget) AS BIGINT) AS budget, COUNT(*) AS total,
+        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
+        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
+        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
     // epoch-aware mixing for the data-constrained regime (Muennighoff et
     // al. 2023): per-source budget 2.5n + 1000 tokens → every source
     // repeats fullEpochs = budget DIV n whole passes and the remainder
     // budget MOD n admits a hash-ordered partial epoch; servedTokens =
     // Σ totalEpochs·tok = fullEpochs·n + remTokens cross-checks the
     // ledger in both engines, all integer-exact
-    "t33_epoch_mix" -> { (s, dir) =>
+    GateEntry("t33_epoch_mix", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       val totals = d.groupBy(col("lang")).agg(sum(col("tok")).as("n"))
@@ -1691,6 +2923,46 @@ object DataOpsQueries {
           sum(when(col("keep"), col("doc_id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
     },
+      // budget 2.5n+1000 → fullEpochs = budget // n, remainder admission =
+      // the t13 window under the 'epochmix0' salt; servedTokens folds the
+      // per-doc epoch count back through the token column
+      """WITH h AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'epochmix0') AS hx
+        |  FROM documents),
+        |te_tot AS (
+        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
+        |te_eb AS (
+        |  SELECT lang, n, ((5 * n) // 2 + 1000) // n AS fullEpochs,
+        |         ((5 * n) // 2 + 1000) % n AS rem
+        |  FROM te_tot),
+        |k AS (
+        |  SELECT doc_id, h.lang, tok, e.fullEpochs, e.rem,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM h JOIN te_eb e ON h.lang = e.lang),
+        |c AS (
+        |  SELECT doc_id, lang, tok, fullEpochs,
+        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
+        |      ORDER BY hkey, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+        |    rem / CAST(4 AS DOUBLE) AS keep
+        |  FROM k)
+        |SELECT lang, CAST(MAX(fullEpochs) AS BIGINT) AS fullEpochs,
+        |  COUNT(*) AS total,
+        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS remKept,
+        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS remTokens,
+        |  CAST(SUM((fullEpochs + CASE WHEN keep THEN 1 ELSE 0 END) * tok) AS BIGINT)
+        |    AS servedTokens,
+        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin),
     // the loader-consumable EXPANSION of t33's plan: one row per
     // (doc, epoch) with a per-epoch reshuffle. Spark derives every
     // column from the expansion; the oracle cross-derives epochTokens
@@ -1698,7 +2970,7 @@ object DataOpsQueries {
     // else the remainder-kept tokens) — equality of the two derivations
     // IS the servedTokens-conservation check, and the pos/shard id-sums
     // pin each epoch's independent permutation
-    "t33b_epoch_expand" -> { (s, dir) =>
+    GateEntry("t33b_epoch_expand", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       val totals = d.groupBy(col("lang")).agg(sum(col("tok")).as("n"))
@@ -1714,6 +2986,92 @@ object DataOpsQueries {
           sum(col("eshard") * col("doc_id")).as("shardIdSum"))
         .orderBy(col("lang"), col("epoch"))
     },
+      // t33's expansion twin: nDocs/posIdSum/shardIdSum replay the
+      // per-(doc, epoch) md5 reshuffle; epochTokens is derived from the
+      // LEDGER arithmetic instead (whole source per full epoch, the kept
+      // remainder on the last) and FULL JOINed — a Spark expansion that
+      // over- or under-serves any epoch mismatches loudly (extra/missing
+      // rows or a NULL ledger column), which is the conservation gate
+      """WITH h AS (
+        |  SELECT doc_id, lang,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'epochmix0') AS hx
+        |  FROM documents),
+        |te_tot AS (
+        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
+        |te_eb AS (
+        |  SELECT lang, n, ((5 * n) // 2 + 1000) // n AS fullEpochs,
+        |         ((5 * n) // 2 + 1000) % n AS rem
+        |  FROM te_tot),
+        |k AS (
+        |  SELECT doc_id, h.lang, tok, e.fullEpochs, e.rem,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM h JOIN te_eb e ON h.lang = e.lang),
+        |c AS MATERIALIZED (
+        |  SELECT doc_id, lang, tok, fullEpochs,
+        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
+        |      ORDER BY hkey, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+        |    rem / CAST(4 AS DOUBLE) AS keep
+        |  FROM k),
+        |x AS (
+        |  SELECT doc_id, lang, tok,
+        |    UNNEST(range(1, fullEpochs + (CASE WHEN keep THEN 1 ELSE 0 END) + 1))
+        |      AS epoch
+        |  FROM c),
+        |e AS (
+        |  SELECT doc_id, lang, tok, epoch,
+        |    md5(CAST(doc_id AS VARCHAR) || '#' || CAST(epoch AS VARCHAR)
+        |        || 'epochmix0') AS ex
+        |  FROM x),
+        |ek AS (
+        |  SELECT doc_id, lang, tok, epoch,
+        |    CAST(strpos('0123456789abcdef', ex[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', ex[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', ex[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', ex[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', ex[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', ex[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', ex[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', ex[8]) - 1 AS BIGINT) AS ehkey
+        |  FROM e),
+        |ep AS (
+        |  SELECT doc_id, lang, tok, epoch, ehkey % 4 AS eshard,
+        |    ROW_NUMBER() OVER (PARTITION BY epoch, ehkey % 4
+        |                       ORDER BY ehkey, doc_id) AS epos
+        |  FROM ek),
+        |agg AS (
+        |  SELECT lang, epoch, COUNT(*) AS nDocs,
+        |    CAST(SUM(epos * doc_id) AS BIGINT) AS posIdSum,
+        |    CAST(SUM(eshard * doc_id) AS BIGINT) AS shardIdSum
+        |  FROM ep GROUP BY lang, epoch),
+        |ll AS (
+        |  SELECT lang, MAX(fullEpochs) AS fe, CAST(SUM(tok) AS BIGINT) AS n,
+        |    CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS remTok,
+        |    CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS remN
+        |  FROM c GROUP BY lang),
+        |led AS (
+        |  SELECT lang, fe, n, remTok,
+        |    UNNEST(range(1, fe + (CASE WHEN remN > 0 THEN 1 ELSE 0 END) + 1))
+        |      AS epoch
+        |  FROM ll),
+        |ledt AS (
+        |  SELECT lang, epoch,
+        |    CAST(CASE WHEN epoch <= fe THEN n ELSE remTok END AS BIGINT)
+        |      AS epochTokens
+        |  FROM led)
+        |SELECT COALESCE(a.lang, l.lang) AS lang,
+        |  COALESCE(a.epoch, l.epoch) AS epoch,
+        |  a.nDocs, l.epochTokens, a.posIdSum, a.shardIdSum
+        |FROM agg a FULL JOIN ledt l ON a.lang = l.lang AND a.epoch = l.epoch
+        |ORDER BY lang, epoch""".stripMargin),
     // SPAN-level decontamination (Brown et al. 2020 appendix C): every
     // training 8-gram found in the eval corpus is excised with an
     // 8-token guard margin each side — the doc SURVIVES minus the
@@ -1722,7 +3080,7 @@ object DataOpsQueries {
     // back into training with the T35LeakSuffix tail, so partial cut,
     // margin clamp at pos 0, margin spill into clean text and zero-hit
     // docs are all non-vacuous at every SF.
-    "t35_decontaminate_spans" -> { (s, dir) =>
+    GateEntry("t35_decontaminate_spans", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val evalSlice = d.filter(col("doc_id") % 97 === 0L)
         .select(col("doc_id"), col("text"))
@@ -1733,14 +3091,14 @@ object DataOpsQueries {
           concat(col("text"), lit(" " + T35LeakSuffix)).as("text")))
       Dedup.decontaminateSpans(train, evalSlice, "doc_id", "text")
         .orderBy(col("doc_id"))
-    },
+    }, T35OracleSql),
     // balanced token packing across parallel loader streams: longest-
     // first round-robin within hash shards (rank by tok DESC, bin =
     // (rank-1) mod nBins) — per-shard bin totals differ by at most one
     // round's spread, no straggler stream, NO global sort (the t12
     // scale shape). idSum pins the exact assignment; shardSkewPpm is
     // the balance the heuristic actually achieved, integer-exact.
-    "t36_balanced_pack" -> { (s, dir) =>
+    GateEntry("t36_balanced_pack", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       val byBin = Shuffles
@@ -1758,13 +3116,48 @@ object DataOpsQueries {
           col("idSum"), col("shardSkewPpm"))
         .orderBy(col("shard"), col("bin"))
     },
+      // balanced packing: the t12 hkey ladder → per-shard rank by
+      // (tok DESC, doc_id) → bin = (rank-1) mod 4; skew in integer ppm
+      """WITH d AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'pack0') AS hx
+        |  FROM documents),
+        |k AS (
+        |  SELECT doc_id, tok,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM d),
+        |r AS (
+        |  SELECT doc_id, tok, hkey % 8 AS shard,
+        |    ROW_NUMBER() OVER (PARTITION BY hkey % 8
+        |      ORDER BY tok DESC, doc_id) AS rk
+        |  FROM k),
+        |g AS (
+        |  SELECT shard, (rk - 1) % 4 AS bin, COUNT(*) AS docs,
+        |    SUM(tok) AS binTokens, SUM(doc_id) AS idSum
+        |  FROM r GROUP BY shard, (rk - 1) % 4)
+        |SELECT CAST(shard AS BIGINT) AS shard, CAST(bin AS BIGINT) AS bin,
+        |  CAST(docs AS BIGINT) AS docs, CAST(binTokens AS BIGINT) AS binTokens,
+        |  CAST(idSum AS BIGINT) AS idSum,
+        |  CAST((MAX(binTokens) OVER (PARTITION BY shard)
+        |        - MIN(binTokens) OVER (PARTITION BY shard)) * 1000000
+        |       // SUM(binTokens) OVER (PARTITION BY shard) AS BIGINT)
+        |    AS shardSkewPpm
+        |FROM g ORDER BY shard, bin""".stripMargin),
     // fixed-length context packing — the concat-and-chunk step a GPT
     // loader runs after the shuffle: per shard, docs concatenate in
     // (hkey, id) order with one EOD token each and 512-token contexts
     // cut back-to-back; each doc reports its stream range and the
     // context span it lands in (endCtx > startCtx = a causal-mask
     // boundary doc). Per-doc rows: the full assignment is hash-gated.
-    "t37_context_pack" -> { (s, dir) =>
+    GateEntry("t37_context_pack", { (s, dir) =>
       val d = Tables.documents(s, dir).select(col("doc_id"),
         TextFunctions.wsTokenCount(col("text")).cast("long").as("tok"))
       Shuffles.contextPack(d, "doc_id", "tok", ctxLen = 512L, nShards = 8)
@@ -1772,15 +3165,67 @@ object DataOpsQueries {
           col("streamStart"), col("startCtx"), col("endCtx"), col("nCtx"))
         .orderBy(col("doc_id"))
     },
+      // context packing: the t12 hkey ladder (salt ctx0) → per-shard
+      // exclusive running sum of (tok + 1 EOD) in (hkey, id) order →
+      // context ids by integer division on the 512-token grid
+      """WITH d AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+        |    md5(CAST(doc_id AS VARCHAR) || 'ctx0') AS hx
+        |  FROM documents),
+        |k AS (
+        |  SELECT doc_id, tok + 1 AS tokSep,
+        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+        |  FROM d),
+        |c AS (
+        |  SELECT doc_id, hkey % 8 AS shard, tokSep,
+        |    COALESCE(SUM(tokSep) OVER (PARTITION BY hkey % 8
+        |      ORDER BY hkey, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS streamStart
+        |  FROM k)
+        |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
+        |  CAST(tokSep AS BIGINT) AS tokSep,
+        |  CAST(streamStart AS BIGINT) AS streamStart,
+        |  CAST(streamStart // 512 AS BIGINT) AS startCtx,
+        |  CAST((streamStart + tokSep - 1) // 512 AS BIGINT) AS endCtx,
+        |  CAST((streamStart + tokSep - 1) // 512
+        |       - streamStart // 512 + 1 AS BIGINT) AS nCtx
+        |FROM c ORDER BY doc_id""".stripMargin),
     // sliding-window chunking — the RAG/embedding-ingest shape: 32-token
     // windows advancing by 24 (8-token overlap), tail chunk short, one
     // chunk for n ≤ 32, md5 chunk hashes as the downstream index key;
     // pure map work (tokenize + bounded per-doc explode, no shuffle)
-    "t38_chunk_windows" -> { (s, dir) =>
+    GateEntry("t38_chunk_windows", { (s, dir) =>
       TextFunctions.chunkWindows(Tables.documents(s, dir), "doc_id", "text",
           width = 32, stride = 24)
         .orderBy(col("doc_id"), col("chunkIdx"))
     },
+      // sliding-window chunks: range-explode per doc, end-inclusive list
+      // slice w[s+1 : s+nTok], md5 over the space-joined window
+      """WITH wd AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w,
+        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, n, w,
+        |    UNNEST(range(0,
+        |      CAST(ceil(greatest(n - 32, 0) / 24.0) AS BIGINT) + 1)) AS chunkIdx
+        |  FROM wd WHERE n > 0)
+        |SELECT doc_id, CAST(chunkIdx AS BIGINT) AS chunkIdx,
+        |  CAST(chunkIdx * 24 AS BIGINT) AS startTok,
+        |  CAST(least(32, n - chunkIdx * 24) AS BIGINT) AS nTok,
+        |  md5(array_to_string(
+        |    w[CAST(chunkIdx * 24 + 1 AS INT):
+        |      CAST(chunkIdx * 24 + least(32, n - chunkIdx * 24) AS INT)],
+        |    ' ')) AS chunkHash
+        |FROM c ORDER BY doc_id, chunkIdx""".stripMargin),
     // BM25-shaped sparse retrieval: the %97 eval slice queries the rest
     // of the corpus through the inverted term index — top-5 per query
     // with the rational-idf, fixed-point-summed score (see
@@ -1790,14 +3235,14 @@ object DataOpsQueries {
     // 0.9 here — the synthetic corpus has a 31-term vocabulary, so the
     // production df>N/2 default would elide the whole index; at 0.9 the
     // corpus-saturating filler terms still genuinely cross the bar
-    "t39_bm25_retrieve" -> { (s, dir) =>
+    GateEntry("t39_bm25_retrieve", { (s, dir) =>
       val d = Tables.documents(s, dir)
       TextFunctions.bm25TopK(
           d.filter(col("doc_id") % 97 =!= 0L),
           d.filter(col("doc_id") % 97 === 0L), "doc_id", "text", k = 5,
           maxDfPpm = 900000L)
         .orderBy(col("qid"), col("rank"))
-    },
+    }, T39OracleSql),
     // the TRUNCATED-index serve path (the capBuckets analog for posting
     // lists): every surviving term bounded to its 3 highest-impact
     // postings (impact = dtf/dl, one correctly-rounded IEEE divide on
@@ -1806,7 +3251,7 @@ object DataOpsQueries {
     // elision THRESHOLD alone still admits df=0.49·N lists. At the
     // 31-term gate vocabulary maxPostings=3 bites on every term, so the
     // truncation order itself is what the hash checks
-    "t39b_bm25_truncated" -> { (s, dir) =>
+    GateEntry("t39b_bm25_truncated", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val idx = TextFunctions.bm25IndexFrom(
         TextFunctions.bm25Postings(
@@ -1816,6 +3261,55 @@ object DataOpsQueries {
           d.filter(col("doc_id") % 97 === 0L), "doc_id", "text", k = 5)
         .orderBy(col("qid"), col("rank"))
     },
+      // the truncated-index twin: the t39 chain with each term's posting
+      // list bounded to its 3 highest-impact rows before the query join
+      """WITH tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |  FROM documents),
+        |dtf AS (
+        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM tok
+        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+        |dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM dtf GROUP BY did),
+        |stats AS (
+        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM dl),
+        |dfreq AS (
+        |  SELECT term, COUNT(*) AS df FROM dtf GROUP BY term),
+        |idx AS (
+        |  SELECT d.term, d.did, d.dtf, f.df, l.dl, s.nDocs, s.totTok,
+        |    ROW_NUMBER() OVER (PARTITION BY d.term
+        |      ORDER BY CAST(d.dtf AS DOUBLE) / CAST(l.dl AS DOUBLE) DESC,
+        |               d.did) AS pr
+        |  FROM dtf d JOIN dfreq f USING (term) JOIN dl l ON l.did = d.did
+        |  CROSS JOIN stats s
+        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
+        |qtf AS (
+        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM tok
+        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
+        |cand AS (
+        |  SELECT q.qid, i.did, q.qtf, i.dtf, i.df, i.dl, i.nDocs, i.totTok
+        |  FROM qtf q JOIN idx i USING (term) WHERE i.pr <= 3),
+        |contrib AS (
+        |  SELECT qid, did,
+        |    CAST(ROUND(
+        |      CAST(qtf AS DOUBLE) *
+        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
+        |       (CAST(df AS DOUBLE) + 0.5)) *
+        |      ((CAST(dtf AS DOUBLE) * 2.2) /
+        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+        |         (CAST(dl AS DOUBLE) /
+        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
+        |      1000000.0) AS BIGINT) AS fixed
+        |  FROM cand),
+        |sc AS (
+        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
+        |  FROM contrib GROUP BY 1, 2),
+        |rk AS (
+        |  SELECT qid, did, score,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
+        |      ORDER BY score DESC, did) AS BIGINT) AS rank
+        |  FROM sc)
+        |SELECT qid, did, score, rank FROM rk WHERE rank <= 5
+        |ORDER BY qid, rank""".stripMargin),
     // retrieval-grounded overlap eval (the ROUGE-N shape): for each
     // eval query and its BM25 top-1 retrieved doc, clipped n-gram
     // matching — matched_n = Σ over shared grams of min(count_q,
@@ -1825,7 +3319,7 @@ object DataOpsQueries {
     // anywhere). The eval-pipeline scoring loop (summarization/QA
     // overlap metrics) expressed as two gram melts + one pair join,
     // never a per-pair UDF.
-    "t40_rouge_eval" -> { (s, dir) =>
+    GateEntry("t40_rouge_eval", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val top1 = TextFunctions.bm25TopK(
           d.filter(col("doc_id") % 97 =!= 0L),
@@ -1843,6 +3337,91 @@ object DataOpsQueries {
           col("f1ppm1"), col("m2"), col("c2"), col("r2"), col("f1ppm2"))
         .orderBy(col("qid"))
     },
+      // ROUGE-shaped overlap eval: the t39 chain at k=1 picks the top-1
+      // doc per query, then clipped unigram/bigram matching in pure
+      // integers and the 2m/(c+r) F1 identity in integer ppm
+      """WITH t40w AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM documents),
+        |t40tok AS (SELECT doc_id, UNNEST(w) AS term FROM t40w),
+        |t40dtf AS (
+        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t40tok
+        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+        |t40dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t40dtf GROUP BY did),
+        |t40stats AS (
+        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t40dl),
+        |t40dfreq AS (SELECT term, COUNT(*) AS df FROM t40dtf GROUP BY term),
+        |t40qtf AS (
+        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t40tok
+        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
+        |t40cand AS (
+        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
+        |  FROM t40qtf q JOIN t40dtf d USING (term) JOIN t40dfreq f USING (term)
+        |  JOIN t40dl l ON l.did = d.did CROSS JOIN t40stats s
+        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
+        |t40contrib AS (
+        |  SELECT qid, did,
+        |    CAST(ROUND(
+        |      CAST(qtf AS DOUBLE) *
+        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
+        |       (CAST(df AS DOUBLE) + 0.5)) *
+        |      ((CAST(dtf AS DOUBLE) * 2.2) /
+        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+        |         (CAST(dl AS DOUBLE) /
+        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
+        |      1000000.0) AS BIGINT) AS fixed
+        |  FROM t40cand),
+        |t40sc AS (
+        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
+        |  FROM t40contrib GROUP BY 1, 2),
+        |t40top1 AS (
+        |  SELECT qid, did FROM (
+        |    SELECT qid, did,
+        |      ROW_NUMBER() OVER (PARTITION BY qid
+        |        ORDER BY score DESC, did) AS rk
+        |    FROM t40sc) z WHERE rk = 1),
+        |t40uc AS (
+        |  SELECT doc_id, term AS g, COUNT(*) AS n FROM t40tok GROUP BY 1, 2),
+        |t40bi AS (
+        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 2
+        |    THEN [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]
+        |    ELSE [] END) AS g
+        |  FROM t40w),
+        |t40bcnt AS (SELECT doc_id, g, COUNT(*) AS n FROM t40bi GROUP BY 1, 2),
+        |t40m1 AS (
+        |  SELECT t.qid, t.did, CAST(SUM(LEAST(q.n, d.n)) AS BIGINT) AS m1
+        |  FROM t40top1 t JOIN t40uc q ON q.doc_id = t.qid
+        |  JOIN t40uc d ON d.doc_id = t.did AND d.g = q.g
+        |  GROUP BY 1, 2),
+        |t40m2 AS (
+        |  SELECT t.qid, t.did, CAST(SUM(LEAST(q.n, d.n)) AS BIGINT) AS m2
+        |  FROM t40top1 t JOIN t40bcnt q ON q.doc_id = t.qid
+        |  JOIN t40bcnt d ON d.doc_id = t.did AND d.g = q.g
+        |  GROUP BY 1, 2),
+        |t40tot1 AS (
+        |  SELECT doc_id, CAST(SUM(n) AS BIGINT) AS tot FROM t40uc GROUP BY 1),
+        |t40tot2 AS (
+        |  SELECT doc_id, CAST(SUM(n) AS BIGINT) AS tot FROM t40bcnt GROUP BY 1),
+        |t40j AS (
+        |  SELECT t.qid, t.did,
+        |    COALESCE(a.m1, 0) AS m1, COALESCE(cd.tot, 0) AS c1,
+        |    COALESCE(cq.tot, 0) AS r1,
+        |    COALESCE(b.m2, 0) AS m2, COALESCE(ed.tot, 0) AS c2,
+        |    COALESCE(eq.tot, 0) AS r2
+        |  FROM t40top1 t
+        |  LEFT JOIN t40m1 a ON a.qid = t.qid AND a.did = t.did
+        |  LEFT JOIN t40m2 b ON b.qid = t.qid AND b.did = t.did
+        |  LEFT JOIN t40tot1 cd ON cd.doc_id = t.did
+        |  LEFT JOIN t40tot1 cq ON cq.doc_id = t.qid
+        |  LEFT JOIN t40tot2 ed ON ed.doc_id = t.did
+        |  LEFT JOIN t40tot2 eq ON eq.doc_id = t.qid)
+        |SELECT qid, did, m1, c1, r1,
+        |  CAST(CASE WHEN c1 + r1 > 0 THEN 2 * m1 * 1000000 // (c1 + r1)
+        |       ELSE 0 END AS BIGINT) AS f1ppm1,
+        |  m2, c2, r2,
+        |  CAST(CASE WHEN c2 + r2 > 0 THEN 2 * m2 * 1000000 // (c2 + r2)
+        |       ELSE 0 END AS BIGINT) AS f1ppm2
+        |FROM t40j ORDER BY qid""".stripMargin),
     // hard-negative mining for contrastive training: per query, the
     // top-scoring BM25 candidates that are NOT near-duplicates of the
     // query — retrieval proposes, the d2 LSH pair set vetoes (a near-dup
@@ -1854,7 +3433,7 @@ object DataOpsQueries {
     // the veto caught is itself hash-gated. Scale shape: bm25TopK's
     // posting join + lshCandidates' banded pairs (both bounded designs),
     // one anti-join, one queries×k window.
-    "t41_hard_negatives" -> { (s, dir) =>
+    GateEntry("t41_hard_negatives", { (s, dir) =>
       val c = corpus(s, dir)
       val cand = TextFunctions.bm25TopK(
         c.filter(col("doc_id") % 97 =!= 0L),
@@ -1881,6 +3460,73 @@ object DataOpsQueries {
           col("nExcluded"))
         .orderBy(col("qid"), col("negRank"))
     },
+      // hard negatives: the t39 BM25 chain over the DUP-BEARING corpus at
+      // k=20, vetoed by the d2 pair set (est >= 0.5) across the %97
+      // boundary, re-ranked after exclusion; nExcluded per query rides
+      // each row
+      s"""WITH $MinhashSql,
+        |t41tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |  FROM corpus),
+        |t41dtf AS (
+        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t41tok
+        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+        |t41dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t41dtf GROUP BY did),
+        |t41stats AS (
+        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t41dl),
+        |t41dfreq AS (
+        |  SELECT term, COUNT(*) AS df FROM t41dtf GROUP BY term),
+        |t41qtf AS (
+        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t41tok
+        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
+        |t41cand AS (
+        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
+        |  FROM t41qtf q JOIN t41dtf d USING (term) JOIN t41dfreq f USING (term)
+        |  JOIN t41dl l ON l.did = d.did CROSS JOIN t41stats s
+        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
+        |t41contrib AS (
+        |  SELECT qid, did,
+        |    CAST(ROUND(
+        |      CAST(qtf AS DOUBLE) *
+        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
+        |       (CAST(df AS DOUBLE) + 0.5)) *
+        |      ((CAST(dtf AS DOUBLE) * 2.2) /
+        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+        |         (CAST(dl AS DOUBLE) /
+        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
+        |      1000000.0) AS BIGINT) AS fixed
+        |  FROM t41cand),
+        |t41sc AS (
+        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
+        |  FROM t41contrib GROUP BY 1, 2),
+        |t41top AS (
+        |  SELECT qid, did, score FROM (
+        |    SELECT qid, did, score,
+        |      ROW_NUMBER() OVER (PARTITION BY qid
+        |        ORDER BY score DESC, did) AS rk
+        |    FROM t41sc) z WHERE rk <= 20),
+        |t41excl AS (
+        |  SELECT id1 AS qid, id2 AS did FROM pairs
+        |  WHERE estJaccard >= 0.5 AND id1 % 97 = 0 AND id2 % 97 <> 0
+        |  UNION ALL
+        |  SELECT id2 AS qid, id1 AS did FROM pairs
+        |  WHERE estJaccard >= 0.5 AND id2 % 97 = 0 AND id1 % 97 <> 0),
+        |t41ex AS (
+        |  SELECT t.qid, COUNT(*) AS nExcluded
+        |  FROM t41top t JOIN t41excl e ON e.qid = t.qid AND e.did = t.did
+        |  GROUP BY t.qid),
+        |t41kept AS (
+        |  SELECT t.qid, t.did, t.score,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY t.qid
+        |      ORDER BY t.score DESC, t.did) AS BIGINT) AS negRank
+        |  FROM t41top t
+        |  WHERE NOT EXISTS (SELECT 1 FROM t41excl e
+        |                    WHERE e.qid = t.qid AND e.did = t.did))
+        |SELECT k.qid, k.negRank, k.did, k.score,
+        |  CAST(COALESCE(x.nExcluded, 0) AS BIGINT) AS nExcluded
+        |FROM t41kept k LEFT JOIN t41ex x ON x.qid = k.qid
+        |WHERE k.negRank <= 3
+        |ORDER BY k.qid, k.negRank""".stripMargin),
     // the retrieval SERVE twin: the standing posting index pins once,
     // the query slice arrives one file per trigger, each batch's top-5
     // lands in the sink — per-query ranking is batch-independent, so
@@ -1890,7 +3536,7 @@ object DataOpsQueries {
     // an ingest batch (bm25IndexAppend, stats re-derived) — the serve
     // path reads what a production ingest loop maintains, and the
     // oracle stays t39's because incremental == rebuild (the t42 gate)
-    "t39_stream_parity" -> { (s, dir) =>
+    GateEntry("t39_stream_parity", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("t39-stream")
       val feedDir = tmp.resolve("feed").toString
       val outDir = tmp.resolve("out").toString
@@ -1913,6 +3559,10 @@ object DataOpsQueries {
       q.processAllAvailable(); q.stop()
       s.read.parquet(outDir).orderBy(col("qid"), col("rank"))
     },
+      // per-query top-k rankings are batch-independent (each query reads
+      // only its own candidate rows), so the served union must land on
+      // the batch retrieval oracle verbatim
+      T39OracleSql),
     // incremental posting-index maintenance, gated DIFFERENTIALLY: the
     // engine builds the index by APPEND (standing store from the %5≠0
     // docs + the %5=0 slice as the arriving batch — which also REPLAYS
@@ -1922,7 +3572,7 @@ object DataOpsQueries {
     // the oracle: any append-path drift — lost un-elided postings,
     // stale stats, replay double-count — lands in the hash. Elision at
     // the t39 bar (the 31-term synthetic vocabulary).
-    "t42_bm25_index_append" -> { (s, dir) =>
+    GateEntry("t42_bm25_index_append", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val standing = TextFunctions.bm25Postings(
         d.filter(col("doc_id") % 5 =!= 0L), "doc_id", "text")
@@ -1933,13 +3583,13 @@ object DataOpsQueries {
         .select(col("term"), col("did"), col("dtf"), col("dl"),
           col("df"), col("nDocs").as("n_docs"), col("totTok").as("tot_tok"))
         .orderBy(col("term"), col("did"))
-    },
+    }, T42OracleSql),
     // the append-only WRITE path (r18): the delta a store append
     // actually persists — batch postings minus already-seen doc ids
     // (the %679 replays must vanish WHOLE; the %5=0 docs land). The
     // oracle derives the same rows set-theoretically: batch docs not
     // in the standing slice are exactly the %5=0 ids.
-    "t42b_bm25_delta" -> { (s, dir) =>
+    GateEntry("t42b_bm25_delta", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val standing = TextFunctions.bm25Postings(
         d.filter(col("doc_id") % 5 =!= 0L), "doc_id", "text")
@@ -1948,6 +3598,16 @@ object DataOpsQueries {
       TextFunctions.bm25PostingsDelta(standing, batch, "doc_id", "text")
         .orderBy(col("term"), col("did"))
     },
+      // delta = batch postings for docs the standing slice lacks; since
+      // standing = %5≠0 docs and batch = (%5=0 ∪ %679=0), the new ids
+      // are exactly %5=0 — derived set-theoretically, not by replaying
+      // the engine's anti-join
+      """WITH t42tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |  FROM documents)
+        |SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok
+        |WHERE doc_id % 5 = 0 GROUP BY 1, 2
+        |ORDER BY term, did""".stripMargin),
     // the maintained store through the STREAMING engine: the store dir
     // seeds from the %5≠0 slice, the batch slice (%5=0 docs + the %679
     // replays) arrives one file per trigger, and each trigger appends
@@ -1955,7 +3615,7 @@ object DataOpsQueries {
     // rewritten, replays dropped whole against the re-read store. The
     // final store must equal the from-scratch posting build over ALL
     // docs (the t42 law at store level, streamed).
-    "t42_stream_parity" -> { (s, dir) =>
+    GateEntry("t42_stream_parity", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("t42-stream")
       val feedDir = tmp.resolve("feed").toString
       val storeDir = tmp.resolve("store").toString
@@ -1974,6 +3634,15 @@ object DataOpsQueries {
       q.processAllAvailable(); q.stop()
       s.read.parquet(storeDir).orderBy(col("term"), col("did"))
     },
+      // the streamed store must land on the from-scratch posting build
+      // over ALL docs (standing %5≠0 ∪ appended %5=0; the %679 replays
+      // are already standing, so they contribute nothing new)
+      """WITH t42tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+        |  FROM documents)
+        |SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok
+        |GROUP BY 1, 2
+        |ORDER BY term, did""".stripMargin),
     // the maintained-STATS serve path (r19 — the last O(store) step on
     // the write side removed): standing stats derive once from the
     // standing slice (production: the bootstrap of the maintained
@@ -1983,7 +3652,7 @@ object DataOpsQueries {
     // parts. The oracle is t42's from-scratch whole-corpus rebuild:
     // any stats drift (df full-outer sum, nDocs/totTok accumulation,
     // docLens union, elision off maintained df) lands in the hash.
-    "t43_bm25_stats_serve" -> { (s, dir) =>
+    GateEntry("t43_bm25_stats_serve", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val standing = TextFunctions.bm25Postings(
         d.filter(col("doc_id") % 5 =!= 0L), "doc_id", "text")
@@ -1999,12 +3668,16 @@ object DataOpsQueries {
           col("df"), col("nDocs").as("n_docs"), col("totTok").as("tot_tok"))
         .orderBy(col("term"), col("did"))
     },
+      // maintained stats == re-derived stats IS the law, so the
+      // stats-served index must land on t42's from-scratch rebuild
+      // oracle verbatim — any merge drift breaks the shared string
+      T42OracleSql),
     // ROUGE-L alongside ROUGE-N: token-level LCS for the same
     // query→top-1 pairs, the classic row-rolling DP run INSIDE the row
     // as nested higher-order aggregates (integer-exact, pair-bounded —
     // eval docs are ≤100 tokens so the DP is ≤10k cells per pair); F1
     // from the 2m/(c+r) identity in integer ppm like t40
-    "t40b_rouge_l" -> { (s, dir) =>
+    GateEntry("t40b_rouge_l", { (s, dir) =>
       val d = Tables.documents(s, dir)
       val top1 = TextFunctions.bm25TopK(
           d.filter(col("doc_id") % 97 =!= 0L),
@@ -2018,6 +3691,77 @@ object DataOpsQueries {
           col("rL").as("r_l"), col("f1ppm_l"))
         .orderBy(col("qid"))
     },
+      // ROUGE-L: the t40 top-1 chain, then token-LCS via the same
+      // row-rolling DP as the engine — expressed as nested list_reduce
+      // folds (accumulator = DP row; elements are single-element BIGINT
+      // lists so the fold types unify), integer-exact end to end
+      """WITH t40w AS (
+        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+        |  FROM documents),
+        |t40tok AS (SELECT doc_id, UNNEST(w) AS term FROM t40w),
+        |t40dtf AS (
+        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t40tok
+        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+        |t40dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t40dtf GROUP BY did),
+        |t40stats AS (
+        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t40dl),
+        |t40dfreq AS (SELECT term, COUNT(*) AS df FROM t40dtf GROUP BY term),
+        |t40qtf AS (
+        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t40tok
+        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
+        |t40cand AS (
+        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
+        |  FROM t40qtf q JOIN t40dtf d USING (term) JOIN t40dfreq f USING (term)
+        |  JOIN t40dl l ON l.did = d.did CROSS JOIN t40stats s
+        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
+        |t40contrib AS (
+        |  SELECT qid, did,
+        |    CAST(ROUND(
+        |      CAST(qtf AS DOUBLE) *
+        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
+        |       (CAST(df AS DOUBLE) + 0.5)) *
+        |      ((CAST(dtf AS DOUBLE) * 2.2) /
+        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+        |         (CAST(dl AS DOUBLE) /
+        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
+        |      1000000.0) AS BIGINT) AS fixed
+        |  FROM t40cand),
+        |t40sc AS (
+        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
+        |  FROM t40contrib GROUP BY 1, 2),
+        |t40top1 AS (
+        |  SELECT qid, did FROM (
+        |    SELECT qid, did,
+        |      ROW_NUMBER() OVER (PARTITION BY qid
+        |        ORDER BY score DESC, did) AS rk
+        |    FROM t40sc) z WHERE rk = 1),
+        |lcsj AS (
+        |  SELECT t.qid, t.did, q.w AS qw, d.w AS dw
+        |  FROM t40top1 t JOIN t40w q ON q.doc_id = t.qid
+        |  JOIN t40w d ON d.doc_id = t.did),
+        |lcsv AS (
+        |  SELECT qid, did,
+        |    CASE WHEN len(qw) = 0 OR len(dw) = 0 THEN CAST(0 AS BIGINT) ELSE
+        |      list_reduce(
+        |        list_concat(
+        |          [list_transform(range(0, len(dw)+1), x -> CAST(0 AS BIGINT))],
+        |          list_transform(range(1, len(qw)+1), i -> [CAST(i AS BIGINT)])),
+        |        (row, el) -> list_reduce(
+        |            list_concat([[CAST(0 AS BIGINT)]],
+        |              list_transform(range(1, len(dw)+1), j -> [CAST(j AS BIGINT)])),
+        |            (pre, jl) -> list_append(pre, greatest(
+        |                row[CAST(jl[1] AS INT)+1],
+        |                pre[CAST(jl[1] AS INT)],
+        |                row[CAST(jl[1] AS INT)] +
+        |                  CASE WHEN qw[CAST(el[1] AS INT)] = dw[CAST(jl[1] AS INT)]
+        |                       THEN 1 ELSE 0 END))))[len(dw)+1]
+        |    END AS lcs,
+        |    CAST(len(dw) AS BIGINT) AS c_l, CAST(len(qw) AS BIGINT) AS r_l
+        |  FROM lcsj)
+        |SELECT qid, did, lcs, c_l, r_l,
+        |  CAST(CASE WHEN c_l + r_l > 0 THEN 2 * lcs * 1000000 // (c_l + r_l)
+        |       ELSE 0 END AS BIGINT) AS f1ppm_l
+        |FROM lcsv ORDER BY qid""".stripMargin),
     // the admission family through the STREAMING engine: the corpus is
     // dumped to parquet partitioned so no (source, shard) ledger group
     // spans files, ingested back one file per trigger, and the stateful
@@ -2025,7 +3769,7 @@ object DataOpsQueries {
     // kept set must land on t32's exact oracle (each group's ledger runs
     // 0 → spent within one batch, in the same (hkey, id) order as the
     // batch operator's window)
-    "t32_stream_parity" -> { (s, dir) =>
+    GateEntry("t32_stream_parity", { (s, dir) =>
       import s.implicits._
       val tmp = graft.core.Caching.scratchDir("t32-stream")
       val feedDir = tmp.resolve("feed").toString
@@ -2069,13 +3813,17 @@ object DataOpsQueries {
           sum(when(col("keep"), col("id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("lang"))
     },
+      // the streamed admission must land on the BATCH operator's oracle
+      // verbatim — same salt, same budgets, same summary (a drifted copy
+      // would silently weaken the parity check)
+      T32OracleSql),
     // the curriculum schedule through the STREAMING engine: the stateful
     // per-key spent-token ledger (streamingBudgetedMix) ALREADY expresses
     // multi-stage admission — the key is the composite (stage, source)
     // and the hkey folds the stage exactly like the batch operator, so
     // each (stage, source, shard) group spends its own quota and the
     // kept set must land on t34's batch oracle VERBATIM (shared string)
-    "t34_stream_parity" -> { (s, dir) =>
+    GateEntry("t34_stream_parity", { (s, dir) =>
       import s.implicits._
       val tmp = graft.core.Caching.scratchDir("t34-stream")
       val feedDir = tmp.resolve("feed").toString
@@ -2123,12 +3871,17 @@ object DataOpsQueries {
           sum(when(col("keep"), col("id")).otherwise(0L)).as("keptIdSum"))
         .orderBy(col("stage"), col("lang"))
     },
+      // the streamed curriculum must land on t34's oracle verbatim too —
+      // the composite-key ledger IS the batch (stage, source, shard)
+      // window, so any drift (hash input, budget split, tie order) fails
+      // the shared string
+      T34OracleSql),
     // span decontamination through the STREAMING engine — the crawl-
     // ingest shape: the eval 8-gram index pins once, the (leaked)
     // training corpus arrives one parquet file per trigger, and because
     // the cut/keep/fingerprint algebra is per-doc, the union of batch
     // outputs must land on t35's batch oracle VERBATIM (shared string)
-    "t35_stream_parity" -> { (s, dir) =>
+    GateEntry("t35_stream_parity", { (s, dir) =>
       val tmp = graft.core.Caching.scratchDir("t35-stream")
       val feedDir = tmp.resolve("feed").toString
       val outDir = tmp.resolve("out").toString
@@ -2150,13 +3903,16 @@ object DataOpsQueries {
       q.processAllAvailable(); q.stop()
       s.read.parquet(outDir).orderBy(col("doc_id"))
     },
+      // per-doc decontamination summaries are batch-order-independent, so
+      // the streamed union must land on the batch oracle verbatim
+      T35OracleSql),
     // CCNet-style rarity scoring: per-doc mean unigram surprisal under
     // the corpus's own unigram model, in INTEGER-EXACT floor-log2 bits
     // (floorLog2(n) = len(binary(n)) − 1 — no libm log, so both engines
     // agree bit-for-bit; the real CCNet uses a KenLM model the same
     // pipeline shape would serve). df is vocabulary-bounded → broadcast;
     // the doc-keyed aggregate is the only corpus-sized shuffle
-    "t17_surprisal" -> { (s, dir) =>
+    GateEntry("t17_surprisal", { (s, dir) =>
       val tok = Tables.documents(s, dir)
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("w"))
       val df = tok.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -2169,38 +3925,159 @@ object DataOpsQueries {
         .withColumn("meanBits", col("bits").cast("double") / col("nTok"))
         .orderBy(col("doc_id"))
     },
+      """WITH tok AS (
+        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        |  FROM documents),
+        |df AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
+        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS N FROM df),
+        |b AS (
+        |  SELECT t.doc_id,
+        |    CAST(length(format('{:b}', tot.N)) - length(format('{:b}', d.cnt)) AS BIGINT) AS bits1
+        |  FROM tok t JOIN df d USING (w) CROSS JOIN tot),
+        |agg AS (
+        |  SELECT doc_id, COUNT(*) AS nTok, CAST(SUM(bits1) AS BIGINT) AS bits
+        |  FROM b GROUP BY doc_id)
+        |SELECT doc_id, nTok, bits,
+        |  CAST(bits AS DOUBLE) / nTok AS meanBits
+        |FROM agg ORDER BY doc_id""".stripMargin),
     // SemDeDup: coarse k-means over the embeddings, then earlier-id-wins
     // cosine pruning WITHIN each cell — the published semantic-dedup
     // recipe whose pair candidates stay cluster-local (never all-pairs)
-    "d15_semdedup" -> { (s, dir) =>
+    GateEntry("d15_semdedup", { (s, dir) =>
       Vectors.semDedup(Tables.embeddings(s, dir), nCells = 8, iters = 2,
           minCosine = 0.2)
         .orderBy(col("vec_id"))
     },
+      // the ivfSql chain replays the same 2-round Lloyd training and cell
+      // assignment; within-cell pairs + the earlier-id-wins drop rule on top
+      s"""WITH $NormsSql,
+        |${ivfSql(2)},
+        |sdCand AS (
+        |  SELECT a.cellId, a.vec_id AS aId, b.vec_id AS bId
+        |  FROM celled a JOIN celled b
+        |    ON a.cellId = b.cellId AND a.vec_id < b.vec_id),
+        |sdDots AS (
+        |  SELECT c.cellId, c.aId, c.bId,
+        |    CAST(SUM(CAST(ROUND(CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)
+        |      * 1000000000000) AS BIGINT)) AS DOUBLE) / 1e12 AS dot
+        |  FROM sdCand c
+        |  JOIN embeddings ea ON ea.vec_id = c.aId
+        |  JOIN embeddings eb ON eb.vec_id = c.bId
+        |  CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) ix
+        |  GROUP BY c.cellId, c.aId, c.bId),
+        |sdDup AS (
+        |  SELECT d.bId AS vid, MIN(d.aId) AS dupOf
+        |  FROM sdDots d
+        |  JOIN norms na ON na.vec_id = d.aId
+        |  JOIN norms nb ON nb.vec_id = d.bId
+        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2
+        |  GROUP BY d.bId)
+        |SELECT c.vec_id, c.cellId, s.vid IS NULL AS keep, s.dupOf
+        |FROM celled c LEFT JOIN sdDup s ON s.vid = c.vec_id
+        |ORDER BY c.vec_id""".stripMargin),
     // Gopher quality rules (Rae et al. 2021) over the derived page
     // corpus: word-count band, mean word length, symbol-to-word ratio,
     // bullet/ellipsis line shares, alpha-word share, stopword presence —
     // all narrow column expressions, one map stage at any scale
-    "t15_gopher_rules" -> { (s, dir) =>
+    GateEntry("t15_gopher_rules", { (s, dir) =>
       TextFunctions.gopherRules(pageCorpus(s, dir)).orderBy(col("doc_id"))
     },
+      s"""WITH $PageSql,
+        |feat AS (
+        |  SELECT doc_id, page,
+        |    regexp_extract_all(page, '\\S+') AS words,
+        |    string_split(page, chr(10)) AS lines,
+        |    regexp_extract_all(lower(page), '[a-z0-9]+') AS toks
+        |  FROM pages),
+        |f2 AS (
+        |  SELECT doc_id,
+        |    CAST(len(words) AS BIGINT) AS nWords,
+        |    CAST(len(lines) AS BIGINT) AS nLines,
+        |    (length(page) - length(replace(page, '...', ''))) / 3 AS ellipsisCount,
+        |    length(page) - length(replace(page, '#', '')) AS hashCount,
+        |    list_sum(list_transform(words, x -> length(x))) AS sumLen,
+        |    len(list_filter(lines, l -> starts_with(l, '- '))) AS bulletLines,
+        |    len(list_filter(lines, l -> ends_with(l, '...'))) AS ellLines,
+        |    len(list_filter(words, x -> regexp_matches(x, '[a-z]'))) AS alphaWords,
+        |    CAST(len(list_intersect(list_distinct(toks),
+        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stopHits
+        |  FROM feat),
+        |f3 AS (
+        |  SELECT doc_id, nWords,
+        |    CASE WHEN nWords > 0 THEN CAST(sumLen AS DOUBLE) / nWords
+        |         ELSE 0.0 END AS meanWordLen,
+        |    CASE WHEN nWords > 0 THEN CAST(hashCount + ellipsisCount AS DOUBLE) / nWords
+        |         ELSE 0.0 END AS symbolRatio,
+        |    CASE WHEN nLines > 0 THEN CAST(bulletLines AS DOUBLE) / nLines
+        |         ELSE 0.0 END AS bulletRatio,
+        |    CASE WHEN nLines > 0 THEN CAST(ellLines AS DOUBLE) / nLines
+        |         ELSE 0.0 END AS ellipsisLineRatio,
+        |    CASE WHEN nWords > 0 THEN CAST(alphaWords AS DOUBLE) / nWords
+        |         ELSE 0.0 END AS alphaRatio,
+        |    stopHits
+        |  FROM f2)
+        |SELECT doc_id, nWords, meanWordLen, symbolRatio, bulletRatio,
+        |  ellipsisLineRatio, alphaRatio, stopHits,
+        |  (nWords BETWEEN 50 AND 100000) AND (meanWordLen BETWEEN 3.0 AND 10.0)
+        |    AND symbolRatio <= 0.1 AND bulletRatio <= 0.9
+        |    AND ellipsisLineRatio <= 0.3 AND alphaRatio >= 0.8
+        |    AND stopHits >= 2 AS keep
+        |FROM f3 ORDER BY doc_id""".stripMargin),
     // C4 line/page filters (Raffel et al. 2020) over the same page
     // corpus: keep lines ending in terminal punctuation with ≥ 5 words
     // and no "javascript"; drop whole pages containing "{" or
     // "lorem ipsum". Emits the cleaned text itself (byte-compared
     // against the oracle's assembly)
-    "t16_c4_filters" -> { (s, dir) =>
+    GateEntry("t16_c4_filters", { (s, dir) =>
       TextFunctions.c4Filters(pageCorpus(s, dir)).orderBy(col("doc_id"))
     },
+      s"""WITH $PageSql,
+        |lns AS (SELECT doc_id, page, string_split(page, chr(10)) AS lines
+        |        FROM pages),
+        |k AS (
+        |  SELECT doc_id, page, lines,
+        |    list_filter(lines, l ->
+        |      (right(l, 1) IN ('.', '!', '?', '"'))
+        |      AND len(regexp_extract_all(l, '\\S+')) >= 5
+        |      AND NOT contains(l, 'javascript')) AS kept,
+        |    (contains(page, '{') OR contains(page, 'lorem ipsum')) AS pageDrop
+        |  FROM lns)
+        |SELECT doc_id,
+        |  CAST(len(lines) AS BIGINT) AS nLines,
+        |  CAST(CASE WHEN pageDrop THEN 0 ELSE len(kept) END AS BIGINT) AS nKept,
+        |  pageDrop,
+        |  CASE WHEN contains(page, '{') THEN 'brace'
+        |       WHEN contains(page, 'lorem ipsum') THEN 'lorem' END AS dropReason,
+        |  CASE WHEN pageDrop THEN '' ELSE array_to_string(kept, chr(10)) END AS cleanText,
+        |  CAST(length(CASE WHEN pageDrop THEN ''
+        |    ELSE array_to_string(kept, chr(10)) END) AS BIGINT) AS keptChars
+        |FROM k ORDER BY doc_id""".stripMargin),
     // corpus-wide boilerplate-line scrub (CCNet/MassiveText line-level
     // dedup): lines appearing in ≥ 5 distinct pages (the fixed-residue
     // marker lines, plus any short-doc collisions) are removed from
     // every page — corpus-level state the per-page C4 filters can't see
-    "t24_line_scrub" -> { (s, dir) =>
+    GateEntry("t24_line_scrub", { (s, dir) =>
       TextFunctions.frequentLineScrub(pageCorpus(s, dir),
           "doc_id", "page", minDocs = 5L)
         .orderBy(col("doc_id"))
     },
+      s"""WITH $PageSql,
+        |lsx AS (SELECT doc_id, string_split(page, chr(10)) AS ls FROM pages),
+        |lln AS (
+        |  SELECT doc_id, generate_subscripts(ls, 1) AS ln, unnest(ls) AS line
+        |  FROM lsx),
+        |boiler AS (
+        |  SELECT line FROM (
+        |    SELECT line, COUNT(DISTINCT doc_id) AS d FROM lln GROUP BY line)
+        |  WHERE d >= 5)
+        |SELECT l.doc_id,
+        |  COALESCE(array_to_string(
+        |    list(l.line ORDER BY l.ln) FILTER (WHERE b.line IS NULL),
+        |    chr(10)), '') AS cleanedText,
+        |  COUNT(*) AS nLines,
+        |  COUNT(b.line) AS removedLines
+        |FROM lln l LEFT JOIN boiler b ON l.line = b.line
+        |GROUP BY l.doc_id ORDER BY l.doc_id""".stripMargin),
     // ordered 4-step funnel (signup → view → click → purchase) with a
     // 24 h conversion window: step k's timestamp is the first event of
     // its type strictly after step k-1 and within the window of it
@@ -2210,23 +4087,63 @@ object DataOpsQueries {
     // passes. Per-user arrays are bounded by that user's per-type event
     // count (the usual funnel-operator contract); at 100 TB the stage
     // stays a hash aggregate over the user key.
-    "e5_funnel" -> { (s, dir) =>
+    GateEntry("e5_funnel", { (s, dir) =>
       DerivedState.register(s, dir)
       Events.funnel(s.table("events"),
           Seq("signup", "view", "click", "purchase"))
         .orderBy(col("user_id"))
     },
+      // step chain mirrored as nested CTE hops: DuckDB's list() FILTER is
+      // the sorted conditional collect; [1] on an empty/NULL list is NULL,
+      // matching get()'s null out-of-bounds; a NULL prior step nulls the
+      // lambda so the filtered list drains — both engines propagate the
+      // missing step identically. 86400000000000 = the 24 h window in ns
+      """WITH e AS (
+        |  SELECT user_id, event_type, epoch_ns(ts) AS tsn FROM events),
+        |arr AS (
+        |  SELECT user_id,
+        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'signup') AS a0,
+        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'view') AS a1,
+        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'click') AS a2,
+        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'purchase') AS a3
+        |  FROM e GROUP BY user_id),
+        |f1 AS (SELECT user_id, a1, a2, a3, a0[1] AS t1 FROM arr),
+        |f2 AS (SELECT user_id, a2, a3, t1,
+        |         list_filter(a1, x -> x > t1 AND x <= t1 + 86400000000000)[1] AS t2 FROM f1),
+        |f3 AS (SELECT user_id, a3, t1, t2,
+        |         list_filter(a2, x -> x > t2 AND x <= t2 + 86400000000000)[1] AS t3 FROM f2),
+        |f4 AS (SELECT user_id, t1, t2, t3,
+        |         list_filter(a3, x -> x > t3 AND x <= t3 + 86400000000000)[1] AS t4 FROM f3)
+        |SELECT user_id, t1, t2, t3, t4,
+        |  CAST(CASE WHEN t4 IS NOT NULL THEN 4 WHEN t3 IS NOT NULL THEN 3
+        |    WHEN t2 IS NOT NULL THEN 2 WHEN t1 IS NOT NULL THEN 1
+        |    ELSE 0 END AS BIGINT) AS stage
+        |FROM f4 ORDER BY user_id""".stripMargin),
     // cohort day-N retention: cohort = day of first activity; one row per
     // (cohortDay, dayOffset) with the distinct active users and the
     // retention ratio. The (user, day) distinct and the first-day
     // aggregate shuffle on the same user key (exchange reuse); the final
     // aggregate is cohortDay × offset — a calendar-bounded dimension —
     // and the cohort-size side of the ratio join is broadcast.
-    "e6_retention" -> { (s, dir) =>
+    GateEntry("e6_retention", { (s, dir) =>
       DerivedState.register(s, dir)
       Events.retention(s.table("events"))
         .orderBy(col("cohortDay"), col("dayOffset"))
     },
+      """WITH d AS (
+        |  SELECT DISTINCT user_id,
+        |    epoch_ns(ts) // 86400000000000 AS day FROM events),
+        |c AS (SELECT user_id, MIN(day) AS cohortDay FROM d GROUP BY user_id),
+        |cs AS (SELECT cohortDay, COUNT(*) AS cohortSize FROM c GROUP BY cohortDay),
+        |r AS (
+        |  SELECT c.cohortDay, d.day - c.cohortDay AS dayOffset,
+        |    COUNT(*) AS activeUsers
+        |  FROM d JOIN c USING (user_id) GROUP BY 1, 2)
+        |SELECT r.cohortDay, r.dayOffset, r.activeUsers,
+        |  cs.cohortSize,
+        |  CAST(r.activeUsers AS DOUBLE) / cs.cohortSize AS retention
+        |FROM r JOIN cs USING (cohortDay)
+        |ORDER BY r.cohortDay, r.dayOffset""".stripMargin),
     // backward as-of join: each click is enriched with the user's latest
     // view at-or-before it (quotes deduped to MAX(value) per (user, ts)
     // so the ≤-tie pick is engine-independent). Execution is union-tag +
@@ -2234,7 +4151,7 @@ object DataOpsQueries {
     // window — no range-predicate join, nothing broadcast, no pair
     // blowup; the oracle is DuckDB's NATIVE ASOF LEFT JOIN, a fully
     // independent implementation of the same semantics.
-    "e7_asof_join" -> { (s, dir) =>
+    GateEntry("e7_asof_join", { (s, dir) =>
       DerivedState.register(s, dir)
       val ev = s.table("events")
       val quotes = ev.filter(col("event_type") === "view")
@@ -2245,12 +4162,26 @@ object DataOpsQueries {
       Events.asofJoin(probes, quotes, "user_id", "ts", Seq("quote"))
         .orderBy(col("event_id"))
     },
+      // DuckDB's native ASOF LEFT JOIN — an independent implementation of
+      // the backward-as-of semantics (greatest qts ≤ ts per key, null when
+      // none) checking the Spark union-tag/window plan result-for-result
+      """WITH q AS (
+        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |c AS (
+        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
+        |  FROM events WHERE event_type = 'click')
+        |SELECT c.event_id, c.user_id, c.tsn AS ts,
+        |  q.qts AS matchedTs, q.quote
+        |FROM c ASOF LEFT JOIN q
+        |  ON c.user_id = q.user_id AND c.tsn >= q.qts
+        |ORDER BY c.event_id""".stripMargin),
     // the TOLERANCE dial of the same operator (pandas merge_asof
     // tolerance / kdb wj window): a backward match farther than 1 h is
     // discarded — same one-exchange union-tag plan, the distance check
     // rides the existing carried struct; matches inside and outside the
     // window both occur at every SF (5/46/368 survive at the three SFs)
-    "e11_asof_tolerance" -> { (s, dir) =>
+    GateEntry("e11_asof_tolerance", { (s, dir) =>
       DerivedState.register(s, dir)
       val ev = s.table("events")
       val quotes = ev.filter(col("event_type") === "view")
@@ -2262,11 +4193,27 @@ object DataOpsQueries {
           toleranceNs = Some(3600000000000L))
         .orderBy(col("event_id"))
     },
+      // DuckDB has no ASOF tolerance: the native backward match is taken,
+      // then blanked when farther than the window (NULL qts stays NULL)
+      """WITH q AS (
+        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |c AS (
+        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
+        |  FROM events WHERE event_type = 'click')
+        |SELECT c.event_id, c.user_id, c.tsn AS ts,
+        |  CASE WHEN c.tsn - q.qts <= 3600000000000 THEN q.qts END
+        |    AS matchedTs,
+        |  CASE WHEN c.tsn - q.qts <= 3600000000000 THEN q.quote END
+        |    AS quote
+        |FROM c ASOF LEFT JOIN q
+        |  ON c.user_id = q.user_id AND c.tsn >= q.qts
+        |ORDER BY c.event_id""".stripMargin),
     // the FORWARD direction of the same operator (smallest quote ts ≥
     // probe ts): the identical union-tag plan over the reversed per-key
     // ordering — still one exchange, no join; the oracle flips DuckDB's
     // ASOF inequality to <=
-    "e9_asof_forward" -> { (s, dir) =>
+    GateEntry("e9_asof_forward", { (s, dir) =>
       DerivedState.register(s, dir)
       val ev = s.table("events")
       val quotes = ev.filter(col("event_type") === "view")
@@ -2278,6 +4225,17 @@ object DataOpsQueries {
           direction = "forward")
         .orderBy(col("event_id"))
     },
+      """WITH q AS (
+        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
+        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |c AS (
+        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
+        |  FROM events WHERE event_type = 'click')
+        |SELECT c.event_id, c.user_id, c.tsn AS ts,
+        |  q.qts AS matchedTs, q.quote
+        |FROM c ASOF LEFT JOIN q
+        |  ON c.user_id = q.user_id AND c.tsn <= q.qts
+        |ORDER BY c.event_id""".stripMargin),
     // point-in-interval range join: clicks falling inside a 6 h
     // attribution window [ts, ts+6h) opened by each purchase of the same
     // user. Executed as an equi-join on (user, 6 h time bucket) — each
@@ -2286,7 +4244,7 @@ object DataOpsQueries {
     // exact range predicate only sees bucket-local candidates. The
     // oracle runs the raw BETWEEN join (fine at oracle scale; the thing
     // the bucketed plan avoids at 100 TB).
-    "e8_range_join" -> { (s, dir) =>
+    GateEntry("e8_range_join", { (s, dir) =>
       DerivedState.register(s, dir)
       val ev = s.table("events")
       val iv = ev.filter(col("event_type") === "purchase")
@@ -2301,6 +4259,17 @@ object DataOpsQueries {
           col("ts"), col("wstart"))
         .orderBy(col("click_id"), col("purchase_id"))
     },
+      """WITH iv AS (
+        |  SELECT event_id AS purchase_id, user_id, epoch_ns(ts) AS wstart,
+        |    epoch_ns(ts) + 21600000000000 AS wend
+        |  FROM events WHERE event_type = 'purchase'),
+        |p AS (
+        |  SELECT event_id AS click_id, user_id, epoch_ns(ts) AS tsn
+        |  FROM events WHERE event_type = 'click')
+        |SELECT p.click_id, iv.purchase_id, p.user_id, p.tsn AS ts, iv.wstart
+        |FROM p JOIN iv ON p.user_id = iv.user_id
+        |  AND p.tsn >= iv.wstart AND p.tsn < iv.wend
+        |ORDER BY p.click_id, iv.purchase_id""".stripMargin),
     // tokenizer INFERENCE: a rank-ordered merge list applied to the
     // corpus with the same greedy-left fold the trainer uses (stacked
     // merges included — (th,e) consumes (t,h)'s output, (in,g) (i,n)'s),
@@ -2310,7 +4279,7 @@ object DataOpsQueries {
     // the following delimiter, so consecutive occurrences all fuse.
     // One split/join per 16-merge chunk; the corpus never shuffles
     // until the final token count.
-    "t25_bpe_encode" -> { (s, dir) =>
+    GateEntry("t25_bpe_encode", { (s, dir) =>
       val words = Tables.documents(s, dir)
         .filter(col("doc_id") % 20 === 0)
         .select(explode(expr(
@@ -2321,12 +4290,40 @@ object DataOpsQueries {
         .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token")).limit(100)
     },
+      // merge application replayed as sentinel-wrapped regex replace:
+      // each symbol rides as \x01sym\x02, the pattern "\x01a\x02 \x01b\x02"
+      // can only match whole symbols, and a match ends at b's sentinel
+      // without consuming the next delimiter — so left-to-right global
+      // replace fuses exactly the pairs the greedy-left fold fuses
+      // (consecutive occurrences included; see bpeApplyMerge's scaladoc
+      // for why a plain space-joined replace is NOT equivalent)
+      s"""WITH RECURSIVE t25_m AS (
+        |  SELECT * FROM (VALUES $T25MergeValues) AS m(rank, a, b)),
+        |t25_w AS (
+        |  SELECT rtrim(regexp_replace(w, '(.)',
+        |           chr(1) || '\\1' || chr(2) || ' ', 'g')) AS s
+        |  FROM (SELECT UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
+        |        FROM documents WHERE doc_id % 20 = 0)),
+        |t25_enc AS (
+        |  SELECT s, 0 AS r FROM t25_w
+        |  UNION ALL
+        |  SELECT regexp_replace(e.s,
+        |      chr(1) || m.a || chr(2) || ' ' || chr(1) || m.b || chr(2),
+        |      chr(1) || m.a || m.b || chr(2), 'g') AS s,
+        |    e.r + 1
+        |  FROM t25_enc e JOIN t25_m m ON m.rank = e.r + 1),
+        |t25_tok AS (
+        |  SELECT UNNEST(string_split(
+        |    replace(replace(s, chr(1), ''), chr(2), ''), ' ')) AS token
+        |  FROM t25_enc WHERE r = (SELECT MAX(rank) FROM t25_m))
+        |SELECT token, COUNT(*) AS cnt FROM t25_tok
+        |GROUP BY token ORDER BY cnt DESC, token LIMIT 100""".stripMargin),
     // sequence packing under TRUE trained-tokenizer counts — t7's
     // packing math driven by bpeTokenCounts instead of the whitespace
     // approximation (the judge-named optional exact mode): per shard,
     // running token totals against the 512 cap, bin assignment and the
     // straddle flag, with the empty-document floor of 1 preserved
-    "t7b_pack_bpe" -> { (s, dir) =>
+    GateEntry("t7b_pack_bpe", { (s, dir) =>
       val cap = 512.0
       val docs = Tables.documents(s, dir).filter(col("doc_id") % 20 === 0)
       val counts = TextFunctions.bpeTokenCounts(docs, "doc_id", "text", T25Merges)
@@ -2346,385 +4343,6 @@ object DataOpsQueries {
           col("startBin"), col("endBin"), col("straddles"))
         .orderBy(col("doc_id"))
     },
-    // CCNet-style LM quality scoring, bigram stupid backoff (Brants et
-    // al. 2007): the model trains on the %97≠0 slice and scores the
-    // held-out %97=0 slice. The synthetic corpus draws from a ~40-word
-    // vocabulary whose bigrams training fully covers at every SF, so
-    // the held-out docs carry a two-token OOV suffix ("qqeval the") —
-    // real eval corpora contain OOV content — making BOTH backoff
-    // sub-branches non-vacuous at every scale factor: (last, qqeval)
-    // scores 0 (unseen unigram), (qqeval, the) takes the α·c(b)/N
-    // unigram backoff. Integer-exact parts-per-million scores via
-    // integral division (same discipline as t17's floor-log2 bits — no
-    // libm); vocabulary-bounded model dims broadcast into the scoring
-    // melt, one doc-keyed aggregate shuffle.
-    "t26_bigram_lm" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      TextFunctions.bigramBackoff(
-          d.filter(col("doc_id") % 97 =!= 0L),
-          d.filter(col("doc_id") % 97 === 0L)
-            .select(col("doc_id"),
-              concat(col("text"), lit(" qqeval the")).as("text")),
-          "doc_id", "text")
-        .orderBy(col("doc_id"))
-    },
-    // deterministic DSIR (Xie et al. 2023): importance-resample the raw
-    // pool toward a target corpus (src2 = the curated target, the other
-    // 19 sources = the pool). Importance = the hashed-n-gram two-model
-    // log-ratio in integer-exact floor-log2 bits (t28's scorer with
-    // (pos, neg) = (target, raw)); selection = noise-free top-100 with
-    // id tie-break, resolved WITHOUT a global sort by two
-    // exactLongRanks histogram refinements (weight cutoff, then the tie
-    // set's id boundary). Real cutoff ties exist at every SF, so the
-    // tie-refinement branch is non-vacuous.
-    "t30_dsir" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      TextFunctions.dsirSelect(
-          d.filter(col("source") === "src2"),
-          d.filter(col("source") =!= "src2"),
-          "doc_id", "text", k = 100L)
-        .orderBy(col("doc_id"))
-    },
-    // DSIR with the paper's Gumbel perturbation (the Gumbel-top-k
-    // sampling-without-replacement trick), determinized: noise = the
-    // seeded md5-prefix hash draw pushed through an integer-exact
-    // fixed-point base-2 inverse-CDF (g = 20S − l2fx(32S − l2fx(r)),
-    // S = 2^20, l2fx = bit-length + linear mantissa — no libm, both
-    // engines bit-identical). Perturbation is REAL: 2 of the 100 picks
-    // differ from t30's noise-free selection at sf0.001. Same
-    // no-global-sort rank-refinement top-k as t30.
-    "t30b_dsir_gumbel" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      TextFunctions.dsirSelectGumbel(
-          d.filter(col("source") === "src2"),
-          d.filter(col("source") =!= "src2"),
-          "doc_id", "text", k = 100L)
-        .orderBy(col("doc_id"))
-    },
-    // the full Gopher/MassiveText REPETITION filter set (Rae et al. 2021
-    // Table A1) at token granularity: dup-line fraction + char fraction,
-    // top-{2,3,4}-gram token fraction, dup-{5..10}-gram coverage with
-    // overlaps counted ONCE (interval-union sweep), and the published
-    // keep conjunction. Docs on the %9 residue get their first line
-    // re-appended — deterministic injected repetition so the dup-line
-    // and n≥5 coverage branches are non-vacuous at every SF (the same
-    // move as t26's OOV suffix); real crawls carry this repetition
-    // naturally. keep splits both ways from the top-gram signals alone.
-    "t29_rep_signals" -> { (s, dir) =>
-      val rep = pageCorpus(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 9 === 0,
-          concat(col("page"), lit("\n"),
-            substring_index(col("page"), "\n", 1)))
-          .otherwise(col("page")).as("page"))
-      TextFunctions.repetitionSignals(rep, "doc_id", "page")
-        .orderBy(col("doc_id"))
-    },
-    // model-based quality filtering, the fastText/DCLM/FineWeb-Edu shape:
-    // a classifier trained on a curated-vs-raw pair of labeled slices
-    // (src0 = the curated target sample, src1 = the raw contrast) scores
-    // the WHOLE corpus and gates on the sign. Features are hashed
-    // unigram+bigram occurrences (the hashing trick — model size is
-    // CONSTANT at 4096 buckets whatever the vocabulary); the trainer is
-    // closed-form multinomial NB (one aggregate, no SGD) and the scorer
-    // is the add-one log-likelihood ratio in integer-exact floor-log2
-    // bits (t17 discipline). Model + totals broadcast; the corpus-sized
-    // work is one melt + one doc-keyed aggregate.
-    "t28_quality_classifier" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      TextFunctions.nbClassifier(
-          d.filter(col("source") === "src0"),
-          d.filter(col("source") === "src1"),
-          d, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    },
-    // model-based language ID, the fastText-langid shape (one model, k
-    // classes — the multiclass generalization of t28): three synthetic
-    // "languages" derive from the corpus by rot-k letter translation
-    // (disjoint vocabularies, identical token boundaries in both
-    // engines), trained from disjoint %5 slices; every eval doc renders
-    // 2/3 in its own language (doc_id%3) and 1/3 in the NEXT one, so the
-    // per-class argmax competes on real mixed evidence rather than a
-    // one-sided score. All three predictions live at every SF
-    // (167/167/166); argmax = integer-exact per-class floor-log2 LLR,
-    // ties label-ascending. ONE doc-keyed aggregate carries all k class
-    // sums; the pivoted 4096-bucket model broadcasts.
-    "t31_langid_model" -> { (s, dir) =>
-      val AL = "abcdefghijklmnopqrstuvwxyz"
-      def rot(c: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
-        if (k == 0) c else translate(c, AL, AL.substring(k) + AL.substring(0, k))
-      val lt = Tables.documents(s, dir)
-        .select(col("doc_id"), lower(col("text")).as("lt"))
-      val classes = Seq("en" -> 0, "r1" -> 1, "r2" -> 2).map { case (l, k) =>
-        l -> lt.filter(col("doc_id") % 5 === k)
-          .select(col("doc_id"), rot(col("lt"), k).as("text"))
-      }
-      val cut = expr("(2 * length(lt)) DIV 3").cast("int")
-      def rotByMod(m: org.apache.spark.sql.Column, part: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        when(m === 0, part).when(m === 1, rot(part, 1)).otherwise(rot(part, 2))
-      val eval = lt.select(col("doc_id"),
-        concat(
-          rotByMod(col("doc_id") % 3, col("lt").substr(lit(1), cut)),
-          rotByMod((col("doc_id") + 1) % 3,
-            col("lt").substr(cut + 1, length(col("lt")))))
-          .as("text"))
-      TextFunctions.langIdModel(classes, eval, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    },
-    // CCNet head/middle/tail perplexity bucketing: EVERY doc scored
-    // under the train-slice model (t26's scorer, integer scaled mean),
-    // then split at the exact tercile cutoffs — computed by
-    // Sketches.exactLongRanks' histogram refinement (bounded hash
-    // aggregates, no global sort, no single-partition window: the
-    // 100 TB-legal way to take a corpus quantile). The scored narrow
-    // projection (3 longs/doc — the table a production run would have
-    // materialized as its output) is checkpointed once so the
-    // refinement passes scan it, not the live scoring plan. Higher
-    // mean probability = head, like CCNet's lower-perplexity-is-head.
-    "t27_ppl_buckets" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      // vocab-bounded model pinned once: four consumers in the scorer
-      val model = TextFunctions.bigramModel(
-        d.filter(col("doc_id") % 97 =!= 0L), "text").localCheckpoint()
-      val scored = TextFunctions.bigramScoreAgainst(model, d, "doc_id", "text")
-        .withColumn("scaledMean", expr("(scoreSum * 1000) DIV nBigrams"))
-        .select(col("doc_id"), col("nBigrams"), col("scaledMean"))
-        .localCheckpoint()
-      val n = scored.count()
-      val Seq(r1, r2) = Seq((n + 2) / 3, (2 * n + 2) / 3)
-      val cuts = graft.functions.Sketches.exactLongRanks(
-        scored, "scaledMean", Seq(r1, r2))
-      val (v33, v67) = (cuts(r1), cuts(r2))
-      scored
-        .withColumn("bucket",
-          when(col("scaledMean") < v33, "tail")
-            .when(col("scaledMean") < v67, "middle")
-            .otherwise("head"))
-        .withColumn("cutLow", lit(v33))
-        .withColumn("cutHigh", lit(v67))
-        .orderBy(col("doc_id"))
-    },
-    // the distributed core of BPE tokenizer training: adjacent-symbol
-    // pair counts over the char-split word corpus (round 1 of
-    // TextFunctions.bpeTrain, whose merge loop is spec-tested) — a
-    // map-side bigram explode + ONE hash aggregate; the corpus never
-    // shuffles, only (pair, count) rows do. Top-10 by (count, pair).
-    "t23_bpe_pairs" -> { (s, dir) =>
-      // through the LIBRARY operator (bpeTrain's round-1 core), on the
-      // char-split symbol representation the merge loop consumes
-      val words = Tables.documents(s, dir)
-        .select(explode(expr(
-          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-        .select(expr("array_join(split(w, ''), ' ')").as("syms"))
-      TextFunctions.bpePairCounts(words, "syms")
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(10)
-    },
-    // MAD-based outlier gate (the robust anomaly detector a value
-    // pipeline runs per segment): per event_type, the median event
-    // value, the median absolute deviation, and how many events sit
-    // beyond 3×MAD. Both medians are percentile_disc ORDER STATISTICS
-    // (value at row ⌈n/2⌉) — picked values, no interpolation, so every
-    // double compares bit-exact across engines. Two windowed passes
-    // over the same type-keyed shuffle.
-    "t22_mad_outliers" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      // null values pre-filtered ONCE here (the orderStats helper also
-      // filters its own input): median/MAD over present values only,
-      // matching the oracle's IS NOT NULL
-      val ev = s.table("events").select(col("event_type"), col("value"))
-        .filter(col("value").isNotNull)
-      val med = orderStats(ev, Seq("event_type"), "value",
-        Seq(0.5 -> "median"))
-      // med and mad are type-dimension frames: both joins broadcast,
-      // the fact side shuffles only on its type key (twice, for the
-      // two order statistics) — no per-type array ever materializes
-      val dev = ev.join(broadcast(med), Seq("event_type"))
-        .withColumn("adev", abs(col("value") - col("median")))
-      val madF = orderStats(dev, Seq("event_type", "median"), "adev",
-        Seq(0.5 -> "mad"), Seq(count(lit(1)).as("nEvents")))
-      dev.join(broadcast(madF), Seq("event_type", "median"))
-        .groupBy(col("event_type"), col("median"), col("mad"), col("nEvents"))
-        .agg(sum(when(col("adev") > col("mad") * 3.0, 1L).otherwise(0L))
-          .as("nOutliers"))
-        .select(col("event_type"), col("median"), col("mad"),
-          col("nEvents"), col("nOutliers"))
-        .orderBy(col("event_type"))
-    },
-    // Deequ-style table profile: every requested column's row/null/
-    // distinct counts + min/max in ONE aggregation pass (stack-melted
-    // afterwards — no per-column scans)
-    "v1_profile" -> { (s, dir) =>
-      graft.analytics.TableChecks.profile(
-          Tables.lineitem(s, dir),
-          Seq("l_orderkey", "l_quantity", "l_shipdate"))
-        .orderBy(col("colName"))
-    },
-    // referential-integrity check, exercised on a SIMULATED partial
-    // parent delivery (only status-F orders arrived): fkOrphans must
-    // surface every lineitem pointing at a missing order — a LEFT ANTI
-    // join, parent side broadcast/hashed, no fact fan-out
-    "v2_fk_orphans" -> { (s, dir) =>
-      graft.analytics.TableChecks.fkOrphans(
-          Tables.lineitem(s, dir),
-          Tables.orders(s, dir).filter(col("o_orderstatus") === "F"),
-          "l_orderkey", "o_orderkey")
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("orphanLines"))
-        .orderBy(col("l_orderkey"))
-    },
-    // the roll-up quality gate a scheduler alerts on: key uniqueness +
-    // FK integrity + not-null, one row of counters and the verdict
-    "v3_quality_gate" -> { (s, dir) =>
-      graft.analytics.TableChecks.gate(
-        Tables.lineitem(s, dir), Tables.orders(s, dir),
-        "l_orderkey", "o_orderkey",
-        uniqueKeys = Seq("o_orderkey"), notNullCol = "l_shipdate")
-    },
-    // distribution-drift monitor between two corpus snapshots: per-bin
-    // fixed-width histograms + total variation distance in INTEGER-EXACT
-    // ppm (integral divisions only — no floating sums whose order could
-    // differ across engines). Two comparisons through ONE operator body:
-    // an A/A split (doc_id parity — sampling noise only, must NOT trip)
-    // and the same split with a +2-bin injected shift on one side (a
-    // bad upstream re-chunking — MUST trip). The 150000 ppm threshold
-    // separates the two with margin at every SF (measured: noise
-    // 27k-104k, shift 232k-368k).
-    "v4_dist_drift" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      val even = d.filter(col("doc_id") % 2 === 0)
-      val odd = d.filter(col("doc_id") % 2 === 1)
-      val shifted = odd.withColumn("n_chars", col("n_chars") + 128)
-      def run(lbl: String, b: org.apache.spark.sql.DataFrame) =
-        graft.analytics.TableChecks.distributionDrift(even, b, "n_chars",
-            binWidth = 64L, maxBins = 32, thresholdPpm = 150000L)
-          .withColumn("lbl", lit(lbl))
-      run("same", odd).unionByName(run("shift", shifted))
-        .orderBy(col("lbl"), col("bin"))
-    },
-    // KMV (bottom-k / theta-style) distinct sketch, k = 64: distinct
-    // viewers, clickers, their union AND intersection estimated from
-    // two 64-long sketches — the mergeable-set-algebra story COUNT
-    // DISTINCT can't do (estimating an intersection without co-shuffling
-    // either side). The sketch aggregate is a custom typed Aggregator
-    // whose partial state is ≤ k longs per partition (nothing shuffles
-    // O(distinct)); estimates are integer-exact ((k−1)·2^32 div h_k) so
-    // the row differentials bit-for-bit. Driver sees ≤ 2k longs.
-    "t21_kmv" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      import s.implicits._
-      val ev = s.table("events")
-      val k = 64
-      def users(t: String) =
-        ev.filter(col("event_type") === t).select(col("user_id"))
-      val a = graft.functions.Sketches.kmvMinima(users("view"), "user_id", k)
-      val b = graft.functions.Sketches.kmvMinima(users("click"), "user_id", k)
-      val (estU, estI) = graft.functions.Sketches.kmvSetEstimates(a, b, k)
-      val exactA = users("view").distinct().count()
-      val exactB = users("click").distinct().count()
-      val exactI = users("view").distinct()
-        .join(users("click").distinct(), "user_id").count()
-      Seq((exactA, graft.functions.Sketches.kmvEstimate(a, k),
-          exactB, graft.functions.Sketches.kmvEstimate(b, k),
-          exactA + exactB - exactI, estU, exactI, estI))
-        .toDF("exactA", "estA", "exactB", "estB",
-          "exactU", "estU", "exactI", "estI")
-    },
-    // deterministic Count-Min sketch (d = 4 salted md5 rows × 256
-    // counters) over event_type frequencies, probed for every distinct
-    // type next to the exact count: est ≥ exact by the CMS guarantee,
-    // and every op is integer/string so the whole sketch differentials
-    // bit-exact. The sketch is d·w cells regardless of input size
-    // (map-side partials) and the probe join broadcasts it.
-    "t20_countmin" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      val ev = s.table("events")
-      val sk = graft.functions.Sketches.countMinSketch(ev, "event_type")
-      val exact = ev.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("exactCount"))
-      graft.functions.Sketches.countMinEstimate(
-          sk, ev.select(col("event_type")).distinct(), "event_type")
-        .join(exact, Seq("event_type"))
-        .select(col("event_type"), col("exactCount"), col("cmEstimate"))
-        .orderBy(col("event_type"))
-    },
-    // Z-order (Morton) codes for 2-D data layout: interleave (user_id,
-    // event day) bits so range-partitioned files are local in BOTH
-    // dimensions and either filter prunes via footer min/max stats (the
-    // Delta/Iceberg OPTIMIZE ZORDER shape — Shuffles.zorderLayout is
-    // the one-range-exchange layout op; this entry differentials the
-    // pure-integer mask ladder itself, engine-identical by
-    // construction)
-    "t19_zorder" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      val z = Shuffles.mortonInterleave(col("user_id"),
-        expr(s"ts div ${Events.DayNs}"))
-      s.table("events")
-        .select(col("event_id"), z.as("zval"))
-        .orderBy(col("event_id"))
-    },
-    // EXACT distributed percentiles (percentile_disc semantics: the
-    // value at row ⌈p·n⌉ in sorted order) of doc length per language —
-    // one shuffle on the group key + a per-group sort; no floating
-    // interpolation, so the order statistics are engine-identical
-    // integers (percentile_approx/quantile sketches trade exactness for
-    // a mergeable summary — Sketches.approxQuantiles is that path).
-    // Rank ties are harmless: the value AT a rank is a property of the
-    // sorted multiset, whatever order equal values take.
-    "t18_percentiles" -> { (s, dir) =>
-      orderStats(Tables.documents(s, dir).select(col("lang"), col("n_chars")),
-          Seq("lang"), "n_chars",
-          Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75", 0.9 -> "p90"),
-          Seq(count(lit(1)).as("n_docs")))
-        .orderBy(col("lang"))
-    },
-    // interval-overlap join: each user's 2 h view windows × 2 h click
-    // windows. Both sides explode to 2 h buckets, equi-join on (user,
-    // bucket), and a pair is kept only in the FIRST bucket both occupy
-    // — exactly-once semantics with no distinct shuffle. The oracle is
-    // the raw overlap-predicate join.
-    "e10_interval_join" -> { (s, dir) =>
-      DerivedState.register(s, dir)
-      val ev = s.table("events")
-      val twoH = 2L * 3600L * 1000000000L
-      def win(t: String, idAs: String, sAs: String, eAs: String) =
-        ev.filter(col("event_type") === t)
-          .select(col("event_id").as(idAs), col("user_id"),
-            col("ts").as(sAs), (col("ts") + lit(twoH)).as(eAs))
-      Events.intervalJoin(
-          win("view", "view_id", "vs", "ve"),
-          win("click", "click_id", "cs", "ce"),
-          "user_id", "vs", "ve", "cs", "ce", bucketNs = twoH)
-        .select(col("view_id"), col("click_id"), col("user_id"),
-          col("vs"), col("cs"))
-        .orderBy(col("view_id"), col("click_id"))
-    },
-  )
-
-  def oracles: Map[String, String] = oraclesBase ++ Map(
-    // the streamed admission must land on the BATCH operator's oracle
-    // verbatim — same salt, same budgets, same summary (a drifted copy
-    // would silently weaken the parity check)
-    "t32_stream_parity" -> oraclesBase("t32_temperature_mix"),
-    // the streamed curriculum must land on t34's oracle verbatim too —
-    // the composite-key ledger IS the batch (stage, source, shard)
-    // window, so any drift (hash input, budget split, tie order) fails
-    // the shared string
-    "t34_stream_parity" -> oraclesBase("t34_curriculum_mix"),
-    // per-doc decontamination summaries are batch-order-independent, so
-    // the streamed union must land on the batch oracle verbatim
-    "t35_stream_parity" -> oraclesBase("t35_decontaminate_spans"),
-    // per-query top-k rankings are batch-independent (each query reads
-    // only its own candidate rows), so the served union must land on
-    // the batch retrieval oracle verbatim
-    "t39_stream_parity" -> oraclesBase("t39_bm25_retrieve"),
-    // maintained stats == re-derived stats IS the law, so the
-    // stats-served index must land on t42's from-scratch rebuild
-    // oracle verbatim — any merge drift breaks the shared string
-    "t43_bm25_stats_serve" -> oraclesBase("t42_bm25_index_append"),
-  )
-
-  private lazy val oraclesBase: Map[String, String] = Map(
-    "t7b_pack_bpe" ->
       s"""WITH RECURSIVE t7b_m AS (
         |  SELECT * FROM (VALUES $T25MergeValues) AS m(rank, a, b)),
         |t7b_w AS (
@@ -2762,40 +4380,32 @@ object DataOpsQueries {
         |  CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS endBin,
         |  CAST(FLOOR(CAST(cumEnd - tok AS DOUBLE) / 512.0) AS BIGINT) <>
         |    CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS straddles
-        |FROM t7b_c ORDER BY doc_id""".stripMargin,
-    // merge application replayed as sentinel-wrapped regex replace:
-    // each symbol rides as \x01sym\x02, the pattern "\x01a\x02 \x01b\x02"
-    // can only match whole symbols, and a match ends at b's sentinel
-    // without consuming the next delimiter — so left-to-right global
-    // replace fuses exactly the pairs the greedy-left fold fuses
-    // (consecutive occurrences included; see bpeApplyMerge's scaladoc
-    // for why a plain space-joined replace is NOT equivalent)
-    "t25_bpe_encode" ->
-      s"""WITH RECURSIVE t25_m AS (
-        |  SELECT * FROM (VALUES $T25MergeValues) AS m(rank, a, b)),
-        |t25_w AS (
-        |  SELECT rtrim(regexp_replace(w, '(.)',
-        |           chr(1) || '\\1' || chr(2) || ' ', 'g')) AS s
-        |  FROM (SELECT UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        |        FROM documents WHERE doc_id % 20 = 0)),
-        |t25_enc AS (
-        |  SELECT s, 0 AS r FROM t25_w
-        |  UNION ALL
-        |  SELECT regexp_replace(e.s,
-        |      chr(1) || m.a || chr(2) || ' ' || chr(1) || m.b || chr(2),
-        |      chr(1) || m.a || m.b || chr(2), 'g') AS s,
-        |    e.r + 1
-        |  FROM t25_enc e JOIN t25_m m ON m.rank = e.r + 1),
-        |t25_tok AS (
-        |  SELECT UNNEST(string_split(
-        |    replace(replace(s, chr(1), ''), chr(2), ''), ' ')) AS token
-        |  FROM t25_enc WHERE r = (SELECT MAX(rank) FROM t25_m))
-        |SELECT token, COUNT(*) AS cnt FROM t25_tok
-        |GROUP BY token ORDER BY cnt DESC, token LIMIT 100""".stripMargin,
-    // same train/eval split, same ppm integral division (DuckDB's `//`
-    // is Spark's DIV for the all-positive operands here), same libm-free
-    // discipline as t17
-    "t26_bigram_lm" ->
+        |FROM t7b_c ORDER BY doc_id""".stripMargin),
+    // CCNet-style LM quality scoring, bigram stupid backoff (Brants et
+    // al. 2007): the model trains on the %97≠0 slice and scores the
+    // held-out %97=0 slice. The synthetic corpus draws from a ~40-word
+    // vocabulary whose bigrams training fully covers at every SF, so
+    // the held-out docs carry a two-token OOV suffix ("qqeval the") —
+    // real eval corpora contain OOV content — making BOTH backoff
+    // sub-branches non-vacuous at every scale factor: (last, qqeval)
+    // scores 0 (unseen unigram), (qqeval, the) takes the α·c(b)/N
+    // unigram backoff. Integer-exact parts-per-million scores via
+    // integral division (same discipline as t17's floor-log2 bits — no
+    // libm); vocabulary-bounded model dims broadcast into the scoring
+    // melt, one doc-keyed aggregate shuffle.
+    GateEntry("t26_bigram_lm", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      TextFunctions.bigramBackoff(
+          d.filter(col("doc_id") % 97 =!= 0L),
+          d.filter(col("doc_id") % 97 === 0L)
+            .select(col("doc_id"),
+              concat(col("text"), lit(" qqeval the")).as("text")),
+          "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      // same train/eval split, same ppm integral division (DuckDB's `//`
+      // is Spark's DIV for the all-positive operands here), same libm-free
+      // discipline as t17
       """WITH t26_tok AS (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
         |  FROM documents),
@@ -2831,10 +4441,26 @@ object DataOpsQueries {
         |  CAST(SUM(score) AS BIGINT) AS scoreSum,
         |  CAST(SUM(backoff) AS BIGINT) AS nBackoff,
         |  CAST(SUM(score) AS DOUBLE) / COUNT(*) AS meanScore
-        |FROM t26_s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // the t28 hashed melt/LLR with (target, raw) slices; the no-sort
-    // two-refinement top-k replays as the plain ROW_NUMBER pick
-    "t30_dsir" ->
+        |FROM t26_s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // deterministic DSIR (Xie et al. 2023): importance-resample the raw
+    // pool toward a target corpus (src2 = the curated target, the other
+    // 19 sources = the pool). Importance = the hashed-n-gram two-model
+    // log-ratio in integer-exact floor-log2 bits (t28's scorer with
+    // (pos, neg) = (target, raw)); selection = noise-free top-100 with
+    // id tie-break, resolved WITHOUT a global sort by two
+    // exactLongRanks histogram refinements (weight cutoff, then the tie
+    // set's id boundary). Real cutoff ties exist at every SF, so the
+    // tie-refinement branch is non-vacuous.
+    GateEntry("t30_dsir", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      TextFunctions.dsirSelect(
+          d.filter(col("source") === "src2"),
+          d.filter(col("source") =!= "src2"),
+          "doc_id", "text", k = 100L)
+        .orderBy(col("doc_id"))
+    },
+      // the t28 hashed melt/LLR with (target, raw) slices; the no-sort
+      // two-refinement top-k replays as the plain ROW_NUMBER pick
       """WITH t30_tok AS (
         |  SELECT doc_id, source,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
@@ -2883,11 +4509,26 @@ object DataOpsQueries {
         |  FROM t30_w)
         |SELECT w.doc_id, w.nFeats, w.weight, r.rn <= 100 AS picked
         |FROM t30_w w JOIN t30_r r USING (doc_id)
-        |ORDER BY w.doc_id""".stripMargin,
-    // t30's weight chain + the same md5-prefix hkey recipe as t12,
-    // the fixed-point double-log via format('{:b}') bit lengths and
-    // BIGINT shifts, pick = ROW_NUMBER over (gkey DESC, doc_id)
-    "t30b_dsir_gumbel" ->
+        |ORDER BY w.doc_id""".stripMargin),
+    // DSIR with the paper's Gumbel perturbation (the Gumbel-top-k
+    // sampling-without-replacement trick), determinized: noise = the
+    // seeded md5-prefix hash draw pushed through an integer-exact
+    // fixed-point base-2 inverse-CDF (g = 20S − l2fx(32S − l2fx(r)),
+    // S = 2^20, l2fx = bit-length + linear mantissa — no libm, both
+    // engines bit-identical). Perturbation is REAL: 2 of the 100 picks
+    // differ from t30's noise-free selection at sf0.001. Same
+    // no-global-sort rank-refinement top-k as t30.
+    GateEntry("t30b_dsir_gumbel", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      TextFunctions.dsirSelectGumbel(
+          d.filter(col("source") === "src2"),
+          d.filter(col("source") =!= "src2"),
+          "doc_id", "text", k = 100L)
+        .orderBy(col("doc_id"))
+    },
+      // t30's weight chain + the same md5-prefix hkey recipe as t12,
+      // the fixed-point double-log via format('{:b}') bit lengths and
+      // BIGINT shifts, pick = ROW_NUMBER over (gkey DESC, doc_id)
       """WITH t30_tok AS (
         |  SELECT doc_id, source,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
@@ -2963,11 +4604,28 @@ object DataOpsQueries {
         |  FROM t30b_k)
         |SELECT k.doc_id, k.nFeats, k.weight, k.gumbel, k.gkey, r.rn <= 100 AS picked
         |FROM t30b_k k JOIN t30b_rk r USING (doc_id)
-        |ORDER BY k.doc_id""".stripMargin,
-    // same pages + injected dup line, line-melt stats, one 2..10 gram
-    // melt with windowed counts, ROW_NUMBER top pick, running-max-end
-    // interval-union sweep for the n≥5 coverage
-    "t29_rep_signals" ->
+        |ORDER BY k.doc_id""".stripMargin),
+    // the full Gopher/MassiveText REPETITION filter set (Rae et al. 2021
+    // Table A1) at token granularity: dup-line fraction + char fraction,
+    // top-{2,3,4}-gram token fraction, dup-{5..10}-gram coverage with
+    // overlaps counted ONCE (interval-union sweep), and the published
+    // keep conjunction. Docs on the %9 residue get their first line
+    // re-appended — deterministic injected repetition so the dup-line
+    // and n≥5 coverage branches are non-vacuous at every SF (the same
+    // move as t26's OOV suffix); real crawls carry this repetition
+    // naturally. keep splits both ways from the top-gram signals alone.
+    GateEntry("t29_rep_signals", { (s, dir) =>
+      val rep = pageCorpus(s, dir).select(col("doc_id"),
+        when(col("doc_id") % 9 === 0,
+          concat(col("page"), lit("\n"),
+            substring_index(col("page"), "\n", 1)))
+          .otherwise(col("page")).as("page"))
+      TextFunctions.repetitionSignals(rep, "doc_id", "page")
+        .orderBy(col("doc_id"))
+    },
+      // same pages + injected dup line, line-melt stats, one 2..10 gram
+      // melt with windowed counts, ROW_NUMBER top pick, running-max-end
+      // interval-union sweep for the n≥5 coverage
       s"""WITH $PageSql,
         |t29_rep AS (
         |  SELECT doc_id, CASE WHEN doc_id % 9 = 0
@@ -3066,10 +4724,27 @@ object DataOpsQueries {
         |  dup5Frac <= 0.15 AND dup6Frac <= 0.14 AND dup7Frac <= 0.13 AND
         |  dup8Frac <= 0.12 AND dup9Frac <= 0.11 AND dup10Frac <= 0.10
         |    AS keep
-        |FROM t29_out ORDER BY doc_id""".stripMargin,
-    // same hashed melt (3-hex-char md5 bucket via the t20 strpos
-    // recipe), per-slice NB counts, floor-log2-bit LLR, sign gate
-    "t28_quality_classifier" ->
+        |FROM t29_out ORDER BY doc_id""".stripMargin),
+    // model-based quality filtering, the fastText/DCLM/FineWeb-Edu shape:
+    // a classifier trained on a curated-vs-raw pair of labeled slices
+    // (src0 = the curated target sample, src1 = the raw contrast) scores
+    // the WHOLE corpus and gates on the sign. Features are hashed
+    // unigram+bigram occurrences (the hashing trick — model size is
+    // CONSTANT at 4096 buckets whatever the vocabulary); the trainer is
+    // closed-form multinomial NB (one aggregate, no SGD) and the scorer
+    // is the add-one log-likelihood ratio in integer-exact floor-log2
+    // bits (t17 discipline). Model + totals broadcast; the corpus-sized
+    // work is one melt + one doc-keyed aggregate.
+    GateEntry("t28_quality_classifier", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      TextFunctions.nbClassifier(
+          d.filter(col("source") === "src0"),
+          d.filter(col("source") === "src1"),
+          d, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      // same hashed melt (3-hex-char md5 bucket via the t20 strpos
+      // recipe), per-slice NB counts, floor-log2-bit LLR, sign gate
       """WITH t28_tok AS (
         |  SELECT doc_id, source,
         |    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
@@ -3110,11 +4785,43 @@ object DataOpsQueries {
         |  CROSS JOIN t28_tot t)
         |SELECT doc_id, COUNT(*) AS nFeats, CAST(SUM(w) AS BIGINT) AS score,
         |  SUM(w) > 0 AS keep
-        |FROM t28_s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // the t31 twin: same rot-k training slices and 2/3+1/3 mixed eval
-    // construction, t28's md5-prefix hashed melt, per-class add-one NB
-    // bit-LLR via format('{:b}') lengths, argmax by (score DESC, lang ASC)
-    "t31_langid_model" ->
+        |FROM t28_s GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // model-based language ID, the fastText-langid shape (one model, k
+    // classes — the multiclass generalization of t28): three synthetic
+    // "languages" derive from the corpus by rot-k letter translation
+    // (disjoint vocabularies, identical token boundaries in both
+    // engines), trained from disjoint %5 slices; every eval doc renders
+    // 2/3 in its own language (doc_id%3) and 1/3 in the NEXT one, so the
+    // per-class argmax competes on real mixed evidence rather than a
+    // one-sided score. All three predictions live at every SF
+    // (167/167/166); argmax = integer-exact per-class floor-log2 LLR,
+    // ties label-ascending. ONE doc-keyed aggregate carries all k class
+    // sums; the pivoted 4096-bucket model broadcasts.
+    GateEntry("t31_langid_model", { (s, dir) =>
+      val AL = "abcdefghijklmnopqrstuvwxyz"
+      def rot(c: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
+        if (k == 0) c else translate(c, AL, AL.substring(k) + AL.substring(0, k))
+      val lt = Tables.documents(s, dir)
+        .select(col("doc_id"), lower(col("text")).as("lt"))
+      val classes = Seq("en" -> 0, "r1" -> 1, "r2" -> 2).map { case (l, k) =>
+        l -> lt.filter(col("doc_id") % 5 === k)
+          .select(col("doc_id"), rot(col("lt"), k).as("text"))
+      }
+      val cut = expr("(2 * length(lt)) DIV 3").cast("int")
+      def rotByMod(m: org.apache.spark.sql.Column, part: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+        when(m === 0, part).when(m === 1, rot(part, 1)).otherwise(rot(part, 2))
+      val eval = lt.select(col("doc_id"),
+        concat(
+          rotByMod(col("doc_id") % 3, col("lt").substr(lit(1), cut)),
+          rotByMod((col("doc_id") + 1) % 3,
+            col("lt").substr(cut + 1, length(col("lt")))))
+          .as("text"))
+      TextFunctions.langIdModel(classes, eval, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+      // the t31 twin: same rot-k training slices and 2/3+1/3 mixed eval
+      // construction, t28's md5-prefix hashed melt, per-class add-one NB
+      // bit-LLR via format('{:b}') lengths, argmax by (score DESC, lang ASC)
       """WITH t31_lt AS (
         |  SELECT doc_id, lower(text) AS lt FROM documents),
         |t31_train AS (
@@ -3176,11 +4883,43 @@ object DataOpsQueries {
         |t31_rk AS (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
         |    ORDER BY score DESC, lang ASC) AS rn FROM t31_sc)
-        |SELECT doc_id, lang, score, nFeats FROM t31_rk WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    // t26's scorer over ALL docs (no OOV suffix), the ROW_NUMBER order
-    // statistic as the tercile pick — the same k-th-smallest definition
-    // exactLongRanks resolves by histogram refinement
-    "t27_ppl_buckets" ->
+        |SELECT doc_id, lang, score, nFeats FROM t31_rk WHERE rn = 1 ORDER BY doc_id""".stripMargin),
+    // CCNet head/middle/tail perplexity bucketing: EVERY doc scored
+    // under the train-slice model (t26's scorer, integer scaled mean),
+    // then split at the exact tercile cutoffs — computed by
+    // Sketches.exactLongRanks' histogram refinement (bounded hash
+    // aggregates, no global sort, no single-partition window: the
+    // 100 TB-legal way to take a corpus quantile). The scored narrow
+    // projection (3 longs/doc — the table a production run would have
+    // materialized as its output) is checkpointed once so the
+    // refinement passes scan it, not the live scoring plan. Higher
+    // mean probability = head, like CCNet's lower-perplexity-is-head.
+    GateEntry("t27_ppl_buckets", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      // vocab-bounded model pinned once: four consumers in the scorer
+      val model = TextFunctions.bigramModel(
+        d.filter(col("doc_id") % 97 =!= 0L), "text").localCheckpoint()
+      val scored = TextFunctions.bigramScoreAgainst(model, d, "doc_id", "text")
+        .withColumn("scaledMean", expr("(scoreSum * 1000) DIV nBigrams"))
+        .select(col("doc_id"), col("nBigrams"), col("scaledMean"))
+        .localCheckpoint()
+      val n = scored.count()
+      val Seq(r1, r2) = Seq((n + 2) / 3, (2 * n + 2) / 3)
+      val cuts = graft.functions.Sketches.exactLongRanks(
+        scored, "scaledMean", Seq(r1, r2))
+      val (v33, v67) = (cuts(r1), cuts(r2))
+      scored
+        .withColumn("bucket",
+          when(col("scaledMean") < v33, "tail")
+            .when(col("scaledMean") < v67, "middle")
+            .otherwise("head"))
+        .withColumn("cutLow", lit(v33))
+        .withColumn("cutHigh", lit(v67))
+        .orderBy(col("doc_id"))
+    },
+      // t26's scorer over ALL docs (no OOV suffix), the ROW_NUMBER order
+      // statistic as the tercile pick — the same k-th-smallest definition
+      // exactLongRanks resolves by histogram refinement
       """WITH t27_tok AS (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
         |  FROM documents),
@@ -3224,8 +4963,23 @@ object DataOpsQueries {
         |  CASE WHEN scaledMean < v33 THEN 'tail'
         |       WHEN scaledMean < v67 THEN 'middle' ELSE 'head' END AS bucket,
         |  v33 AS cutLow, v67 AS cutHigh
-        |FROM t27_s CROSS JOIN t27_c ORDER BY doc_id""".stripMargin,
-    "t23_bpe_pairs" ->
+        |FROM t27_s CROSS JOIN t27_c ORDER BY doc_id""".stripMargin),
+    // the distributed core of BPE tokenizer training: adjacent-symbol
+    // pair counts over the char-split word corpus (round 1 of
+    // TextFunctions.bpeTrain, whose merge loop is spec-tested) — a
+    // map-side bigram explode + ONE hash aggregate; the corpus never
+    // shuffles, only (pair, count) rows do. Top-10 by (count, pair).
+    GateEntry("t23_bpe_pairs", { (s, dir) =>
+      // through the LIBRARY operator (bpeTrain's round-1 core), on the
+      // char-split symbol representation the merge loop consumes
+      val words = Tables.documents(s, dir)
+        .select(explode(expr(
+          "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
+        .select(expr("array_join(split(w, ''), ' ')").as("syms"))
+      TextFunctions.bpePairCounts(words, "syms")
+        .orderBy(col("cnt").desc, col("a"), col("b"))
+        .limit(10)
+    },
       """WITH w AS (
         |  SELECT UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
         |  FROM documents),
@@ -3237,8 +4991,38 @@ object DataOpsQueries {
         |    substr(w, CAST(i AS INT) + 1, 1) AS b
         |  FROM pos)
         |SELECT a, b, COUNT(*) AS cnt FROM p
-        |GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT 10""".stripMargin,
-    "t22_mad_outliers" ->
+        |GROUP BY a, b ORDER BY cnt DESC, a, b LIMIT 10""".stripMargin),
+    // MAD-based outlier gate (the robust anomaly detector a value
+    // pipeline runs per segment): per event_type, the median event
+    // value, the median absolute deviation, and how many events sit
+    // beyond 3×MAD. Both medians are percentile_disc ORDER STATISTICS
+    // (value at row ⌈n/2⌉) — picked values, no interpolation, so every
+    // double compares bit-exact across engines. Two windowed passes
+    // over the same type-keyed shuffle.
+    GateEntry("t22_mad_outliers", { (s, dir) =>
+      DerivedState.register(s, dir)
+      // null values pre-filtered ONCE here (the orderStats helper also
+      // filters its own input): median/MAD over present values only,
+      // matching the oracle's IS NOT NULL
+      val ev = s.table("events").select(col("event_type"), col("value"))
+        .filter(col("value").isNotNull)
+      val med = orderStats(ev, Seq("event_type"), "value",
+        Seq(0.5 -> "median"))
+      // med and mad are type-dimension frames: both joins broadcast,
+      // the fact side shuffles only on its type key (twice, for the
+      // two order statistics) — no per-type array ever materializes
+      val dev = ev.join(broadcast(med), Seq("event_type"))
+        .withColumn("adev", abs(col("value") - col("median")))
+      val madF = orderStats(dev, Seq("event_type", "median"), "adev",
+        Seq(0.5 -> "mad"), Seq(count(lit(1)).as("nEvents")))
+      dev.join(broadcast(madF), Seq("event_type", "median"))
+        .groupBy(col("event_type"), col("median"), col("mad"), col("nEvents"))
+        .agg(sum(when(col("adev") > col("mad") * 3.0, 1L).otherwise(0L))
+          .as("nOutliers"))
+        .select(col("event_type"), col("median"), col("mad"),
+          col("nEvents"), col("nOutliers"))
+        .orderBy(col("event_type"))
+    },
       """WITH e AS (
         |  SELECT event_type, value FROM events WHERE value IS NOT NULL),
         |r1 AS (
@@ -3268,8 +5052,16 @@ object DataOpsQueries {
         |    AS BIGINT) AS nOutliers
         |FROM dev d JOIN madf m ON d.event_type = m.event_type
         |GROUP BY d.event_type, m.median, m.mad, m.nEvents
-        |ORDER BY d.event_type""".stripMargin,
-    "v1_profile" -> {
+        |ORDER BY d.event_type""".stripMargin),
+    // Deequ-style table profile: every requested column's row/null/
+    // distinct counts + min/max in ONE aggregation pass (stack-melted
+    // afterwards — no per-column scans)
+    GateEntry("v1_profile", { (s, dir) =>
+      graft.analytics.TableChecks.profile(
+          Tables.lineitem(s, dir),
+          Seq("l_orderkey", "l_quantity", "l_shipdate"))
+        .orderBy(col("colName"))
+    }, {
       def row(c: String) =
         s"""SELECT '$c' AS colName, COUNT(*) AS nRows,
           |  CAST(COALESCE(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS nNulls,
@@ -3283,15 +5075,34 @@ object DataOpsQueries {
         |UNION ALL
         |${row("l_shipdate")}
         |ORDER BY colName""".stripMargin
+    }),
+    // referential-integrity check, exercised on a SIMULATED partial
+    // parent delivery (only status-F orders arrived): fkOrphans must
+    // surface every lineitem pointing at a missing order — a LEFT ANTI
+    // join, parent side broadcast/hashed, no fact fan-out
+    GateEntry("v2_fk_orphans", { (s, dir) =>
+      graft.analytics.TableChecks.fkOrphans(
+          Tables.lineitem(s, dir),
+          Tables.orders(s, dir).filter(col("o_orderstatus") === "F"),
+          "l_orderkey", "o_orderkey")
+        .groupBy(col("l_orderkey"))
+        .agg(count(lit(1)).as("orphanLines"))
+        .orderBy(col("l_orderkey"))
     },
-    "v2_fk_orphans" ->
       """SELECT l_orderkey, COUNT(*) AS orphanLines
         |FROM lineitem
         |WHERE l_orderkey IS NOT NULL
         |  AND l_orderkey NOT IN (
         |    SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F')
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "v3_quality_gate" ->
+        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin),
+    // the roll-up quality gate a scheduler alerts on: key uniqueness +
+    // FK integrity + not-null, one row of counters and the verdict
+    GateEntry("v3_quality_gate", { (s, dir) =>
+      graft.analytics.TableChecks.gate(
+        Tables.lineitem(s, dir), Tables.orders(s, dir),
+        "l_orderkey", "o_orderkey",
+        uniqueKeys = Seq("o_orderkey"), notNullCol = "l_shipdate")
+    },
       """WITH dups AS (
         |  SELECT CAST(COALESCE(SUM(m), 0) AS BIGINT) AS dupKeyRows FROM (
         |    SELECT COUNT(*) AS m FROM orders GROUP BY o_orderkey
@@ -3305,10 +5116,30 @@ object DataOpsQueries {
         |    AS BIGINT) AS nullRows FROM lineitem)
         |SELECT dupKeyRows, orphanRows, nullRows,
         |  dupKeyRows = 0 AND orphanRows = 0 AND nullRows = 0 AS pass
-        |FROM dups, orph, nn""".stripMargin,
-    // the same clamp/ppm/TVD integer algebra; the two comparisons pivot
-    // from a labeled union instead of the full outer join
-    "v4_dist_drift" ->
+        |FROM dups, orph, nn""".stripMargin),
+    // distribution-drift monitor between two corpus snapshots: per-bin
+    // fixed-width histograms + total variation distance in INTEGER-EXACT
+    // ppm (integral divisions only — no floating sums whose order could
+    // differ across engines). Two comparisons through ONE operator body:
+    // an A/A split (doc_id parity — sampling noise only, must NOT trip)
+    // and the same split with a +2-bin injected shift on one side (a
+    // bad upstream re-chunking — MUST trip). The 150000 ppm threshold
+    // separates the two with margin at every SF (measured: noise
+    // 27k-104k, shift 232k-368k).
+    GateEntry("v4_dist_drift", { (s, dir) =>
+      val d = Tables.documents(s, dir)
+      val even = d.filter(col("doc_id") % 2 === 0)
+      val odd = d.filter(col("doc_id") % 2 === 1)
+      val shifted = odd.withColumn("n_chars", col("n_chars") + 128)
+      def run(lbl: String, b: org.apache.spark.sql.DataFrame) =
+        graft.analytics.TableChecks.distributionDrift(even, b, "n_chars",
+            binWidth = 64L, maxBins = 32, thresholdPpm = 150000L)
+          .withColumn("lbl", lit(lbl))
+      run("same", odd).unionByName(run("shift", shifted))
+        .orderBy(col("lbl"), col("bin"))
+    },
+      // the same clamp/ppm/TVD integer algebra; the two comparisons pivot
+      // from a labeled union instead of the full outer join
       """WITH v4_sides AS (
         |  SELECT 'same' AS lbl, 0 AS side,
         |    LEAST(GREATEST(n_chars // 64, 0), 31) AS bin
@@ -3348,11 +5179,38 @@ object DataOpsQueries {
         |  ABS(p.pA_ppm - p.pB_ppm) AS diff_ppm,
         |  v.tvd_ppm, v.tvd_ppm > 150000 AS drifted, p.lbl
         |FROM v4_p p JOIN v4_v v USING (lbl)
-        |ORDER BY p.lbl, p.bin""".stripMargin,
-    // the same KMV algebra in SQL: hv = hashKey's 8-hex-char md5 value,
-    // bottom-64 DISTINCT hashes per side, union = bottom-64 of the
-    // merged sets, estimates in the same integer division
-    "t21_kmv" -> {
+        |ORDER BY p.lbl, p.bin""".stripMargin),
+    // KMV (bottom-k / theta-style) distinct sketch, k = 64: distinct
+    // viewers, clickers, their union AND intersection estimated from
+    // two 64-long sketches — the mergeable-set-algebra story COUNT
+    // DISTINCT can't do (estimating an intersection without co-shuffling
+    // either side). The sketch aggregate is a custom typed Aggregator
+    // whose partial state is ≤ k longs per partition (nothing shuffles
+    // O(distinct)); estimates are integer-exact ((k−1)·2^32 div h_k) so
+    // the row differentials bit-for-bit. Driver sees ≤ 2k longs.
+    GateEntry("t21_kmv", { (s, dir) =>
+      DerivedState.register(s, dir)
+      import s.implicits._
+      val ev = s.table("events")
+      val k = 64
+      def users(t: String) =
+        ev.filter(col("event_type") === t).select(col("user_id"))
+      val a = graft.functions.Sketches.kmvMinima(users("view"), "user_id", k)
+      val b = graft.functions.Sketches.kmvMinima(users("click"), "user_id", k)
+      val (estU, estI) = graft.functions.Sketches.kmvSetEstimates(a, b, k)
+      val exactA = users("view").distinct().count()
+      val exactB = users("click").distinct().count()
+      val exactI = users("view").distinct()
+        .join(users("click").distinct(), "user_id").count()
+      Seq((exactA, graft.functions.Sketches.kmvEstimate(a, k),
+          exactB, graft.functions.Sketches.kmvEstimate(b, k),
+          exactA + exactB - exactI, estU, exactI, estI))
+        .toDF("exactA", "estA", "exactB", "estB",
+          "exactU", "estU", "exactI", "estI")
+    }, {
+      // the same KMV algebra in SQL: hv = hashKey's 8-hex-char md5 value,
+      // bottom-64 DISTINCT hashes per side, union = bottom-64 of the
+      // merged sets, estimates in the same integer division
       val hv = (1 to 8).map(i =>
         s"CAST(strpos('0123456789abcdef', hx[$i]) - 1 AS BIGINT) * ${1L << (4 * (8 - i))}")
         .mkString("\n        + ")
@@ -3385,10 +5243,27 @@ object DataOpsQueries {
         |  CASE WHEN nu < 64 THEN m
         |    ELSE m * (63 * 4294967296 // hku) // 64 END AS estI
         |FROM stats""".stripMargin
+    }),
+    // deterministic Count-Min sketch (d = 4 salted md5 rows × 256
+    // counters) over event_type frequencies, probed for every distinct
+    // type next to the exact count: est ≥ exact by the CMS guarantee,
+    // and every op is integer/string so the whole sketch differentials
+    // bit-exact. The sketch is d·w cells regardless of input size
+    // (map-side partials) and the probe join broadcasts it.
+    GateEntry("t20_countmin", { (s, dir) =>
+      DerivedState.register(s, dir)
+      val ev = s.table("events")
+      val sk = graft.functions.Sketches.countMinSketch(ev, "event_type")
+      val exact = ev.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("exactCount"))
+      graft.functions.Sketches.countMinEstimate(
+          sk, ev.select(col("event_type")).distinct(), "event_type")
+        .join(exact, Seq("event_type"))
+        .select(col("event_type"), col("exactCount"), col("cmEstimate"))
+        .orderBy(col("event_type"))
     },
-    // the same d=4 × w=256 CMS in portable SQL: slot = first two md5
-    // hex chars of value ∥ 'cm<row>' (w = 256 → no mod needed)
-    "t20_countmin" ->
+      // the same d=4 × w=256 CMS in portable SQL: slot = first two md5
+      // hex chars of value ∥ 'cm<row>' (w = 256 → no mod needed)
       """WITH rows4 AS (SELECT UNNEST(range(0, 4)) AS row),
         |cells AS (
         |  SELECT row,
@@ -3415,9 +5290,23 @@ object DataOpsQueries {
         |ex AS (SELECT event_type, COUNT(*) AS exactCount FROM events GROUP BY 1)
         |SELECT ex.event_type, ex.exactCount, est.cmEstimate
         |FROM ex JOIN est ON ex.event_type = est.event_type
-        |ORDER BY ex.event_type""".stripMargin,
-    // the same Morton magic-mask ladder in portable integer SQL
-    "t19_zorder" ->
+        |ORDER BY ex.event_type""".stripMargin),
+    // Z-order (Morton) codes for 2-D data layout: interleave (user_id,
+    // event day) bits so range-partitioned files are local in BOTH
+    // dimensions and either filter prunes via footer min/max stats (the
+    // Delta/Iceberg OPTIMIZE ZORDER shape — Shuffles.zorderLayout is
+    // the one-range-exchange layout op; this entry differentials the
+    // pure-integer mask ladder itself, engine-identical by
+    // construction)
+    GateEntry("t19_zorder", { (s, dir) =>
+      DerivedState.register(s, dir)
+      val z = Shuffles.mortonInterleave(col("user_id"),
+        expr(s"ts div ${Events.DayNs}"))
+      s.table("events")
+        .select(col("event_id"), z.as("zval"))
+        .orderBy(col("event_id"))
+    },
+      // the same Morton magic-mask ladder in portable integer SQL
       """WITH e AS (
         |  SELECT event_id, user_id & 4294967295 AS a,
         |    (epoch_ns(ts) // 86400000000000) & 4294967295 AS b
@@ -3433,8 +5322,22 @@ object DataOpsQueries {
         |s5 AS (SELECT event_id, (a | (a << 1)) & 6148914691236517205 AS a,
         |              (b | (b << 1)) & 6148914691236517205 AS b FROM s4)
         |SELECT event_id, a | (b << 1) AS zval FROM s5
-        |ORDER BY event_id""".stripMargin,
-    "t18_percentiles" ->
+        |ORDER BY event_id""".stripMargin),
+    // EXACT distributed percentiles (percentile_disc semantics: the
+    // value at row ⌈p·n⌉ in sorted order) of doc length per language —
+    // one shuffle on the group key + a per-group sort; no floating
+    // interpolation, so the order statistics are engine-identical
+    // integers (percentile_approx/quantile sketches trade exactness for
+    // a mergeable summary — Sketches.approxQuantiles is that path).
+    // Rank ties are harmless: the value AT a rank is a property of the
+    // sorted multiset, whatever order equal values take.
+    GateEntry("t18_percentiles", { (s, dir) =>
+      orderStats(Tables.documents(s, dir).select(col("lang"), col("n_chars")),
+          Seq("lang"), "n_chars",
+          Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75", 0.9 -> "p90"),
+          Seq(count(lit(1)).as("n_docs")))
+        .orderBy(col("lang"))
+    },
       """WITH r AS (
         |  SELECT lang, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars) AS rn,
@@ -3446,8 +5349,28 @@ object DataOpsQueries {
         |  MIN(CASE WHEN rn >= CEIL(0.75 * n) THEN n_chars END) AS p75,
         |  MIN(CASE WHEN rn >= CEIL(0.9 * n) THEN n_chars END) AS p90,
         |  COUNT(*) AS n_docs
-        |FROM r GROUP BY lang ORDER BY lang""".stripMargin,
-    "e10_interval_join" ->
+        |FROM r GROUP BY lang ORDER BY lang""".stripMargin),
+    // interval-overlap join: each user's 2 h view windows × 2 h click
+    // windows. Both sides explode to 2 h buckets, equi-join on (user,
+    // bucket), and a pair is kept only in the FIRST bucket both occupy
+    // — exactly-once semantics with no distinct shuffle. The oracle is
+    // the raw overlap-predicate join.
+    GateEntry("e10_interval_join", { (s, dir) =>
+      DerivedState.register(s, dir)
+      val ev = s.table("events")
+      val twoH = 2L * 3600L * 1000000000L
+      def win(t: String, idAs: String, sAs: String, eAs: String) =
+        ev.filter(col("event_type") === t)
+          .select(col("event_id").as(idAs), col("user_id"),
+            col("ts").as(sAs), (col("ts") + lit(twoH)).as(eAs))
+      Events.intervalJoin(
+          win("view", "view_id", "vs", "ve"),
+          win("click", "click_id", "cs", "ce"),
+          "user_id", "vs", "ve", "cs", "ce", bucketNs = twoH)
+        .select(col("view_id"), col("click_id"), col("user_id"),
+          col("vs"), col("cs"))
+        .orderBy(col("view_id"), col("click_id"))
+    },
       """WITH v AS (
         |  SELECT event_id AS view_id, user_id, epoch_ns(ts) AS vs,
         |    epoch_ns(ts) + 7200000000000 AS ve
@@ -3459,2260 +5382,228 @@ object DataOpsQueries {
         |SELECT v.view_id, c.click_id, v.user_id, v.vs, c.cs
         |FROM v JOIN c ON v.user_id = c.user_id
         |  AND v.vs < c.ce AND c.cs < v.ve
-        |ORDER BY v.view_id, c.click_id""".stripMargin,
-    "d1_exact_dedup" ->
-      s"""WITH $CorpusSql,
-        |h AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY sha256(text)) AS keepId
-        |      FROM corpus)
-        |SELECT doc_id AS id, keepId FROM h WHERE doc_id <> keepId ORDER BY id""".stripMargin,
-    "d2_minhash_lsh" ->
-      s"""WITH $MinhashSql
-        |SELECT id1, id2, estJaccard FROM pairs WHERE estJaccard >= 0.5
-        |ORDER BY id1, id2""".stripMargin,
-    "d3_simhash" ->
-      s"""WITH $SimhashSql
-        |SELECT doc_id, simhash FROM sim16 ORDER BY doc_id""".stripMargin,
-    "t5_clean_corpus" ->
-      s"""WITH $MinhashSql,
-        |keep AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text, MIN(doc_id) OVER (PARTITION BY sha256(text)) AS k
-        |    FROM corpus) z WHERE doc_id = k),
-        |drop2 AS (
-        |  SELECT DISTINCT p.id2 AS doc_id FROM pairs p
-        |  JOIN keep k1 ON p.id1 = k1.doc_id WHERE p.estJaccard >= 0.75),
-        |surv AS (
-        |  SELECT k.doc_id, k.text FROM keep k
-        |  LEFT JOIN drop2 d ON k.doc_id = d.doc_id WHERE d.doc_id IS NULL),
-        |sc AS (
-        |  SELECT doc_id, wsTokens,
-        |    meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
-        |  FROM (
-        |    SELECT doc_id, len(w) AS wsTokens,
-        |      CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
-        |      CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
-        |        ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
-        |      CASE WHEN length(text) > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END AS punctRatio,
-        |      CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
-        |    FROM (SELECT doc_id, text,
-        |            regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |          FROM surv) t) f)
-        |SELECT doc_id, wsTokens, score FROM sc
-        |WHERE score >= 75.0 ORDER BY doc_id""".stripMargin,
-    "d6_simhash_neardup" ->
-      s"""WITH $SimhashSql,
-        |m AS (
-        |  SELECT doc_id, b AS bandIdx, (simhash >> (4*b)) % 16 AS bandVal, simhash
-        |  FROM sim16 CROSS JOIN (SELECT 0 AS b UNION ALL SELECT 1
-        |                         UNION ALL SELECT 2 UNION ALL SELECT 3) bb)
-        |SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
-        |  CAST(bit_count(xor(a.simhash, c.simhash)) AS INT) AS hamming
-        |FROM m a JOIN m c ON a.bandIdx = c.bandIdx AND a.bandVal = c.bandVal
-        |  AND a.doc_id < c.doc_id
-        |WHERE bit_count(xor(a.simhash, c.simhash)) <= 3
-        |ORDER BY id1, id2""".stripMargin,
-    "d9_simhash64_neardup" ->
-      s"""WITH $CorpusSql,
-        |$Simhash64Sql,
-        |m64 AS (
-        |  SELECT doc_id, b AS bandIdx, (simhash >> (16*b)) & 65535 AS bandVal, simhash
-        |  FROM sim64f CROSS JOIN (SELECT UNNEST(range(0,4)) AS b) bb)
-        |SELECT DISTINCT a.doc_id AS id1, c.doc_id AS id2,
-        |  CAST(bit_count(xor(a.simhash, c.simhash)) AS INT) AS hamming
-        |FROM m64 a JOIN m64 c ON a.bandIdx = c.bandIdx AND a.bandVal = c.bandVal
-        |  AND a.doc_id < c.doc_id
-        |WHERE bit_count(xor(a.simhash, c.simhash)) <= 3
-        |ORDER BY id1, id2""".stripMargin,
-    "sim8_ivf_train_gain" ->
-      s"""WITH $NormsSql,
-        |${ivfSql(3)},
-        |obj0 AS (
-        |  SELECT CAST(SUM(CAST(FLOOR(a.dot / c.cnrm * 1000000) AS BIGINT)) AS DOUBLE) / 1e6 AS o
-        |  FROM rk0 r JOIN ad0 a ON a.vec_id = r.vec_id AND a.cellId = r.cellId
-        |  JOIN cn0 c ON c.cellId = r.cellId
-        |  WHERE r.rn = 1),
-        |obj3 AS (
-        |  SELECT CAST(SUM(CAST(FLOOR(a.dot / c.cnrm * 1000000) AS BIGINT)) AS DOUBLE) / 1e6 AS o
-        |  FROM rk3 r JOIN ad3 a ON a.vec_id = r.vec_id AND a.cellId = r.cellId
-        |  JOIN cn3 c ON c.cellId = r.cellId
-        |  WHERE r.rn = 1)
-        |SELECT o0.o AS seedObjective, o3.o AS trainedObjective,
-        |  o3.o > o0.o AS improved
-        |FROM obj0 o0, obj3 o3""".stripMargin,
-    "sim7_ann_multiprobe" ->
-      s"""WITH $NormsSql,
-        |plM AS (
-        |  SELECT vec_id, j,
-        |    SUM(CAST(ROUND(CAST(embedding[i] AS DOUBLE) *
-        |      CAST(((((j*31 + (i-1)*17 + j*(i-1)*13) % 101) % 7) - 3) AS DOUBLE) * 1000000000000) AS BIGINT)) AS d
-        |  FROM (SELECT vec_id, embedding, UNNEST(range(1, len(embedding)+1)) AS i
-        |        FROM embeddings) t
-        |  CROSS JOIN (SELECT UNNEST(range(0,32)) AS j) u
-        |  GROUP BY vec_id, j),
-        |buckM AS (
-        |  SELECT vec_id, j // 8 AS setIdx,
-        |    CAST(SUM(CASE WHEN d >= 0 THEN (1 << (j % 8)) ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM plM GROUP BY vec_id, j // 8),
-        |candM AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM buckM a JOIN buckM b ON a.setIdx = b.setIdx AND a.bucket = b.bucket
-        |    AND a.vec_id < b.vec_id),
-        |cand1 AS (
-        |  SELECT DISTINCT a.vec_id AS id1, b.vec_id AS id2
-        |  FROM buckM a JOIN buckM b ON a.setIdx = b.setIdx AND a.bucket = b.bucket
-        |    AND a.vec_id < b.vec_id
-        |  WHERE a.setIdx = 0),
-        |ap AS (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2, a.embedding AS v1, b.embedding AS v2
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id),
-        |apd AS (
-        |  SELECT id1, id2,
-        |    CAST(SUM(CAST(ROUND(CAST(v1[i] AS DOUBLE) * CAST(v2[i] AS DOUBLE)
-        |      * 1000000000000) AS BIGINT)) AS DOUBLE) / 1e12 AS dot
-        |  FROM (SELECT id1, id2, v1, v2, UNNEST(range(1, 65)) AS i FROM ap) z
-        |  GROUP BY id1, id2),
-        |tp AS (
-        |  SELECT d.id1, d.id2 FROM apd d
-        |  JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
-        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2),
-        |f1 AS (SELECT t.id1 FROM tp t JOIN cand1 c ON c.id1 = t.id1 AND c.id2 = t.id2),
-        |fM AS (SELECT t.id1 FROM tp t JOIN candM c ON c.id1 = t.id1 AND c.id2 = t.id2)
-        |SELECT
-        |  (SELECT COUNT(*) FROM tp) AS truePairs,
-        |  (SELECT COUNT(*) FROM f1) AS found1,
-        |  (SELECT COUNT(*) FROM fM) AS foundMulti,
-        |  CAST((SELECT COUNT(*) FROM f1) AS DOUBLE)
-        |    / (SELECT COUNT(*) FROM tp) AS recall1,
-        |  CAST((SELECT COUNT(*) FROM fM) AS DOUBLE)
-        |    / (SELECT COUNT(*) FROM tp) AS recallMulti""".stripMargin,
-    "d4_ngram_jaccard" ->
-      s"""WITH $MinhashSql,
-        |dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-        |szs AS (SELECT doc_id, COUNT(*) AS sz FROM dsh GROUP BY doc_id),
-        |cand AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.25),
-        |icnt AS (
-        |  SELECT c.id1, c.id2, COUNT(*) AS i FROM cand c
-        |  JOIN dsh a ON a.doc_id = c.id1
-        |  JOIN dsh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
-        |  GROUP BY c.id1, c.id2)
-        |SELECT c.id1, c.id2,
-        |  CAST(COALESCE(i.i,0) AS DOUBLE) /
-        |    (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) AS jaccard
-        |FROM cand c
-        |LEFT JOIN icnt i ON i.id1 = c.id1 AND i.id2 = c.id2
-        |LEFT JOIN szs sa ON sa.doc_id = c.id1
-        |LEFT JOIN szs sb ON sb.doc_id = c.id2
-        |WHERE COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0) > 0
-        |  AND CAST(COALESCE(i.i,0) AS DOUBLE) /
-        |    (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) >= 0.5
-        |ORDER BY c.id1, c.id2""".stripMargin,
-    // containment: d4's intersection/size algebra over corpus ∪ planted
-    // half-excerpts, candidates = LSH pairs ∪ planted pairs; the two
-    // asymmetric ratios alongside the symmetric Jaccard
-    "d17_containment" ->
-      s"""WITH $MinhashSql,
-        |ex AS (
-        |  SELECT doc_id + 3000000 AS doc_id,
-        |    array_to_string(w[1:CAST(ceil(len(w) / 2.0) AS INT)], ' ') AS text
-        |  FROM words WHERE doc_id % 89 = 0),
-        |exw AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w FROM ex),
-        |exsh AS (
-        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 3
-        |    THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w)-1)]
-        |    ELSE [] END) AS shingle
-        |  FROM exw),
-        |dsh AS (
-        |  SELECT DISTINCT doc_id, shingle FROM sh
-        |  UNION
-        |  SELECT DISTINCT doc_id, shingle FROM exsh),
-        |szs AS (SELECT doc_id, COUNT(*) AS sz FROM dsh GROUP BY doc_id),
-        |cand AS (
-        |  SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.25
-        |  UNION
-        |  SELECT doc_id AS id1, doc_id + 3000000 AS id2
-        |  FROM corpus WHERE doc_id % 89 = 0),
-        |icnt AS (
-        |  SELECT c.id1, c.id2, COUNT(*) AS i FROM cand c
-        |  JOIN dsh a ON a.doc_id = c.id1
-        |  JOIN dsh b ON b.doc_id = c.id2 AND b.shingle = a.shingle
-        |  GROUP BY c.id1, c.id2)
-        |SELECT c.id1, c.id2,
-        |  CAST(COALESCE(i.i, 0) AS BIGINT) AS inter,
-        |  CAST(COALESCE(sa.sz, 0) AS BIGINT) AS szA,
-        |  CAST(COALESCE(sb.sz, 0) AS BIGINT) AS szB,
-        |  CASE WHEN COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0) > 0
-        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) /
-        |      (COALESCE(sa.sz,0) + COALESCE(sb.sz,0) - COALESCE(i.i,0)) END
-        |    AS jaccard,
-        |  CASE WHEN COALESCE(sa.sz,0) > 0
-        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) / sa.sz END AS containA,
-        |  CASE WHEN COALESCE(sb.sz,0) > 0
-        |    THEN CAST(COALESCE(i.i,0) AS DOUBLE) / sb.sz END AS containB
-        |FROM cand c
-        |LEFT JOIN icnt i ON i.id1 = c.id1 AND i.id2 = c.id2
-        |LEFT JOIN szs sa ON sa.doc_id = c.id1
-        |LEFT JOIN szs sb ON sb.doc_id = c.id2
-        |ORDER BY c.id1, c.id2""".stripMargin,
-    "sim1_knn_brute" ->
-      s"""WITH $NormsSql,
-        |$BruteSql
-        |SELECT qid, nid, cosine, rank FROM bruteRanked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-    // majority vote over the same brute top-5 chain: tally neighbor
-    // labels per query, pick (votes DESC, label ASC)
-    "sim13_knn_classify" ->
-      s"""WITH $NormsSql,
-        |$BruteSql,
-        |topk AS (SELECT qid, nid FROM bruteRanked WHERE rank <= 5),
-        |tally AS (
-        |  SELECT t.qid, CAST(e.label AS BIGINT) AS nlabel,
-        |    COUNT(*) AS votes
-        |  FROM topk t JOIN embeddings e ON e.vec_id = t.nid
-        |  GROUP BY t.qid, CAST(e.label AS BIGINT)),
-        |pick AS (
-        |  SELECT qid, nlabel, votes,
-        |    ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY votes DESC, nlabel ASC) AS rk
-        |  FROM tally)
-        |SELECT q.vec_id AS qid, CAST(q.label AS BIGINT) AS trueLabel,
-        |  p.nlabel AS predLabel, CAST(p.votes AS BIGINT) AS votes,
-        |  CAST(CASE WHEN p.nlabel = CAST(q.label AS BIGINT)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS correct
-        |FROM embeddings q LEFT JOIN pick p ON p.qid = q.vec_id AND p.rk = 1
-        |WHERE q.vec_id % 100 = 0
-        |ORDER BY qid""".stripMargin,
-    // the same md5-parity sign matrix, scaled-long ± sums, reduced-space
-    // top-1 vs the full-space truth over the twin-planted corpus (the
-    // shared Norms/Brute CTEs read the bare table, so this entry carries
-    // its own corpus-parameterized copies)
-    "sim12_jl_recall" ->
-      s"""WITH jl_corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000 AS vec_id, embedding FROM embeddings
-        |  WHERE vec_id % 200 = 0),
-        |jl_norms AS (
-        |  SELECT vec_id, sqrt(CAST(SUM(CAST(ROUND(CAST(embedding[k] AS DOUBLE)
-        |    * CAST(embedding[k] AS DOUBLE) * 1000000000000) AS BIGINT))
-        |    AS DOUBLE) / 1e12) AS nrm
-        |  FROM (SELECT vec_id, embedding,
-        |          UNNEST(range(1, len(embedding) + 1)) AS k
-        |        FROM jl_corpus) t
-        |  GROUP BY vec_id),
-        |jl_p AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS nid,
-        |    q.embedding AS qv, c.embedding AS nv
-        |  FROM jl_corpus q JOIN jl_corpus c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id % 100 = 0 AND q.vec_id < 1000000),
-        |jl_fdots AS (
-        |  SELECT qid, nid, CAST(SUM(CAST(ROUND(CAST(qv[k] AS DOUBLE)
-        |    * CAST(nv[k] AS DOUBLE) * 1000000000000) AS BIGINT))
-        |    AS DOUBLE) / 1e12 AS dot
-        |  FROM (SELECT qid, nid, qv, nv, UNNEST(range(1, len(qv) + 1)) AS k
-        |        FROM jl_p) t
-        |  GROUP BY qid, nid),
-        |jl_brute AS (
-        |  SELECT qid, nid, cosine, ROW_NUMBER() OVER (
-        |    PARTITION BY qid ORDER BY cosine DESC, nid) AS rank
-        |  FROM (
-        |    SELECT qid, nid, dot / (na.nrm * nb.nrm) AS cosine
-        |    FROM jl_fdots
-        |    JOIN jl_norms na ON na.vec_id = qid
-        |    JOIN jl_norms nb ON nb.vec_id = nid)),
-        |jl_signs AS (
-        |  SELECT CAST(i.i AS BIGINT) AS i, CAST(j.j AS BIGINT) AS j,
-        |    CASE WHEN (strpos('0123456789abcdef',
-        |        substr(md5('jl-' || i.i || '-' || j.j), 1, 1)) - 1) % 2 = 0
-        |      THEN 1 ELSE -1 END AS s
-        |  FROM (SELECT UNNEST(range(0, 64)) AS i) i,
-        |       (SELECT UNNEST(range(0, 16)) AS j) j),
-        |jl_melt AS (
-        |  SELECT vec_id, CAST(k - 1 AS BIGINT) AS i,
-        |    CAST(ROUND(CAST(embedding[CAST(k AS INT)] AS DOUBLE) * 1000000)
-        |      AS BIGINT) AS xs
-        |  FROM (SELECT vec_id, embedding,
-        |          UNNEST(range(1, len(embedding) + 1)) AS k
-        |        FROM jl_corpus)),
-        |jl_red AS (
-        |  SELECT vec_id, j, CAST(SUM(xs * s) AS BIGINT) AS rv
-        |  FROM jl_melt JOIN jl_signs USING (i) GROUP BY vec_id, j),
-        |jl_n2 AS (
-        |  SELECT vec_id, CAST(SUM(rv * rv) AS BIGINT) AS n2
-        |  FROM jl_red GROUP BY vec_id),
-        |jl_dots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS nid,
-        |    CAST(SUM(q.rv * c.rv) AS BIGINT) AS dot
-        |  FROM jl_red q JOIN jl_red c ON q.j = c.j AND q.vec_id <> c.vec_id
-        |  WHERE q.vec_id % 100 = 0 AND q.vec_id < 1000000
-        |  GROUP BY q.vec_id, c.vec_id),
-        |jl_cos AS (
-        |  SELECT d.qid, d.nid,
-        |    CAST(d.dot AS DOUBLE) / (sqrt(CAST(nq.n2 AS DOUBLE))
-        |      * sqrt(CAST(nn.n2 AS DOUBLE))) AS redCosine
-        |  FROM jl_dots d
-        |  JOIN jl_n2 nq ON nq.vec_id = d.qid
-        |  JOIN jl_n2 nn ON nn.vec_id = d.nid),
-        |jl_top AS (
-        |  SELECT qid, nid AS redNn, redCosine FROM (
-        |    SELECT *, ROW_NUMBER() OVER (
-        |      PARTITION BY qid ORDER BY redCosine DESC, nid) AS rn
-        |    FROM jl_cos) WHERE rn = 1)
-        |SELECT b.qid, b.nid AS fullNn, b.cosine AS fullCosine,
-        |  t.redNn, t.redCosine, b.nid = t.redNn AS matched
-        |FROM (SELECT qid, nid, cosine FROM jl_brute WHERE rank = 1) b
-        |JOIN jl_top t USING (qid) ORDER BY b.qid""".stripMargin,
-    "sim4_ivf_recall" ->
-      s"""WITH $NormsSql,
-        |$BruteSql,
-        |${ivfSql(3)}
-        |SELECT b.qid, CAST(COUNT(i.nid) AS BIGINT) AS hits,
-        |  CAST(COUNT(i.nid) AS DOUBLE) / COUNT(*) AS recall
-        |FROM (SELECT qid, nid FROM bruteRanked WHERE rank <= 5) b
-        |LEFT JOIN (SELECT qid, nid FROM ivfRanked WHERE rank <= 5) i
-        |  ON b.qid = i.qid AND b.nid = i.nid
-        |GROUP BY b.qid ORDER BY b.qid""".stripMargin,
-    "sim2_ann_lsh" ->
-      s"""WITH $AnnCoreSql
-        |SELECT d.bucket, d.id1, d.id2, d.dot / (na.nrm * nb.nrm) AS cosine
-        |FROM dots d JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
-        |WHERE d.dot / (na.nrm * nb.nrm) >= 0.2
-        |ORDER BY d.id1, d.id2""".stripMargin,
-    "d5_embedding_neardup" ->
-      s"""WITH $AnnCoreSql,
-        |pairs AS (
-        |  SELECT d.id1, d.id2
-        |  FROM dots d JOIN norms na ON na.vec_id = d.id1 JOIN norms nb ON nb.vec_id = d.id2
-        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2)
-        |SELECT id2 AS id, MIN(id1) AS keepId, COUNT(*) AS nearDups
-        |FROM pairs GROUP BY id2 ORDER BY id""".stripMargin,
-    "sim3_ivf" ->
-      s"""WITH $NormsSql,
-        |${ivfSql(3)}
-        |SELECT qid, nid, cellId, cosine, rank FROM ivfRanked
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "sim5_pq_adc" ->
-      s"""WITH ${pqSql(3)}
-        |SELECT qid, vec_id AS nid, adcDist, rank FROM adcRanked
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "sim6_pq_recall" ->
-      s"""WITH ${pqSql(3)},
-        |$ExactL2Sql
-        |SELECT e.qid, COUNT(a.vec_id) AS hits,
-        |  CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*) AS recall
-        |FROM (SELECT qid, nid FROM exRanked WHERE rank <= 5) e
-        |LEFT JOIN (SELECT qid, vec_id FROM adcRanked WHERE rank <= 5) a
-        |  ON a.qid = e.qid AND a.vec_id = e.nid
-        |GROUP BY e.qid ORDER BY e.qid""".stripMargin,
-    "sim9_ivfpq_adc" ->
-      s"""WITH $NormsSql,
-        |${ivfPqSql(3)}
-        |SELECT qid, vec_id AS nid, adcDist, rank FROM ivfadcRanked
-        |WHERE rank <= 5 ORDER BY qid, rank""".stripMargin,
-    "sim10_ivfpq_recall" ->
-      s"""WITH $NormsSql,
-        |${ivfPqSql(3)},
-        |$ExactL2Sql
-        |SELECT e.qid, COUNT(a.vec_id) AS hits,
-        |  CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*) AS recall
-        |FROM (SELECT qid, nid FROM exRanked WHERE rank <= 5) e
-        |LEFT JOIN (SELECT qid, vec_id FROM ivfadcRanked WHERE rank <= 5) a
-        |  ON a.qid = e.qid AND a.vec_id = e.nid
-        |GROUP BY e.qid ORDER BY e.qid""".stripMargin,
-    "sim11_ivfpq_ingest" ->
-      s"""WITH $NormsSql,
-        |${ivfPqSql(2, trainFilter = "vec_id % 7 <> 3",
-                    corpusFilter = "vec_id % 7 <> 3",
-                    queryFilter = "vec_id % 7 = 3")}
-        |SELECT qid, vec_id AS nid, adcDist, rank FROM ivfadcRanked
-        |WHERE rank <= 3 ORDER BY qid, rank""".stripMargin,
-    // the served vote: sim11's full IVF-PQ oracle chain, then the
-    // sim13 tally on the ADC top-3
-    "sim14_knn_classify_ivf" ->
-      s"""WITH $NormsSql,
-        |${ivfPqSql(2, trainFilter = "vec_id % 7 <> 3",
-                    corpusFilter = "vec_id % 7 <> 3",
-                    queryFilter = "vec_id % 7 = 3")},
-        |topk AS (SELECT qid, vec_id AS nid FROM ivfadcRanked WHERE rank <= 3),
-        |tally AS (
-        |  SELECT t.qid, CAST(e.label AS BIGINT) AS nlabel, COUNT(*) AS votes
-        |  FROM topk t JOIN embeddings e ON e.vec_id = t.nid
-        |  GROUP BY t.qid, CAST(e.label AS BIGINT)),
-        |pick AS (
-        |  SELECT qid, nlabel, votes,
-        |    ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY votes DESC, nlabel ASC) AS rk
-        |  FROM tally)
-        |SELECT q.vec_id AS qid, CAST(q.label AS BIGINT) AS trueLabel,
-        |  p.nlabel AS predLabel, CAST(p.votes AS BIGINT) AS votes,
-        |  CAST(CASE WHEN p.nlabel = CAST(q.label AS BIGINT)
-        |    THEN 1 ELSE 0 END AS BIGINT) AS correct
-        |FROM embeddings q LEFT JOIN pick p ON p.qid = q.vec_id AND p.rk = 1
-        |WHERE q.vec_id % 7 = 3
-        |ORDER BY qid""".stripMargin,
-    "t1_lang_id" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents),
-        |sc AS (
-        |  SELECT doc_id, lang,
-        |    len(list_filter(w, x -> x IN ('the','a','of','and','to'))) AS en,
-        |    len(list_filter(w, x -> x IN ('data','row','query','tabla','fila'))) AS es,
-        |    len(list_filter(w, x -> x IN ('der','die','das','und','ist'))) AS de
-        |  FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN en >= es AND en >= de AND en > 0 THEN 'en'
-        |       WHEN es >= de AND es > 0 THEN 'es'
-        |       WHEN de > 0 THEN 'de'
-        |       ELSE 'und' END AS predLang
-        |FROM sc ORDER BY doc_id""".stripMargin,
-    "t2_quality_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, n_chars, text,
-        |    regexp_extract_all(lower(text), '[a-z0-9]+') AS w FROM documents),
-        |f AS (
-        |  SELECT doc_id, len(w) AS nTokens,
-        |    CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
-        |    CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
-        |      ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
-        |    CASE WHEN n_chars > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / n_chars ELSE 0.0 END AS punctRatio,
-        |    CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
-        |  FROM t)
-        |SELECT doc_id, nTokens,
-        |  meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
-        |FROM f ORDER BY doc_id""".stripMargin,
-    "t3_token_count" ->
-      """SELECT doc_id,
-        |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS wsTokens,
-        |  len(regexp_extract_all(lower(text), '[a-z]{1,4}|[0-9]|[^a-z0-9 ]')) AS bpeTokens,
-        |  CAST(ceil(CAST(n_chars AS DOUBLE) / 4.0) AS BIGINT) AS approxTokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "t6_decontaminate" ->
-      """WITH words AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 3
-        |    THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w)-1)]
-        |    ELSE [] END) AS shingle
-        |  FROM words),
-        |shd AS (SELECT DISTINCT doc_id, shingle FROM sh)
-        |SELECT t.doc_id AS trainId, e.doc_id AS evalId,
-        |       COUNT(*) AS sharedShingles
-        |FROM shd t JOIN shd e ON t.shingle = e.shingle
-        |WHERE t.doc_id % 97 <> 0 AND e.doc_id % 97 = 0
-        |GROUP BY 1, 2 HAVING COUNT(*) >= 2
-        |ORDER BY trainId, evalId""".stripMargin,
-    "t4_fingerprint" ->
-      """SELECT doc_id,
-        |  array_to_string((list_sort(list_transform(
-        |    list_distinct(regexp_extract_all(lower(text), '[a-z0-9]+')),
-        |    x -> md5(x))))[1:4], ',') AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "m1_media_meta" ->
-      """SELECT doc_id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
-        |  octet_length(encode(text)) AS byteLen,
-        |  hex(encode(substr(text, 1, 4))) AS headerHex
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "f13_codec_matrix" ->
-      s"""SELECT c.codec, s.n, s.keySum, s.nameLen
-        |FROM (VALUES ${graft.sources.Formats.Codecs.sorted
-            .map(c => s"('$c')").mkString(", ")}) AS c(codec)
-        |CROSS JOIN (
-        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS keySum,
-        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
-        |  FROM supplier) s
-        |ORDER BY c.codec""".stripMargin,
-    "f14_record_io" ->
-      """SELECT f.format, s.n, s.idSum, s.payloadLen, s.distinctPayloads
-        |FROM (VALUES ('csv'), ('json')) AS f(format)
-        |CROSS JOIN (
-        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS idSum,
-        |         CAST(SUM(length(s_name) + 3) AS BIGINT) AS payloadLen,
-        |         COUNT(DISTINCT s_name || ',"q') AS distinctPayloads
-        |  FROM supplier) s
-        |ORDER BY f.format""".stripMargin,
-    // the ARRAY_AGG(x ORDER BY shared DESC, cid ASC)[1] pick is the
-    // oracle's argmax — same (sharedChunks desc, id asc) best-match
-    // rule the Spark struct-max encodes
-    "m6_payload_incremental" ->
-      """WITH m6_stand AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |m6_batch AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 15 = 0
-        |  UNION ALL
-        |  SELECT doc_id, text FROM documents
-        |  WHERE doc_id % 5 = 0 AND doc_id % 3 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text || ' v2' FROM documents
-        |  WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0),
-        |m6_if AS (SELECT doc_id AS cid, md5(text) AS h FROM m6_stand),
-        |m6_ic AS (
-        |  SELECT doc_id AS cid, i - 1 AS ci,
-        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
-        |  FROM (SELECT doc_id, text,
-        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
-        |        FROM m6_stand)),
-        |m6_okb AS (SELECT ci, ch FROM m6_ic GROUP BY ci, ch HAVING COUNT(*) <= 64),
-        |m6_icp AS (SELECT c.cid, c.ci, c.ch FROM m6_ic c JOIN m6_okb USING (ci, ch)),
-        |m6_bf AS (SELECT doc_id, md5(text) AS bh FROM m6_batch),
-        |m6_bc AS (
-        |  SELECT doc_id, i - 1 AS ci,
-        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
-        |  FROM (SELECT doc_id, text,
-        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
-        |        FROM m6_batch)),
-        |m6_ex AS (
-        |  SELECT b.doc_id, MIN(i.cid) AS exactOf
-        |  FROM m6_bf b JOIN m6_if i ON b.bh = i.h GROUP BY 1),
-        |m6_nr0 AS (
-        |  SELECT b.doc_id, i.cid, COUNT(*) AS shared
-        |  FROM m6_bc b JOIN m6_icp i ON b.ci = i.ci AND b.ch = i.ch
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |m6_nr AS (
-        |  SELECT doc_id,
-        |    (ARRAY_AGG(cid ORDER BY shared DESC, cid ASC))[1] AS nearOf,
-        |    (ARRAY_AGG(shared ORDER BY shared DESC, cid ASC))[1] AS nearShared
-        |  FROM m6_nr0 GROUP BY doc_id)
-        |SELECT b.doc_id,
-        |  CASE WHEN e.exactOf IS NOT NULL THEN 'exact_dup'
-        |       WHEN n.nearOf IS NOT NULL THEN 'near_dup'
-        |       ELSE 'unique' END AS verdict,
-        |  COALESCE(e.exactOf, n.nearOf) AS matchId,
-        |  CASE WHEN e.exactOf IS NULL THEN n.nearShared END AS sharedChunks
-        |FROM m6_batch b
-        |LEFT JOIN m6_ex e USING (doc_id)
-        |LEFT JOIN m6_nr n USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // same corpus derivation; DuckDB md5(VARCHAR) hashes the same utf-8
-    // bytes Spark's md5(BINARY payload) does for this ASCII corpus
-    "m5_payload_dedup" ->
-      """WITH m5_corp AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text || ' v2' FROM documents WHERE doc_id % 11 = 0),
-        |m5_full AS (SELECT doc_id, md5(text) AS h FROM m5_corp),
-        |m5_ch AS (
-        |  SELECT doc_id, i - 1 AS ci,
-        |    md5(substr(text, CAST((i - 1) * 64 + 1 AS INT), 64)) AS ch
-        |  FROM (SELECT doc_id, text,
-        |          UNNEST(range(1, GREATEST(CAST(ceil(length(text) / 64.0) AS BIGINT), 1) + 1)) AS i
-        |        FROM m5_corp)),
-        |m5_b AS (SELECT ci, ch FROM m5_ch GROUP BY ci, ch HAVING COUNT(*) <= 64),
-        |m5_chp AS (SELECT c.doc_id, c.ci, c.ch FROM m5_ch c JOIN m5_b USING (ci, ch)),
-        |m5_p AS (
-        |  SELECT a.doc_id AS id1, b.doc_id AS id2, COUNT(*) AS sharedChunks
-        |  FROM m5_chp a JOIN m5_chp b ON a.ci = b.ci AND a.ch = b.ch
-        |    AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT p.id1, p.id2, p.sharedChunks, fa.h = fb.h AS exactDup
-        |FROM m5_p p
-        |JOIN m5_full fa ON fa.doc_id = p.id1
-        |JOIN m5_full fb ON fb.doc_id = p.id2
-        |ORDER BY id1, id2""".stripMargin,
-    // the same grid/dHash; index-side band melt with the cap, batch
-    // bands probe it, best match = min (hamming, id) within threshold
-    "m8_phash_incremental" ->
-      s"""WITH m8_s AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |m8_b AS (
-        |  SELECT doc_id + 3000000 AS doc_id, text FROM documents
-        |  WHERE doc_id % 15 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 4000000,
-        |    substr(text, 1, greatest(length(text) - 5, 0)) || 'qqqqq'
-        |  FROM documents WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 5000000, text FROM documents
-        |  WHERE doc_id % 5 = 0 AND doc_id % 3 <> 0),
-        |m8_sg AS (
-        |  SELECT doc_id,
-        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
-        |     FOR k IN range(0, 72)] AS g
-        |  FROM m8_s),
-        |m8_bg AS (
-        |  SELECT doc_id,
-        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
-        |     FOR k IN range(0, 72)] AS g
-        |  FROM m8_b),
-        |m8_sh AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m8_sg),
-        |m8_bh AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m8_bg),
-        |m8_im AS (
-        |  SELECT doc_id, dh, t AS bandIdx,
-        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
-        |  FROM m8_sh, (SELECT UNNEST(range(0, 8)) AS t)),
-        |m8_keep AS (
-        |  SELECT bandIdx, bandVal FROM m8_im
-        |  GROUP BY 1, 2 HAVING COUNT(*) <= 256),
-        |m8_ik AS (SELECT m8_im.* FROM m8_im JOIN m8_keep
-        |  USING (bandIdx, bandVal)),
-        |m8_bm AS (
-        |  SELECT doc_id, dh, t AS bandIdx,
-        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
-        |  FROM m8_bh, (SELECT UNNEST(range(0, 8)) AS t)),
-        |m8_best AS (
-        |  SELECT doc_id, matchId, hamming FROM (
-        |    SELECT b.doc_id, i.doc_id AS matchId,
-        |      CAST(bit_count(CAST(xor(b.dh, i.dh) AS BIT)) AS INT)
-        |        AS hamming,
-        |      ROW_NUMBER() OVER (PARTITION BY b.doc_id
-        |        ORDER BY bit_count(CAST(xor(b.dh, i.dh) AS BIT)),
-        |          i.doc_id) AS rn
-        |    FROM m8_bm b JOIN m8_ik i
-        |      ON b.bandIdx = i.bandIdx AND b.bandVal = i.bandVal
-        |    WHERE bit_count(CAST(xor(b.dh, i.dh) AS BIT)) <= 6)
-        |  WHERE rn = 1)
-        |SELECT b.doc_id,
-        |  CASE WHEN e.hamming = 0 THEN 'exact_phash'
-        |       WHEN e.hamming IS NOT NULL THEN 'near_dup'
-        |       ELSE 'unique' END AS verdict,
-        |  e.matchId, e.hamming
-        |FROM m8_bh b LEFT JOIN m8_best e USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-    // the same sampled grid, 64-term dHash sum (k=63 spelled as the
-    // signed-long min expression), byte-band melt with the bucket cap,
-    // exact-hamming filter on candidates
-    "m7_phash_neardup" ->
-      s"""WITH m7_m AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000,
-        |    substr(text, 1, greatest(length(text) - 5, 0)) || 'qqqqq'
-        |  FROM documents WHERE doc_id % 11 = 0),
-        |m7_g AS (
-        |  SELECT doc_id,
-        |    [ascii(substr(text, CAST((length(text) * k) // 72 AS INT) + 1, 1))
-        |     FOR k IN range(0, 72)] AS g
-        |  FROM m7_m),
-        |m7_h AS (SELECT doc_id, CAST($M7DHashSql AS BIGINT) AS dh FROM m7_g),
-        |m7_melt AS (
-        |  SELECT doc_id, dh, t AS bandIdx,
-        |    (dh >> (8 * CAST(t AS INT))) & 255 AS bandVal
-        |  FROM m7_h, (SELECT UNNEST(range(0, 8)) AS t)),
-        |m7_keep AS (
-        |  SELECT bandIdx, bandVal FROM m7_melt
-        |  GROUP BY 1, 2 HAVING COUNT(*) <= 256),
-        |m7_km AS (SELECT m7_melt.* FROM m7_melt JOIN m7_keep
-        |  USING (bandIdx, bandVal))
-        |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-        |  CAST(bit_count(CAST(xor(a.dh, b.dh) AS BIT)) AS INT) AS hamming,
-        |  a.dh = b.dh AS exactHash
-        |FROM m7_km a JOIN m7_km b
-        |  ON a.bandIdx = b.bandIdx AND a.bandVal = b.bandVal
-        |  AND a.doc_id < b.doc_id
-        |WHERE bit_count(CAST(xor(a.dh, b.dh) AS BIT)) <= 6
-        |ORDER BY id1, id2""".stripMargin,
-    "f15_fs_schemes" ->
-      """SELECT f.scheme, s.n, s.keySum, s.nameLen
-        |FROM (VALUES ('har'), ('viewfs')) AS f(scheme)
-        |CROSS JOIN (
-        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS keySum,
-        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
-        |  FROM supplier) s
-        |ORDER BY f.scheme""".stripMargin,
-    "f16_encoder_roundtrip" ->
-      """SELECT f.codec, s.n, s.idSum, s.nameLen
-        |FROM (VALUES ('kryo'), ('product')) AS f(codec)
-        |CROSS JOIN (
-        |  SELECT COUNT(*) AS n, CAST(SUM(s_suppkey) AS BIGINT) AS idSum,
-        |         CAST(SUM(length(s_name)) AS BIGINT) AS nameLen
-        |  FROM supplier) s
-        |ORDER BY f.codec""".stripMargin,
-    "f1_seqfile_roundtrip" ->
-      """SELECT CAST(doc_id AS STRING) AS key, text AS value
-        |FROM documents ORDER BY key""".stripMargin,
-    "f2_seqfile_merge" ->
-      """SELECT key, value FROM (
-        |  SELECT CAST(doc_id AS STRING) AS key, text AS value
-        |  FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT CAST(doc_id AS STRING), text
-        |  FROM documents WHERE doc_id % 3 = 0) u
-        |ORDER BY key, value""".stripMargin,
-    "f3_mapfile_read" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
-        |FROM supplier ORDER BY key""".stripMargin,
-    "f4_tfile_roundtrip" ->
-      """SELECT CAST(p_partkey AS VARCHAR) AS key, p_name AS value
-        |FROM part ORDER BY key""".stripMargin,
-    "f5_tfile_seek" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
-        |FROM supplier WHERE s_suppkey = 7 ORDER BY key""".stripMargin,
-    "f6_setfile_keys" ->
-      "SELECT n_name AS key FROM nation ORDER BY key",
-    "f8_mapfile_write" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS key, c_name AS value
-        |FROM customer ORDER BY key""".stripMargin,
-    "f7_bloom_get" ->
-      """SELECT CAST(s_suppkey AS VARCHAR) AS key, s_name AS value
-        |FROM supplier WHERE s_suppkey = 9 ORDER BY key""".stripMargin,
-    // planted JPEG rows: geometry is pinned exactly (id-derived dims),
-    // the luma band is pinned as TRUE, byteLen NULL on both sides
-    "m2_decode_meta" ->
-      """SELECT doc_id,
-        |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS byteLen,
-        |  CAST(16 + octet_length(encode(text)) % 64 AS INT) AS width,
-        |  CAST(CASE WHEN doc_id % 3 = 1 THEN 1
-        |       ELSE 16 + (octet_length(encode(text)) // 64) % 64 END AS INT) AS height,
-        |  CAST(NULL AS BOOLEAN) AS lumaOk
-        |FROM documents
-        |UNION ALL
-        |SELECT doc_id + 6000000 AS doc_id, 'image' AS modality,
-        |  CAST(NULL AS BIGINT) AS byteLen,
-        |  CAST(16 + doc_id % 13 AS INT) AS width,
-        |  CAST(8 + doc_id % 7 AS INT) AS height,
-        |  TRUE AS lumaOk
-        |FROM documents WHERE doc_id % 97 = 0
-        |ORDER BY doc_id""".stripMargin,
-    // stride sampling mirror: stride = max(1, len div 8); positions
-    // 0, stride, 2*stride, ... capped at 8 samples (w*h = 4*2)
-    "m4_resize" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |    (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
-        |    text, length(text) AS len
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, modality, text, len,
-        |    GREATEST(1, len // 8) AS stride
-        |  FROM m),
-        |t AS (
-        |  SELECT doc_id, modality,
-        |    array_to_string([substr(text, 1 + i*stride, 1)
-        |      FOR i IN range(0, LEAST(8,
-        |        CAST(CEIL(CAST(len AS DOUBLE) / stride) AS BIGINT)))], '') AS thumb
-        |  FROM p)
-        |SELECT doc_id, modality, 4 AS width, 2 AS height,
-        |  md5(thumb) AS thumbHash, length(thumb) AS thumbBytes,
-        |  CAST(NULL AS BOOLEAN) AS jpegRoundtrip
-        |FROM t
-        |UNION ALL
-        |SELECT doc_id + 6000000 AS doc_id, 'image' AS modality,
-        |  4 AS width, 2 AS height,
-        |  CAST(NULL AS VARCHAR) AS thumbHash, CAST(NULL AS BIGINT) AS thumbBytes,
-        |  TRUE AS jpegRoundtrip
-        |FROM documents WHERE doc_id % 97 = 0
-        |ORDER BY doc_id""".stripMargin,
-    // NB: char-substr == byte-substr here because the documents corpus is
-    // pure ASCII at every sf (verified); DuckDB lacks substring-on-BLOB
-    "m3_frame_sample" ->
-      """SELECT doc_id,
-        |  (CAST(CEIL(octet_length(encode(text)) / 256.0) AS BIGINT) + 1) // 2 AS nFrames,
-        |  hex(encode(substr(text, 1, 256))) AS firstFrameHex
-        |FROM documents
-        |WHERE doc_id % 3 = 2 AND length(text) > 0 -- empty payload → no frames
-        |ORDER BY doc_id""".stripMargin,
-    "e1_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) AS tsn FROM events),
-        |l AS (
-        |  SELECT user_id,
-        |    LAG(tsn, 1) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS prevTs,
-        |    tsn
-        |  FROM e)
-        |SELECT user_id, COUNT(*) AS events,
-        |  CAST(SUM(CASE WHEN prevTs IS NULL OR tsn - prevTs > 1800000000000 THEN 1 ELSE 0 END) AS BIGINT) AS sessions
-        |FROM l GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "e3_json_extract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS totalK,
-        |  CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS maxK
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "e2_window_agg" ->
-      """SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS totalValue
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    // identical to e2's oracle — the streamed aggregation must land on
-    // exactly the batch result
-    "e4_stream_window_parity" ->
-      """SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS totalValue
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    // transitive closure via recursive CTE = the label-propagation loop's
-    // fixpoint: min reachable id per node
-    "d7_dup_clusters" ->
-      s"""WITH RECURSIVE $MinhashSql,
-        |edges AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
-        |und AS (SELECT id1 AS a, id2 AS b FROM edges
-        |        UNION ALL SELECT id2, id1 FROM edges),
-        |nodes AS (SELECT DISTINCT a AS id FROM und),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT u.a AS id, reach.r FROM und u JOIN reach ON u.b = reach.id),
-        |lab AS (SELECT id AS doc_id, MIN(r) AS clusterId FROM reach GROUP BY id)
-        |SELECT doc_id, clusterId,
-        |  COUNT(*) OVER (PARTITION BY clusterId) AS clusterSize
-        |FROM lab ORDER BY doc_id""".stripMargin,
-    // d7's recursive components + the t2 quality formula (nChars =
-    // length(text) for the re-keyed corpus rows), FIRST_VALUE argmax
-    "d16_cluster_best" ->
-      s"""WITH RECURSIVE $MinhashSql,
-        |edges AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
-        |und AS (SELECT id1 AS a, id2 AS b FROM edges
-        |        UNION ALL SELECT id2, id1 FROM edges),
-        |nodes AS (SELECT DISTINCT a AS id FROM und),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT u.a AS id, reach.r FROM und u JOIN reach ON u.b = reach.id),
-        |lab AS (SELECT id AS doc_id, MIN(r) AS clusterId FROM reach GROUP BY id),
-        |d16_f AS (
-        |  SELECT doc_id, len(w) AS nTok, text,
-        |    CASE WHEN len(w) > 0 THEN CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / len(w) ELSE 0.0 END AS meanLen,
-        |    CASE WHEN len(w) > 0 THEN CAST(len(list_filter(w, x -> x IN
-        |      ('the','a','of','and','to','data','row','query','tabla','fila','der','die','das','und','ist'))) AS DOUBLE) / len(w) ELSE 0.0 END AS stopRatio,
-        |    CASE WHEN length(text) > 0 THEN CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) ELSE 0.0 END AS punctRatio,
-        |    CASE WHEN len(w) >= 20 THEN 25.0 ELSE 0.0 END AS bonus
-        |  FROM words JOIN corpus USING (doc_id)),
-        |d16_scored AS (
-        |  SELECT doc_id,
-        |    meanLen * 10.0 + stopRatio * 50.0 - punctRatio * 100.0 + bonus AS score
-        |  FROM d16_f),
-        |d16_lab AS (
-        |  SELECT s.doc_id, COALESCE(lab.clusterId, s.doc_id) AS clusterId, s.score
-        |  FROM d16_scored s LEFT JOIN lab ON lab.doc_id = s.doc_id),
-        |d16_rep AS (
-        |  SELECT doc_id, clusterId, score,
-        |    FIRST_VALUE(doc_id) OVER (PARTITION BY clusterId
-        |      ORDER BY score DESC, doc_id ASC) AS repId
-        |  FROM d16_lab)
-        |SELECT doc_id, clusterId, repId, doc_id = repId AS keep, score
-        |FROM d16_rep ORDER BY doc_id""".stripMargin,
-    "t7_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    GREATEST(CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT), 1) AS tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, shard, tok,
-        |    SUM(tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumEnd
-        |  FROM t)
-        |SELECT doc_id, shard, tok, CAST(cumEnd AS BIGINT) AS cumEnd,
-        |  CAST(FLOOR(CAST(cumEnd - tok AS DOUBLE) / 512.0) AS BIGINT) AS startBin,
-        |  CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS endBin,
-        |  CAST(FLOOR(CAST(cumEnd - tok AS DOUBLE) / 512.0) AS BIGINT) <>
-        |    CAST(FLOOR(CAST(cumEnd - 1 AS DOUBLE) / 512.0) AS BIGINT) AS straddles
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "t8_pii_scrub" ->
-      """WITH d AS (
-        |  SELECT doc_id, text || ' Contact: user' || CAST(doc_id AS VARCHAR)
-        |    || '@example.com or +1-555-'
-        |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS dirty
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    len(regexp_extract_all(lower(dirty),
-        |      '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS nEmails,
-        |    len(regexp_extract_all(lower(dirty),
-        |      '(\+?[0-9]{1,3}[-. ])?(\([0-9]{3}\)[ ]?|[0-9]{3}[-. ])?[0-9]{3}[-. ][0-9]{4}')) AS nPhones,
-        |    trim(regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(lower(dirty),
-        |          '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<email>', 'g'),
-        |        '(\+?[0-9]{1,3}[-. ])?(\([0-9]{3}\)[ ]?|[0-9]{3}[-. ])?[0-9]{3}[-. ][0-9]{4}', '<phone>', 'g'),
-        |      '\s+', ' ', 'g')) AS clean
-        |  FROM d)
-        |SELECT doc_id, nEmails, nPhones, md5(clean) AS cleanHash
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "t9_repetition" ->
-      """WITH w AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents),
-        |tok AS (SELECT doc_id, UNNEST(w) AS t FROM w),
-        |pt AS (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY doc_id, t),
-        |ts AS (
-        |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS nTok,
-        |    COUNT(*) AS distinctTok, MAX(c) AS topCnt
-        |  FROM pt GROUP BY doc_id),
-        |g2 AS (
-        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 2
-        |    THEN [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]
-        |    ELSE [] END) AS s
-        |  FROM w),
-        |p2 AS (SELECT doc_id, s, COUNT(*) AS c2 FROM g2 GROUP BY doc_id, s),
-        |s2 AS (
-        |  SELECT doc_id, CAST(SUM(c2) AS BIGINT) AS n2, COUNT(*) AS distinct2
-        |  FROM p2 GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(ts.nTok, 0) AS nTok,
-        |  CASE WHEN ts.nTok > 0
-        |    THEN CAST(ts.distinctTok AS DOUBLE) / ts.nTok ELSE 0.0 END AS distinctRatio,
-        |  CASE WHEN ts.nTok > 0
-        |    THEN CAST(ts.topCnt AS DOUBLE) / ts.nTok ELSE 0.0 END AS topTokenRatio,
-        |  CASE WHEN s2.n2 > 0
-        |    THEN CAST(s2.n2 - s2.distinct2 AS DOUBLE) / s2.n2 ELSE 0.0 END AS dupBigramRatio
-        |FROM documents d
-        |LEFT JOIN ts ON d.doc_id = ts.doc_id
-        |LEFT JOIN s2 ON d.doc_id = s2.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "t11_distinctive_terms" ->
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        |  FROM documents),
-        |tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM tok GROUP BY doc_id, w),
-        |docFreq AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-        |r AS (
-        |  SELECT tf.doc_id, tf.w, tf.tf, docFreq.df,
-        |    CAST(tf.tf AS DOUBLE) / docFreq.df AS score,
-        |    ROW_NUMBER() OVER (PARTITION BY tf.doc_id
-        |      ORDER BY CAST(tf.tf AS DOUBLE) / docFreq.df DESC, tf.w) AS rank
-        |  FROM tf JOIN docFreq ON tf.w = docFreq.w)
-        |SELECT doc_id, w, tf, df, score, rank FROM r
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "d8_incremental_dedup" ->
-      s"""WITH $CorpusSql,
-        |idx AS (
-        |  SELECT sha256(text) AS contentHash, MIN(doc_id) AS existingKeepId
-        |  FROM corpus WHERE doc_id % 3 <> 0 GROUP BY sha256(text)),
-        |b AS (
-        |  SELECT doc_id, sha256(text) AS contentHash,
-        |    MIN(doc_id) OVER (PARTITION BY sha256(text)) AS batchKeepId
-        |  FROM corpus WHERE doc_id % 3 = 0)
-        |SELECT b.doc_id,
-        |  CASE WHEN idx.existingKeepId IS NOT NULL THEN 'dup_of_existing'
-        |       WHEN b.doc_id <> b.batchKeepId THEN 'dup_in_batch'
-        |       ELSE 'unique' END AS status,
-        |  COALESCE(idx.existingKeepId, b.batchKeepId) AS keepId
-        |FROM b LEFT JOIN idx ON b.contentHash = idx.contentHash
-        |ORDER BY b.doc_id""".stripMargin,
-    "d10_incremental_lsh" ->
-      s"""WITH $MinhashSql,
-        |mlt AS (
-        |  SELECT doc_id, bandIdx,
-        |    CASE bandIdx WHEN 0 THEN b0 WHEN 1 THEN b1 WHEN 2 THEN b2 ELSE b3 END AS bandKey
-        |  FROM band CROSS JOIN (SELECT UNNEST(range(0,4)) AS bandIdx) u),
-        |candI AS (
-        |  SELECT DISTINCT bt.doc_id AS bid, ex.doc_id AS exId
-        |  FROM mlt bt JOIN mlt ex ON bt.bandIdx = ex.bandIdx AND bt.bandKey = ex.bandKey
-        |  WHERE bt.doc_id % 3 = 0 AND ex.doc_id % 3 <> 0),
-        |estI AS (
-        |  SELECT c.bid, c.exId,
-        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
-        |    ) / 8.0 AS est
-        |  FROM candI c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.exId),
-        |aggI AS (
-        |  SELECT bid, MIN(exId) AS matchId, MAX(est) AS bestEst, COUNT(*) AS nearDups
-        |  FROM estI WHERE est >= 0.5 GROUP BY bid),
-        |candB AS (
-        |  SELECT DISTINCT bt.doc_id AS bid, kp.doc_id AS kbid
-        |  FROM mlt bt JOIN mlt kp ON bt.bandIdx = kp.bandIdx AND bt.bandKey = kp.bandKey
-        |  WHERE bt.doc_id % 3 = 0 AND kp.doc_id % 3 = 0 AND kp.doc_id < bt.doc_id),
-        |estB AS (
-        |  SELECT c.bid, c.kbid,
-        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
-        |    ) / 8.0 AS est
-        |  FROM candB c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.kbid),
-        |aggB AS (
-        |  SELECT bid, MIN(kbid) AS bMatchId, MAX(est) AS bBest, COUNT(*) AS bN
-        |  FROM estB WHERE est >= 0.5 GROUP BY bid)
-        |SELECT t.doc_id,
-        |  CASE WHEN a.matchId IS NOT NULL THEN 'near_dup'
-        |       WHEN g.bMatchId IS NOT NULL THEN 'near_dup_in_batch'
-        |       ELSE 'unique' END AS status,
-        |  COALESCE(a.matchId, g.bMatchId) AS matchId,
-        |  CASE WHEN a.matchId IS NOT NULL THEN a.bestEst ELSE g.bBest END AS bestEst,
-        |  COALESCE(a.nearDups, 0) + COALESCE(g.bN, 0) AS nearDups
-        |FROM (SELECT doc_id FROM corpus WHERE doc_id % 3 = 0) t
-        |LEFT JOIN aggI a ON a.bid = t.doc_id
-        |LEFT JOIN aggB g ON g.bid = t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-    // the d10 serve chain + the d2 full-corpus pair truth in one replay:
-    // the agree column's consistency contract is itself hash-gated
-    "d18_lsh_serve" ->
-      s"""WITH $MinhashSql,
-        |mlt AS (
-        |  SELECT doc_id, bandIdx,
-        |    CASE bandIdx WHEN 0 THEN b0 WHEN 1 THEN b1 WHEN 2 THEN b2 ELSE b3 END AS bandKey
-        |  FROM band CROSS JOIN (SELECT UNNEST(range(0,4)) AS bandIdx) u),
-        |candI AS (
-        |  SELECT DISTINCT bt.doc_id AS bid, ex.doc_id AS exId
-        |  FROM mlt bt JOIN mlt ex ON bt.bandIdx = ex.bandIdx AND bt.bandKey = ex.bandKey
-        |  WHERE bt.doc_id % 3 = 0 AND ex.doc_id % 3 <> 0),
-        |estI AS (
-        |  SELECT c.bid, c.exId,
-        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
-        |    ) / 8.0 AS est
-        |  FROM candI c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.exId),
-        |aggI AS (
-        |  SELECT bid, MIN(exId) AS matchId, MAX(est) AS bestEst, COUNT(*) AS nearDups
-        |  FROM estI WHERE est >= 0.5 GROUP BY bid),
-        |candB AS (
-        |  SELECT DISTINCT bt.doc_id AS bid, kp.doc_id AS kbid
-        |  FROM mlt bt JOIN mlt kp ON bt.bandIdx = kp.bandIdx AND bt.bandKey = kp.bandKey
-        |  WHERE bt.doc_id % 3 = 0 AND kp.doc_id % 3 = 0 AND kp.doc_id < bt.doc_id),
-        |estB AS (
-        |  SELECT c.bid, c.kbid,
-        |    ((CASE WHEN a.m0=b.m0 THEN 1 ELSE 0 END) + (CASE WHEN a.m1=b.m1 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m2=b.m2 THEN 1 ELSE 0 END) + (CASE WHEN a.m3=b.m3 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m4=b.m4 THEN 1 ELSE 0 END) + (CASE WHEN a.m5=b.m5 THEN 1 ELSE 0 END) +
-        |     (CASE WHEN a.m6=b.m6 THEN 1 ELSE 0 END) + (CASE WHEN a.m7=b.m7 THEN 1 ELSE 0 END)
-        |    ) / 8.0 AS est
-        |  FROM candB c JOIN band a ON a.doc_id = c.bid JOIN band b ON b.doc_id = c.kbid),
-        |aggB AS (
-        |  SELECT bid, MIN(kbid) AS bMatchId, MAX(est) AS bBest, COUNT(*) AS bN
-        |  FROM estB WHERE est >= 0.5 GROUP BY bid),
-        |served AS (
-        |  SELECT t.doc_id,
-        |    CASE WHEN a.matchId IS NOT NULL THEN 'near_dup'
-        |         WHEN g.bMatchId IS NOT NULL THEN 'near_dup_in_batch'
-        |         ELSE 'unique' END AS status,
-        |    COALESCE(a.matchId, g.bMatchId) AS matchId,
-        |    CASE WHEN a.matchId IS NOT NULL THEN a.bestEst ELSE g.bBest END AS bestEst,
-        |    COALESCE(a.nearDups, 0) + COALESCE(g.bN, 0) AS nearDups
-        |  FROM (SELECT doc_id FROM corpus WHERE doc_id % 3 = 0) t
-        |  LEFT JOIN aggI a ON a.bid = t.doc_id
-        |  LEFT JOIN aggB g ON g.bid = t.doc_id),
-        |hits AS (SELECT id1, id2 FROM pairs WHERE estJaccard >= 0.5),
-        |nbrs AS (
-        |  SELECT doc_id, MIN(nbr) AS batchMinNbr FROM (
-        |    SELECT id1 AS doc_id, id2 AS nbr FROM hits
-        |    UNION ALL
-        |    SELECT id2 AS doc_id, id1 AS nbr FROM hits) u
-        |  GROUP BY doc_id)
-        |SELECT s.doc_id, s.status, s.matchId, s.bestEst, s.nearDups,
-        |  n.batchMinNbr,
-        |  CAST(CASE WHEN s.status <> 'unique'
-        |    THEN CASE WHEN n.batchMinNbr IS NOT NULL THEN 1 ELSE 0 END
-        |    ELSE CASE WHEN n.batchMinNbr IS NULL OR n.batchMinNbr > s.doc_id
-        |         THEN 1 ELSE 0 END
-        |  END AS BIGINT) AS agree
-        |FROM served s LEFT JOIN nbrs n ON n.doc_id = s.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-    "t10_stratified_sample" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    ((instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),1,1))-1)*4096 +
-        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),2,1))-1)*256 +
-        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),3,1))-1)*16 +
-        |     (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)),4,1))-1)) % 100 AS bucket
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, lang, bucket,
-        |    bucket < (CASE lang WHEN 'en' THEN 25 WHEN 'es' THEN 50
-        |              WHEN 'de' THEN 75 ELSE 100 END) AS keep
-        |  FROM b)
-        |SELECT lang, COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM k GROUP BY lang ORDER BY lang""".stripMargin,
-    "d11_cdc_chunks" ->
-      s"""WITH $CorpusSql,
-        |words AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM corpus),
-        |tok AS (
-        |  SELECT doc_id, i, w[i] AS token
-        |  FROM (SELECT doc_id, w, UNNEST(range(1, len(w)+1)) AS i FROM words) t),
-        |tb AS (
-        |  SELECT doc_id, i, token,
-        |    CASE WHEN strpos('0123456789abcdef', substr(md5(token), 1, 1)) <= 2
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM tok),
-        |tc AS (
-        |  SELECT doc_id, i, token,
-        |    COALESCE(SUM(b) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunkId
-        |  FROM tb),
-        |chunks AS (
-        |  SELECT doc_id, chunkId,
-        |    md5(array_to_string(list(token ORDER BY i), ' ')) AS chunkHash
-        |  FROM tc GROUP BY doc_id, chunkId),
-        |dpc AS (
-        |  SELECT chunkHash, COUNT(DISTINCT doc_id) AS nDocs
-        |  FROM chunks GROUP BY chunkHash),
-        |perDoc AS (
-        |  SELECT c.doc_id, COUNT(*) AS nChunks,
-        |    SUM(CASE WHEN d.nDocs > 1 THEN 1 ELSE 0 END) AS nShared
-        |  FROM chunks c JOIN dpc d ON d.chunkHash = c.chunkHash
-        |  GROUP BY c.doc_id)
-        |SELECT x.doc_id,
-        |  CAST(COALESCE(p.nChunks, 0) AS BIGINT) AS nChunks,
-        |  CAST(COALESCE(p.nShared, 0) AS BIGINT) AS nSharedChunks
-        |FROM corpus x LEFT JOIN perDoc p ON p.doc_id = x.doc_id
-        |ORDER BY x.doc_id""".stripMargin,
-    "d12_dup_spans" ->
-      s"""WITH $SpanGramSql,
-        |dup AS (SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) > 1),
-        |flg AS (
-        |  SELECT g.doc_id, g.pos,
-        |    CASE WHEN g.pos - LAG(g.pos) OVER (PARTITION BY g.doc_id
-        |      ORDER BY g.pos) <= 8 THEN 0 ELSE 1 END AS ni
-        |  FROM grams g JOIN dup USING (gram)),
-        |isl AS (
-        |  SELECT doc_id, pos, SUM(ni) OVER (PARTITION BY doc_id
-        |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM flg)
-        |SELECT doc_id, MIN(pos) AS spanStart, MAX(pos) + 7 AS spanEnd,
-        |  MAX(pos) - MIN(pos) + 8 AS spanTokens
-        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, spanStart""".stripMargin,
-    "d14_incremental_spans" ->
-      s"""WITH $SpanGramSql,
-        |exIdx AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 3 <> 0),
-        |bg AS (SELECT doc_id, pos, gram FROM grams WHERE doc_id % 3 = 0),
-        |cnt AS (SELECT gram, COUNT(*) AS bn FROM bg GROUP BY gram),
-        |marked AS (
-        |  SELECT b.doc_id, b.pos, (e.gram IS NOT NULL) AS ex
-        |  FROM bg b JOIN cnt c USING (gram)
-        |  LEFT JOIN exIdx e USING (gram)
-        |  WHERE c.bn > 1 OR e.gram IS NOT NULL),
-        |flg AS (
-        |  SELECT doc_id, pos, ex,
-        |    CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id
-        |      ORDER BY pos) <= 8 THEN 0 ELSE 1 END AS ni
-        |  FROM marked),
-        |isl AS (
-        |  SELECT doc_id, pos, ex, SUM(ni) OVER (PARTITION BY doc_id
-        |    ORDER BY pos ROWS UNBOUNDED PRECEDING) AS island
-        |  FROM flg)
-        |SELECT doc_id, MIN(pos) AS spanStart, MAX(pos) + 7 AS spanEnd,
-        |  MAX(pos) - MIN(pos) + 8 AS spanTokens, MAX(ex) AS vsExisting
-        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, spanStart""".stripMargin,
-    "d13_span_cut" ->
-      s"""WITH $SpanGramSql,
-        |occ AS (
-        |  SELECT doc_id, pos,
-        |    ROW_NUMBER() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS occ
-        |  FROM grams),
-        |cutPos AS (
-        |  SELECT DISTINCT doc_id, UNNEST(range(pos, pos + 8)) AS tokPos
-        |  FROM occ WHERE occ > 1),
-        |toks AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS tokPos, w[i] AS token
-        |  FROM (SELECT doc_id, UNNEST(range(1, len(w) + 1)) AS i, w
-        |        FROM words) t),
-        |tot AS (SELECT doc_id, COUNT(*) AS total FROM toks GROUP BY doc_id),
-        |kept AS (
-        |  SELECT t.doc_id, COUNT(*) AS kept,
-        |    md5(string_agg(t.token, ' ' ORDER BY t.tokPos)) AS fp
-        |  FROM toks t
-        |  WHERE NOT EXISTS (SELECT 1 FROM cutPos c
-        |                    WHERE c.doc_id = t.doc_id AND c.tokPos = t.tokPos)
-        |  GROUP BY t.doc_id)
-        |SELECT x.doc_id,
-        |  CAST(COALESCE(tt.total, 0) AS BIGINT) AS totalTokens,
-        |  CAST(COALESCE(kp.kept, 0) AS BIGINT) AS keptTokens,
-        |  CAST(COALESCE(tt.total, 0) - COALESCE(kp.kept, 0) AS BIGINT)
-        |    AS cutTokens,
-        |  COALESCE(kp.fp, md5('')) AS cleanedFingerprint
-        |FROM corpus x
-        |LEFT JOIN tot tt ON tt.doc_id = x.doc_id
-        |LEFT JOIN kept kp ON kp.doc_id = x.doc_id
-        |ORDER BY x.doc_id""".stripMargin,
-    "t12_shard_shuffle" ->
-      """WITH h AS (
-        |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR) || 'epoch0') AS hx
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h)
-        |SELECT doc_id, hkey % 8 AS shard,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY hkey % 8 ORDER BY hkey, doc_id)
-        |    AS BIGINT) AS pos
-        |FROM k ORDER BY doc_id""".stripMargin,
-    "t14_hll_tokens" ->
-      """WITH tokr AS (
-        |  SELECT CAST(doc_id AS VARCHAR) || ':' ||
-        |    UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-        |  FROM documents),
-        |hh AS (SELECT token, md5(CAST(token AS VARCHAR)) AS h FROM tokr),
-        |br AS (
-        |  SELECT
-        |    ((CAST(strpos('0123456789abcdef', h[1]) - 1 AS BIGINT)) * 16
-        |      + (CAST(strpos('0123456789abcdef', h[2]) - 1 AS BIGINT))) % 64 AS bucket,
-        |    CAST(strpos('0123456789abcdef', h[3]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', h[4]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', h[5]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', h[6]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', h[7]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', h[8]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', h[9]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', h[10]) - 1 AS BIGINT) AS w
-        |  FROM hh),
-        |rr AS (
-        |  SELECT bucket,
-        |    CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END AS rank
-        |  FROM br),
-        |regs AS (SELECT bucket, MAX(rank) AS M FROM rr GROUP BY bucket),
-        |terms AS (
-        |  SELECT (CAST(1 AS BIGINT) << CAST(33 - COALESCE(r.M, 0) AS INT)) AS term
-        |  FROM (SELECT UNNEST(range(0, 64)) AS bucket) b
-        |  LEFT JOIN regs r ON r.bucket = b.bucket),
-        |s AS (SELECT CAST(SUM(term) AS BIGINT) AS sumInt FROM terms),
-        |ex AS (SELECT CAST(COUNT(DISTINCT token) AS BIGINT) AS exactDistinct FROM tokr)
-        |SELECT s.sumInt,
-        |  CAST(0.709 AS DOUBLE) * 4096 * CAST(8589934592 AS DOUBLE)
-        |    / CAST(s.sumInt AS DOUBLE) AS hllEstimate,
-        |  ex.exactDistinct,
-        |  (CAST(0.709 AS DOUBLE) * 4096 * CAST(8589934592 AS DOUBLE)
-        |    / CAST(s.sumInt AS DOUBLE) - CAST(ex.exactDistinct AS DOUBLE))
-        |    / CAST(ex.exactDistinct AS DOUBLE) AS relErr
-        |FROM s, ex""".stripMargin,
-    "t13_budget_mix" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'mix0') AS hx
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, lang, tok,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h),
-        |c AS (
-        |  SELECT doc_id, lang, tok,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    (CASE lang WHEN 'en' THEN 4000 WHEN 'es' THEN 2000
-        |      WHEN 'de' THEN 1000 ELSE 0 END) / CAST(4 AS DOUBLE) AS keep
-        |  FROM k)
-        |SELECT lang, COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
-        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    // the t13 admission replayed per (stage, source): stage folds into
-    // the md5 input (fresh permutation per stage) and the budget is a
-    // bounded stage×source CASE — the warm/anneal reweighting verbatim
-    // span decontamination: eval DISTINCT 8-gram index probed by the
-    // training gram stream, hits expand ±8 tokens (clamped at 0) and
-    // the survivors fingerprint — the d13 cut replay with an external
-    // (eval) index instead of the corpus-internal occurrence rank
-    "t35_decontaminate_spans" ->
-      s"""WITH tdocs AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text || ' $T35LeakSuffix'
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |twords AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM tdocs),
-        |ewords AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |tposed AS (
-        |  SELECT doc_id, UNNEST(range(1, GREATEST(len(w) - 6, 1))) AS i, w
-        |  FROM twords),
-        |tgrams AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |         array_to_string(w[i:i+7], ' ') AS gram
-        |  FROM tposed),
-        |eposed AS (
-        |  SELECT doc_id, UNNEST(range(1, GREATEST(len(w) - 6, 1))) AS i, w
-        |  FROM ewords),
-        |evalIdx AS (
-        |  SELECT DISTINCT array_to_string(w[i:i+7], ' ') AS gram FROM eposed),
-        |hits AS (
-        |  SELECT t.doc_id, t.pos FROM tgrams t JOIN evalIdx e USING (gram)),
-        |cutPos AS (
-        |  SELECT DISTINCT doc_id,
-        |    UNNEST(range(GREATEST(pos - 8, 0), pos + 16)) AS tokPos
-        |  FROM hits),
-        |toks AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS tokPos, w[i] AS token
-        |  FROM (SELECT doc_id, UNNEST(range(1, len(w) + 1)) AS i, w
-        |        FROM twords) t),
-        |tot AS (SELECT doc_id, COUNT(*) AS total FROM toks GROUP BY doc_id),
-        |kept AS (
-        |  SELECT t.doc_id, COUNT(*) AS kept,
-        |    md5(string_agg(t.token, ' ' ORDER BY t.tokPos)) AS fp
-        |  FROM toks t
-        |  WHERE NOT EXISTS (SELECT 1 FROM cutPos c
-        |                    WHERE c.doc_id = t.doc_id AND c.tokPos = t.tokPos)
-        |  GROUP BY t.doc_id),
-        |hm AS (SELECT doc_id, COUNT(*) AS m FROM hits GROUP BY doc_id)
-        |SELECT x.doc_id,
-        |  CAST(COALESCE(tt.total, 0) AS BIGINT) AS totalTokens,
-        |  CAST(COALESCE(kp.kept, 0) AS BIGINT) AS keptTokens,
-        |  CAST(COALESCE(tt.total, 0) - COALESCE(kp.kept, 0) AS BIGINT)
-        |    AS cutTokens,
-        |  CAST(COALESCE(hh.m, 0) AS BIGINT) AS evalHits,
-        |  COALESCE(kp.fp, md5('')) AS cleanedFingerprint
-        |FROM tdocs x
-        |LEFT JOIN tot tt ON tt.doc_id = x.doc_id
-        |LEFT JOIN kept kp ON kp.doc_id = x.doc_id
-        |LEFT JOIN hm hh ON hh.doc_id = x.doc_id
-        |ORDER BY x.doc_id""".stripMargin,
-    // balanced packing: the t12 hkey ladder → per-shard rank by
-    // (tok DESC, doc_id) → bin = (rank-1) mod 4; skew in integer ppm
-    "t36_balanced_pack" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'pack0') AS hx
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, tok,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM d),
-        |r AS (
-        |  SELECT doc_id, tok, hkey % 8 AS shard,
-        |    ROW_NUMBER() OVER (PARTITION BY hkey % 8
-        |      ORDER BY tok DESC, doc_id) AS rk
-        |  FROM k),
-        |g AS (
-        |  SELECT shard, (rk - 1) % 4 AS bin, COUNT(*) AS docs,
-        |    SUM(tok) AS binTokens, SUM(doc_id) AS idSum
-        |  FROM r GROUP BY shard, (rk - 1) % 4)
-        |SELECT CAST(shard AS BIGINT) AS shard, CAST(bin AS BIGINT) AS bin,
-        |  CAST(docs AS BIGINT) AS docs, CAST(binTokens AS BIGINT) AS binTokens,
-        |  CAST(idSum AS BIGINT) AS idSum,
-        |  CAST((MAX(binTokens) OVER (PARTITION BY shard)
-        |        - MIN(binTokens) OVER (PARTITION BY shard)) * 1000000
-        |       // SUM(binTokens) OVER (PARTITION BY shard) AS BIGINT)
-        |    AS shardSkewPpm
-        |FROM g ORDER BY shard, bin""".stripMargin,
-    // sliding-window chunks: range-explode per doc, end-inclusive list
-    // slice w[s+1 : s+nTok], md5 over the space-joined window
-    "t38_chunk_windows" ->
-      """WITH wd AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS n
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n, w,
-        |    UNNEST(range(0,
-        |      CAST(ceil(greatest(n - 32, 0) / 24.0) AS BIGINT) + 1)) AS chunkIdx
-        |  FROM wd WHERE n > 0)
-        |SELECT doc_id, CAST(chunkIdx AS BIGINT) AS chunkIdx,
-        |  CAST(chunkIdx * 24 AS BIGINT) AS startTok,
-        |  CAST(least(32, n - chunkIdx * 24) AS BIGINT) AS nTok,
-        |  md5(array_to_string(
-        |    w[CAST(chunkIdx * 24 + 1 AS INT):
-        |      CAST(chunkIdx * 24 + least(32, n - chunkIdx * 24) AS INT)],
-        |    ' ')) AS chunkHash
-        |FROM c ORDER BY doc_id, chunkIdx""".stripMargin,
-    // BM25-shaped retrieval: the same inverted-index chain — term
-    // frequencies, doc lengths, rational idf, the per-term contribution
-    // in the IDENTICAL IEEE association as the Spark expression, then
-    // the 1e-6 fixed-point BIGINT sum and (score DESC, did) ranking
-    "t39_bm25_retrieve" ->
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM tok
-        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-        |dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM dtf GROUP BY did),
-        |stats AS (
-        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM dl),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM dtf GROUP BY term),
-        |qtf AS (
-        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM tok
-        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
-        |  FROM qtf q JOIN dtf d USING (term) JOIN dfreq f USING (term)
-        |  JOIN dl l ON l.did = d.did CROSS JOIN stats s
-        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
-        |contrib AS (
-        |  SELECT qid, did,
-        |    CAST(ROUND(
-        |      CAST(qtf AS DOUBLE) *
-        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-        |       (CAST(df AS DOUBLE) + 0.5)) *
-        |      ((CAST(dtf AS DOUBLE) * 2.2) /
-        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |         (CAST(dl AS DOUBLE) /
-        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS fixed
-        |  FROM cand),
-        |sc AS (
-        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
-        |  FROM contrib GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT qid, did, score,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY score DESC, did) AS BIGINT) AS rank
-        |  FROM sc)
-        |SELECT qid, did, score, rank FROM rk WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-    // the truncated-index twin: the t39 chain with each term's posting
-    // list bounded to its 3 highest-impact rows before the query join
-    "t39b_bm25_truncated" ->
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM tok
-        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-        |dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM dtf GROUP BY did),
-        |stats AS (
-        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM dl),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM dtf GROUP BY term),
-        |idx AS (
-        |  SELECT d.term, d.did, d.dtf, f.df, l.dl, s.nDocs, s.totTok,
-        |    ROW_NUMBER() OVER (PARTITION BY d.term
-        |      ORDER BY CAST(d.dtf AS DOUBLE) / CAST(l.dl AS DOUBLE) DESC,
-        |               d.did) AS pr
-        |  FROM dtf d JOIN dfreq f USING (term) JOIN dl l ON l.did = d.did
-        |  CROSS JOIN stats s
-        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
-        |qtf AS (
-        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM tok
-        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT q.qid, i.did, q.qtf, i.dtf, i.df, i.dl, i.nDocs, i.totTok
-        |  FROM qtf q JOIN idx i USING (term) WHERE i.pr <= 3),
-        |contrib AS (
-        |  SELECT qid, did,
-        |    CAST(ROUND(
-        |      CAST(qtf AS DOUBLE) *
-        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-        |       (CAST(df AS DOUBLE) + 0.5)) *
-        |      ((CAST(dtf AS DOUBLE) * 2.2) /
-        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |         (CAST(dl AS DOUBLE) /
-        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS fixed
-        |  FROM cand),
-        |sc AS (
-        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
-        |  FROM contrib GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT qid, did, score,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
-        |      ORDER BY score DESC, did) AS BIGINT) AS rank
-        |  FROM sc)
-        |SELECT qid, did, score, rank FROM rk WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-    // ROUGE-shaped overlap eval: the t39 chain at k=1 picks the top-1
-    // doc per query, then clipped unigram/bigram matching in pure
-    // integers and the 2m/(c+r) F1 identity in integer ppm
-    "t40_rouge_eval" ->
-      """WITH t40w AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents),
-        |t40tok AS (SELECT doc_id, UNNEST(w) AS term FROM t40w),
-        |t40dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t40tok
-        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-        |t40dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t40dtf GROUP BY did),
-        |t40stats AS (
-        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t40dl),
-        |t40dfreq AS (SELECT term, COUNT(*) AS df FROM t40dtf GROUP BY term),
-        |t40qtf AS (
-        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t40tok
-        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
-        |t40cand AS (
-        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
-        |  FROM t40qtf q JOIN t40dtf d USING (term) JOIN t40dfreq f USING (term)
-        |  JOIN t40dl l ON l.did = d.did CROSS JOIN t40stats s
-        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
-        |t40contrib AS (
-        |  SELECT qid, did,
-        |    CAST(ROUND(
-        |      CAST(qtf AS DOUBLE) *
-        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-        |       (CAST(df AS DOUBLE) + 0.5)) *
-        |      ((CAST(dtf AS DOUBLE) * 2.2) /
-        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |         (CAST(dl AS DOUBLE) /
-        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS fixed
-        |  FROM t40cand),
-        |t40sc AS (
-        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
-        |  FROM t40contrib GROUP BY 1, 2),
-        |t40top1 AS (
-        |  SELECT qid, did FROM (
-        |    SELECT qid, did,
-        |      ROW_NUMBER() OVER (PARTITION BY qid
-        |        ORDER BY score DESC, did) AS rk
-        |    FROM t40sc) z WHERE rk = 1),
-        |t40uc AS (
-        |  SELECT doc_id, term AS g, COUNT(*) AS n FROM t40tok GROUP BY 1, 2),
-        |t40bi AS (
-        |  SELECT doc_id, UNNEST(CASE WHEN len(w) >= 2
-        |    THEN [w[i] || ' ' || w[i+1] FOR i IN range(1, len(w))]
-        |    ELSE [] END) AS g
-        |  FROM t40w),
-        |t40bcnt AS (SELECT doc_id, g, COUNT(*) AS n FROM t40bi GROUP BY 1, 2),
-        |t40m1 AS (
-        |  SELECT t.qid, t.did, CAST(SUM(LEAST(q.n, d.n)) AS BIGINT) AS m1
-        |  FROM t40top1 t JOIN t40uc q ON q.doc_id = t.qid
-        |  JOIN t40uc d ON d.doc_id = t.did AND d.g = q.g
-        |  GROUP BY 1, 2),
-        |t40m2 AS (
-        |  SELECT t.qid, t.did, CAST(SUM(LEAST(q.n, d.n)) AS BIGINT) AS m2
-        |  FROM t40top1 t JOIN t40bcnt q ON q.doc_id = t.qid
-        |  JOIN t40bcnt d ON d.doc_id = t.did AND d.g = q.g
-        |  GROUP BY 1, 2),
-        |t40tot1 AS (
-        |  SELECT doc_id, CAST(SUM(n) AS BIGINT) AS tot FROM t40uc GROUP BY 1),
-        |t40tot2 AS (
-        |  SELECT doc_id, CAST(SUM(n) AS BIGINT) AS tot FROM t40bcnt GROUP BY 1),
-        |t40j AS (
-        |  SELECT t.qid, t.did,
-        |    COALESCE(a.m1, 0) AS m1, COALESCE(cd.tot, 0) AS c1,
-        |    COALESCE(cq.tot, 0) AS r1,
-        |    COALESCE(b.m2, 0) AS m2, COALESCE(ed.tot, 0) AS c2,
-        |    COALESCE(eq.tot, 0) AS r2
-        |  FROM t40top1 t
-        |  LEFT JOIN t40m1 a ON a.qid = t.qid AND a.did = t.did
-        |  LEFT JOIN t40m2 b ON b.qid = t.qid AND b.did = t.did
-        |  LEFT JOIN t40tot1 cd ON cd.doc_id = t.did
-        |  LEFT JOIN t40tot1 cq ON cq.doc_id = t.qid
-        |  LEFT JOIN t40tot2 ed ON ed.doc_id = t.did
-        |  LEFT JOIN t40tot2 eq ON eq.doc_id = t.qid)
-        |SELECT qid, did, m1, c1, r1,
-        |  CAST(CASE WHEN c1 + r1 > 0 THEN 2 * m1 * 1000000 // (c1 + r1)
-        |       ELSE 0 END AS BIGINT) AS f1ppm1,
-        |  m2, c2, r2,
-        |  CAST(CASE WHEN c2 + r2 > 0 THEN 2 * m2 * 1000000 // (c2 + r2)
-        |       ELSE 0 END AS BIGINT) AS f1ppm2
-        |FROM t40j ORDER BY qid""".stripMargin,
-    // incremental == rebuild IS the oracle: the engine appends a batch
-    // onto the standing posting store (with a deliberate replay
-    // overlap); this SQL rebuilds the whole-corpus elided index from
-    // scratch — any append drift lands in the hash
-    "t42_bm25_index_append" ->
-      """WITH t42tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents),
-        |t42dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok GROUP BY 1, 2),
-        |t42dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t42dtf GROUP BY did),
-        |t42stats AS (
-        |  SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS tot_tok FROM t42dl),
-        |t42dfreq AS (SELECT term, COUNT(*) AS df FROM t42dtf GROUP BY term)
-        |SELECT d.term, d.did, d.dtf, l.dl, f.df, s.n_docs, s.tot_tok
-        |FROM t42dtf d JOIN t42dfreq f USING (term) JOIN t42dl l ON l.did = d.did
-        |CROSS JOIN t42stats s
-        |WHERE f.df * 1000000 <= 900000 * s.n_docs
-        |ORDER BY d.term, d.did""".stripMargin,
-    // delta = batch postings for docs the standing slice lacks; since
-    // standing = %5≠0 docs and batch = (%5=0 ∪ %679=0), the new ids
-    // are exactly %5=0 — derived set-theoretically, not by replaying
-    // the engine's anti-join
-    "t42b_bm25_delta" ->
-      """WITH t42tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents)
-        |SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok
-        |WHERE doc_id % 5 = 0 GROUP BY 1, 2
-        |ORDER BY term, did""".stripMargin,
-    // the streamed store must land on the from-scratch posting build
-    // over ALL docs (standing %5≠0 ∪ appended %5=0; the %679 replays
-    // are already standing, so they contribute nothing new)
-    "t42_stream_parity" ->
-      """WITH t42tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM documents)
-        |SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok
-        |GROUP BY 1, 2
-        |ORDER BY term, did""".stripMargin,
-    // ROUGE-L: the t40 top-1 chain, then token-LCS via the same
-    // row-rolling DP as the engine — expressed as nested list_reduce
-    // folds (accumulator = DP row; elements are single-element BIGINT
-    // lists so the fold types unify), integer-exact end to end
-    "t40b_rouge_l" ->
-      """WITH t40w AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
-        |  FROM documents),
-        |t40tok AS (SELECT doc_id, UNNEST(w) AS term FROM t40w),
-        |t40dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t40tok
-        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-        |t40dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t40dtf GROUP BY did),
-        |t40stats AS (
-        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t40dl),
-        |t40dfreq AS (SELECT term, COUNT(*) AS df FROM t40dtf GROUP BY term),
-        |t40qtf AS (
-        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t40tok
-        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
-        |t40cand AS (
-        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
-        |  FROM t40qtf q JOIN t40dtf d USING (term) JOIN t40dfreq f USING (term)
-        |  JOIN t40dl l ON l.did = d.did CROSS JOIN t40stats s
-        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
-        |t40contrib AS (
-        |  SELECT qid, did,
-        |    CAST(ROUND(
-        |      CAST(qtf AS DOUBLE) *
-        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-        |       (CAST(df AS DOUBLE) + 0.5)) *
-        |      ((CAST(dtf AS DOUBLE) * 2.2) /
-        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |         (CAST(dl AS DOUBLE) /
-        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS fixed
-        |  FROM t40cand),
-        |t40sc AS (
-        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
-        |  FROM t40contrib GROUP BY 1, 2),
-        |t40top1 AS (
-        |  SELECT qid, did FROM (
-        |    SELECT qid, did,
-        |      ROW_NUMBER() OVER (PARTITION BY qid
-        |        ORDER BY score DESC, did) AS rk
-        |    FROM t40sc) z WHERE rk = 1),
-        |lcsj AS (
-        |  SELECT t.qid, t.did, q.w AS qw, d.w AS dw
-        |  FROM t40top1 t JOIN t40w q ON q.doc_id = t.qid
-        |  JOIN t40w d ON d.doc_id = t.did),
-        |lcsv AS (
-        |  SELECT qid, did,
-        |    CASE WHEN len(qw) = 0 OR len(dw) = 0 THEN CAST(0 AS BIGINT) ELSE
-        |      list_reduce(
-        |        list_concat(
-        |          [list_transform(range(0, len(dw)+1), x -> CAST(0 AS BIGINT))],
-        |          list_transform(range(1, len(qw)+1), i -> [CAST(i AS BIGINT)])),
-        |        (row, el) -> list_reduce(
-        |            list_concat([[CAST(0 AS BIGINT)]],
-        |              list_transform(range(1, len(dw)+1), j -> [CAST(j AS BIGINT)])),
-        |            (pre, jl) -> list_append(pre, greatest(
-        |                row[CAST(jl[1] AS INT)+1],
-        |                pre[CAST(jl[1] AS INT)],
-        |                row[CAST(jl[1] AS INT)] +
-        |                  CASE WHEN qw[CAST(el[1] AS INT)] = dw[CAST(jl[1] AS INT)]
-        |                       THEN 1 ELSE 0 END))))[len(dw)+1]
-        |    END AS lcs,
-        |    CAST(len(dw) AS BIGINT) AS c_l, CAST(len(qw) AS BIGINT) AS r_l
-        |  FROM lcsj)
-        |SELECT qid, did, lcs, c_l, r_l,
-        |  CAST(CASE WHEN c_l + r_l > 0 THEN 2 * lcs * 1000000 // (c_l + r_l)
-        |       ELSE 0 END AS BIGINT) AS f1ppm_l
-        |FROM lcsv ORDER BY qid""".stripMargin,
-    // hard negatives: the t39 BM25 chain over the DUP-BEARING corpus at
-    // k=20, vetoed by the d2 pair set (est >= 0.5) across the %97
-    // boundary, re-ranked after exclusion; nExcluded per query rides
-    // each row
-    "t41_hard_negatives" ->
-      s"""WITH $MinhashSql,
-        |t41tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-        |  FROM corpus),
-        |t41dtf AS (
-        |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t41tok
-        |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-        |t41dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t41dtf GROUP BY did),
-        |t41stats AS (
-        |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM t41dl),
-        |t41dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM t41dtf GROUP BY term),
-        |t41qtf AS (
-        |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM t41tok
-        |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
-        |t41cand AS (
-        |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
-        |  FROM t41qtf q JOIN t41dtf d USING (term) JOIN t41dfreq f USING (term)
-        |  JOIN t41dl l ON l.did = d.did CROSS JOIN t41stats s
-        |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
-        |t41contrib AS (
-        |  SELECT qid, did,
-        |    CAST(ROUND(
-        |      CAST(qtf AS DOUBLE) *
-        |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
-        |       (CAST(df AS DOUBLE) + 0.5)) *
-        |      ((CAST(dtf AS DOUBLE) * 2.2) /
-        |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |         (CAST(dl AS DOUBLE) /
-        |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
-        |      1000000.0) AS BIGINT) AS fixed
-        |  FROM t41cand),
-        |t41sc AS (
-        |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
-        |  FROM t41contrib GROUP BY 1, 2),
-        |t41top AS (
-        |  SELECT qid, did, score FROM (
-        |    SELECT qid, did, score,
-        |      ROW_NUMBER() OVER (PARTITION BY qid
-        |        ORDER BY score DESC, did) AS rk
-        |    FROM t41sc) z WHERE rk <= 20),
-        |t41excl AS (
-        |  SELECT id1 AS qid, id2 AS did FROM pairs
-        |  WHERE estJaccard >= 0.5 AND id1 % 97 = 0 AND id2 % 97 <> 0
-        |  UNION ALL
-        |  SELECT id2 AS qid, id1 AS did FROM pairs
-        |  WHERE estJaccard >= 0.5 AND id2 % 97 = 0 AND id1 % 97 <> 0),
-        |t41ex AS (
-        |  SELECT t.qid, COUNT(*) AS nExcluded
-        |  FROM t41top t JOIN t41excl e ON e.qid = t.qid AND e.did = t.did
-        |  GROUP BY t.qid),
-        |t41kept AS (
-        |  SELECT t.qid, t.did, t.score,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY t.qid
-        |      ORDER BY t.score DESC, t.did) AS BIGINT) AS negRank
-        |  FROM t41top t
-        |  WHERE NOT EXISTS (SELECT 1 FROM t41excl e
-        |                    WHERE e.qid = t.qid AND e.did = t.did))
-        |SELECT k.qid, k.negRank, k.did, k.score,
-        |  CAST(COALESCE(x.nExcluded, 0) AS BIGINT) AS nExcluded
-        |FROM t41kept k LEFT JOIN t41ex x ON x.qid = k.qid
-        |WHERE k.negRank <= 3
-        |ORDER BY k.qid, k.negRank""".stripMargin,
-    // context packing: the t12 hkey ladder (salt ctx0) → per-shard
-    // exclusive running sum of (tok + 1 EOD) in (hkey, id) order →
-    // context ids by integer division on the 512-token grid
-    "t37_context_pack" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'ctx0') AS hx
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, tok + 1 AS tokSep,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM d),
-        |c AS (
-        |  SELECT doc_id, hkey % 8 AS shard, tokSep,
-        |    COALESCE(SUM(tokSep) OVER (PARTITION BY hkey % 8
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS streamStart
-        |  FROM k)
-        |SELECT doc_id, CAST(shard AS BIGINT) AS shard,
-        |  CAST(tokSep AS BIGINT) AS tokSep,
-        |  CAST(streamStart AS BIGINT) AS streamStart,
-        |  CAST(streamStart // 512 AS BIGINT) AS startCtx,
-        |  CAST((streamStart + tokSep - 1) // 512 AS BIGINT) AS endCtx,
-        |  CAST((streamStart + tokSep - 1) // 512
-        |       - streamStart // 512 + 1 AS BIGINT) AS nCtx
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "t34_curriculum_mix" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok
-        |  FROM documents),
-        |x AS (
-        |  SELECT doc_id, lang, tok, UNNEST(['warm', 'anneal']) AS stage
-        |  FROM h),
-        |k AS (
-        |  SELECT doc_id, lang, tok, stage,
-        |    CASE WHEN stage = 'warm' THEN
-        |           CASE lang WHEN 'en' THEN 4000 WHEN 'es' THEN 2000
-        |                WHEN 'de' THEN 1000 ELSE 0 END
-        |         ELSE CASE lang WHEN 'en' THEN 1000 WHEN 'de' THEN 3000
-        |                ELSE 0 END END AS budget,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM (SELECT *,
-        |          md5(CAST(doc_id AS VARCHAR) || '#' || stage || 'curr0') AS hx
-        |        FROM x) hx2),
-        |c AS (
-        |  SELECT doc_id, lang, tok, stage, budget,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY stage, lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    budget / CAST(4 AS DOUBLE) AS keep
-        |  FROM k)
-        |SELECT stage, lang, COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
-        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM c GROUP BY stage, lang ORDER BY stage, lang""".stripMargin,
-    // per-source totals → corrected-isqrt weights → integer budget
-    // split → the t13 admission window, all in one CTE chain
-    "t32_temperature_mix" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'temp0') AS hx
-        |  FROM documents),
-        |t32_tot AS (
-        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
-        |t32_w AS (
-        |  SELECT lang, n,
-        |    -- corrected integer sqrt: double sqrt is within 1 ulp for n < 2^52,
-        |    -- one ±1 adjustment each way makes it exact
-        |    (CASE WHEN (s0 - 1) * (s0 - 1) > n THEN s0 - 2
-        |          WHEN s0 * s0 > n THEN s0 - 1
-        |          WHEN (s0 + 2) * (s0 + 2) <= n THEN s0 + 2
-        |          WHEN (s0 + 1) * (s0 + 1) <= n THEN s0 + 1
-        |          ELSE s0 END) AS w
-        |  FROM (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s0
-        |        FROM t32_tot)),
-        |t32_sw AS (SELECT CAST(SUM(w) AS BIGINT) AS sw FROM t32_w),
-        |t32_b AS (
-        |  SELECT lang, n, w, (7000 * w) // sw AS budget FROM t32_w CROSS JOIN t32_sw),
-        |k AS (
-        |  SELECT doc_id, h.lang, tok, b.budget,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h JOIN t32_b b ON h.lang = b.lang),
-        |c AS (
-        |  SELECT doc_id, lang, tok, budget,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    budget / CAST(4 AS DOUBLE) AS keep
-        |  FROM k)
-        |SELECT lang, CAST(MAX(budget) AS BIGINT) AS budget, COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
-        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    // budget 2.5n+1000 → fullEpochs = budget // n, remainder admission =
-    // the t13 window under the 'epochmix0' salt; servedTokens folds the
-    // per-doc epoch count back through the token column
-    "t33_epoch_mix" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'epochmix0') AS hx
-        |  FROM documents),
-        |te_tot AS (
-        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
-        |te_eb AS (
-        |  SELECT lang, n, ((5 * n) // 2 + 1000) // n AS fullEpochs,
-        |         ((5 * n) // 2 + 1000) % n AS rem
-        |  FROM te_tot),
-        |k AS (
-        |  SELECT doc_id, h.lang, tok, e.fullEpochs, e.rem,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h JOIN te_eb e ON h.lang = e.lang),
-        |c AS (
-        |  SELECT doc_id, lang, tok, fullEpochs,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    rem / CAST(4 AS DOUBLE) AS keep
-        |  FROM k)
-        |SELECT lang, CAST(MAX(fullEpochs) AS BIGINT) AS fullEpochs,
-        |  COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS remKept,
-        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS remTokens,
-        |  CAST(SUM((fullEpochs + CASE WHEN keep THEN 1 ELSE 0 END) * tok) AS BIGINT)
-        |    AS servedTokens,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    // t33's expansion twin: nDocs/posIdSum/shardIdSum replay the
-    // per-(doc, epoch) md5 reshuffle; epochTokens is derived from the
-    // LEDGER arithmetic instead (whole source per full epoch, the kept
-    // remainder on the last) and FULL JOINed — a Spark expansion that
-    // over- or under-serves any epoch mismatches loudly (extra/missing
-    // rows or a NULL ledger column), which is the conservation gate
-    "t33b_epoch_expand" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'epochmix0') AS hx
-        |  FROM documents),
-        |te_tot AS (
-        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
-        |te_eb AS (
-        |  SELECT lang, n, ((5 * n) // 2 + 1000) // n AS fullEpochs,
-        |         ((5 * n) // 2 + 1000) % n AS rem
-        |  FROM te_tot),
-        |k AS (
-        |  SELECT doc_id, h.lang, tok, e.fullEpochs, e.rem,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h JOIN te_eb e ON h.lang = e.lang),
-        |c AS MATERIALIZED (
-        |  SELECT doc_id, lang, tok, fullEpochs,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    rem / CAST(4 AS DOUBLE) AS keep
-        |  FROM k),
-        |x AS (
-        |  SELECT doc_id, lang, tok,
-        |    UNNEST(range(1, fullEpochs + (CASE WHEN keep THEN 1 ELSE 0 END) + 1))
-        |      AS epoch
-        |  FROM c),
-        |e AS (
-        |  SELECT doc_id, lang, tok, epoch,
-        |    md5(CAST(doc_id AS VARCHAR) || '#' || CAST(epoch AS VARCHAR)
-        |        || 'epochmix0') AS ex
-        |  FROM x),
-        |ek AS (
-        |  SELECT doc_id, lang, tok, epoch,
-        |    CAST(strpos('0123456789abcdef', ex[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', ex[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', ex[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', ex[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', ex[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', ex[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', ex[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', ex[8]) - 1 AS BIGINT) AS ehkey
-        |  FROM e),
-        |ep AS (
-        |  SELECT doc_id, lang, tok, epoch, ehkey % 4 AS eshard,
-        |    ROW_NUMBER() OVER (PARTITION BY epoch, ehkey % 4
-        |                       ORDER BY ehkey, doc_id) AS epos
-        |  FROM ek),
-        |agg AS (
-        |  SELECT lang, epoch, COUNT(*) AS nDocs,
-        |    CAST(SUM(epos * doc_id) AS BIGINT) AS posIdSum,
-        |    CAST(SUM(eshard * doc_id) AS BIGINT) AS shardIdSum
-        |  FROM ep GROUP BY lang, epoch),
-        |ll AS (
-        |  SELECT lang, MAX(fullEpochs) AS fe, CAST(SUM(tok) AS BIGINT) AS n,
-        |    CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS remTok,
-        |    CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS remN
-        |  FROM c GROUP BY lang),
-        |led AS (
-        |  SELECT lang, fe, n, remTok,
-        |    UNNEST(range(1, fe + (CASE WHEN remN > 0 THEN 1 ELSE 0 END) + 1))
-        |      AS epoch
-        |  FROM ll),
-        |ledt AS (
-        |  SELECT lang, epoch,
-        |    CAST(CASE WHEN epoch <= fe THEN n ELSE remTok END AS BIGINT)
-        |      AS epochTokens
-        |  FROM led)
-        |SELECT COALESCE(a.lang, l.lang) AS lang,
-        |  COALESCE(a.epoch, l.epoch) AS epoch,
-        |  a.nDocs, l.epochTokens, a.posIdSum, a.shardIdSum
-        |FROM agg a FULL JOIN ledt l ON a.lang = l.lang AND a.epoch = l.epoch
-        |ORDER BY lang, epoch""".stripMargin,
-    // α = 3/10 weights: w = the UNIQUE candidate in [w0−2, w0+2] with
-    // w^10 ≤ n^3 < (w+1)^10 in HUGEINT (exact 128-bit two-sided floor
-    // check — the upper bound makes a double-pow seed w0 that lands
-    // OUTSIDE the window yield ZERO candidates, i.e. a missing lang row
-    // and an identifiable oracle-side failure, instead of silently
-    // accepting a too-small weight), then the t32 budget split and
-    // admission verbatim under the 'tempa0' salt
-    "t32b_temperature_alpha" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
-        |    md5(CAST(doc_id AS VARCHAR) || 'tempa0') AS hx
-        |  FROM documents),
-        |tb_tot AS (
-        |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
-        |tb_seed AS (
-        |  SELECT lang, n,
-        |    CAST(floor(pow(CAST(n AS DOUBLE), 0.3)) AS BIGINT) AS w0,
-        |    CAST(n AS HUGEINT) * n * n AS np
-        |  FROM tb_tot),
-        |tb_w AS (
-        |  SELECT lang, n, CAST(MAX(w0 + d) AS BIGINT) AS w
-        |  FROM tb_seed, (SELECT UNNEST([-2, -1, 0, 1, 2]) AS d)
-        |  WHERE w0 + d >= 0
-        |    AND CAST(w0 + d AS HUGEINT) * (w0 + d) * (w0 + d) * (w0 + d)
-        |      * (w0 + d) * (w0 + d) * (w0 + d) * (w0 + d) * (w0 + d)
-        |      * (w0 + d) <= np
-        |    AND CAST(w0 + d + 1 AS HUGEINT) * (w0 + d + 1) * (w0 + d + 1)
-        |      * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1)
-        |      * (w0 + d + 1) * (w0 + d + 1) * (w0 + d + 1) > np
-        |  GROUP BY lang, n),
-        |tb_sw AS (SELECT CAST(SUM(w) AS BIGINT) AS sw FROM tb_w),
-        |tb_b AS (
-        |  SELECT lang, n, w,
-        |    CAST(CAST(7000 AS HUGEINT) * w // sw AS BIGINT) AS budget
-        |  FROM tb_w CROSS JOIN tb_sw),
-        |k AS (
-        |  SELECT doc_id, h.lang, tok, b.budget,
-        |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
-        |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
-        |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
-        |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
-        |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
-        |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
-        |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
-        |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
-        |  FROM h JOIN tb_b b ON h.lang = b.lang),
-        |c AS (
-        |  SELECT doc_id, lang, tok, budget,
-        |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
-        |      ORDER BY hkey, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
-        |    budget / CAST(4 AS DOUBLE) AS keep
-        |  FROM k)
-        |SELECT lang, CAST(MAX(budget) AS BIGINT) AS budget, COUNT(*) AS total,
-        |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
-        |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
-        |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    "t17_surprisal" ->
-      """WITH tok AS (
-        |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
-        |  FROM documents),
-        |df AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
-        |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS N FROM df),
-        |b AS (
-        |  SELECT t.doc_id,
-        |    CAST(length(format('{:b}', tot.N)) - length(format('{:b}', d.cnt)) AS BIGINT) AS bits1
-        |  FROM tok t JOIN df d USING (w) CROSS JOIN tot),
-        |agg AS (
-        |  SELECT doc_id, COUNT(*) AS nTok, CAST(SUM(bits1) AS BIGINT) AS bits
-        |  FROM b GROUP BY doc_id)
-        |SELECT doc_id, nTok, bits,
-        |  CAST(bits AS DOUBLE) / nTok AS meanBits
-        |FROM agg ORDER BY doc_id""".stripMargin,
-    // the ivfSql chain replays the same 2-round Lloyd training and cell
-    // assignment; within-cell pairs + the earlier-id-wins drop rule on top
-    "d15_semdedup" ->
-      s"""WITH $NormsSql,
-        |${ivfSql(2)},
-        |sdCand AS (
-        |  SELECT a.cellId, a.vec_id AS aId, b.vec_id AS bId
-        |  FROM celled a JOIN celled b
-        |    ON a.cellId = b.cellId AND a.vec_id < b.vec_id),
-        |sdDots AS (
-        |  SELECT c.cellId, c.aId, c.bId,
-        |    CAST(SUM(CAST(ROUND(CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)
-        |      * 1000000000000) AS BIGINT)) AS DOUBLE) / 1e12 AS dot
-        |  FROM sdCand c
-        |  JOIN embeddings ea ON ea.vec_id = c.aId
-        |  JOIN embeddings eb ON eb.vec_id = c.bId
-        |  CROSS JOIN (SELECT UNNEST(range(1, 65)) AS i) ix
-        |  GROUP BY c.cellId, c.aId, c.bId),
-        |sdDup AS (
-        |  SELECT d.bId AS vid, MIN(d.aId) AS dupOf
-        |  FROM sdDots d
-        |  JOIN norms na ON na.vec_id = d.aId
-        |  JOIN norms nb ON nb.vec_id = d.bId
-        |  WHERE d.dot / (na.nrm * nb.nrm) >= 0.2
-        |  GROUP BY d.bId)
-        |SELECT c.vec_id, c.cellId, s.vid IS NULL AS keep, s.dupOf
-        |FROM celled c LEFT JOIN sdDup s ON s.vid = c.vec_id
-        |ORDER BY c.vec_id""".stripMargin,
-    "t15_gopher_rules" ->
-      s"""WITH $PageSql,
-        |feat AS (
-        |  SELECT doc_id, page,
-        |    regexp_extract_all(page, '\\S+') AS words,
-        |    string_split(page, chr(10)) AS lines,
-        |    regexp_extract_all(lower(page), '[a-z0-9]+') AS toks
-        |  FROM pages),
-        |f2 AS (
-        |  SELECT doc_id,
-        |    CAST(len(words) AS BIGINT) AS nWords,
-        |    CAST(len(lines) AS BIGINT) AS nLines,
-        |    (length(page) - length(replace(page, '...', ''))) / 3 AS ellipsisCount,
-        |    length(page) - length(replace(page, '#', '')) AS hashCount,
-        |    list_sum(list_transform(words, x -> length(x))) AS sumLen,
-        |    len(list_filter(lines, l -> starts_with(l, '- '))) AS bulletLines,
-        |    len(list_filter(lines, l -> ends_with(l, '...'))) AS ellLines,
-        |    len(list_filter(words, x -> regexp_matches(x, '[a-z]'))) AS alphaWords,
-        |    CAST(len(list_intersect(list_distinct(toks),
-        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stopHits
-        |  FROM feat),
-        |f3 AS (
-        |  SELECT doc_id, nWords,
-        |    CASE WHEN nWords > 0 THEN CAST(sumLen AS DOUBLE) / nWords
-        |         ELSE 0.0 END AS meanWordLen,
-        |    CASE WHEN nWords > 0 THEN CAST(hashCount + ellipsisCount AS DOUBLE) / nWords
-        |         ELSE 0.0 END AS symbolRatio,
-        |    CASE WHEN nLines > 0 THEN CAST(bulletLines AS DOUBLE) / nLines
-        |         ELSE 0.0 END AS bulletRatio,
-        |    CASE WHEN nLines > 0 THEN CAST(ellLines AS DOUBLE) / nLines
-        |         ELSE 0.0 END AS ellipsisLineRatio,
-        |    CASE WHEN nWords > 0 THEN CAST(alphaWords AS DOUBLE) / nWords
-        |         ELSE 0.0 END AS alphaRatio,
-        |    stopHits
-        |  FROM f2)
-        |SELECT doc_id, nWords, meanWordLen, symbolRatio, bulletRatio,
-        |  ellipsisLineRatio, alphaRatio, stopHits,
-        |  (nWords BETWEEN 50 AND 100000) AND (meanWordLen BETWEEN 3.0 AND 10.0)
-        |    AND symbolRatio <= 0.1 AND bulletRatio <= 0.9
-        |    AND ellipsisLineRatio <= 0.3 AND alphaRatio >= 0.8
-        |    AND stopHits >= 2 AS keep
-        |FROM f3 ORDER BY doc_id""".stripMargin,
-    "t24_line_scrub" ->
-      s"""WITH $PageSql,
-        |lsx AS (SELECT doc_id, string_split(page, chr(10)) AS ls FROM pages),
-        |lln AS (
-        |  SELECT doc_id, generate_subscripts(ls, 1) AS ln, unnest(ls) AS line
-        |  FROM lsx),
-        |boiler AS (
-        |  SELECT line FROM (
-        |    SELECT line, COUNT(DISTINCT doc_id) AS d FROM lln GROUP BY line)
-        |  WHERE d >= 5)
-        |SELECT l.doc_id,
-        |  COALESCE(array_to_string(
-        |    list(l.line ORDER BY l.ln) FILTER (WHERE b.line IS NULL),
-        |    chr(10)), '') AS cleanedText,
-        |  COUNT(*) AS nLines,
-        |  COUNT(b.line) AS removedLines
-        |FROM lln l LEFT JOIN boiler b ON l.line = b.line
-        |GROUP BY l.doc_id ORDER BY l.doc_id""".stripMargin,
-    "t16_c4_filters" ->
-      s"""WITH $PageSql,
-        |lns AS (SELECT doc_id, page, string_split(page, chr(10)) AS lines
-        |        FROM pages),
-        |k AS (
-        |  SELECT doc_id, page, lines,
-        |    list_filter(lines, l ->
-        |      (right(l, 1) IN ('.', '!', '?', '"'))
-        |      AND len(regexp_extract_all(l, '\\S+')) >= 5
-        |      AND NOT contains(l, 'javascript')) AS kept,
-        |    (contains(page, '{') OR contains(page, 'lorem ipsum')) AS pageDrop
-        |  FROM lns)
-        |SELECT doc_id,
-        |  CAST(len(lines) AS BIGINT) AS nLines,
-        |  CAST(CASE WHEN pageDrop THEN 0 ELSE len(kept) END AS BIGINT) AS nKept,
-        |  pageDrop,
-        |  CASE WHEN contains(page, '{') THEN 'brace'
-        |       WHEN contains(page, 'lorem ipsum') THEN 'lorem' END AS dropReason,
-        |  CASE WHEN pageDrop THEN '' ELSE array_to_string(kept, chr(10)) END AS cleanText,
-        |  CAST(length(CASE WHEN pageDrop THEN ''
-        |    ELSE array_to_string(kept, chr(10)) END) AS BIGINT) AS keptChars
-        |FROM k ORDER BY doc_id""".stripMargin,
-    // step chain mirrored as nested CTE hops: DuckDB's list() FILTER is
-    // the sorted conditional collect; [1] on an empty/NULL list is NULL,
-    // matching get()'s null out-of-bounds; a NULL prior step nulls the
-    // lambda so the filtered list drains — both engines propagate the
-    // missing step identically. 86400000000000 = the 24 h window in ns
-    "e5_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_ns(ts) AS tsn FROM events),
-        |arr AS (
-        |  SELECT user_id,
-        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'signup') AS a0,
-        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'view') AS a1,
-        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'click') AS a2,
-        |    list(tsn ORDER BY tsn) FILTER (WHERE event_type = 'purchase') AS a3
-        |  FROM e GROUP BY user_id),
-        |f1 AS (SELECT user_id, a1, a2, a3, a0[1] AS t1 FROM arr),
-        |f2 AS (SELECT user_id, a2, a3, t1,
-        |         list_filter(a1, x -> x > t1 AND x <= t1 + 86400000000000)[1] AS t2 FROM f1),
-        |f3 AS (SELECT user_id, a3, t1, t2,
-        |         list_filter(a2, x -> x > t2 AND x <= t2 + 86400000000000)[1] AS t3 FROM f2),
-        |f4 AS (SELECT user_id, t1, t2, t3,
-        |         list_filter(a3, x -> x > t3 AND x <= t3 + 86400000000000)[1] AS t4 FROM f3)
-        |SELECT user_id, t1, t2, t3, t4,
-        |  CAST(CASE WHEN t4 IS NOT NULL THEN 4 WHEN t3 IS NOT NULL THEN 3
-        |    WHEN t2 IS NOT NULL THEN 2 WHEN t1 IS NOT NULL THEN 1
-        |    ELSE 0 END AS BIGINT) AS stage
-        |FROM f4 ORDER BY user_id""".stripMargin,
-    "e6_retention" ->
-      """WITH d AS (
-        |  SELECT DISTINCT user_id,
-        |    epoch_ns(ts) // 86400000000000 AS day FROM events),
-        |c AS (SELECT user_id, MIN(day) AS cohortDay FROM d GROUP BY user_id),
-        |cs AS (SELECT cohortDay, COUNT(*) AS cohortSize FROM c GROUP BY cohortDay),
-        |r AS (
-        |  SELECT c.cohortDay, d.day - c.cohortDay AS dayOffset,
-        |    COUNT(*) AS activeUsers
-        |  FROM d JOIN c USING (user_id) GROUP BY 1, 2)
-        |SELECT r.cohortDay, r.dayOffset, r.activeUsers,
-        |  cs.cohortSize,
-        |  CAST(r.activeUsers AS DOUBLE) / cs.cohortSize AS retention
-        |FROM r JOIN cs USING (cohortDay)
-        |ORDER BY r.cohortDay, r.dayOffset""".stripMargin,
-    // DuckDB's native ASOF LEFT JOIN — an independent implementation of
-    // the backward-as-of semantics (greatest qts ≤ ts per key, null when
-    // none) checking the Spark union-tag/window plan result-for-result
-    "e7_asof_join" ->
-      """WITH q AS (
-        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.tsn AS ts,
-        |  q.qts AS matchedTs, q.quote
-        |FROM c ASOF LEFT JOIN q
-        |  ON c.user_id = q.user_id AND c.tsn >= q.qts
-        |ORDER BY c.event_id""".stripMargin,
-    // DuckDB has no ASOF tolerance: the native backward match is taken,
-    // then blanked when farther than the window (NULL qts stays NULL)
-    "e11_asof_tolerance" ->
-      """WITH q AS (
-        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.tsn AS ts,
-        |  CASE WHEN c.tsn - q.qts <= 3600000000000 THEN q.qts END
-        |    AS matchedTs,
-        |  CASE WHEN c.tsn - q.qts <= 3600000000000 THEN q.quote END
-        |    AS quote
-        |FROM c ASOF LEFT JOIN q
-        |  ON c.user_id = q.user_id AND c.tsn >= q.qts
-        |ORDER BY c.event_id""".stripMargin,
-    "e9_asof_forward" ->
-      """WITH q AS (
-        |  SELECT user_id, epoch_ns(ts) AS qts, MAX(value) AS quote
-        |  FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_id, user_id, epoch_ns(ts) AS tsn
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.tsn AS ts,
-        |  q.qts AS matchedTs, q.quote
-        |FROM c ASOF LEFT JOIN q
-        |  ON c.user_id = q.user_id AND c.tsn <= q.qts
-        |ORDER BY c.event_id""".stripMargin,
-    "e8_range_join" ->
-      """WITH iv AS (
-        |  SELECT event_id AS purchase_id, user_id, epoch_ns(ts) AS wstart,
-        |    epoch_ns(ts) + 21600000000000 AS wend
-        |  FROM events WHERE event_type = 'purchase'),
-        |p AS (
-        |  SELECT event_id AS click_id, user_id, epoch_ns(ts) AS tsn
-        |  FROM events WHERE event_type = 'click')
-        |SELECT p.click_id, iv.purchase_id, p.user_id, p.tsn AS ts, iv.wstart
-        |FROM p JOIN iv ON p.user_id = iv.user_id
-        |  AND p.tsn >= iv.wstart AND p.tsn < iv.wend
-        |ORDER BY p.click_id, iv.purchase_id""".stripMargin,
+        |ORDER BY v.view_id, c.click_id""".stripMargin),
   )
+
+  // t34_curriculum_mix's oracle, read verbatim by t34_stream_parity:
+  private lazy val T34OracleSql: String =
+    """WITH h AS (
+      |  SELECT doc_id, lang,
+      |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok
+      |  FROM documents),
+      |x AS (
+      |  SELECT doc_id, lang, tok, UNNEST(['warm', 'anneal']) AS stage
+      |  FROM h),
+      |k AS (
+      |  SELECT doc_id, lang, tok, stage,
+      |    CASE WHEN stage = 'warm' THEN
+      |           CASE lang WHEN 'en' THEN 4000 WHEN 'es' THEN 2000
+      |                WHEN 'de' THEN 1000 ELSE 0 END
+      |         ELSE CASE lang WHEN 'en' THEN 1000 WHEN 'de' THEN 3000
+      |                ELSE 0 END END AS budget,
+      |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+      |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+      |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+      |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+      |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+      |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+      |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+      |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+      |  FROM (SELECT *,
+      |          md5(CAST(doc_id AS VARCHAR) || '#' || stage || 'curr0') AS hx
+      |        FROM x) hx2),
+      |c AS (
+      |  SELECT doc_id, lang, tok, stage, budget,
+      |    COALESCE(SUM(tok) OVER (PARTITION BY stage, lang, hkey % 4
+      |      ORDER BY hkey, doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+      |    budget / CAST(4 AS DOUBLE) AS keep
+      |  FROM k)
+      |SELECT stage, lang, COUNT(*) AS total,
+      |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
+      |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
+      |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+      |FROM c GROUP BY stage, lang ORDER BY stage, lang""".stripMargin
+
+  // t32_temperature_mix's oracle, read verbatim by t32_stream_parity:
+  // per-source totals → corrected-isqrt weights → integer budget
+  // split → the t13 admission window, all in one CTE chain
+  private lazy val T32OracleSql: String =
+    """WITH h AS (
+      |  SELECT doc_id, lang,
+      |    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS BIGINT) AS tok,
+      |    md5(CAST(doc_id AS VARCHAR) || 'temp0') AS hx
+      |  FROM documents),
+      |t32_tot AS (
+      |  SELECT lang, CAST(SUM(tok) AS BIGINT) AS n FROM h GROUP BY lang),
+      |t32_w AS (
+      |  SELECT lang, n,
+      |    -- corrected integer sqrt: double sqrt is within 1 ulp for n < 2^52,
+      |    -- one ±1 adjustment each way makes it exact
+      |    (CASE WHEN (s0 - 1) * (s0 - 1) > n THEN s0 - 2
+      |          WHEN s0 * s0 > n THEN s0 - 1
+      |          WHEN (s0 + 2) * (s0 + 2) <= n THEN s0 + 2
+      |          WHEN (s0 + 1) * (s0 + 1) <= n THEN s0 + 1
+      |          ELSE s0 END) AS w
+      |  FROM (SELECT lang, n, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS s0
+      |        FROM t32_tot)),
+      |t32_sw AS (SELECT CAST(SUM(w) AS BIGINT) AS sw FROM t32_w),
+      |t32_b AS (
+      |  SELECT lang, n, w, (7000 * w) // sw AS budget FROM t32_w CROSS JOIN t32_sw),
+      |k AS (
+      |  SELECT doc_id, h.lang, tok, b.budget,
+      |    CAST(strpos('0123456789abcdef', hx[1]) - 1 AS BIGINT) * 268435456
+      |    + CAST(strpos('0123456789abcdef', hx[2]) - 1 AS BIGINT) * 16777216
+      |    + CAST(strpos('0123456789abcdef', hx[3]) - 1 AS BIGINT) * 1048576
+      |    + CAST(strpos('0123456789abcdef', hx[4]) - 1 AS BIGINT) * 65536
+      |    + CAST(strpos('0123456789abcdef', hx[5]) - 1 AS BIGINT) * 4096
+      |    + CAST(strpos('0123456789abcdef', hx[6]) - 1 AS BIGINT) * 256
+      |    + CAST(strpos('0123456789abcdef', hx[7]) - 1 AS BIGINT) * 16
+      |    + CAST(strpos('0123456789abcdef', hx[8]) - 1 AS BIGINT) AS hkey
+      |  FROM h JOIN t32_b b ON h.lang = b.lang),
+      |c AS (
+      |  SELECT doc_id, lang, tok, budget,
+      |    COALESCE(SUM(tok) OVER (PARTITION BY lang, hkey % 4
+      |      ORDER BY hkey, doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) <
+      |    budget / CAST(4 AS DOUBLE) AS keep
+      |  FROM k)
+      |SELECT lang, CAST(MAX(budget) AS BIGINT) AS budget, COUNT(*) AS total,
+      |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS nKept,
+      |  CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT) AS keptTokens,
+      |  CAST(SUM(CASE WHEN keep THEN doc_id ELSE 0 END) AS BIGINT) AS keptIdSum
+      |FROM c GROUP BY lang ORDER BY lang""".stripMargin
+
+  // t35_decontaminate_spans's oracle, read verbatim by t35_stream_parity:
+  // the t13 admission replayed per (stage, source): stage folds into
+  // the md5 input (fresh permutation per stage) and the budget is a
+  // bounded stage×source CASE — the warm/anneal reweighting verbatim
+  // span decontamination: eval DISTINCT 8-gram index probed by the
+  // training gram stream, hits expand ±8 tokens (clamped at 0) and
+  // the survivors fingerprint — the d13 cut replay with an external
+  // (eval) index instead of the corpus-internal occurrence rank
+  private lazy val T35OracleSql: String =
+    s"""WITH tdocs AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
+      |  UNION ALL
+      |  SELECT doc_id + 2000000, text || ' $T35LeakSuffix'
+      |  FROM documents WHERE doc_id % 97 = 0),
+      |twords AS (
+      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+      |  FROM tdocs),
+      |ewords AS (
+      |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
+      |  FROM documents WHERE doc_id % 97 = 0),
+      |tposed AS (
+      |  SELECT doc_id, UNNEST(range(1, GREATEST(len(w) - 6, 1))) AS i, w
+      |  FROM twords),
+      |tgrams AS (
+      |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+      |         array_to_string(w[i:i+7], ' ') AS gram
+      |  FROM tposed),
+      |eposed AS (
+      |  SELECT doc_id, UNNEST(range(1, GREATEST(len(w) - 6, 1))) AS i, w
+      |  FROM ewords),
+      |evalIdx AS (
+      |  SELECT DISTINCT array_to_string(w[i:i+7], ' ') AS gram FROM eposed),
+      |hits AS (
+      |  SELECT t.doc_id, t.pos FROM tgrams t JOIN evalIdx e USING (gram)),
+      |cutPos AS (
+      |  SELECT DISTINCT doc_id,
+      |    UNNEST(range(GREATEST(pos - 8, 0), pos + 16)) AS tokPos
+      |  FROM hits),
+      |toks AS (
+      |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS tokPos, w[i] AS token
+      |  FROM (SELECT doc_id, UNNEST(range(1, len(w) + 1)) AS i, w
+      |        FROM twords) t),
+      |tot AS (SELECT doc_id, COUNT(*) AS total FROM toks GROUP BY doc_id),
+      |kept AS (
+      |  SELECT t.doc_id, COUNT(*) AS kept,
+      |    md5(string_agg(t.token, ' ' ORDER BY t.tokPos)) AS fp
+      |  FROM toks t
+      |  WHERE NOT EXISTS (SELECT 1 FROM cutPos c
+      |                    WHERE c.doc_id = t.doc_id AND c.tokPos = t.tokPos)
+      |  GROUP BY t.doc_id),
+      |hm AS (SELECT doc_id, COUNT(*) AS m FROM hits GROUP BY doc_id)
+      |SELECT x.doc_id,
+      |  CAST(COALESCE(tt.total, 0) AS BIGINT) AS totalTokens,
+      |  CAST(COALESCE(kp.kept, 0) AS BIGINT) AS keptTokens,
+      |  CAST(COALESCE(tt.total, 0) - COALESCE(kp.kept, 0) AS BIGINT)
+      |    AS cutTokens,
+      |  CAST(COALESCE(hh.m, 0) AS BIGINT) AS evalHits,
+      |  COALESCE(kp.fp, md5('')) AS cleanedFingerprint
+      |FROM tdocs x
+      |LEFT JOIN tot tt ON tt.doc_id = x.doc_id
+      |LEFT JOIN kept kp ON kp.doc_id = x.doc_id
+      |LEFT JOIN hm hh ON hh.doc_id = x.doc_id
+      |ORDER BY x.doc_id""".stripMargin
+
+  // t39_bm25_retrieve's oracle, read verbatim by t39_stream_parity:
+  // BM25-shaped retrieval: the same inverted-index chain — term
+  // frequencies, doc lengths, rational idf, the per-term contribution
+  // in the IDENTICAL IEEE association as the Spark expression, then
+  // the 1e-6 fixed-point BIGINT sum and (score DESC, did) ranking
+  private lazy val T39OracleSql: String =
+    """WITH tok AS (
+      |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+      |  FROM documents),
+      |dtf AS (
+      |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM tok
+      |  WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+      |dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM dtf GROUP BY did),
+      |stats AS (
+      |  SELECT COUNT(*) AS nDocs, CAST(SUM(dl) AS BIGINT) AS totTok FROM dl),
+      |dfreq AS (
+      |  SELECT term, COUNT(*) AS df FROM dtf GROUP BY term),
+      |qtf AS (
+      |  SELECT doc_id AS qid, term, COUNT(*) AS qtf FROM tok
+      |  WHERE doc_id % 97 = 0 GROUP BY 1, 2),
+      |cand AS (
+      |  SELECT q.qid, d.did, q.qtf, d.dtf, f.df, l.dl, s.nDocs, s.totTok
+      |  FROM qtf q JOIN dtf d USING (term) JOIN dfreq f USING (term)
+      |  JOIN dl l ON l.did = d.did CROSS JOIN stats s
+      |  WHERE f.df * 1000000 <= 900000 * s.nDocs),
+      |contrib AS (
+      |  SELECT qid, did,
+      |    CAST(ROUND(
+      |      CAST(qtf AS DOUBLE) *
+      |      ((CAST(nDocs AS DOUBLE) - CAST(df AS DOUBLE) + 0.5) /
+      |       (CAST(df AS DOUBLE) + 0.5)) *
+      |      ((CAST(dtf AS DOUBLE) * 2.2) /
+      |       (CAST(dtf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+      |         (CAST(dl AS DOUBLE) /
+      |          (CAST(totTok AS DOUBLE) / CAST(nDocs AS DOUBLE)))))) *
+      |      1000000.0) AS BIGINT) AS fixed
+      |  FROM cand),
+      |sc AS (
+      |  SELECT qid, did, CAST(SUM(fixed) AS BIGINT) AS score
+      |  FROM contrib GROUP BY 1, 2),
+      |rk AS (
+      |  SELECT qid, did, score,
+      |    CAST(ROW_NUMBER() OVER (PARTITION BY qid
+      |      ORDER BY score DESC, did) AS BIGINT) AS rank
+      |  FROM sc)
+      |SELECT qid, did, score, rank FROM rk WHERE rank <= 5
+      |ORDER BY qid, rank""".stripMargin
+
+  // t42_bm25_index_append's oracle, read verbatim by t43_bm25_stats_serve:
+  // incremental == rebuild IS the oracle: the engine appends a batch
+  // onto the standing posting store (with a deliberate replay
+  // overlap); this SQL rebuilds the whole-corpus elided index from
+  // scratch — any append drift lands in the hash
+  private lazy val T42OracleSql: String =
+    """WITH t42tok AS (
+      |  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
+      |  FROM documents),
+      |t42dtf AS (
+      |  SELECT doc_id AS did, term, COUNT(*) AS dtf FROM t42tok GROUP BY 1, 2),
+      |t42dl AS (SELECT did, CAST(SUM(dtf) AS BIGINT) AS dl FROM t42dtf GROUP BY did),
+      |t42stats AS (
+      |  SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS tot_tok FROM t42dl),
+      |t42dfreq AS (SELECT term, COUNT(*) AS df FROM t42dtf GROUP BY term)
+      |SELECT d.term, d.did, d.dtf, l.dl, f.df, s.n_docs, s.tot_tok
+      |FROM t42dtf d JOIN t42dfreq f USING (term) JOIN t42dl l ON l.did = d.did
+      |CROSS JOIN t42stats s
+      |WHERE f.df * 1000000 <= 900000 * s.n_docs
+      |ORDER BY d.term, d.did""".stripMargin
 }

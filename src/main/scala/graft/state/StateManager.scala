@@ -404,10 +404,6 @@ object StateManager {
           x => x.cast("string")), ",").as("replicas"))
   }
 
-  /** Blocks of one file as BlockEntries sorted by position (:124-140). */
-  def blockEntriesOfFile(block: DataFrame, fileId: Long): DataFrame =
-    blockEntries(block.filter(col("fileId") === fileId)).orderBy(col("fileIndex"))
-
   // ---- S9: last block (top-1 by fileIndex, :232-235) -------------------
 
   def lastBlockPerFile(block: DataFrame): DataFrame = {

@@ -109,8 +109,9 @@ object Changefeed {
     docs.withWatermark(timeCol, watermark)
       .dropDuplicatesWithinWatermark(idCol)
 
-  /** Start a streaming query whose every batch reads the PINNED
-    * `standing` frame, releasing the cache exactly once when THIS run
+  /** Start a streaming query over `stream` that hands `sink` each
+    * micro-batch's `classify(pinned, batch)`, where `pinned` is the
+    * PINNED `standing` frame, releasing the cache exactly once when THIS run
     * terminates — repeated start/stop in one session (tests, restarts)
     * must not accumulate corpus-sized cached frames. Termination events
     * are delivered asynchronously on the listener bus, possibly BEFORE
@@ -121,8 +122,10 @@ object Changefeed {
     * checkpoint restarts, so a late event from a prior run could
     * otherwise release a live successor's cache — runId is unique per
     * run. */
-  private def withStandingFrame(standing: DataFrame, session: SparkSession)
-                               (start: DataFrame => StreamingQuery): StreamingQuery = {
+  private def withStandingFrame(standing: DataFrame, stream: DataFrame,
+                                sink: (DataFrame, Long) => Unit)
+                               (classify: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
+    val session = stream.sparkSession
     val pinned = standing.persist()
     pinned.count() // materialize before the first batch arrives
     val queryRunId = new java.util.concurrent.atomic.AtomicReference[java.util.UUID]
@@ -144,8 +147,13 @@ object Changefeed {
     }
     session.streams.addListener(listener)
     val query =
-      try start(pinned)
-      catch {
+      try {
+        stream.writeStream
+          .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+            sink(classify(pinned, batch.toDF()), batchId)
+          }
+          .start()
+      } catch {
         case e: Throwable =>
           releaseCache()
           session.streams.removeListener(listener)
@@ -176,13 +184,8 @@ object Changefeed {
                               minEst: Double = 0.5): StreamingQuery = {
     import graft.functions.Dedup
     val exSig = Dedup.withBands(Dedup.minhashSignatures(existing, idCol, textCol))
-    withStandingFrame(exSig, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(Dedup.incrementalLshAgainst(
-            pinned, batch.toDF(), idCol, textCol, minEst = minEst), batchId)
-        }
-        .start()
+    withStandingFrame(exSig, docs, sink) { (pinned, batch) =>
+      Dedup.incrementalLshAgainst(pinned, batch, idCol, textCol, minEst = minEst)
     }
   }
 
@@ -196,13 +199,8 @@ object Changefeed {
                                 k: Int = 8): StreamingQuery = {
     import graft.functions.Dedup
     val exIdx = Dedup.spanGramIndex(existing, idCol, textCol, k)
-    withStandingFrame(exIdx, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(Dedup.incrementalSpansAgainst(
-            pinned, batch.toDF(), idCol, textCol, k), batchId)
-        }
-        .start()
+    withStandingFrame(exIdx, docs, sink) { (pinned, batch) =>
+      Dedup.incrementalSpansAgainst(pinned, batch, idCol, textCol, k)
     }
   }
 
@@ -221,13 +219,8 @@ object Changefeed {
                        sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.TextFunctions
     val model = TextFunctions.bigramModel(train, textCol)
-    withStandingFrame(model, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(TextFunctions.bigramScoreAgainst(
-            pinned, batch.toDF(), idCol, textCol), batchId)
-        }
-        .start()
+    withStandingFrame(model, docs, sink) { (pinned, batch) =>
+      TextFunctions.bigramScoreAgainst(pinned, batch, idCol, textCol)
     }
   }
 
@@ -245,13 +238,8 @@ object Changefeed {
                             sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.TextFunctions
     val model = TextFunctions.nbTrain(pos, neg, idCol, textCol)
-    withStandingFrame(model, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(TextFunctions.nbScoreAgainst(
-            pinned, batch.toDF(), idCol, textCol), batchId)
-        }
-        .start()
+    withStandingFrame(model, docs, sink) { (pinned, batch) =>
+      TextFunctions.nbScoreAgainst(pinned, batch, idCol, textCol)
     }
   }
 
@@ -267,13 +255,8 @@ object Changefeed {
                       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.TextFunctions
     val model = TextFunctions.nbTrainMulti(classes, idCol, textCol)
-    withStandingFrame(model, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(TextFunctions.langIdAgainst(
-            pinned, batch.toDF(), idCol, textCol), batchId)
-        }
-        .start()
+    withStandingFrame(model, docs, sink) { (pinned, batch) =>
+      TextFunctions.langIdAgainst(pinned, batch, idCol, textCol)
     }
   }
 
@@ -292,13 +275,8 @@ object Changefeed {
                              sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.Dedup
     val idx = Dedup.spanEvalIndex(evalDocs, idCol, textCol, k)
-    withStandingFrame(idx, docs.sparkSession) { pinned =>
-      docs.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(Dedup.decontaminateSpansAgainst(
-            pinned, batch.toDF(), idCol, textCol, k, margin), batchId)
-        }
-        .start()
+    withStandingFrame(idx, docs, sink) { (pinned, batch) =>
+      Dedup.decontaminateSpansAgainst(pinned, batch, idCol, textCol, k, margin)
     }
   }
 
@@ -332,13 +310,8 @@ object Changefeed {
                               idCol: String, textCol: String, k: Int,
                               sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.functions.TextFunctions
-    withStandingFrame(index, queries.sparkSession) { pinned =>
-      queries.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(TextFunctions.bm25TopKAgainst(
-            pinned, batch.toDF(), idCol, textCol, k), batchId)
-        }
-        .start()
+    withStandingFrame(index, queries, sink) { (pinned, batch) =>
+      TextFunctions.bm25TopKAgainst(pinned, batch, idCol, textCol, k)
     }
   }
 
@@ -453,13 +426,8 @@ object Changefeed {
                             sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.multimodal.Multimodal
     val idx = Multimodal.payloadIndex(standing, idCol)
-    withStandingFrame(idx, media.sparkSession) { pinned =>
-      media.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(Multimodal.payloadDedupAgainst(pinned, batch.toDF(), idCol),
-            batchId)
-        }
-        .start()
+    withStandingFrame(idx, media, sink) { (pinned, batch) =>
+      Multimodal.payloadDedupAgainst(pinned, batch, idCol)
     }
   }
 
@@ -475,13 +443,8 @@ object Changefeed {
                           sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import graft.multimodal.Multimodal
     val idx = Multimodal.phashIndex(standing, idCol)
-    withStandingFrame(idx, media.sparkSession) { pinned =>
-      media.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(Multimodal.phashNearDupsAgainst(pinned, batch.toDF(), idCol),
-            batchId)
-        }
-        .start()
+    withStandingFrame(idx, media, sink) { (pinned, batch) =>
+      Multimodal.phashNearDupsAgainst(pinned, batch, idCol)
     }
   }
 
@@ -563,13 +526,8 @@ object Changefeed {
     // Events.rangeJoin depends on byte-identical bucketization
     val bucketed = graft.functions.Events.bucketized(
       intervals, start, end, bucketNs)
-    withStandingFrame(bucketed, points.sparkSession) { pinned =>
-      points.writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          sink(graft.functions.Events.probeJoin(
-            batch.toDF(), pinned, key, ts, start, end, bucketNs), batchId)
-        }
-        .start()
+    withStandingFrame(bucketed, points, sink) { (pinned, batch) =>
+      graft.functions.Events.probeJoin(batch, pinned, key, ts, start, end, bucketNs)
     }
   }
 
@@ -850,19 +808,6 @@ object Changefeed {
     }
   }
 
-  /** S15 LeaseMonitor: on every trigger, scan for hard-expired leases and
-    * hand the recovery candidates to `sink` (the reference runs this scan
-    * every 2 s — StateManager.java:893-914). Driven by any ticking
-    * stream (rate source in production, MemoryStream in tests). */
-  def leaseMonitor(ticks: DataFrame, lease: () => DataFrame, file: () => DataFrame,
-                   nowMs: () => Long, sink: (Long, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        sink(id, graft.state.StateManager.leaseRecoveryCandidates(lease(), file(), nowMs()))
-      }
-      .start()
-
   /** Balancer iteration loop (Balancer.java main :1240-1330): each tick
     * re-plans from the CURRENT datanode snapshot and hands `sink` the
     * (batchId, imbalance row, move schedule). The caller dispatches the
@@ -960,7 +905,7 @@ object Changefeed {
     * re-histograms the CURRENT live table against it and hands `sink`
     * the (batchId, per-bin report with tvd_ppm/drifted) — the nightly
     * data-quality watchdog that catches a bad upstream delivery before
-    * training reads it, run as the seventh monitor loop. The report
+    * training reads it, run as a monitor loop. The report
     * rides distributionDrift's own internal checkpoint (≤ maxBins rows,
     * snapshot-stable by the time the sink sees it; driver GC reclaims
     * these bin-sized frames — the explicit-free discipline is for the
@@ -969,14 +914,9 @@ object Changefeed {
                    live: () => DataFrame, valueCol: String, binWidth: Long,
                    maxBins: Int, thresholdPpm: Long,
                    sink: (Long, DataFrame) => Unit): StreamingQuery =
-    withStandingFrame(reference, ticks.sparkSession) { pinned =>
-      ticks.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (_: DataFrame, id: Long) =>
-          sink(id, graft.analytics.TableChecks.distributionDrift(
-            pinned, live(), valueCol, binWidth, maxBins, thresholdPpm))
-        }
-        .start()
+    withStandingFrame(reference, ticks, (report, id) => sink(id, report)) { (pinned, _) =>
+      graft.analytics.TableChecks.distributionDrift(
+        pinned, live(), valueCol, binWidth, maxBins, thresholdPpm)
     }
 
   /** D4 history-compaction maintenance loop: each trigger re-reads the
@@ -985,7 +925,7 @@ object Changefeed {
     * syncer's incremental replay) and hands `sink` the (batchId, floor,
     * compacted history) from [[graft.store.StateStore.compactHistory]].
     * The caller owns committing the compacted table back, the same
-    * caller-owns-the-commit convention as the other five monitors —
+    * caller-owns-the-commit convention as the other monitors —
     * and must have STOPPED serving the previous tick's frame by the
     * time its sink returns: the monitor frees that checkpoint when the
     * next tick commits (one history copy pinned, never one per tick).

@@ -740,7 +740,7 @@ class ScaleSpec extends SparkSpec {
     // partitionBy would compile to Exchange SinglePartition and gather
     // the whole corpus through one task — the one plan that cannot
     // survive a 100x scale-up
-    val out = graft.queries.DataOpsQueries.queries("t7_pack_sequences")(
+    val out = SparkEntry.queries("t7_pack_sequences")(
       spark, "/root/testdata/sf0.001")
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange SinglePartition"),
@@ -756,7 +756,7 @@ class ScaleSpec extends SparkSpec {
     // one task at 100 TB
     for (q <- Seq("t12_shard_shuffle", "t13_budget_mix", "d11_cdc_chunks",
         "t34_curriculum_mix", "t33b_epoch_expand")) {
-      val out = graft.queries.DataOpsQueries.queries(q)(
+      val out = SparkEntry.queries(q)(
         spark, "/root/testdata/sf0.001")
       val plan = out.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange SinglePartition"),
