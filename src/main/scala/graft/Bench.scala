@@ -45,6 +45,13 @@ object Bench {
     else None
   }
 
+  /** OS 1-minute load average (−1 when unreadable). Advisory: it
+    * includes this JVM's own local[N] execution. */
+  private def loadAvg1m(): Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split("\\s+")(0).toDouble
+    catch { case _: Throwable => -1.0 }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
@@ -107,7 +114,6 @@ object Bench {
     // comfortably above what a saturated self-load sustains, and the
     // field remains advisory: an uncorroborated fallback must be read
     // as a possible real regression. Sampled cheaply from /proc/loadavg.
-    import RehearsalUtil.loadAvg1m
     def measure(name: String): (String, Vector[Double], Boolean, Vector[Double], Int, Double) = {
       var failed = false
       def once(): Double = {

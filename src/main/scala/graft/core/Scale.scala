@@ -36,7 +36,8 @@ object Scale {
     * later-mutated keys source cannot make the join re-evaluate them.
     * The bounded path stays a single limit-bounded collect — no
     * checkpoint job — so monitor-tick callers pay exactly one bounded
-    * collect per tick, priced in the 140× rehearsal. */
+    * collect per tick. ScalingLawsSpec pins the pruning: a tick's jobs,
+    * shuffle records and input records do not grow with unlisted shards. */
   def keyPrune(table: DataFrame, keyCol: String, keys: DataFrame,
                keysCol: String, maxPushdown: Int = 65536): DataFrame = {
     import org.apache.spark.sql.types._

@@ -2014,6 +2014,9 @@ object DataOpsQueries {
     // parquet → stateful agg → AvailableNow trigger → memory sink. The
     // oracle is identical to e2's: stream/batch parity is the check.
     GateEntry("e4_stream_window_parity", { (s, dir) =>
+      // a dangling link would make an empty stream and a 0-row answer
+      val events = java.nio.file.Paths.get(s"$dir/events.parquet")
+      require(java.nio.file.Files.exists(events), s"missing input $events")
       val sinkName = "e4sink"
       s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
@@ -2021,8 +2024,7 @@ object DataOpsQueries {
       // holding a symlink to the events parquet
       val srcDir = graft.core.Caching.scratchDir("e4-src")
       java.nio.file.Files.createSymbolicLink(
-        srcDir.resolve("events.parquet"),
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
+        srcDir.resolve("events.parquet"), events)
       val stream = DerivedState.normalizeEventTs(
           s.readStream.schema(TestdataSchema("events")).parquet(srcDir.toString))
         .withColumn("day", expr("ts div 86400000000000"))

@@ -22,7 +22,8 @@ import graft.core.Tables
   * customer no longer fits an executor, the same plan degrades to a
   * shuffle join instead of an OOM; AQE's runtime re-opt recovers the
   * broadcast when a FILTERED dim (q8/q9's part slice) turns out small.
-  * Plans audited at 10×/100× in ScaleRehearsalQ (q5/q9/q18). */
+  * ScalingLawsSpec audits the executed plans of the q-family for a
+  * CartesianProduct. */
 object RelationalQueries {
 
   private def dsum(c: org.apache.spark.sql.Column) =

@@ -787,7 +787,9 @@ object Mutations {
       col("id").as("__oldP"), col("__newId").as("__newP"))
     val fileRows = rankedRows
       // broadcast: both sides are stats-less zipWithIndex frames, so the
-      // planner would sort-merge this batch-bounded self-join
+      // planner would sort-merge this self-join. rankMap holds one row
+      // per copied file, so it is SUBTREE-sized, not request-bounded: a
+      // copy of one large directory broadcasts the whole subtree
       .join(broadcast(rankMap), col("__rsrc") === col("__m1") && col("__rdst") === col("__m2")
         && col("__rname") === col("__m3") && col("parentId") === col("__oldP"), "left")
       .select(lit("copy").as("writeOp"), lit("file").as("tbl"),
@@ -800,7 +802,9 @@ object Mutations {
         col("id").as("srcId"), col("__newId").as("version"),
         lit(null).cast("string").as("reject"))
     // block duplication for the copied files. The copied set is
-    // request-bounded: push its file ids into the block scan
+    // subtree-sized (one row per copied file), not request-bounded, and
+    // so are the broadcasts of copiedFiles and blockKeys (one row per
+    // copied block) below. Push its file ids into the block scan
     // (Scale.keyPrune — in views mode the fileId predicate drops below
     // the derivation window; on a real table it prunes row groups) and
     // PIN the matched replicas once (r20, guide §5) — blockKeys' rank

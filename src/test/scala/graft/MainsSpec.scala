@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The plumbing the mains share: the `*_ONLY` subset parser, and source
-  * checks that keep session building in one place and timing out of the
-  * operators. */
+  * checks that keep session building in one place, timing out of the
+  * operators and the deleted rehearsal mains out of main code. */
 class MainsSpec extends AnyFunSuite {
 
   test("subset: names are trimmed, empties dropped, unknown names rejected") {
@@ -54,5 +54,15 @@ class MainsSpec extends AnyFunSuite {
       case (p, src) if src.contains("SPARK_GRAFT_PROFILE_") => p.toString
     }
     assert(hooks.isEmpty)
+  }
+
+  test("no rehearsal mains or their env knobs in main code") {
+    val gone = Seq("ScaleRehearsal", "RehearsalUtil",
+      "SPARK_GRAFT_REHEARSAL_REPS", "SPARK_GRAFT_ALLOW_BIG_HEAP",
+      "SPARK_GRAFT_BANDS", "SPARK_GRAFT_PLAN_DUMP",
+      "SPARK_GRAFT_XL_N5_REPS", "SPARK_GRAFT_Q_ONLY")
+    val found = for ((p, src) <- mainSources; g <- gone if src.contains(g))
+      yield s"$p: $g"
+    assert(found.isEmpty)
   }
 }

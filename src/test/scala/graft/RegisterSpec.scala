@@ -1,15 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.{Caching, Scale, Tables}
 import graft.model.{DerivedState, TestdataSchema}
@@ -27,43 +21,10 @@ class RegisterSpec extends SparkSpec {
   private def views(s: SparkSession) =
     names.map(n => n -> s.sessionState.catalog.getRawTempView(n).get).toMap
 
-  /** SQL executions and Spark jobs `body` starts in the shared session.
-    * Listener delivery is asynchronous but ordered, so the executions
-    * `body` caused are the ones delivered between a `head` marker run
-    * before it and a `collect` marker run after it; an earlier action's
-    * event may still be queued when the listener is added. */
+  /** (SQL executions, Spark jobs) `body` starts in the shared session. */
   private def actionsDuring(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val sqls = new ConcurrentLinkedQueue[String]
-    val groups = new ConcurrentLinkedQueue[String]
-    val qel = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = sqls.add(f)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = sqls.add(f)
-    }
-    val sl = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    spark.listenerManager.register(qel)
-    sc.addSparkListener(sl)
-    try {
-      spark.range(1).head()
-      sc.setJobGroup("graft-register", "register")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("graft-marker", "marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      def window = sqls.asScala.toSeq.dropWhile(_ != "head").drop(1)
-      def delivered = window.contains("collect") && groups.contains("graft-marker")
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(delivered, "marker actions never delivered")
-      (window.takeWhile(_ != "collect").size,
-        groups.asScala.count(_ == "graft-register"))
-    } finally {
-      sc.removeSparkListener(sl)
-      spark.listenerManager.unregister(qel)
-    }
+    val c = countersDuring(body)
+    (c.sqlActions, c.jobs)
   }
 
   private def count(t: String) = spark.table(t).count()

@@ -456,31 +456,6 @@ class ScaleSpec extends SparkSpec {
     assert(!quiet.contains("WARN"), s"truncated build must not warn: $quiet")
   }
 
-  test("heap rule: oversized small-scale and huge XL heaps flagged; the documented 64g-at-100x passes") {
-    import graft.RehearsalUtil.heapRuleViolation
-    def g(n: Long) = n * (1L << 30)
-    assert(heapRuleViolation(10, g(8)).isEmpty, "default heap at 10x is the rule")
-    assert(heapRuleViolation(10, g(64)).isDefined, "the r18 trap: 64g at 10x")
-    assert(heapRuleViolation(1, g(64)).isDefined, "Streams behind a big heap")
-    assert(heapRuleViolation(100, g(64)).isEmpty, "64g is FOR 100x")
-    assert(heapRuleViolation(140, g(96)).isDefined, "the r16 trap: 96g at XL")
-    assert(heapRuleViolation(140, g(64)).isEmpty)
-  }
-
-  test("rehearsal bands: in-band quiet, out-of-band breaks loudly, unknown lines unchecked") {
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out)) {
-      graft.RehearsalUtil.checkBands("xl140", Seq(
-        "n5" -> 50.0,           // inside [28, 130]
-        "t36" -> 500.0,         // far outside [45, 112] — a real break
-        "no_such_line" -> 1.0)) // absent from the file: unchecked
-    }
-    val s = out.toString
-    assert(s.contains("xl140/n5 50.000 in"), s)
-    assert(s.contains("BAND-BREAK xl140/t36"), s)
-    assert(s.contains("2/3 lines checked, 1 breaks"), s)
-  }
-
   test("stats store: write/fold/read roundtrip serves == rebuild; folds are per-version idempotent; orphaned stages never read") {
     import graft.core.Scale
     import graft.functions.TextFunctions

@@ -1,6 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one per suite, lazy). */
@@ -15,7 +23,67 @@ trait SparkSpec extends AnyFunSuite {
 
   def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
+
+  /** What `body` starts in the shared session: its Spark jobs (counted
+    * by job group), its SQL executions, and over the tasks of its jobs
+    * the shuffle records read, the input records read and the largest
+    * shuffle read of one task. Listener delivery is asynchronous but
+    * ordered, so what `body` caused is what is delivered between a
+    * `head` marker run before it and a `collect` marker run after it;
+    * an earlier action's event may still be queued when the listeners
+    * are added. */
+  def countersDuring(body: => Unit): Counters = {
+    val sc = spark.sparkContext
+    val group = "graft-counted"
+    val sqls = new ConcurrentLinkedQueue[String]
+    val groups = new ConcurrentLinkedQueue[String]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val (shuffle, input, maxShuffle) = (new AtomicLong, new AtomicLong, new AtomicLong)
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = sqls.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = sqls.add(f)
+    }
+    val sl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (g == group) e.stageIds.foreach(stages.add)
+        groups.add(g)
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          val read = e.taskMetrics.shuffleReadMetrics.recordsRead
+          shuffle.addAndGet(read)
+          input.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+          maxShuffle.accumulateAndGet(read, math.max)
+        }
+    }
+    spark.listenerManager.register(qel)
+    sc.addSparkListener(sl)
+    try {
+      spark.range(1).head()
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft-marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      def window = sqls.asScala.toSeq.dropWhile(_ != "head").drop(1)
+      def delivered = window.contains("collect") && groups.contains("graft-marker")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(delivered, "marker actions never delivered")
+      Counters(groups.asScala.count(_ == group), window.takeWhile(_ != "collect").size,
+        shuffle.get, input.get, maxShuffle.get)
+    } finally {
+      sc.removeSparkListener(sl)
+      spark.listenerManager.unregister(qel)
+    }
+  }
 }
+
+/** Deterministic cost counters of one measured body; see
+  * [[SparkSpec.countersDuring]]. */
+final case class Counters(jobs: Int, sqlActions: Int, shuffleRecords: Long,
+                          inputRecords: Long, maxTaskShuffleRead: Long)
 
 /** The testdata dirs TESTDATA.md lists, in its order. */
 object TestdataDirs {

@@ -1313,4 +1313,13 @@ class StreamingSpec extends SparkSpec {
       assert(pendingRef.get().isEmpty)
     } finally q.stop()
   }
+
+  test("e4_stream_window_parity fails on a missing input instead of streaming nothing") {
+    val dir = graft.core.Caching.scratchDir("e4-missing").resolve("no_such_sf").toString
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.queries("e4_stream_window_parity")(spark, dir)
+    }
+    assert(e.getMessage.contains(s"$dir/events.parquet"), e.getMessage)
+    assert(spark.streams.active.isEmpty)
+  }
 }

@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.core.Tables
 import graft.model.{DerivedState, TestdataSchema}
 
@@ -39,31 +33,10 @@ class TestdataSchemaSpec extends SparkSpec {
 
   test("DerivedState.register and Tables.load launch no Spark job") {
     val sf = TestdataDirs.scale("sf0.001")
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    val c = countersDuring {
+      DerivedState.register(spark, sf)
+      TestdataSchema.names.foreach(t => Tables.load(spark, sf, t))
     }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("graft-register", "register")
-      try {
-        DerivedState.register(spark, sf)
-        TestdataSchema.names.foreach(t => Tables.load(spark, sf, t))
-      } finally sc.clearJobGroup()
-      // listener delivery is asynchronous but ordered: once a marker job
-      // started after register() returned is seen, so is every job
-      // register() started
-      sc.setJobGroup("graft-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!groups.contains("graft-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains("graft-marker"), "marker job never delivered")
-      assert(groups.asScala.count(_ == "graft-register") == 0,
-        s"registration launched jobs: ${groups.asScala.mkString(", ")}")
-    } finally sc.removeSparkListener(listener)
+    assert(c.jobs == 0, s"registration launched jobs: $c")
   }
 }
