@@ -41,9 +41,6 @@ object Explain {
       },
       "n_block_received_ops_pinned" -> { (s, dir) =>
         graft.model.DerivedState.register(s, dir)
-        val (_, _, blockView, reportedView) =
-          graft.queries.AnalyticsQueries.pinnedBlockReported(s)
-        s.sql(graft.queries.AnalyticsQueries.blockReceivedOpsSqlFrom(
-          reportedView, blockView))
+        graft.queries.AnalyticsQueries.pinnedBlockReported(s)._3
       })
 }

@@ -1082,12 +1082,9 @@ object Dataflows {
     * set (INode.getNsQuota/getDsQuota default). */
   def contentSummary(file: DataFrame, rootIds: Seq[Long], maxDepth: Int = 16,
                      dirBroadcastLimit: Long = 2000000L,
-                     quotas: Option[DataFrame] = None): DataFrame =
-    attachQuotas(contentSummaryRaw(file, rootIds, maxDepth, dirBroadcastLimit),
-      quotas)
-
-  private def contentSummaryRaw(file: DataFrame, rootIds: Seq[Long],
-                                maxDepth: Int, dirBroadcastLimit: Long): DataFrame = {
+                     quotas: Option[DataFrame] = None): DataFrame = {
+    // (rootId, id, length, replication) rows → one summary row per root
+    val summary = (rows: DataFrame) => attachQuotas(summarize(rows), quotas)
     // minimal namespace frames (id,parentId,length) are a valid input:
     // spaceConsumed degrades to length×1, matching a replication-1 tree
     val fLive = live(file)
@@ -1132,7 +1129,7 @@ object Dataflows {
             lvl += 1
           }
         }
-        if (over) return contentSummaryIterative(fAll, rootIds, maxDepth)
+        if (over) return contentSummaryIterative(fAll, rootIds, maxDepth, summary)
         val pairs = acc.toSeq
         val spark = file.sparkSession
         import spark.implicits._
@@ -1142,8 +1139,8 @@ object Dataflows {
           .select(col("rootId"), col("id"), col("length"), col("replication"))
         val roots = fAll.filter(col("id").isin(seeds: _*))
           .select(col("id").as("rootId"), col("id"), col("length"), col("replication"))
-        summarize(roots.unionByName(inSubtrees))
-      case None => contentSummaryIterative(fAll, rootIds, maxDepth)
+        summary(roots.unionByName(inSubtrees))
+      case None => contentSummaryIterative(fAll, rootIds, maxDepth, summary)
     }
   }
 
@@ -1173,31 +1170,15 @@ object Dataflows {
         summary.withColumn("quota", lit(-1L)).withColumn("spaceQuota", lit(-1L))
     }
 
-  private def contentSummaryIterative(fAll: DataFrame, rootIds: Seq[Long],
-                                      maxDepth: Int): DataFrame = {
-    // persist only the columns the loop touches — every level joins
-    // this frame, and a view-backed input would re-derive per level
-    val f = fAll.select(col("id"), col("parentId"), col("length"),
-      col("replication")).persist()
-    var frontier = f.filter(col("id").isin(rootIds: _*))
-      .select(col("id").as("rootId"), col("id"), col("length"), col("replication"))
-    var out = frontier
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    persisted += f
-    var lvl = 0
-    var n = 1L
-    while (n > 0 && lvl < maxDepth) {
-      val parents = frontier.select(col("rootId"), col("id").as("__pid"))
-      frontier = f.join(broadcast(parents), col("parentId") === col("__pid"))
-        .select(col("rootId"), col("id"), col("length"), col("replication"))
-      frontier.persist()
-      persisted += frontier
-      n = frontier.count()
-      if (n > 0) out = out.unionByName(frontier)
-      lvl += 1
-    }
-    // the summary is tiny: materialize it, then release the frontiers
-    graft.core.Caching.materializeAndRelease(summarize(out), persisted.toSeq)
+  private def contentSummaryIterative(fAll: DataFrame, rootIds: Seq[Long], maxDepth: Int,
+                                      summary: DataFrame => DataFrame): DataFrame = {
+    // every row of a walk carries the root it was reached from
+    val walk = graft.state.StateManager.walkDown(
+      fAll.select(col("id"), col("parentId"), col("length"), col("replication")),
+      _.filter(col("id").isin(rootIds: _*)).withColumn("rootId", col("id")),
+      carry = Seq("rootId"), step = identity, maxDepth, refuse = None)
+    // the summary is tiny: materialize it, then free the subtree rows
+    graft.core.Caching.materializeAndRelease(summary(walk), Seq(walk))
   }
 
   // ---- Decommission finish gate (isReplicationInProgress :3353-3398) ---

@@ -205,21 +205,15 @@ object Shell {
         require(args.size >= 2, "usage: mv <src> <dstPath>")
         val id = resolve(path)
         val (dstParent, newName) = splitPath(args(1))
-        // rename returns a MATERIALIZED persisted write-set (Caching
-        // contract); localize it and release the cache whether or not the
-        // refusal check passes — run() is a reusable API, not only the
-        // one-verb-per-process CLI, so it must not leak per-call storage
         val out = Mutations.rename(file,
           Seq((id, resolve(dstParent), newName)).toDF("id", "newParentId", "newName"),
           nowMs = Now)
-        try {
-          val rows = out.orderBy(col("writeOp"), col("id")).collect()
-          // rename drops rejected rows from the write-set — surface the
-          // refusal (target exists / under own subtree / ...) loudly
-          require(rows.exists(_.getAs[String]("writeOp") == "move"),
-            s"mv $path -> ${args(1)} refused by rename validation")
-          localized(rows, out.schema)
-        } finally out.unpersist(blocking = false)
+        val rows = out.orderBy(col("writeOp"), col("id")).collect()
+        // rename drops rejected rows from the write-set — surface the
+        // refusal (target exists / under own subtree / ...) loudly
+        require(rows.exists(_.getAs[String]("writeOp") == "move"),
+          s"mv $path -> ${args(1)} refused by rename validation")
+        localized(rows, out.schema)
       case "cp" =>
         require(args.size >= 2, "usage: cp <src> <dstPath>")
         val id = resolve(path)
@@ -230,21 +224,16 @@ object Shell {
           .collect()(0).getLong(0)
         val maxBlockId = block.agg(coalesce(max(col("id")), lit(0L)))
           .collect()(0).getLong(0)
-        // copy returns a MATERIALIZED persisted write-set (Caching
-        // contract, like rename) — release it whether or not the refusal
-        // check passes
         val out = Mutations.copy(file, block,
           Seq((id, resolve(dstParent), newName))
             .toDF("srcId", "dstParentId", "newName"),
           idBase = maxFileId, blockIdBase = maxBlockId)
-        try {
-          val rows = out.orderBy(col("writeOp"), col("tbl"), col("id")).collect()
-          // a refused copy fails LOUD with the validator's reason
-          rows.find(_.getAs[String]("writeOp") == "reject").foreach(r =>
-            throw new IllegalArgumentException(
-              s"cp $path -> ${args(1)} refused: ${r.getAs[String]("reject")}"))
-          localized(rows, out.schema)
-        } finally out.unpersist(blocking = false)
+        val rows = out.orderBy(col("writeOp"), col("tbl"), col("id")).collect()
+        // a refused copy fails LOUD with the validator's reason
+        rows.find(_.getAs[String]("writeOp") == "reject").foreach(r =>
+          throw new IllegalArgumentException(
+            s"cp $path -> ${args(1)} refused: ${r.getAs[String]("reject")}"))
+        localized(rows, out.schema)
       case "put" | "copyFromLocal" | "moveFromLocal" =>
         // namenode side of the client write loop (FsShell.java:128-161 →
         // DFSClient create/addBlock/complete): the LOCAL file's real

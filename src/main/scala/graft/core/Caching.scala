@@ -2,18 +2,17 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Persist-ownership contract for multi-pass helpers.
+/** Pin ownership for multi-pass helpers. One rule: `persist` never
+  * leaves the function that called it, and no frame a caller receives
+  * needs a release.
   *
-  * Helpers that cache intermediates they read more than once (recursion
-  * frontiers, LSH signatures, IVF cell assignments) must not leak that
-  * storage into the caller's session: they materialize their (small)
-  * output, then release the intermediates — which at that point are only
-  * reachable through the output's lineage.
-  *
-  * NB: the RETURNED frame is persisted; callers that keep it long-term own
-  * its release (`unpersist()` or `spark.catalog.clearCache()`). One-shot
-  * callers (the differential queries, Bench) write/collect it immediately
-  * and the storage is dropped with the session.
+  * A helper that reads an intermediate more than once (a recursion
+  * frontier, LSH signatures, IVF cell assignments) may persist it, but
+  * hands its output back through [[materializeAndRelease]]: the output
+  * is taken as an eager localCheckpoint, and only then are the
+  * intermediates released. The checkpoint is the output's own copy, so
+  * every intermediate can go, and its blocks are freed when the caller
+  * drops the frame (ContextCleaner) — or at once with [[free]].
   */
 object Caching {
 
@@ -42,21 +41,11 @@ object Caching {
     case _ => df.unpersist(blocking = false)
   }
 
-  def materializeAndRelease(out: DataFrame, intermediates: Seq[DataFrame]): DataFrame = {
-    val result = out.persist()
-    // a failed materialize must release EVERYTHING it pinned — the caller
-    // never receives `result`, so nothing else can (helpers run inside
-    // repeating ticks; an orphan per failure accumulates)
-    try result.count()
-    catch {
-      case e: Throwable =>
-        result.unpersist(blocking = false)
-        intermediates.foreach(free)
-        throw e
-    }
-    intermediates.foreach(free)
-    result
-  }
+  /** `out` as an eager localCheckpoint, with `intermediates` released
+    * whether or not the checkpoint succeeds. */
+  def materializeAndRelease(out: DataFrame, intermediates: Seq[DataFrame]): DataFrame =
+    try out.localCheckpoint()
+    finally intermediates.foreach(free)
 
   /** Session-scoped scratch space: every staging dir (SequenceFile dumps,
     * stream checkpoints/feeds) lives under ONE per-JVM root removed by a

@@ -786,8 +786,8 @@ object Dedup {
     *
     * Returns (id, clusterId); every endpoint of every pair appears once.
     * Isolated docs (no pair) are absent by construction — callers treat
-    * missing as "own cluster". The returned frame is persisted (Caching
-    * contract; one-shot callers drop it with the session). */
+    * missing as "own cluster". The returned frame is a materialized
+    * checkpoint that needs no release (graft.core.Caching). */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     // undirected edges, both directions: (id, nbr)
     val edges = pairs.select(col("id1").as("id"), col("id2").as("nbr"))

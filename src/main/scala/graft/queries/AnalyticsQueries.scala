@@ -14,6 +14,8 @@ object AnalyticsQueries {
 
   private val Now = DerivedState.NowMs
 
+  private val pinViews = new java.util.concurrent.atomic.AtomicLong()
+
   /** Views-mode derivation fusion for the multi-action corrupt-marks
     * consumers (guide §2.4/§5): each reference to the `block`/`reported`
     * views re-runs the block derivation (a window over lineitem plus the
@@ -32,18 +34,25 @@ object AnalyticsQueries {
     * pushdown does the pruning — at cluster scale a namespace-sized pin
     * is a storage liability, not a win.
     *
-    * Returns (block, reported, blockViewName, reportedViewName); the view
-    * names let SQL scripts (BlockReceivedOpsSql) re-point too. */
+    * Returns (block, reported, receipt ops): the ops frame is
+    * [[BlockReceivedOpsSql]] over the same two sources. The SQL reaches
+    * the pin through temp views named per call and dropped once it is
+    * analysed, so two evaluations never share a view and the session
+    * catalog keeps no reference to the pin after the call. */
   private[graft] def pinnedBlockReported(s: SparkSession)
-      : (DataFrame, DataFrame, String, String) =
+      : (DataFrame, DataFrame, DataFrame) =
     if (s.conf.getOption("graft.layout").contains("bucketed"))
-      (s.table("block"), s.table("reported"), "block", "reported")
+      (s.table("block"), s.table("reported"), s.sql(BlockReceivedOpsSql))
     else {
       val pin = graft.store.StateStore.live(s.table("block")).localCheckpoint()
-      pin.createOrReplaceTempView("graft_block_pin")
-      val rep = s.sql(DerivedState.reportedSqlFrom("graft_block_pin"))
-      rep.createOrReplaceTempView("graft_reported_pin")
-      (pin, rep, "graft_block_pin", "graft_reported_pin")
+      val call = pinViews.incrementAndGet()
+      val (blockView, reportedView) = (s"graft_block_pin_$call", s"graft_reported_pin_$call")
+      pin.createOrReplaceTempView(blockView)
+      try {
+        val rep = s.sql(DerivedState.reportedSqlFrom(blockView))
+        rep.createOrReplaceTempView(reportedView)
+        (pin, rep, s.sql(blockReceivedOpsSqlFrom(reportedView, blockView)))
+      } finally Seq(blockView, reportedView).foreach(s.catalog.dropTempView)
     }
 
   def entries: Seq[GateEntry] = Seq(
@@ -1065,14 +1074,11 @@ object AnalyticsQueries {
       // exactly once (the markDim broadcast), so with the inputs pinned a
       // checkpoint would only add an action — profiled ~2-3 s of pure
       // scheduling/write overhead
-      val (blockDf, reportedDf, blockView, reportedView) =
-        pinnedBlockReported(s)
+      val (blockDf, reportedDf, ops) = pinnedBlockReported(s)
       val marks = Replication.corruptMarks(
         Dataflows.reconcileReports(blockDf, reportedDf))
       Replication.blockReceived(blockDf, s.table("file"),
-          s.table("datanode"),
-          s.sql(blockReceivedOpsSqlFrom(reportedView, blockView)),
-          corrupt = Some(marks))
+          s.table("datanode"), ops, corrupt = Some(marks))
         .orderBy(col("blockId"), col("datanodeId"))
     }, O(
       s"""$N5ClassifySql,
@@ -1183,7 +1189,7 @@ object AnalyticsQueries {
       // pinnedBlockReported: the marks checkpoint, the marked-row prune
       // checkpoint and the final join each re-derived the block view —
       // the pin collapses those derivations to one
-      val (blockDf, reportedDf, _, _) = pinnedBlockReported(s)
+      val (blockDf, reportedDf, _) = pinnedBlockReported(s)
       val marks = Replication.corruptMarks(
         Dataflows.reconcileReports(blockDf, reportedDf))
         .localCheckpoint()

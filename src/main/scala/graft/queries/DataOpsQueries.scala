@@ -2690,9 +2690,9 @@ object DataOpsQueries {
     // the exact count; the 64-row-shuffle alternative to COUNT(DISTINCT)
     GateEntry("t14_hll_tokens", { (s, dir) =>
       // the sketch and the exact gate both read the tokenized frame:
-      // cache it for ONE tokenize pass, materialize the 1-row result,
-      // release the cache (Caching contract — a bare persist here would
-      // pin a corpus-sized frame per invocation for the session)
+      // cache it for ONE tokenize pass and return a checkpoint of the
+      // 1-row result, which frees the cache (graft.core.Caching — a bare
+      // persist here would pin a corpus-sized frame per evaluation)
       val tok = Tables.documents(s, dir)
         .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("tk"))
         .select(concat(col("doc_id").cast("string"), lit(":"), col("tk")).as("dt"))

@@ -191,7 +191,7 @@ object Mutations {
     // exists only to refuse corrupt cycles, and a legal deep namespace
     // must not trip it
     // persisted: the ancestry guard and the write-set scan f repeatedly
-    // (Caching contract, like dupClusters)
+    // (released once the write-set is materialized)
     val f = live(file).persist()
     val cur = f.select(col("id").as("__id"), col("parentId").as("__oldP"),
       col("name").as("__oldN"), col("length").as("__oldLen"))
@@ -285,11 +285,8 @@ object Mutations {
       .select(col("id"), col("parentId"), col("name"), col("mtime"), col("version"))
     val out = moved.drop("__oldP").withColumn("writeOp", lit("move"))
       .unionByName(touches.withColumn("writeOp", lit("touch")))
-    // materialize the (batch-sized) write-set and RELEASE the internal
-    // caches — without this every rename call leaves the full live table
-    // plus two batch frames pinned with no handle for the caller to drop
-    // (the returned persisted frame is the caller's, per the Caching
-    // contract, like dupClusters)
+    // materialize the (batch-sized) write-set, then release the live
+    // table and the two batch frames pinned above (graft.core.Caching)
     graft.core.Caching.materializeAndRelease(out, Seq(f, baseValidated, validated))
   }
 
@@ -361,12 +358,9 @@ object Mutations {
           // materialize BOTH walk outputs while the level caches are
           // still live — `unres` unions per-level `broken` slices, so
           // releasing first would hand its later evaluation the full
-          // O(depth²) uncached re-walk. `walked` may BE levels(0) (a
-          // one-level walk): releasing that entry would uncache the
-          // frame just materialized, so it is excluded.
+          // O(depth²) uncached re-walk
           val u = graft.core.Caching.materializeAndRelease(unres, Seq.empty)
-          val w = graft.core.Caching.materializeAndRelease(walked,
-            levels.toSeq.filterNot(_ eq walked))
+          val w = graft.core.Caching.materializeAndRelease(walked, levels.toSeq)
           (w, u)
       }
     // own id among the destination's ancestors ⟺ destination lies in the
@@ -716,8 +710,9 @@ object Mutations {
     * new rows equal their ids (the insert convention). Output rows:
     * (writeOp copy|reject, tbl file|block, id, parentId — for block rows
     * the new OWNER file id —, name, length, datanodeId, srcId — the
-    * copied row's original id —, version, reject). Returns a MATERIALIZED
-    * persisted frame the caller must unpersist (the rename convention). */
+    * copied row's original id —, version, reject). Returns a
+    * materialized checkpoint (graft.core.Caching). A subtree deeper than
+    * maxDepth levels is refused, not cut. */
   def copy(file: DataFrame, block: DataFrame, requests: DataFrame,
            idBase: Long, blockIdBase: Long, maxDepth: Int = 16): DataFrame = {
     val f = live(file)
@@ -744,35 +739,13 @@ object Mutations {
       .withColumn("__dup", row_number().over(dupW))
     val accepted = ranked.filter(col("__dup") === 1)
       .select(col("__rsrc"), col("__rdst"), col("__rname"))
-    // per-request subtree BFS (the S4 loop carrying the request key, so
-    // one batch of N copies costs the same per-level joins as one)
-    val fKeep = f.select(col("id"), col("parentId"), col("name"), col("length"))
-      .persist()
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    persisted += fKeep
-    var frontier = fKeep.join(broadcast(accepted), col("id") === col("__rsrc"))
-    var members = frontier
-    var lvl = 0
-    var n = 1L
-    while (n > 0 && lvl < maxDepth) {
-      val ps = frontier.select(col("__rsrc"), col("__rdst"), col("__rname"),
-        col("id").as("__fp"))
-      frontier = fKeep.join(broadcast(ps), col("parentId") === col("__fp"))
-        .filter(col("id") =!= 0L).drop("__fp")
-      frontier.persist()
-      persisted += frontier
-      n = frontier.count()
-      if (n > 0) members = members.unionByName(frontier)
-      lvl += 1
-    }
-    if (n > 0) {
-      persisted.foreach(_.unpersist(blocking = false))
-      throw new IllegalStateException(
-        s"copy exceeded maxDepth=$maxDepth with an unfinished frontier - " +
-        "a truncated copy would silently drop the deeper levels")
-    }
-    val allMembers = graft.core.Caching
-      .materializeAndRelease(members, persisted.toSeq)
+    // per-request subtree walk carrying the request key, so one batch
+    // of N copies costs the same per-level joins as one
+    val allMembers = StateManager.walkDown(
+      f.select(col("id"), col("parentId"), col("name"), col("length")),
+      _.join(broadcast(accepted), col("id") === col("__rsrc")),
+      carry = Seq("__rsrc", "__rdst", "__rname"), step = identity,
+      maxDepth, refuse = Some("copy"))
     // FileUtil.checkDependencies: the destination parent inside the
     // source subtree (or the source itself) refuses the whole request
     val cyc = allMembers.filter(col("id") === col("__rdst"))
@@ -848,11 +821,8 @@ object Mutations {
         lit("cannot copy a directory into its own subtree")): _*)
     val out = fileRows.unionByName(blockRows).unionByName(rejects)
       .unionByName(dupRejects).unionByName(cycRejects)
-    // materialize the (batch-sized) write-set and RELEASE the pinned
-    // subtree member set — allMembers has no other handle, so returning
-    // a frame that merely references it would leak one cached DataFrame
-    // per call. The returned persisted frame is the caller's to
-    // unpersist (the rename convention; Shell cp releases in finally).
+    // materialize the (batch-sized) write-set, then free the
+    // subtree-sized member set it was built from
     graft.core.Caching.materializeAndRelease(out, Seq(allMembers))
   }
 

@@ -263,40 +263,60 @@ object StateManager {
               .otherwise(concat(col("__ppath"), lit("/"), col("name"))))
           .filter(col("id") === 0L || col("__ppath").isNotNull)
           .drop("__pid", "__ppath")
-      case None => materializePathsIterative(f, maxDepth)
+      case None =>
+        walkDown(f, _.filter(col("id") === 0L).withColumn("path", lit("")),
+          carry = Seq("path"),
+          step = _.withColumn("path", concat(col("path"), lit("/"), col("name"))),
+          maxDepth, refuse = None)
     }
   }
 
-  /** The general (any tree size) per-level join loop. `f` must already be
-    * live-filtered. */
-  private def materializePathsIterative(f0: DataFrame, maxDepth: Int): DataFrame = {
-    // persist the live table for the loop: every level joins it and a
-    // view-backed input would re-derive per level
-    val f = f0.persist()
-    var frontier = f.filter(col("id") === 0L).withColumn("path", lit(""))
-    var out = frontier
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    persisted += f
-    var lvl = 0
-    var n = 1L
-    while (n > 0 && lvl < maxDepth) {
-      val parents = frontier.select(col("id").as("__pid"), col("path").as("__ppath"))
-      frontier = f.join(broadcast(parents), col("parentId") === col("__pid"))
-        .withColumn("path", concat(col("__ppath"), lit("/"), col("name")))
-        .drop("__pid", "__ppath")
-      frontier.persist()
-      persisted += frontier
-      n = frontier.count()
-      if (n > 0) out = out.unionByName(frontier)
-      lvl += 1
-    }
-    materializeAndRelease(out, persisted.toSeq)
+  /** The root-down walk behind materializePaths, descendants,
+    * recursiveDelete, Mutations.copy and Dataflows.contentSummary — the
+    * per-level form of the reference's in-memory tree walk (the Spark
+    * recursive CTE). `files` is the live file frame, pinned once for
+    * the walk; level 0 is `seed` of it. Each next level is the rows of
+    * `files` (never the root) whose parentId is an id of the last level,
+    * with the parent's `carry` columns, shaped by `step`. Every level is
+    * persisted and counted, so the next one broadcasts a materialized
+    * frontier, and the walk stops at the first empty level or after
+    * `maxDepth` levels. A frontier still live there is cut when `refuse`
+    * is None (the dir-map fast paths stop at the same depth); with
+    * Some(op) the walk probes one level deeper and throws if anything
+    * lies there, since a cut subtree would orphan its deeper levels (a
+    * subtree whose deepest level sits exactly at the cap is complete).
+    * Returns the union of all levels as a checkpoint and releases every
+    * pin itself (graft.core.Caching). */
+  private[graft] def walkDown(files: DataFrame, seed: DataFrame => DataFrame,
+                              carry: Seq[String], step: DataFrame => DataFrame,
+                              maxDepth: Int, refuse: Option[String]): DataFrame = {
+    val f = files.persist()
+    val pinned = scala.collection.mutable.ArrayBuffer(f)
+    def children(parents: DataFrame): DataFrame =
+      f.join(broadcast(parents.select(col("id").as("__pid") +: carry.map(col): _*)),
+          col("parentId") === col("__pid"))
+        .drop("__pid").filter(col("id") =!= 0L)
+    val union = try {
+      var frontier = seed(f)
+      var all = frontier
+      var lvl = 0
+      var n = 1L
+      while (n > 0 && lvl < maxDepth) {
+        frontier = step(children(frontier))
+        pinned += frontier.persist()
+        n = frontier.count()
+        if (n > 0) all = all.unionByName(frontier)
+        lvl += 1
+      }
+      for (op <- refuse if n > 0 && !children(frontier).isEmpty)
+        throw new IllegalStateException(
+          s"$op exceeded maxDepth with an unfinished frontier - the subtree " +
+          "is deeper; raise maxDepth (a truncated result would silently " +
+          "orphan the deeper levels)")
+      all
+    } catch { case e: Throwable => pinned.foreach(graft.core.Caching.free); throw e }
+    graft.core.Caching.materializeAndRelease(union, pinned.toSeq)
   }
-
-  /** Materialize the loop output, then release the per-level frontier
-    * caches — see graft.core.Caching for the persist-ownership contract. */
-  private def materializeAndRelease(out: DataFrame, persisted: Seq[DataFrame]): DataFrame =
-    graft.core.Caching.materializeAndRelease(out, persisted)
 
   // ---- S3: listing (getListing, :701-720) ------------------------------
 
@@ -305,62 +325,29 @@ object StateManager {
 
   // ---- S4: recursive descendants (:722-755) ----------------------------
 
-  /** DFS of a subtree: children of `rootIds` down to the leaves.
-    * excludeDir drops directories from the result; includeSelf keeps the
-    * roots. Iterative join-until-fixpoint — the Spark recursive CTE. */
+  /** The live subtrees below `rootIds`, roots excluded, down to the
+    * leaves; excludeDir drops directories from the result. Refuses a
+    * subtree deeper than maxDepth levels. */
   def descendants(file: DataFrame, rootIds: Seq[Long], excludeDir: Boolean = false,
-                  includeSelf: Boolean = false, maxDepth: Int = 16): DataFrame = {
-    // persist the live table for the loop (see resolvePaths)
-    val f = live(file).persist()
-    val self = f.filter(col("id").isin(rootIds: _*))
-    var frontier = self
-    var out: DataFrame = if (includeSelf) self else null
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    persisted += f
-    var lvl = 0
-    var n = 1L
-    while (n > 0 && lvl < maxDepth) {
-      val parents = frontier.select(col("id").as("__pid"))
-      frontier = f.join(broadcast(parents), col("parentId") === col("__pid")).drop("__pid")
-        .filter(col("id") =!= 0L)
-      frontier.persist()
-      persisted += frontier
-      n = frontier.count()
-      if (n > 0) out = if (out == null) frontier else out.unionByName(frontier)
-      lvl += 1
-    }
-    if (n > 0) {
-      // the loop stopped on the depth cap with a live frontier. That is
-      // only a problem if the frontier has CHILDREN — a subtree whose
-      // deepest level sits exactly at maxDepth is complete. Probe one
-      // level (limit 1: any child at all) before deciding; a silent cut
-      // would hand callers (recursiveDelete!) a partial subtree and
-      // tombstoning it would orphan the levels below, so refuse instead,
-      // like dupClusters on non-convergence.
-      val deeper = f.join(broadcast(frontier.select(col("id").as("__pid"))),
-          col("parentId") === col("__pid"))
-        .filter(col("id") =!= 0L).limit(1).count()
-      if (deeper > 0) {
-        persisted.foreach(_.unpersist(blocking = false))
-        throw new IllegalStateException(
-          s"descendants exceeded maxDepth=$maxDepth with an unfinished frontier - " +
-          "the subtree is deeper; raise maxDepth (a truncated result would " +
-          "silently orphan the deeper levels)")
-      }
-    }
-    val res =
-      if (out == null) { persisted.foreach(_.unpersist(blocking = false)); self.limit(0) }
-      else materializeAndRelease(out, persisted.toSeq)
-    if (excludeDir) res.filter(col("length") =!= -1L) else res
+                  maxDepth: Int = 16): DataFrame = {
+    // the walk starts from the roots' children, one level down
+    val walk = walkDown(live(file),
+      f => f.join(broadcast(f.filter(col("id").isin(rootIds: _*)).select(col("id").as("__rid"))),
+          col("parentId") === col("__rid"), "left_semi").filter(col("id") =!= 0L),
+      carry = Nil, step = identity, maxDepth - 1, refuse = Some("descendants"))
+    if (excludeDir) walk.filter(col("length") =!= -1L) else walk
   }
 
   // ---- S6: recursive delete (deleteFileByFile, :600-641) ---------------
 
-  /** Post-order recursive delete: returns the subtree rows tombstoned
-    * (version flipped negative) — the write-set of the delete. */
-  def recursiveDelete(file: DataFrame, rootIds: Seq[Long]): DataFrame =
-    descendants(file, rootIds, excludeDir = false, includeSelf = true)
-      .withColumn("version", -col("version"))
+  /** Post-order recursive delete: returns the subtree rows, roots
+    * included, tombstoned (version flipped negative) — the write-set of
+    * the delete. */
+  def recursiveDelete(file: DataFrame, rootIds: Seq[Long]): DataFrame = {
+    val tombstone = (df: DataFrame) => df.withColumn("version", -col("version"))
+    walkDown(live(file), f => tombstone(f.filter(col("id").isin(rootIds: _*))),
+      carry = Nil, step = tombstone, maxDepth = 16, refuse = Some("recursiveDelete"))
+  }
 
   // ---- S7: file info with derived length (getFileInfo, :103-136) -------
 

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The plumbing the mains share: the `*_ONLY` subset parser, and source
   * checks that keep session building in one place, timing out of the
-  * operators and the deleted rehearsal mains out of main code. */
+  * operators, the deleted rehearsal mains out of main code, and the
+  * release of pins inside graft.core.Caching. */
 class MainsSpec extends AnyFunSuite {
 
   test("subset: names are trimmed, empties dropped, unknown names rejected") {
@@ -64,5 +65,21 @@ class MainsSpec extends AnyFunSuite {
     val found = for ((p, src) <- mainSources; g <- gone if src.contains(g))
       yield s"$p: $g"
     assert(found.isEmpty)
+  }
+
+  test("unpersist only in Caching and Changefeed.withStandingFrame; no caller must unpersist") {
+    val withStandingFrame = """(?s)def withStandingFrame.*?\n  }\n""".r
+    val outside = mainSources.flatMap { case (p, src) =>
+      val rest =
+        if (p.endsWith("core/Caching.scala")) ""
+        else if (p.endsWith("streaming/Changefeed.scala")) withStandingFrame.replaceAllIn(src, "")
+        else src
+      if (rest.contains(".unpersist(")) Some(p.toString) else None
+    }
+    assert(outside.isEmpty, outside)
+    val mustRelease = mainSources.collect {
+      case (p, src) if "(?i)must\\s+(\\*\\s+)?unpersist".r.findFirstIn(src).isDefined => p.toString
+    }
+    assert(mustRelease.isEmpty, mustRelease)
   }
 }

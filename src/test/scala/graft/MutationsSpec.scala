@@ -270,16 +270,19 @@ class MutationsSpec extends SparkSpec {
     assert(!out.contains(9L)) // not under construction
   }
 
+  // /a holds f1 and sub, and sub holds f2: f2 sits two levels below /a
+  private lazy val cpFile = Seq(
+    (0L, -1L, "", -1L, 1L), (1L, 0L, "a", -1L, 2L), (2L, 1L, "f1", 10L, 3L),
+    (3L, 1L, "sub", -1L, 4L), (4L, 3L, "f2", 20L, 5L), (5L, 0L, "dst", -1L, 6L),
+  ).toDF("id", "parentId", "name", "length", "version")
+  private lazy val cpBlock = Seq(
+    (70L, 1L, 10L, 9L, 2L, 1L, 1L), (70L, 2L, 10L, 9L, 2L, 1L, 2L),
+    (71L, 1L, 20L, 9L, 4L, 1L, 3L),
+  ).toDF("id", "datanodeId", "length", "generationStamp", "fileId",
+    "fileIndex", "version")
+
   test("cp: recursive metadata copy, block duplication, dup/cycle rejects") {
-    val f = Seq(
-      (0L, -1L, "", -1L, 1L), (1L, 0L, "a", -1L, 2L), (2L, 1L, "f1", 10L, 3L),
-      (3L, 1L, "sub", -1L, 4L), (4L, 3L, "f2", 20L, 5L), (5L, 0L, "dst", -1L, 6L),
-    ).toDF("id", "parentId", "name", "length", "version")
-    val b = Seq(
-      (70L, 1L, 10L, 9L, 2L, 1L, 1L), (70L, 2L, 10L, 9L, 2L, 1L, 2L),
-      (71L, 1L, 20L, 9L, 4L, 1L, 3L),
-    ).toDF("id", "datanodeId", "length", "generationStamp", "fileId",
-      "fileIndex", "version")
+    val (f, b) = (cpFile, cpBlock)
     val reqs = Seq(
       (1L, 5L, "acopy"),    // recursive dir copy
       (2L, 5L, "dupname"), (4L, 5L, "dupname"), // second loses (srcId order)
@@ -304,6 +307,17 @@ class MutationsSpec extends SparkSpec {
     val rejects = out.filter(_.head == "reject").map(r => r(5) -> r.last).toMap
     assert(rejects == Map(4L -> "duplicate in batch",
       1L -> "cannot copy a directory into its own subtree"))
+  }
+
+  test("cp: a subtree whose deepest level sits at maxDepth copies; one deeper refuses") {
+    val req = Seq((1L, 5L, "acopy")).toDF("srcId", "dstParentId", "newName")
+    def copied(maxDepth: Int) = rows(Mutations.copy(cpFile, cpBlock, req,
+        idBase = 100L, blockIdBase = 200L, maxDepth = maxDepth)
+      .filter(col("writeOp") === "copy" && col("tbl") === "file")
+      .select(col("srcId"))).map(_.head).toSet
+    assert(copied(2) == Set(1L, 2L, 3L, 4L))
+    val e = intercept[IllegalStateException](copied(1))
+    assert(e.getMessage.contains("maxDepth"))
   }
 
   test("expunge: aged checkpoints tombstoned, Current re-checkpointed") {

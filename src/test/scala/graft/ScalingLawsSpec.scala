@@ -98,12 +98,10 @@ class ScalingLawsSpec extends SparkSpec {
   private lazy val shardBlockRows = shards(1).block.count()
   private lazy val shard0 = shards(1).block.filter(col("version") > 0)
 
-  /** The counters and rows of `run` over the shards of each k, each run
-    * from an empty cache. */
+  /** The counters and rows of `run` over the shards of each k. */
   private def measured(run: Shards => DataFrame): Map[Int, (Counters, Array[Row])] =
     ks.map { k =>
       var out: Array[Row] = null
-      spark.catalog.clearCache()
       val c = countersDuring { out = run(shards(k)).collect() }
       k -> (c, out)
     }.toMap
@@ -179,7 +177,8 @@ class ScalingLawsSpec extends SparkSpec {
     * count the jobs after it: the automatic fallback runs the forced
     * loop's jobs, the loop runs more than the fast path, and each path
     * runs the same jobs at every k. `needNames` is the collect's own
-    * flag. Returns the fast path's rows. */
+    * flag. Two back-to-back loops run the same jobs. Returns the fast
+    * path's rows. */
   private def fallbackLaws(name: String, needNames: Boolean)
                           (run: (Int, Long) => DataFrame): Map[Int, Array[Row]] = {
     val byK = ks.map { k =>
@@ -194,12 +193,14 @@ class ScalingLawsSpec extends SparkSpec {
       def measured(limit: Long) = {
         val decision = countersDuring(fits(limit)).jobs
         var out: Array[Row] = null
-        spark.catalog.clearCache() // a pin left by the last run would save a job
         val c = countersDuring { out = run(k, limit).collect() }
         (c.jobs - decision, out)
       }
       val (fast, fastRows) = measured(2000000L)
       val (forced, forcedRows) = measured(0L)
+      // nothing the last run left behind saves the next one a job
+      val (again, _) = measured(0L)
+      assert(again == forced, s"$name k=$k: back-to-back loops ran $forced then $again jobs")
       val (auto, autoRows) = measured(nDirs - 1)
       assert(fastRows.nonEmpty, s"$name k=$k returned nothing")
       assert(bag(forcedRows) == bag(fastRows), s"$name k=$k: forced fallback != fast path")
