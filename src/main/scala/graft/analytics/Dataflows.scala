@@ -734,15 +734,16 @@ object Dataflows {
       .filter(prefixOk)
       .select(col("id").as("__fid"), col("replication"), col("path"))
     // a scoped prefix makes the file side subtree-sized — pin it (it
-    // feeds the keyPrune key collect, the broadcast and the final join;
-    // re-deriving would re-walk materializePaths three times), push its
-    // fileIds into the block scan as an IN predicate (Scale.keyPrune —
-    // row-group/bucket pruning; the semi-join it replaced filtered AFTER
-    // streaming the whole block table), and broadcast it into the final
-    // join. The whole-namespace scope ("/") keeps the semi + shuffled
+    // feeds the keyPrune key collect and the final join; re-deriving
+    // would re-walk materializePaths twice), push its fileIds into the
+    // block scan as an IN predicate (Scale.keyPrune — row-group/bucket
+    // pruning; the semi-join it replaced filtered AFTER streaming the
+    // whole block table), and broadcast it into the final join only:
+    // keyPrune projects its keys, and a hint under a projection reaches
+    // no join. The whole-namespace scope ("/") keeps the semi + shuffled
     // join, where neither a key list nor a broadcast could be assumed
     // to fit
-    val files = if (prefix == "/") files0 else broadcast(files0.localCheckpoint())
+    val files = if (prefix == "/") files0 else files0.localCheckpoint()
     val blocksScoped =
       if (prefix == "/")
         live(block).join(files.select(col("__fid")),
@@ -757,7 +758,8 @@ object Dataflows {
           struct(col("datanodeId"), col("__rack"))))).as("__locs"))
       .withColumn("numRacks",
         size(array_distinct(transform(col("__locs"), x => x.getField("__rack")))))
-    perBlock.join(files, col("fileId") === col("__fid"))
+    perBlock.join(if (prefix == "/") files else broadcast(files),
+        col("fileId") === col("__fid"))
       .select(col("path"), col("fileId"), col("blockId"), col("fileIndex"),
         col("blockLen"), col("liveReplicas"),
         col("replication").cast("long").as("expectedReplication"),

@@ -24,8 +24,9 @@ object Caching {
     *    itself, which the CacheManager never sees — Dataset.unpersist
     *    on such a frame frees nothing, so iterative loops accumulate a
     *    corpus copy per round until driver GC + ContextCleaner catch
-    *    up (the round-12 review finding). The release is
-    *    `LogicalRDD.rdd.unpersist`.
+    *    up (the round-12 review finding). The release drops the
+    *    `LogicalRDD`'s RDD from the SparkContext, as `RDD.unpersist`
+    *    does without its WARN about the truncated lineage.
     *  - conversely, calling Dataset.unpersist alongside is NOT a
     *    harmless no-op there: uncacheQuery matches cached entries by
     *    NORMALIZED plan, under which distinct checkpoint generations of
@@ -37,7 +38,7 @@ object Caching {
     * a localCheckpoint has no lineage to recompute from. */
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
     case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
+      org.apache.spark.graftbridge.RddBridge.release(lr.rdd)
     case _ => df.unpersist(blocking = false)
   }
 

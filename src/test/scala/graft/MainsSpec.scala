@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The plumbing the mains share: the `*_ONLY` subset parser, and source
-  * checks that keep session building in one place, timing out of the
-  * operators, the deleted rehearsal mains out of main code, and the
-  * release of pins inside graft.core.Caching. */
+/** The plumbing the mains share: the `*_ONLY` subset parser, Bench's
+  * summary and JSON line, and source checks that keep session building
+  * in one place, timing out of the operators, the deleted rehearsal
+  * mains and Bench heuristics out of main code, and the release of pins
+  * inside graft.core.Caching. */
 class MainsSpec extends AnyFunSuite {
 
   test("subset: names are trimmed, empties dropped, unknown names rejected") {
@@ -27,13 +28,25 @@ class MainsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no_such_entry"))
   }
 
-  test("pinnedReference: a pin applies only on the core count it was taken on") {
-    val pin = """{"viewsContractTotal": 23.98, "cpus": 32, "note": "n"}"""
-    assert(Bench.pinnedReference(pin, 32).contains(23.98))
-    assert(Bench.pinnedReference(pin, 4).isEmpty)
-    assert(Bench.pinnedReference("""{"viewsContractTotal": 23.98}""", 32).isEmpty)
-    assert(Bench.pinnedReference(
-      Files.readString(Paths.get("tools/bench_reference.json")), 32).contains(23.98))
+  test("Bench.summary: min, midpoint median and max over every run") {
+    assert(Bench.summary(Seq(2.0)) == ((2.0, 2.0, 2.0)))
+    assert(Bench.summary(Seq(3.0, 1.0)) == ((1.0, 2.0, 3.0)))
+    assert(Bench.summary(Seq(5.0, 1.0, 2.0)) == ((1.0, 2.0, 5.0)))
+    assert(Bench.summary(Seq(4.0, 1.0, 9.0, 2.0)) == ((1.0, 3.0, 9.0)))
+  }
+
+  test("Bench.line: totals sum medians and minimums; a failed entry nulls both") {
+    val ok = Bench.line(Seq("a" -> Some(Seq(1.0, 3.0, 2.0)), "b" -> Some(Seq(4.0, 6.0))),
+      3, "views", 0.0, "sf")
+    assert(ok == """{"metric":"total","value":7.0,"unit":"sec",""" +
+      """"queries":{"a":2.0,"b":5.0},"reps":3,""" +
+      """"spread":{"a":[1.0,2.0,3.0],"b":[4.0,5.0,6.0]},"minTotal":5.0,""" +
+      """"failed":[],"layout":"views","layoutWriteSec":0.0,"sf":"sf"}""")
+    val bad = Bench.line(Seq("a" -> Some(Seq(1.0)), "b" -> None), 1, "bucketed", 2.5, "sf")
+    assert(bad == """{"metric":"total","value":null,"unit":"sec",""" +
+      """"queries":{"a":1.0,"b":null},"reps":1,""" +
+      """"spread":{"a":[1.0,1.0,1.0],"b":null},"minTotal":null,""" +
+      """"failed":["b"],"layout":"bucketed","layoutWriteSec":2.5,"sf":"sf"}""")
   }
 
   private val mainSources: Seq[(Path, String)] = {
@@ -61,7 +74,9 @@ class MainsSpec extends AnyFunSuite {
     val gone = Seq("ScaleRehearsal", "RehearsalUtil",
       "SPARK_GRAFT_REHEARSAL_REPS", "SPARK_GRAFT_ALLOW_BIG_HEAP",
       "SPARK_GRAFT_BANDS", "SPARK_GRAFT_PLAN_DUMP",
-      "SPARK_GRAFT_XL_N5_REPS", "SPARK_GRAFT_Q_ONLY")
+      "SPARK_GRAFT_XL_N5_REPS", "SPARK_GRAFT_Q_ONLY",
+      // and Bench's retry loop, reference pin and load-average probe
+      "SPARK_GRAFT_BENCH_RETRIES", "bench_reference", "/proc/loadavg")
     val found = for ((p, src) <- mainSources; g <- gone if src.contains(g))
       yield s"$p: $g"
     assert(found.isEmpty)
