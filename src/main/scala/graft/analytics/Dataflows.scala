@@ -487,26 +487,17 @@ object Dataflows {
 
   // ---- N11: fsck (NamenodeFsck.java:149-353, Result :556-640) ----------
 
-  /** Live-node → dense INT rack-id dimension + the cluster rack count
-    * (a 1-row frame). Rack STRINGS must not ride the per-block shuffle —
-    * 6M '/rackN' payloads through the aggregation measured 2× the whole
-    * query — so the dimension maps each live node to a rack ordinal
-    * (rack-dimension window, bounded by rack count) and the block side
-    * joins the broadcast dimension for two ints. */
-  /** The rack count comes back as a plan-time LITERAL (driver-side count
-    * on the rack dimension — topology is namenode-memory-sized, the
-    * Placement convention): a 1-row crossJoin would sit as a
-    * BroadcastNestedLoopJoin between the file⋈block join and the
-    * per-file aggregation, breaking their codegen fusion. */
+  /** Live-node → dense INT rack-id dimension + the cluster rack count.
+    * Rack STRINGS must not ride the per-block shuffle — 6M '/rackN'
+    * payloads through the aggregation measured 2× the whole query — so
+    * the block side joins the broadcast dimension for two ints. The rack
+    * count comes back as a plan-time LITERAL (a 1-row crossJoin would sit
+    * as a BroadcastNestedLoopJoin between the file⋈block join and the
+    * per-file aggregation, breaking their codegen fusion). A null-location
+    * node keeps a null rack: its replicas are live but span no rack. */
   private def nodeRackDim(datanode: DataFrame, nowMs: Long): (DataFrame, Long) = {
-    val liveN = StateManager.liveDatanodes(datanode, nowMs)
-      .select(col("id").as("__nid"), col("location"))
-    val rackDim = liveN.select(col("location")).distinct()
-      .withColumn("__rid", row_number().over(Window.orderBy(col("location"))))
-      .localCheckpoint() // rack-dimension-sized; counted AND joined below
-    val dim = liveN.join(broadcast(rackDim), Seq("location"))
-      .select(col("__nid"), col("__rid"))
-    (dim, rackDim.count())
+    val (nodes, clusterRacks) = StateManager.liveNodeRacks(datanode, nowMs)
+    (nodes.select(col("id").as("__nid"), col("rack").as("__rid")), clusterRacks)
   }
 
   /** Per-block liveness/rack-spread/length off ONE block scan: live
@@ -570,7 +561,8 @@ object Dataflows {
     val isClosed = col("__status") === "closed"
     // numRacks < min(2, repl, clusterRacks) given clusterRacks > 1 ⟺
     //   repl ≥ 2: block spans ≤ 1 rack (min/max equal or both null)
-    //   repl = 1: no live replica at all (numRacks = 0)
+    //   repl = 1: no live replica on a rack (numRacks = 0; a live
+    //             replica on a null-location node spans no rack)
     //   repl ≤ 0: never (minRacks = 0)
     val spans1 = col("__rkMin").isNull || col("__rkMin") === col("__rkMax")
     // shuffle_hash, not sort-merge: both sides partition on the file id
@@ -591,7 +583,7 @@ object Dataflows {
         when(isClosed && col("__live") >= minReplication, 1L).otherwise(0L))
       .withColumn("__misR", when(isClosed && lit(clusterRacks) > 1 && hasB &&
         ((col("replication") >= 2 && spans1) ||
-         (col("replication") === 1 && col("__live") === 0)), 1L).otherwise(0L))
+         (col("replication") === 1 && col("__rkMin").isNull)), 1L).otherwise(0L))
       .groupBy(col("__fid"), col("__flen"), col("__status"))
       .agg(count(col("blockId")).as("__nb"),
         sum(col("__missing")).as("__miss"), sum(col("__missSize")).as("__msz"),
@@ -672,7 +664,7 @@ object Dataflows {
       .withColumn("__over", (col("__liveReplicas") > col("replication")).cast("int"))
       .withColumn("__misrep", (lit(clusterRacks) > 1 &&
         ((col("replication") >= 2 && spans1) ||
-         (col("replication") === 1 && col("__liveReplicas") === 0))).cast("int"))
+         (col("replication") === 1 && col("__rkMin").isNull))).cast("int"))
       .groupBy(col("fileId"), col("replication"), col("fileSize"),
         col("openForWrite"))
       .agg(count(col("blockId")).as("nBlocks"),
@@ -720,10 +712,8 @@ object Dataflows {
     * locations only for known datanodes: dead holders never appear). */
   def fsckBlocks(file: DataFrame, block: DataFrame, datanode: DataFrame,
                  nowMs: Long, pathPrefix: String = "/"): DataFrame = {
-    val liveN = StateManager.liveDatanodes(datanode, nowMs)
-      .select(col("id").as("__nid"), col("location").as("__rack"))
-    // node-dimension count, same bounded driver action as nodeRackDim
-    val clusterRacks = liveN.select(col("__rack")).distinct().count()
+    val (nodes, clusterRacks) = StateManager.liveNodeRacks(datanode, nowMs)
+    val liveN = nodes.select(col("id").as("__nid"), col("location").as("__rack"))
     val paths = StateManager.materializePaths(file)
       .select(col("id").as("__pid"), col("path"))
     val prefix = normScope(pathPrefix)
@@ -756,8 +746,8 @@ object Dataflows {
         max(greatest(col("length"), lit(0L))).as("blockLen"),
         array_sort(collect_list(when(col("__nid").isNotNull,
           struct(col("datanodeId"), col("__rack"))))).as("__locs"))
-      .withColumn("numRacks",
-        size(array_distinct(transform(col("__locs"), x => x.getField("__rack")))))
+      .withColumn("numRacks", size(array_distinct(filter(
+        transform(col("__locs"), x => x.getField("__rack")), _.isNotNull))))
     perBlock.join(if (prefix == "/") files else broadcast(files),
         col("fileId") === col("__fid"))
       .select(col("path"), col("fileId"), col("blockId"), col("fileIndex"),

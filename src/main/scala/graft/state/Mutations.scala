@@ -1,8 +1,9 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.store.StateStore
 
@@ -90,13 +91,28 @@ object Mutations {
     }
   }
 
+  /** Most request rows an insert batch validates on the driver: up to it
+    * the batch and the file rows it can touch are collected once, and the
+    * pushed key lists stay small literal IN lists. */
+  val InsertBatchCap: Int = 4096
+
   /** R11 (FileRepository.insertInternal): validate a batch of candidate
     * child rows (parentId, name, length, blockSize, replication, owner,
     * leaseHolder): parent must exist and be a directory; (parentId,name)
-    * must not collide with a live row; name nonempty and ≤255 bytes.
-    * Returns candidates + a `reject` column (null = accepted). */
-  def validateInserts(file: DataFrame, candidates: DataFrame): DataFrame = {
-    val f = live(file)
+    * must not collide with a live row; name nonempty and ≤255 characters.
+    * Returns candidates + a `reject` column (null = accepted). A batch of
+    * at most `batchCap` rows is validated over local relations
+    * ([[boundedInserts]]), a larger one over the whole live table. */
+  def validateInserts(file: DataFrame, candidates: DataFrame,
+                      batchCap: Int = InsertBatchCap): DataFrame =
+    boundedInserts(file, candidates, batchCap) match {
+      case Some((batch, slice)) => rejectLadder(slice, batch)
+      case None => rejectLadder(live(file), candidates)
+    }
+
+  /** The R11 reject ladder of `candidates` against the live file rows `f`
+    * — the one definition both validation routes run. */
+  private def rejectLadder(f: DataFrame, candidates: DataFrame): DataFrame = {
     val parents = f.select(col("id").as("__pid"), col("length").as("__plen"))
     val taken = f.select(col("parentId").as("__tp"), col("name").as("__tn"))
     candidates
@@ -111,23 +127,94 @@ object Mutations {
       .drop("__pid", "__plen", "__tp", "__tn")
   }
 
+  /** A request batch of at most `cap` rows as a local relation, with its
+    * file slice: the live rows whose `id` is a requested parent plus the
+    * live rows whose (parentId, name) is requested — everything
+    * [[rejectLadder]] and the parent touches read. The batch is collected
+    * once (limit cap + 1) and the slice in one scan whose `id IN` /
+    * `parentId IN` / `name IN` predicates reach the parquet reader — the
+    * reference's TDHS `IN` index lookups (SURVEY P7). None over the cap. */
+  private def boundedInserts(file: DataFrame, candidates: DataFrame,
+                             cap: Int): Option[(DataFrame, DataFrame)] = {
+    val batch = candidates.limit(cap + 1).collect()
+    if (batch.length > cap) None
+    else {
+      val sp = candidates.sparkSession
+      val (pi, ni) = (candidates.schema.fieldIndex("parentId"),
+        candidates.schema.fieldIndex("name"))
+      val pids = batch.flatMap(r => Option(r.get(pi))).distinct.toSeq
+      val keys = batch.filter(r => !r.isNullAt(pi) && !r.isNullAt(ni))
+        .map(r => (r.get(pi), r.getString(ni))).distinct.toSeq
+      val f = live(file)
+      val isParent = col("id").isin(pids: _*)
+      // the first filter reaches the parquet scan; the second, whose
+      // struct IN does not translate, makes the slice exact after it
+      val slice =
+        if (pids.isEmpty) Array.empty[Row]
+        else f.filter(isParent ||
+            (col("parentId").isin(keys.map(_._1).distinct: _*) &&
+             col("name").isin(keys.map(_._2).distinct: _*)))
+          .filter(isParent || struct(col("parentId"), col("name"))
+            .isin(keys.map { case (p, n) => struct(lit(p), lit(n)) }: _*))
+          .collect()
+      Some((StateManager.localRelation(sp, batch, candidates.schema),
+        StateManager.localRelation(sp, slice, f.schema)))
+    }
+  }
+
   /** S5 (insertFileByPath / mkdir -p, StateManager.java:568-590) for a
     * batch of leaf paths whose parents already exist: returns the
-    * write-set = accepted new rows (deterministic ids versionBase+rank)
-    * plus the parents' mtime touches (R12 semantics :277-284). */
+    * write-set = accepted new rows (deterministic ids versionBase+rank
+    * over (parentId, name)) plus the parents' mtime touches (R12
+    * semantics :277-284). A batch of at most `batchCap` requests is
+    * validated over local relations, ranked on the driver and returned
+    * as one local relation; a larger one ranks distributed. */
   def mkdirs(file: DataFrame, requests: DataFrame, idBase: Long,
-             nowMs: Long, leafLength: Long = -1L): DataFrame = {
-    val validated = validateInserts(file, requests)
-      .filter(col("reject").isNull).drop("reject")
-      // in-batch duplicate (parentId, name) requests collapse to one row:
-      // validateInserts only checks collisions against LIVE rows, so two
-      // identical requests would both pass and commit two live children
-      // under one name (the serial reference rejects the second). Every
-      // other attribute is overwritten below, so any survivor yields the
-      // same write-set — dropDuplicates is deterministic here.
-      .dropDuplicates("parentId", "name")
-    val newRows = globalRank(validated, "__rank", col("parentId"), col("name"))
-      .withColumn("id", lit(idBase) + col("__rank")).drop("__rank")
+             nowMs: Long, leafLength: Long = -1L,
+             batchCap: Int = InsertBatchCap): DataFrame =
+    boundedInserts(file, requests, batchCap) match {
+      case Some((batch, slice)) =>
+        val accepted = rejectLadder(slice, batch).filter(col("reject").isNull)
+          .select(col("parentId").cast(LongType), col("name")).collect()
+          .map(r => (r.getLong(0), r.getString(1))).distinct
+          .sorted(Ordering.Tuple2(Ordering.Long, StateManager.SparkStringOrder))
+        val sp = requests.sparkSession
+        val ranked = StateManager.localRelation(sp,
+          accepted.zipWithIndex.map { case ((p, n), i) => Row(p, n, idBase + i + 1) },
+          StructType.fromDDL("parentId BIGINT, name STRING, id BIGINT"))
+        val parents = accepted.map(_._1).distinct.toSeq
+        val (inserts, touches) = insertWriteSet(ranked,
+          slice.filter(col("id").isin(parents: _*)), nowMs, leafLength)
+        // both sides are projections of local relations, which collect
+        // without a job; one local relation carries their union
+        StateManager.localRelation(sp, inserts.collect() ++ touches.collect(),
+          inserts.unionByName(touches).schema)
+      case None =>
+        val validated = rejectLadder(live(file), requests)
+          .filter(col("reject").isNull).drop("reject")
+          // in-batch duplicate (parentId, name) requests collapse to one
+          // row: the ladder only checks collisions against LIVE rows, so
+          // two identical requests would both pass and commit two live
+          // children under one name (the serial reference rejects the
+          // second). Every other attribute is overwritten below, so any
+          // survivor yields the same write-set.
+          .dropDuplicates("parentId", "name")
+        val ranked = globalRank(validated, "__rank", col("parentId"), col("name"))
+          .withColumn("id", lit(idBase) + col("__rank")).drop("__rank")
+        // the touched-parent set is request-bounded — push it into the
+        // file scan as an IN predicate (Scale.keyPrune) instead of
+        // semi-filtering the whole table after it
+        val parents = graft.core.Scale.keyPrune(
+          live(file), "id", ranked.select(col("parentId").as("__p")), "__p")
+        val (inserts, touches) = insertWriteSet(ranked, parents, nowMs, leafLength)
+        inserts.unionByName(touches)
+    }
+
+  /** The insert rows of ranked accepted requests (parentId, name, id) and
+    * the mtime touches of their `parents`, aligned for one union. */
+  private def insertWriteSet(ranked: DataFrame, parents: DataFrame, nowMs: Long,
+                             leafLength: Long): (DataFrame, DataFrame) = {
+    val inserts = ranked
       .withColumn("length", lit(leafLength))
       .withColumn("blockSize", lit(0L)).withColumn("replication", lit(0L))
       .withColumn("atime", lit(nowMs)).withColumn("mtime", lit(nowMs))
@@ -135,16 +222,13 @@ object Mutations {
       .withColumn("leaseHolder", lit(null).cast("string"))
       .withColumn("leaseRecoveryTime", lit(0L))
       .withColumn("version", col("id"))
-      .select("id", "parentId", "name", "length", "blockSize", "replication",
-        "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
-    // the touched-parent set is request-bounded — push it into the file
-    // scan as an IN predicate (Scale.keyPrune) instead of semi-filtering
-    // the whole table after it
-    val touchedParents = graft.core.Scale.keyPrune(
-        live(file), "id", newRows.select(col("parentId").as("__p")), "__p")
-      .withColumn("mtime", lit(nowMs))
-    newRows.withColumn("writeOp", lit("insert"))
-      .unionByName(touchedParents.withColumn("writeOp", lit("touch")))
+      .withColumn("writeOp", lit("insert"))
+    val cols = Seq("id", "parentId", "name", "length", "blockSize", "replication",
+      "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version",
+      "writeOp").map(col)
+    (inserts.select(cols: _*),
+      parents.withColumn("mtime", lit(nowMs)).withColumn("writeOp", lit("touch"))
+        .select(cols: _*))
   }
 
   /** R12/N12 (FileRepository.updateInternal / renameTo): batch renames

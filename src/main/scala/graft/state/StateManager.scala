@@ -1,8 +1,10 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.store.StateStore
 
@@ -417,6 +419,52 @@ object StateManager {
 
   def liveDatanodes(datanode: DataFrame, nowMs: Long): DataFrame =
     live(datanode).filter(col("lastUpdated") >= nowMs - HeartbeatExpiryMs)
+
+  /** Most live nodes [[liveNodeRacks]] holds on the driver. */
+  val LiveNodeCap: Int = 65536
+
+  /** Driver rows as a local relation: projections and filters over it
+    * fold in the optimizer, so collecting them starts no Spark job. */
+  private[state] def localRelation(sp: SparkSession, rows: Array[Row],
+                                   schema: StructType): DataFrame =
+    sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Spark's string order (UTF-8 bytes, unsigned), for driver-side sorts
+    * that must agree with an `orderBy` on a string column. */
+  private[state] val SparkStringOrder: Ordering[String] =
+    (a: String, b: String) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** The live nodes' rack dimension: `(id, location, rack)` per live node,
+    * `rack` the 1-based rank of its location among the distinct non-null
+    * live locations in Spark's string order (null for a null location),
+    * plus `clusterRacks`, the number of those locations — a null location
+    * is no rack, as in `COUNT(DISTINCT location)`, but its node is still
+    * live. Topology is namenode-memory-sized (the reference keeps the
+    * datanode map in RAM): up to `cap` live nodes are collected once and
+    * the dimension returns as a local relation, so the rack ranking and
+    * count start no Spark job. Over the cap the ranks come from a pinned
+    * window over the distinct locations. */
+  def liveNodeRacks(datanode: DataFrame, nowMs: Long,
+                    cap: Int = LiveNodeCap): (DataFrame, Long) = {
+    val nodes = liveDatanodes(datanode, nowMs).select(col("id"), col("location"))
+    val collected = nodes.limit(cap + 1).collect()
+    if (collected.length <= cap) {
+      val rank = collected.flatMap(r => Option(r.getString(1))).distinct
+        .sorted(SparkStringOrder).zipWithIndex.toMap
+      val rows = collected.map(r => Row(r.get(0), r.get(1),
+        rank.get(r.getString(1)).map(i => Int.box(i + 1)).orNull))
+      val schema = nodes.schema.add("rack", IntegerType, nullable = true)
+      (localRelation(nodes.sparkSession, rows, schema), rank.size.toLong)
+    } else {
+      val racks = nodes.select(col("location")).filter(col("location").isNotNull)
+        .distinct()
+        .withColumn("rack", row_number().over(Window.orderBy(col("location"))))
+        .localCheckpoint() // rack-count-sized; counted and joined below
+      (nodes.join(broadcast(racks), Seq("location"), "left")
+        .select(col("id"), col("location"), col("rack")), racks.count())
+    }
+  }
 
   /** Cluster-wide sums over live nodes + live/dead counts — one wide agg. */
   def clusterStats(datanode: DataFrame, nowMs: Long): DataFrame = {

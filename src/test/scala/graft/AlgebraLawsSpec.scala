@@ -329,4 +329,79 @@ class AlgebraLawsSpec extends SparkSpec {
     val tiny = oneRack.take(2)
     assert(Placement.chooseTargets(tiny, 5, None, 1024, seed = 3L).size == 2)
   }
+
+  // ---- bounded driver paths == their distributed fallbacks ------------
+
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    df.collect().groupBy(_.toString).view.mapValues(_.length).toMap
+
+  test("mkdirs/validateInserts: the bounded batch path equals the distributed one") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import graft.state.Mutations
+    // Spark's length counts characters: 255 two- or four-byte characters
+    // are a legal name, 256 are not
+    val (e255, e256) = ("é" * 255, "é" * 256)
+    val (m255, m256) = ("😀" * 255, "😀" * 256)
+    val file = Seq(
+      (0L, -1L, "", -1L, 1L), // root
+      (1L, 0L, "a", -1L, 2L),
+      (2L, 0L, e255, -1L, 3L),
+      (3L, 1L, "b", -1L, 4L),
+      (4L, 1L, "f", 10L, 5L), // a file
+      (5L, 1L, "gone", -1L, -6L), // a tombstoned child
+      (6L, 3L, m255, -1L, 7L),
+    ).toDF("id", "parentId", "name", "length", "version")
+      .select(col("id"), col("parentId"), col("name"), col("length"),
+        lit(0L).as("blockSize"), lit(0L).as("replication"), lit(0L).as("atime"),
+        lit(0L).as("mtime"), lit(0L).as("owner"),
+        lit(null).cast("string").as("leaseHolder"),
+        lit(0L).as("leaseRecoveryTime"), col("version"))
+    // null parent, live dirs, the file, the tombstoned dir, a missing id
+    val parents = Gen.oneOf(None, Some(0L), Some(1L), Some(2L), Some(3L),
+      Some(4L), Some(5L), Some(99L))
+    // null, empty, live and tombstoned names, names at and past 255
+    val names = Gen.oneOf(None, Some(""), Some("a"), Some("b"), Some("f"),
+      Some("gone"), Some("new"), Some(e255), Some(e256), Some(m255), Some(m256))
+    def check(batch: Seq[(Option[Long], Option[String])]): Boolean = {
+      val reqs = batch.toDF("parentId", "name")
+      bag(Mutations.validateInserts(file, reqs, batchCap = 0)) ==
+        bag(Mutations.validateInserts(file, reqs)) &&
+        bag(Mutations.mkdirs(file, reqs, idBase = 100L, nowMs = 7L, batchCap = 0)) ==
+          bag(Mutations.mkdirs(file, reqs, idBase = 100L, nowMs = 7L))
+    }
+    // every case at once, each request twice
+    val everyCase = (for (p <- Seq(None, Some(0L), Some(1L), Some(3L), Some(4L), Some(99L));
+                          n <- Seq(None, Some(""), Some("a"), Some("gone"), Some("new"),
+                            Some(e255), Some(e256), Some(m255), Some(m256)))
+      yield (p, n)).flatMap(r => Seq(r, r))
+    val reasons = Mutations.validateInserts(file, everyCase.toDF("parentId", "name"))
+      .select(col("reject")).distinct().collect().map(r => Option(r.getString(0))).toSet
+    assert(reasons == Set(None, Some("empty name"), Some("name too long"),
+      Some("parent not found"), Some("parent not a directory"), Some("name exists")))
+    assert(check(everyCase))
+    val params = SCTest.Parameters.default.withMinSuccessfulTests(12)
+    val res = SCTest.check(params,
+      Prop.forAll(Gen.choose(0, 16).flatMap(Gen.listOfN(_, Gen.zip(parents, names))))(check))
+    assert(res.passed, res.status.toString)
+  }
+
+  test("liveNodeRacks: the collected dimension equals the windowed one") {
+    import graft.state.StateManager
+    val now = 1700000000000L
+    // U+FF61 sorts before U+1F600 in UTF-8 bytes and after it in UTF-16
+    val dn = Seq[(Long, Option[String], Long, Long)](
+      (1L, Some("/r1"), now, 1L), (2L, Some("/r1"), now, 2L),
+      (3L, None, now, 3L), (4L, Some("/\uFF61"), now, 4L),
+      (5L, Some("/😀"), now, 5L), (6L, Some("/é"), now, 6L),
+      (7L, Some("/dead"), 0L, 7L), (8L, Some("/gone"), now, -8L))
+      .toDF("id", "location", "lastUpdated", "version")
+    def dim(cap: Int) = {
+      val (nodes, racks) = StateManager.liveNodeRacks(dn, now, cap)
+      (bag(nodes), racks)
+    }
+    val (nodes, racks) = dim(StateManager.LiveNodeCap)
+    assert(racks == 4L && nodes.keySet.contains("[3,null,null]") &&
+      nodes.keySet.contains("[4,/\uFF61,3]") && nodes.keySet.contains("[5,/😀,4]"))
+    assert(dim(0) == ((nodes, racks)))
+  }
 }

@@ -406,4 +406,49 @@ class DataflowsSpec extends SparkSpec {
       && del.exists(r => r.head == "tombstone" && r(1) == "file" && r(2) == 2L)
       && del.exists(r => r.head == "touch" && r(2) == 1L))
   }
+
+  test("N11: a live null-location node holds live replicas but no rack, as in the oracle") {
+    // the DuckDB oracle counts a null-location node's replicas through
+    // COUNT(n.id) and leaves null out of COUNT(DISTINCT location)
+    val files = Seq(
+      (0L, 0L, "", -1L, 0L, 1L),
+      (1L, 0L, "d", -1L, 0L, 2L),
+      (10L, 1L, "a", 64L, 1L, 3L),
+      (11L, 1L, "b", 64L, 2L, 4L),
+    ).map { case (id, p, n, len, repl, v) =>
+      (id, p, n, len, 64L, repl, 0L, 0L, 0L, None: Option[String], 0L, v)
+    }.toDF("id", "parentId", "name", "length", "blockSize", "replication",
+      "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
+    val blocks = Seq(
+      (100L, 3L, 64L, 1L, 10L, 0L, 20L), // /d/a: only on the null-location node
+      (101L, 1L, 64L, 1L, 11L, 0L, 21L), // /d/b: one racked + the null node
+      (101L, 3L, 64L, 1L, 11L, 0L, 22L),
+    ).toDF("id", "datanodeId", "length", "generationStamp", "fileId",
+      "fileIndex", "version")
+    def nodes(racks: (Long, Option[String], Long)*) = racks
+      .map { case (id, loc, seen) => (id, loc, seen, id) }
+      .toDF("id", "location", "lastUpdated", "version")
+    // one live rack (node 4's rack is dead): no placement finding at all
+    val oneRack = nodes((1L, Some("/r1"), now), (3L, None, now), (4L, Some("/r2"), 0L))
+    // two live racks: /d/a spans 0 racks of 1 wanted, /d/b 1 of 2
+    val twoRacks = nodes((1L, Some("/r1"), now), (2L, Some("/r2"), now), (3L, None, now))
+    val summary = Seq("missingBlocks", "underReplicatedBlocks",
+      "misReplicatedBlocks", "minReplicatedBlocks", "corruptFiles", "avgReplication")
+    def fsck(dn: DataFrame) =
+      rows(Dataflows.fsck(files, blocks, dn, now).select(summary.map(col): _*)).head
+    assert(fsck(oneRack) == Seq(0L, 0L, 0L, 2L, 0L, 1.5))
+    assert(fsck(twoRacks) == Seq(0L, 0L, 2L, 2L, 0L, 1.5))
+    def findings(dn: DataFrame) = rows(Dataflows.fsckFiles(files, blocks, dn, now)
+      .select(col("path"), col("missingBlocks"), col("underBlocks"),
+        col("misReplicatedBlocks")).orderBy(col("path")))
+    assert(findings(oneRack).isEmpty)
+    assert(findings(twoRacks) == Seq(Seq("/d/a", 0L, 0L, 1L), Seq("/d/b", 0L, 0L, 1L)))
+    def detail(dn: DataFrame) = rows(Dataflows.fsckBlocks(files, blocks, dn, now)
+      .select(col("blockId"), col("liveReplicas"), col("missing"),
+        col("misReplicated"), col("locations"), col("racks")).orderBy(col("blockId")))
+    assert(detail(oneRack) == Seq(Seq(100L, 1L, false, false, "3", ""),
+      Seq(101L, 2L, false, false, "1,3", "/r1")))
+    assert(detail(twoRacks) == Seq(Seq(100L, 1L, false, true, "3", ""),
+      Seq(101L, 2L, false, true, "1,3", "/r1")))
+  }
 }

@@ -154,6 +154,28 @@ class ScalingLawsSpec extends SparkSpec {
       Replication.blockReceived(s.block, s.file, dn, ops))
   }
 
+  test("mkdirs and fsck's node dimension: a bounded batch runs fixed jobs and no shuffle") {
+    // five jobs: the batch collect, the slice scan, and the reject ladder
+    // over the two local relations (one per broadcast side, one probe);
+    // the write-set itself is a local relation
+    val reqs = shards(1).file
+      .filter(col("version") > 0 && col("length") === -1L && col("id") % 7 === 0L)
+      .select(col("id").as("parentId"), concat(lit("new_"), col("name")).as("name"))
+      .limit(25).localCheckpoint()
+    val t = measured(s => graft.state.Mutations.mkdirs(s.file, reqs,
+      idBase = 5L * Off, nowMs = now))
+    val (c1, r1) = t(1)
+    val (c4, r4) = t(4)
+    info(s"mkdirs k=1 $c1; k=4 $c4")
+    assert(r1.count(_.getAs[String]("writeOp") == "insert") == 25 && bag(r4) == bag(r1))
+    for (c <- Seq(c1, c4)) assert(c.jobs == 5 && c.shuffleRecords == 0, s"mkdirs $c")
+    // the node dimension is fsck's only eager work: one collect
+    for (k <- ks) {
+      val c = countersDuring(Dataflows.fsck(shards(k).file, shards(k).block, dn, now))
+      assert(c.jobs == 1 && c.shuffleRecords == 0, s"fsck build k=$k $c")
+    }
+  }
+
   test("N5 reconcileReports: same jobs, at most linear shuffle, k times each action") {
     val t = measured(s => Dataflows.reconcileReports(s.block, s.reported)
       .groupBy(col("action")).agg(count(lit(1)).as("n")))
