@@ -73,12 +73,6 @@ object Replication {
                       timeoutMs: Long = 5 * 60 * 1000L): DataFrame =
     pending.filter(lit(nowMs) > col("since") + lit(timeoutMs))
 
-  /** The entries the timeout scan keeps (the reference's iter.remove()
-    * complement — one tick = [[pendingTimedOut]] out, survivors stay). */
-  def pendingSurvivors(pending: DataFrame, nowMs: Long,
-                       timeoutMs: Long = 5 * 60 * 1000L): DataFrame =
-    pending.filter(!(lit(nowMs) > col("since") + lit(timeoutMs)))
-
   /** processPendingReplications (FSNamesystem.java:2324-2334): each
     * timed-out block re-enters neededReplications with its CURRENT
     * replica statistics — without this, a lost replication command is
@@ -153,14 +147,6 @@ object Replication {
     actions
       .filter(col("action") === "toInvalidate" && col("storedGenStamp").isNotNull)
       .select(col("blockId"), col("datanodeId")).distinct()
-
-  /** removeFromCorruptReplicasMap on replica removal
-    * (FSNamesystem.java:2988): marks whose (blockId, datanodeId) replica
-    * row no longer exists live are dropped from the standing state. */
-  def corruptMarksCompact(marks: DataFrame, block: DataFrame): DataFrame =
-    marks.join(
-      live(block).select(col("id").as("blockId"), col("datanodeId")),
-      Seq("blockId", "datanodeId"), "left_semi")
 
   /** invalidateCorruptReplicas (FSNamesystem.java:2760-2780, gated at
     * :2736 by corruptReplicas > 0 && liveReplicas >= replication): once a

@@ -69,14 +69,12 @@ object Scale {
       .saveAsTable(table)
 
   /** One home for the layout root — writeBucketed and writeStateTables
-    * must never drift apart on where tables land. The root is suffixed
-    * with this JVM's pid so two runs on one machine (e.g. Verify's
-    * bucketed gate and a Bench layout pass) never clobber each other's
-    * tables mid-write; catalogs are per-session already, only the
-    * filesystem path was shared. */
-  private val runToken: Long = ProcessHandle.current().pid()
+    * must never drift apart on where tables land. The root sits under
+    * [[Caching.scratchRoot]]: unique per JVM, so two runs on one machine
+    * never clobber each other's tables mid-write, and removed with the
+    * rest of the scratch space when the JVM exits. */
   private def tablePath(table: String): String =
-    sys.props("java.io.tmpdir") + s"/graft-bucketed-$runToken/$table"
+    Caching.scratchRoot.resolve("bucketed").resolve(table).toString
 
   /** One-call cluster layout for the persisted state tables — the
     * bucketing SURVEY §4 prescribes so every monitor-tick join lands
@@ -128,7 +126,7 @@ object Scale {
     * retention, the as-of/range/interval joins all key on it), so on
     * this layout every per-user window and both sides of a co-bucketed
     * self-join read straight off the scan's distribution. Same
-    * per-run-token path scheme as the state tables. */
+    * layout root as the state tables. */
   def writeEventsTable(events: DataFrame, prefix: String = "graft_state",
                        buckets: Int = 32): String = {
     writeBucketed(events, s"${prefix}_events", "user_id", buckets)
@@ -143,7 +141,7 @@ object Scale {
     * join plans as a co-located SortMergeJoin and the aggregate reads
     * its distribution straight off the scan (pinned in ScaleSpec). Dims
     * stay unbucketed: they are broadcast-or-threshold territory. Same
-    * per-run-token path scheme as the state tables. */
+    * layout root as the state tables. */
   def writeRelationalTables(lineitem: DataFrame, orders: DataFrame,
                             prefix: String = "graft_state",
                             buckets: Int = 32): Seq[String] = {
@@ -179,7 +177,7 @@ object Scale {
     * melt pays an exchange (ScaleSpec-pinned). The documents-backed gate
     * families are views-only in the bucketed VERIFY layout (QUERIES.md
     * "Layout coverage"), so this layout is spec-pinned rather than
-    * gate-replayed. Same per-run-token path scheme as the state tables.
+    * gate-replayed. Same layout root as the state tables.
     *
     * After the write, ONE aggregate over the materialized table reads
     * the hottest actual posting-list length (rows per term — the
@@ -214,25 +212,6 @@ object Scale {
     }
     tbl
   }
-
-  /** Cluster layout for the APPENDABLE posting store (the WRITE-path
-    * counterpart of [[writePostingIndex]]'s term-bucketed SERVE layout):
-    * did-RANGE-clustered parquet, one narrow did range per file, so the
-    * append path's replay probe
-    * ([[graft.functions.TextFunctions.bm25PostingsDelta]] — a keyPrune'd
-    * IN predicate over the batch's ids) prunes to the row groups that
-    * can hold those ids instead of scanning the store. Plain parquet
-    * dir, not a catalog table: ingest appends DELTA FILES — the
-    * streaming twin stages each trigger's delta did-SORTED into one
-    * file and renames it in atomically
-    * ([[graft.streaming.Changefeed.streamingBm25Ingest]], ADVICE r18),
-    * so appended files stay did-narrow (tight row-group min/max stats)
-    * as triggers accumulate, not just the initial write. Rehearsal-
-    * measured flat (1.2 s delta at a 500k-doc store vs 1.5 s at 100k). */
-  def writePostingStore(postings: DataFrame, dir: String,
-                        files: Int = 32): Unit =
-    postings.repartitionByRange(files, col("did"))
-      .write.mode(SaveMode.Overwrite).parquet(dir)
 
   /** The maintained serve-STATS store — the persistence of
     * [[graft.functions.TextFunctions.Bm25Stats]] that makes the
@@ -351,20 +330,5 @@ object Scale {
     parts.foreach(f => java.nio.file.Files.move(f.toPath, dest,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE))
     graft.core.Caching.deleteRecursively(new java.io.File(stage))
-  }
-
-  /** Salted equi-join for skewed build keys: explode the small side into
-    * `salts` copies, scatter the big side's hot keys across salt ids, join
-    * on (key, salt). Result equals a plain inner equi-join on `key` —
-    * verified in ScaleSpec — but no single task receives a whole hot key.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salts: Int): DataFrame = {
-    require(salts > 1, "salts must be > 1")
-    val bigSalted = big.withColumn("__salt",
-      pmod(hash(monotonically_increasing_id()), lit(salts)))
-    val smallExploded = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    bigSalted.join(smallExploded, Seq(key, "__salt")).drop("__salt")
   }
 }

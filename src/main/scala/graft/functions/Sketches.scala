@@ -1,50 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.BinaryType
 
-/** Membership/cardinality sketches (SURVEY §2.5 F7): the reference's
-  * bloom-filter family (standard/counting/dynamic/retouched, under
-  * C/org/apache/hadoop/util/bloom/) maps to Spark's built-in bloom
-  * expression pair + approx_count_distinct (HLL). The filter is built
-  * as the BloomFilterAggregate binary aggregate (map-side partial
-  * build, one merge — the same expression Spark's runtime join filters
-  * use) and probed with the codegen'd BloomFilterMightContain, so a
-  * 100 TB semi-join prune stays inside whole-stage codegen instead of
-  * paying a per-row Scala UDF call.
+/** Cardinality, frequency and order-statistic sketches (SURVEY §2.5
+  * F7): approx_count_distinct (HLL), a deterministic HLL, the mergeable
+  * KMV bottom-k, count-min, and exact ranks by histogram refinement.
+  * The reference's bloom-filter family is served by the on-disk
+  * BloomMapFile read path ([[graft.sources.Formats.bloomMapFileGet]]).
   */
 object Sketches {
-
-  /** Build a bloom filter over a LONG column as a distributed binary
-    * aggregate; returns the merged filter's serialized bytes.
-    *
-    * BloomFilterAggregate clamps the requested sizing to the session's
-    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems`/`maxNumBits`
-    * internally (default 4M items / 64M bits), which preserves the
-    * no-false-negatives contract — only the false-POSITIVE rate degrades
-    * past the cap (spec'd in FormatsSpec). Raise those confs for a
-    * full-fidelity filter at larger cardinalities. */
-  def buildBloom(df: DataFrame, column: String, expectedItems: Long,
-                 fpp: Double = 0.01): Array[Byte] = {
-    // optimal sizing m = -n·ln(p)/ln(2)² (the classic bloom formula)
-    val numBits = math.max(64L,
-      math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-    val agg = new BloomFilterAggregate(ColumnBridge.expression(col(column)),
-      Literal(expectedItems), Literal(numBits))
-    df.select(ColumnBridge.column(agg.toAggregateExpression()).as("bloom"))
-      .head().getAs[Array[Byte]](0)
-  }
-
-  /** Prune `df` to rows whose `column` might be in the filter — false
-    * positives possible, false negatives not (BloomMapFile semantics).
-    * The probe is a native codegen'd expression over the filter literal. */
-  def mightContain(df: DataFrame, column: String, bloom: Array[Byte]): DataFrame =
-    df.filter(ColumnBridge.column(BloomFilterMightContain(
-      Literal(bloom, BinaryType), ColumnBridge.expression(col(column)))))
 
   /** HLL cardinality per group — the sketch analog of COUNT(DISTINCT). */
   def approxDistinct(df: DataFrame, groupCols: Seq[String], valueCol: String,
@@ -52,7 +17,6 @@ object Sketches {
     df.groupBy(groupCols.map(col): _*)
       .agg(approx_count_distinct(col(valueCol), rsd).as("approxDistinct"))
 
-  /** Quantile sketch (Greenwald-Khanna) — percentiles without a sort. */
   /** EXACT global order statistics over a non-negative LONG column
     * WITHOUT a global sort or a single-partition window — the corpus
     * quantile cutoffs a 100 TB bucketing pass needs (CCNet's
@@ -124,10 +88,6 @@ object Sketches {
     }
     resolved
   }
-
-  def approxQuantiles(df: DataFrame, column: String,
-                      probabilities: Array[Double], relErr: Double = 0.01): Array[Double] =
-    df.stat.approxQuantile(column, probabilities, relErr)
 
   /** Bounded k-minimum-values buffer: a custom typed Aggregator whose
     * partial state is AT MOST k distinct hash values — the production

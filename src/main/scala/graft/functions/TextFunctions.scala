@@ -152,15 +152,12 @@ object TextFunctions {
     * marker lines (javascript / `{` / lorem ipsum) are appended on fixed
     * doc_id residues. Pure array/string expressions — the DuckDB oracle
     * reproduces the assembly byte-for-byte, and at corpus scale this is
-    * a narrow map stage like every other text operator here. */
-  def pageText(docId: Column, text: Column): Column =
-    pageTextOf(docId, tokens(text))
-
-  /** [[pageText]] over an already-tokenized array column — the hot-path
-    * form: the line builder slices `w` INSIDE a transform() lambda, so a
-    * live `tokens(text)` there re-runs the regexp once per line
-    * (the bigramPairs O(len²) hazard); callers should tokenize into a
-    * materialized projection first. */
+    * a narrow map stage like every other text operator here.
+    *
+    * `w` is the already-tokenized array column: the line builder slices
+    * it INSIDE a transform() lambda, so a live `tokens(text)` there
+    * re-runs the regexp once per line (the [[bigramPairsOf]] O(len²)
+    * hazard); callers tokenize into a materialized projection first. */
   def pageTextOf(docId: Column, w: Column): Column = {
     val nLines = greatest(ceil(size(w).cast("double") / lit(12.0)), lit(1L))
     val lines = transform(sequence(lit(0L), nLines - lit(1L)), i => {
@@ -318,22 +315,19 @@ object TextFunctions {
 
   // ---- Bigram-LM quality scoring (stupid backoff) ----------------------
 
-  /** Adjacent-token bigrams of a text column as array<struct<a,b>> —
-    * the melt both LM training and scoring explode. Guarded for short
-    * texts: `sequence(2, 1)` would generate a DESCENDING sequence in
-    * Spark, so < 2 tokens returns an empty array instead. Pure map
-    * work, same shape as [[bpePairCounts]]'s pair explode.
+  /** Adjacent-token bigrams of a tokenized array column as
+    * array<struct<a,b>> — the melt both LM training and scoring explode.
+    * Guarded for short texts: `sequence(2, 1)` would generate a
+    * DESCENDING sequence in Spark, so < 2 tokens returns an empty array
+    * instead. Pure map work, same shape as [[bpePairCounts]]'s pair
+    * explode.
     *
-    * Callers on a hot path should tokenize into a materialized column
-    * first and use [[bigramPairsOf]]: referencing `tokens(text)` inside
-    * the transform lambda re-evaluates the regexp per array element
-    * (O(len²) regex work per document — measured 2× on the t26/t27
-    * scoring melt). A separate projection keeps the extraction once per
-    * row: CollapseProject declines to re-inline a non-cheap expression
-    * referenced more than once. */
-  def bigramPairs(text: Column): Column = bigramPairsOf(tokens(text))
-
-  /** [[bigramPairs]] over an already-tokenized array column. */
+    * Callers tokenize into a materialized column first: referencing
+    * `tokens(text)` inside the transform lambda re-evaluates the regexp
+    * per array element (O(len²) regex work per document — measured 2×
+    * on the t26/t27 scoring melt). A separate projection keeps the
+    * extraction once per row: CollapseProject declines to re-inline a
+    * non-cheap expression referenced more than once. */
   def bigramPairsOf(t: Column): Column =
     when(size(t) >= 2,
       transform(sequence(lit(2), size(t)),
@@ -377,7 +371,7 @@ object TextFunctions {
     * streaming twin's pinned frame) maintains a single table; the total
     * token count re-derives from the uni rows, a vocab-sized aggregate. */
   def bigramModel(train: DataFrame, textCol: String): DataFrame = {
-    // tokenize ONCE into a materialized projection (see bigramPairs)
+    // tokenize ONCE into a materialized projection (see bigramPairsOf)
     val toks = train.select(tokens(col(textCol)).as("__t"))
     val uni = toks.select(explode(col("__t")).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("__cu"))
@@ -457,7 +451,7 @@ object TextFunctions {
   def repetitionSignals(pages: DataFrame, idCol: String,
                         pageCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // tokenize/split ONCE into a materialized projection (bigramPairs
+    // tokenize/split ONCE into a materialized projection (bigramPairsOf
     // hazard: lambdas below must not re-run the regexp per element)
     val toks = pages.select(col(idCol), tokens(col(pageCol)).as("__t"),
       split(col(pageCol), "\n").as("__lines"))
@@ -582,7 +576,7 @@ object TextFunctions {
     * of anything aggregated from this melt. */
   def hashedFeatureRows(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame = {
-    // tokenize ONCE into a materialized projection (see bigramPairs)
+    // tokenize ONCE into a materialized projection (see bigramPairsOf)
     val toks = docs.select(col(idCol), tokens(col(textCol)).as("__t"))
     val uni = toks.select(col(idCol), explode(col("__t")).as("__f"))
     val bi = toks
@@ -845,11 +839,9 @@ object TextFunctions {
     * monotone fixed-point transcription of the standard inverse-CDF
     * Gumbel draw in base-2 units: Gumbel-shaped (right-heavy, support
     * here [−5·S, 20·S]), integer-exact, replayable in any engine.
-    * Emitted scaled by S. */
-  def gumbelFixed(id: Column, salt: String): Column =
-    gumbelFromR(gumbelR(id, salt))
-
-  /** The uniform draw feeding [[gumbelFixed]]: r ∈ [1, 2^32−1] from 8
+    * Emitted scaled by S: `gumbelFromR(gumbelR(id, salt))`.
+    *
+    * The uniform draw: r ∈ [1, 2^32−1] from 8
     * md5 hex chars of (id ‖ salt), so u = r/2^32 ∈ (0, 1). Split out so
     * a caller can MATERIALIZE the draw (checkpoint a column) before the
     * multi-reference log2Fixed arithmetic — [[gumbelFromR]]'s ~8
@@ -871,7 +863,7 @@ object TextFunctions {
   /** DSIR with the paper's Gumbel perturbation (Xie et al. 2023 §3 —
     * sampling WITHOUT replacement from the importance distribution via
     * the Gumbel-top-k trick), determinized: the noise is the seeded
-    * hash-derived [[gumbelFixed]] draw, so the selection is a real
+    * hash-derived [[gumbelR]] / [[gumbelFromR]] draw, so the selection is a real
     * random-shaped resample yet bit-reproducible and oracle-checkable.
     * Perturbed key = weight·S + g (both in base-2 units at scale S);
     * top-k + id tie-break ride the same no-global-sort rank refinement
@@ -1017,62 +1009,6 @@ object TextFunctions {
       }
     }
     (merges.toSeq, cur)
-  }
-
-  // ---- Tokenizer artifact persistence ----------------------------------
-
-  /** A trained merge list as versioned table rows — the tokenizer
-    * artifact persisted like every other standing index (payloadIndex /
-    * phashIndex): (tokenizerId, rank, a, b, cnt, version). One TRAIN RUN
-    * = one version over the FULL list; a retrain appends the complete
-    * new list under a higher version and [[bpeLoadMerges]] serves the
-    * latest run whole. (Rank-level latestWins would be wrong here: a
-    * shorter retrain would inherit the previous run's stale tail ranks.) */
-  def bpeMergeRows(spark: org.apache.spark.sql.SparkSession,
-                   merges: Seq[(String, String, Long)], tokenizerId: String,
-                   version: Long): DataFrame = {
-    require(version > 0, "artifact versions are positive")
-    import spark.implicits._
-    merges.zipWithIndex.map { case ((a, b, cnt), i) =>
-      (tokenizerId, i.toLong, a, b, cnt, version)
-    }.toDF("tokenizerId", "rank", "a", "b", "cnt", "version")
-  }
-
-  /** Append a train run to the standing tokenizer table (parquet,
-    * append-only — the payloadIndex ingest discipline). */
-  def bpeSaveMerges(spark: org.apache.spark.sql.SparkSession, path: String,
-                    merges: Seq[(String, String, Long)], tokenizerId: String,
-                    version: Long): Unit =
-    bpeMergeRows(spark, merges, tokenizerId, version)
-      .coalesce(1) // vocab-sized artifact: one file per run
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(path)
-
-  /** Load the CURRENT tokenizer from the standing table: the highest
-    * positive version's complete run, rank-ordered — ready for
-    * [[bpeEncode]]. The collect is vocab-bounded (the merge list is the
-    * model, never corpus-sized). Throws on an unknown tokenizerId, the
-    * same loud failure as a missing index. */
-  def bpeLoadMerges(spark: org.apache.spark.sql.SparkSession, path: String,
-                    tokenizerId: String): Seq[(String, String)] = {
-    val t = spark.read.parquet(path)
-      .filter(col("tokenizerId") === tokenizerId && col("version") > 0)
-    val head = t.agg(max(col("version")).as("v")).collect()(0)
-    require(!head.isNullAt(0), s"no tokenizer '$tokenizerId' at $path")
-    // distinct: a RETRIED save of the same run appends byte-identical
-    // rows (the r9 idempotent-replay discipline) — they must collapse,
-    // not double the merge list
-    val rows = t.filter(col("version") === head.getLong(0)).distinct()
-      .orderBy(col("rank")).collect()
-    // distinct only collapses byte-identical replays; a DIFFERENT list
-    // re-saved under the SAME version (a violated one-run-one-version
-    // contract) would interleave two runs here — ranks must read exactly
-    // 0..n-1 or the artifact is corrupt and must fail loudly
-    val ranks = rows.map(_.getAs[Long]("rank"))
-    require(ranks.sameElements(rows.indices.map(_.toLong)),
-      s"tokenizer '$tokenizerId' version ${head.getLong(0)}: corrupt run — " +
-        s"ranks must be exactly 0..${rows.length - 1} (duplicate or gap: " +
-        s"two different lists saved under one version?)")
-    rows.map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
   }
 
   /** BM25-shaped sparse top-k retrieval: for each query doc, the k

@@ -2,43 +2,20 @@ package graft.model
 
 import org.apache.spark.sql.types.StructType
 
-/** Core data model of the engine: the four ADFS state tables as case
-  * classes, the version/tombstone algebra, and datanode id packing.
+/** Core data model of the engine: the file row as a case class, the
+  * testdata schemas, the version/tombstone algebra, and datanode id
+  * packing.
   *
-  * Schemas mirror the reference's annotated row classes:
-  *  - file:     adfs-hdfs A/file/File.java:30-58
-  *  - block:    A/block/Block.java:30-44
-  *  - datanode: A/datanode/Datanode.java:30-57
-  *  - lease:    A/lease/Lease.java:12-18
-  * (paths per SURVEY.md aliases). All integral columns are Long here —
-  * uniform 64-bit avoids cross-engine type drift in the differential
-  * oracle while preserving semantics.
+  * The file row mirrors the reference's annotated row class (adfs-hdfs
+  * A/file/File.java:30-58, path per SURVEY.md aliases). All integral
+  * columns are Long here — uniform 64-bit avoids cross-engine type drift
+  * in the differential oracle while preserving semantics.
   */
 final case class FileRow(
     id: Long, parentId: Long, name: String, length: Long,
     blockSize: Long, replication: Long, atime: Long, mtime: Long,
     owner: Long, leaseHolder: Option[String], leaseRecoveryTime: Long,
-    version: Long) {
-  /** length == -1 marks a directory (File.java:144-146). */
-  def isDir: Boolean = length == -1L
-  /** non-null leaseHolder marks a file under construction (File.java:148-150). */
-  def isUnderConstruction: Boolean = leaseHolder.isDefined
-}
-
-final case class BlockRow(
-    id: Long, datanodeId: Long, length: Long, generationStamp: Long,
-    fileId: Long, fileIndex: Long, version: Long) {
-  /** length == -1 marks a replica still being written. */
-  def isUnderConstruction: Boolean = length == -1L
-}
-
-final case class DatanodeRow(
-    id: Long, name: String, storageId: String, ipcPort: Long,
-    infoPort: Long, capacity: Long, dfsUsed: Long, remaining: Long,
-    lastUpdated: Long, xceiverCount: Long, location: String,
-    adminState: String, version: Long)
-
-final case class LeaseRow(holder: String, time: Long, version: Long)
+    version: Long)
 
 /** Declared schemas of the ten testdata tables (TESTDATA.md; one parquet
   * file per table under an sfDir). Reads go through

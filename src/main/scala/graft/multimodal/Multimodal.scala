@@ -304,7 +304,7 @@ object Multimodal {
     *
     * `s`/`sLen` must be MATERIALIZED attributes (a prior projection),
     * not live expressions: the lambda references them per element, and
-    * an inlined decode would re-run 72× per row (the bigramPairs
+    * an inlined decode would re-run 72× per row (the bigramPairsOf
     * re-evaluation hazard — [[dhashSig]] is the safe assembly). */
   def byteSampleGridOf(s: Column, sLen: Column): Column =
     transform(sequence(lit(0), lit(71)), k =>
@@ -353,7 +353,7 @@ object Multimodal {
       "8 byte-bands pigeonhole hamming <= 7 only")
     // staged projections (decode → length → grid → hash): each stage's
     // consumers read a materialized attribute, never an inlined
-    // expression — the bigramPairs re-evaluation hazard (the grid stage
+    // expression — the bigramPairsOf re-evaluation hazard (the grid stage
     // alone measured 1.6× on this operator at sf0.1)
     val sig = dhashSig(media, idCol).withColumnRenamed("dh", "__dh")
     val bandArr = array((0 until 8).map(t =>

@@ -44,7 +44,7 @@ object DataOpsQueries {
   /** The derived multi-line page corpus for t15/t16/t24 — tokenized
     * into a materialized projection FIRST: pageTextOf slices the token
     * array inside a transform() lambda, and a live tokens(text) there
-    * re-runs the regexp once per line (the bigramPairs O(len²) hazard). */
+    * re-runs the regexp once per line (the bigramPairsOf O(len²) hazard). */
   private def pageCorpus(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("__t"))
@@ -157,7 +157,7 @@ object DataOpsQueries {
     s"CASE WHEN g[${r * 9 + c + 2}] > g[${r * 9 + c + 1}] THEN $pow ELSE 0 END"
   }.mkString(" + ")
 
-  /** Oracle twin of [[graft.functions.TextFunctions.pageText]] — the
+  /** Oracle twin of [[graft.functions.TextFunctions.pageTextOf]] — the
     * deterministic page assembly (12-word lines, bullet/ellipsis/period
     * decorations, boilerplate marker lines) reproduced byte-for-byte. */
   private val PageSql: String =
@@ -2017,8 +2017,6 @@ object DataOpsQueries {
       // a dangling link would make an empty stream and a 0-row answer
       val events = java.nio.file.Paths.get(s"$dir/events.parquet")
       require(java.nio.file.Files.exists(events), s"missing input $events")
-      val sinkName = "e4sink"
-      s.sql(s"DROP VIEW IF EXISTS $sinkName") // re-runnable in one session
       val ckpt = graft.core.Caching.scratchDir("e4-ckpt").toString
       // the file streaming source wants a DIRECTORY to monitor — stage one
       // holding a symlink to the events parquet
@@ -2031,13 +2029,8 @@ object DataOpsQueries {
         .groupBy(col("day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,4)")).cast("double").as("totalValue"))
-      val q = stream.writeStream.format("memory").queryName(sinkName)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sinkName).orderBy(col("day"), col("event_type"))
+      graft.streaming.Changefeed.drainToMemory(stream, "complete", ckpt)(
+        _.orderBy(col("day"), col("event_type")))
     },
       // identical to e2's oracle — the streamed aggregation must land on
       // exactly the batch result
@@ -5330,7 +5323,7 @@ object DataOpsQueries {
     // one shuffle on the group key + a per-group sort; no floating
     // interpolation, so the order statistics are engine-identical
     // integers (percentile_approx/quantile sketches trade exactness for
-    // a mergeable summary — Sketches.approxQuantiles is that path).
+    // a mergeable summary).
     // Rank ties are harmless: the value AT a rank is a property of the
     // sorted multiset, whatever order equal values take.
     GateEntry("t18_percentiles", { (s, dir) =>

@@ -425,28 +425,23 @@ object StateQueries {
         .select(col("opKey").as("key"), col("op"),
           col("opVersion").as("version"), col("payload"))
       feed.write.parquet(feedDir)
-      val sinkName = "r9sink"
-      s.sql(s"DROP VIEW IF EXISTS $sinkName")
       val opsStream = s.readStream.schema(feed.schema).parquet(feedDir)
         .as[graft.streaming.Changefeed.Op]
-      val q = graft.streaming.Changefeed.applyOps(s, opsStream).toDF()
-        .writeStream.format("memory").queryName(sinkName)
-        .outputMode("update")
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
       // the sink holds every state CHANGE across micro-batches; the final
       // state per key is the max-abs(version) row (state only moves toward
       // higher abs version — same tie-break as StateStore.latestWins)
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
         .orderBy(abs(col("version")).desc, col("version").desc)
-      s.table(sinkName)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && col("live"))
-        .select(col("key").as("opKey"), lit("UPSERT").as("op"),
-          col("version"), col("payload"))
-        .orderBy(col("opKey"))
+      graft.streaming.Changefeed.drainToMemory(
+          graft.streaming.Changefeed.applyOps(s, opsStream).toDF(), "update",
+          tmp.resolve("ckpt").toString) { changes =>
+        changes
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1 && col("live"))
+          .select(col("key").as("opKey"), lit("UPSERT").as("op"),
+            col("version"), col("payload"))
+          .orderBy(col("opKey"))
+      }
     },
       // the streamed replay must land on the identical result
       O(R9OracleSql)),

@@ -59,25 +59,6 @@ object Formats {
         classOf[SequenceFileOutputFormat[Text, Text]], conf)
   }
 
-  /** F1: SequenceFile.Sorter.sort analog (SequenceFile.java — the full
-    * external sort, not just the merge): one range-partitioned shuffle
-    * sort replaces the reference's spill-runs-then-heap-merge loop; any
-    * input size sorts in a single distributed pass.
-    *
-    * `descending` is the RawComparator hook (the Sorter takes an
-    * arbitrary comparator; reverse order is the common custom one) and
-    * the sort is TYPED: the file's own key class decides the order, so a
-    * LongWritable file sorts numerically where Text sorts byte-wise —
-    * exactly what the per-class RawComparators encode. */
-  def sortSequenceFile(spark: SparkSession, inPath: String, outPath: String,
-                       compression: String = "none",
-                       descending: Boolean = false): Unit = {
-    val in = readSequenceFileTyped(spark, inPath)
-    val keyOrd = if (descending) col(in.columns(0)).desc else col(in.columns(0)).asc
-    writeSequenceFileTyped(in.orderBy(keyOrd), outPath,
-      compression = compression)
-  }
-
   // ---- F1 generality: beyond Text,Text --------------------------------
 
   import org.apache.hadoop.fs.Path
@@ -140,55 +121,6 @@ object Formats {
       StructField("value", sparkTypeFor(vc)))))
   }
 
-  private def writableFor(dt: org.apache.spark.sql.types.DataType)
-      : (Class[_ <: Writable], Any => Writable) = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => (classOf[Text], a => new Text(String.valueOf(a)))
-      case LongType => (classOf[LongWritable],
-        a => new LongWritable(a.asInstanceOf[Long]))
-      case IntegerType => (classOf[IntWritable],
-        a => new IntWritable(a.asInstanceOf[Int]))
-      case DoubleType => (classOf[DoubleWritable],
-        a => new DoubleWritable(a.asInstanceOf[Double]))
-      case BinaryType => (classOf[BytesWritable],
-        a => new BytesWritable(a.asInstanceOf[Array[Byte]]))
-      case other => throw new IllegalArgumentException(
-        s"no Writable mapping for column type $other")
-    }
-  }
-
-  /** F1 writer for arbitrary Writable pairs: the DataFrame column types
-    * pick the key/value classes (string → Text, long → LongWritable,
-    * binary → BytesWritable, int/double likewise). Compression modes as
-    * in writeSequenceFile. */
-  def writeSequenceFileTyped(df: DataFrame, path: String,
-                             compression: String = "none"): Unit = {
-    import org.apache.hadoop.io.compress.DefaultCodec
-    import org.apache.hadoop.mapred.{JobConf, SequenceFileOutputFormat}
-    val cols = df.schema.fields
-    require(cols.length == 2, s"sequence file needs (key,value), got ${cols.length} cols")
-    require(SeqCompressionModes.contains(compression),
-      s"compression must be one of ${SeqCompressionModes.mkString("/")}, got $compression")
-    val (kClass, kConv) = writableFor(cols(0).dataType)
-    val (vClass, vConv) = writableFor(cols(1).dataType)
-    val conf = new JobConf(df.sparkSession.sparkContext.hadoopConfiguration)
-    compression match {
-      case "none" =>
-        org.apache.hadoop.mapred.FileOutputFormat.setCompressOutput(conf, false)
-      case mode =>
-        org.apache.hadoop.mapred.FileOutputFormat.setCompressOutput(conf, true)
-        org.apache.hadoop.mapred.FileOutputFormat
-          .setOutputCompressorClass(conf, classOf[DefaultCodec])
-        SequenceFileOutputFormat.setOutputCompressionType(conf,
-          org.apache.hadoop.io.SequenceFile.CompressionType
-            .valueOf(mode.toUpperCase))
-    }
-    df.rdd.map(r => (kConv(r.get(0)), vConv(r.get(1))))
-      .saveAsHadoopFile(path, kClass, vClass,
-        classOf[SequenceFileOutputFormat[Writable, Writable]], conf)
-  }
-
   // ---- F2 interop: REAL MapFile directories ---------------------------
 
   /** F2 interop (MapFile.java:420-462): read an actual on-disk MapFile
@@ -198,13 +130,6 @@ object Formats {
     * remains the native write path. */
   def readMapFileDir(spark: SparkSession, dir: String): DataFrame =
     readSequenceFileTyped(spark, new Path(dir, "data").toString)
-
-  /** The MapFile index SequenceFile as (key, byte offset) — MapFile
-    * readers binary-search it; at Spark level it doubles as a row-count
-    * cross-check and a manual split planner. */
-  def readMapFileIndex(spark: SparkSession, dir: String): DataFrame =
-    readSequenceFileTyped(spark, new Path(dir, "index").toString)
-      .withColumnRenamed("value", "offset")
 
   /** MapFile.Reader.get over a real MapFile dir: equality filter over the
     * data file (the scan prunes via pushed predicates the way the index
@@ -307,25 +232,6 @@ object Formats {
       .write.mode(SaveMode.Overwrite)
       .option("compression", codec)
       .parquet(path)
-
-  /** F2 read side (MapFile.Reader.get, C/org/apache/hadoop/io/
-    * MapFile.java:420-437): keyed point lookup over a writeSortedKeyed
-    * table. The parquet row-group min/max stats ARE the MapFile key
-    * index: the pushed equality predicate skips every row group whose
-    * key range excludes the probe, reading only the group the index
-    * points at — the same block-skip MapFile.Reader does with its
-    * in-memory index. */
-  def pointLookup(spark: SparkSession, path: String, keyCol: String,
-                  key: Any): DataFrame =
-    spark.read.parquet(path).filter(col(keyCol) === lit(key))
-
-  /** F2 getClosest (MapFile.java:439-462): the entry with the smallest
-    * key at-or-after the probe — a pushed range predicate (row-group
-    * skip below the probe) + top-1, never a full scan. */
-  def closestLookup(spark: SparkSession, path: String, keyCol: String,
-                    key: Any): DataFrame =
-    spark.read.parquet(path).filter(col(keyCol) >= lit(key))
-      .orderBy(col(keyCol)).limit(1)
 
   // ---- F3 interop: REAL binary TFiles ---------------------------------
 
@@ -684,19 +590,6 @@ object Formats {
           lit("</USER_NAME>\n<GROUP_NAME></GROUP_NAME>\n" +
             "<PERMISSION_STRING></PERMISSION_STRING>\n</PERMISSIONS>\n</INODE>"))
           .as("xml"))
-  }
-
-  /** F11: offlineImageViewer analog — export the whole live namespace
-    * (id, path, attrs) as json or csv. */
-  def exportNamespace(file: DataFrame, path: String, format: String = "json"): Unit = {
-    val ns = graft.state.StateManager.materializePaths(file)
-      .select("id", "path", "length", "blockSize", "replication",
-        "atime", "mtime", "owner", "version")
-    format match {
-      case "json" => ns.write.mode(SaveMode.Overwrite).json(path)
-      case "csv"  => ns.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-      case other  => ns.write.mode(SaveMode.Overwrite).format(other).save(path)
-    }
   }
 }
 

@@ -1313,14 +1313,6 @@ object Mutations {
     * replica counts — nothing global. Output rows: (writeOp
     * finalize|recover|nnlease|lease, tbl file|cmd|lease, id, length,
     * leaseHolder, leaseRecoveryTime, blockId, primaryNodeId, version). */
-  /** Schema of [[releaseLeases]] output rows — for callers that need an
-    * empty write-set frame without paying the release job graph. */
-  val ReleaseWriteSetSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "writeOp STRING, tbl STRING, id BIGINT, length BIGINT, " +
-      "leaseHolder STRING, leaseRecoveryTime BIGINT, blockId BIGINT, " +
-      "primaryNodeId BIGINT, version BIGINT")
-
   def releaseLeases(file: DataFrame, block: DataFrame, datanode: DataFrame,
                     holders: DataFrame, nowMs: Long): DataFrame = {
     val hs = holders.select(col("holder").as("__h")).distinct()

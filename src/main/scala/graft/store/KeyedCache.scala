@@ -50,7 +50,6 @@ final class KeyedCache(df: DataFrame, keyCol: String, maxEntries: Int = 100000) 
 
   /** Write-through invalidation: drop the touched keys. */
   def invalidate(keys: Any*): Unit = keys.foreach(cache.remove)
-  def invalidateAll(): Unit = cache.clear()
 
   def size: Int = cache.size()
 

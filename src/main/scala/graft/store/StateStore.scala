@@ -24,14 +24,11 @@ object Comparator extends Enumeration {
 }
 
 /** TDHS post-filters — applied after the index scan
-  * (TDHSCommon.java:66-79): EQ/GE/LE/GT/LT/NOT + isNull from the DSL. */
+  * (TDHSCommon.java:66-79): the NOT, GT and isNull flags the p7 gate
+  * entry composes. */
 sealed trait Post { def toColumn: Column }
-final case class PostEq(c: String, v: Any) extends Post { def toColumn: Column = col(c) === lit(v) }
 final case class PostNot(c: String, v: Any) extends Post { def toColumn: Column = col(c) =!= lit(v) }
-final case class PostGe(c: String, v: Any) extends Post { def toColumn: Column = col(c) >= lit(v) }
-final case class PostLe(c: String, v: Any) extends Post { def toColumn: Column = col(c) <= lit(v) }
 final case class PostGt(c: String, v: Any) extends Post { def toColumn: Column = col(c) > lit(v) }
-final case class PostLt(c: String, v: Any) extends Post { def toColumn: Column = col(c) < lit(v) }
 final case class PostIsNull(c: String) extends Post { def toColumn: Column = col(c).isNull }
 
 final case class IndexDef(name: String, cols: Seq[String], unique: Boolean = false)
@@ -55,9 +52,9 @@ object StateStore {
 
   /** The predicate a `find` compiles to: the selected comparator applied
     * to every supplied leading key column of the index. Shared by find and
-    * the TDHS DSL's update/delete so all three honor the comparator the
-    * same way (the reference builds identical WHERE clauses for
-    * SELECT/UPDATE/DELETE — DatabaseExecutorForMysqlClient.java:83-208). */
+    * updateLimited so both honor the comparator the same way (the
+    * reference builds identical WHERE clauses for SELECT/UPDATE/DELETE —
+    * DatabaseExecutorForMysqlClient.java:83-208). */
   def indexPredicate(index: IndexDef, keys: Seq[Any],
                      cmp: Comparator.Value): Column = {
     require(keys.nonEmpty && (cmp == Comparator.IN || keys.length <= index.cols.length),

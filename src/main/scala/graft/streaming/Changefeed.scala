@@ -5,18 +5,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Streaming/incremental operators (SURVEY §2.6, §3.3): the op-queue
-  * changefeed with idempotent latest-wins apply, heartbeat windowed
-  * rates, the block-report reconciliation pipeline and the lease/
-  * liveness monitors — Structured Streaming throughout (no DStreams).
+  * changefeed with idempotent latest-wins apply, the heartbeat command
+  * dequeue and the stream twins of the gated batch operators —
+  * Structured Streaming throughout (no DStreams).
   *
   * Scale notes: the changefeed state is partitioned by key
   * (flatMapGroupsWithState shuffles once on the grouping key, mirroring
   * the reference's per-key operation queue ordering,
-  * A/distributed/DistributedOperationQueue.java:33-110); watermarks bound
-  * state for the windowed aggregations; the report pipeline joins each
-  * micro-batch against the stored table, so per-trigger cost is
-  * O(report), not O(table) — the streaming analog of the reference's
-  * per-datanode block-list cache (A/state/StateManager.java:774-785).
+  * A/distributed/DistributedOperationQueue.java:33-110); the foreachBatch
+  * twins join each micro-batch against a pinned standing frame, so
+  * per-trigger cost is O(batch), not O(table).
   */
 object Changefeed {
 
@@ -47,32 +45,24 @@ object Changefeed {
         })
   }
 
-  /** Heartbeat stream → per-node windowed load/capacity rates with a
-    * watermark bounding state (FIXTURES §2 heartbeat stream shape:
-    * datanodeId, time, capacity, dfsUsed, remaining, xceiverCount). */
-  def heartbeatRates(hb: DataFrame, windowLen: String = "5 minutes",
-                     watermark: String = "10 minutes"): DataFrame =
-    hb.withWatermark("time", watermark)
-      .groupBy(window(col("time"), windowLen), col("datanodeId"))
-      .agg(count(lit(1)).as("beats"),
-        max(col("xceiverCount")).as("peakLoad"),
-        last(col("remaining")).as("remaining"))
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong()
 
-  /** §3.3 flagship: block-report stream reconciled against the stored
-    * replica table each micro-batch via the N5 full-outer classifier;
-    * `sink` receives (batchId, actions-DataFrame). foreachBatch because a
-    * full-outer stream-static join is not streamable — per-batch cost is
-    * O(report). */
-  def blockReportPipeline(stored: DataFrame, reports: DataFrame,
-                          sink: (Long, DataFrame) => Unit): StreamingQuery =
-    reports.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          sink(id, graft.analytics.Dataflows.reconcileReports(stored, batch))
-      }
+  /** Drain `stream` once (AvailableNow) into a memory sink and return
+    * `read` of the sink's rows. The sink is named per call and its view
+    * is dropped once `read`'s frame is analysed, so two calls never
+    * share a sink and the session catalog keeps no view behind. */
+  def drainToMemory(stream: DataFrame, outputMode: String, checkpoint: String)
+                   (read: DataFrame => DataFrame): DataFrame = {
+    val s = stream.sparkSession
+    val sinkName = s"graft_sink_${memorySinks.incrementAndGet()}"
+    val query = stream.writeStream.format("memory").queryName(sinkName)
+      .outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
       .start()
+    try { query.awaitTermination(); read(s.table(sinkName)) }
+    finally s.catalog.dropTempView(sinkName)
+  }
 
   /** N9 command dequeue (handleHeartbeat, FSNamesystem.java:1801-1935):
     * each heartbeat micro-batch picks up the pending replication /
@@ -99,15 +89,6 @@ object Changefeed {
         }
       }
       .start()
-
-  /** Streaming exact dedup for ingest pipelines: drop re-deliveries of
-    * the same document id within the watermark horizon — the streaming
-    * twin of Dedup.exact (state is bounded by the watermark, so this
-    * scales to unbounded ingest where a static distinct cannot). */
-  def streamingDedup(docs: DataFrame, idCol: String, timeCol: String,
-                     watermark: String = "10 minutes"): DataFrame =
-    docs.withWatermark(timeCol, watermark)
-      .dropDuplicatesWithinWatermark(idCol)
 
   /** Start a streaming query over `stream` that hands `sink` each
     * micro-batch's `classify(pinned, batch)`, where `pinned` is the
@@ -281,25 +262,14 @@ object Changefeed {
   }
 
   /** Streaming retrieval serve: the streaming twin of
-    * [[graft.functions.TextFunctions.bm25TopK]]. The standing corpus's
-    * elided posting index ([[graft.functions.TextFunctions.bm25Index]])
-    * is pinned once — in production the maintained inverted index —
-    * and each micro-batch of arriving query docs pays only its own
-    * term melt + the posting join + a batch-bounded rank window:
-    * O(batch × matched postings) per trigger, no streaming state.
-    * Per-query top-k is batch-independent (each query's ranking reads
-    * only its own candidate rows), so the streamed union lands on the
-    * batch operator verbatim (the t39_stream_parity gate). */
-  def streamingBm25Retrieve(queries: DataFrame, corpus: DataFrame,
-                            idCol: String, textCol: String, k: Int = 5,
-                            maxDfPpm: Long = 500000L,
-                            sink: (DataFrame, Long) => Unit): StreamingQuery =
-    streamingBm25ServeIndex(queries,
-      graft.functions.TextFunctions.bm25Index(corpus, idCol, textCol, maxDfPpm),
-      idCol, textCol, k, sink)
-
-  /** [[streamingBm25Retrieve]] against a CALLER-PROVIDED index frame —
-    * the maintained-index serve split: production pins the index
+    * [[graft.functions.TextFunctions.bm25TopK]] against a CALLER-PROVIDED
+    * elided posting index, pinned once. Each micro-batch of arriving
+    * query docs pays only its own term melt + the posting join + a
+    * batch-bounded rank window: O(batch × matched postings) per trigger,
+    * no streaming state. Per-query top-k is batch-independent, so the
+    * streamed union lands on the batch operator verbatim.
+    *
+    * The maintained-index serve split: production pins the index
     * derived from the posting store
     * ([[graft.functions.TextFunctions.bm25IndexAppend]] after the last
     * ingest batch), never a from-scratch build per serve session. The
@@ -351,10 +321,9 @@ object Changefeed {
     * an existing target), silently losing the batch — the exact loss
     * the staging exists to prevent. With the guard, replay-after-
     * commit skips the append and the committed file stands. The
-    * did-sort also keeps the appended file's row groups did-narrow,
-    * preserving the keyPrune row-group pruning the
-    * [[graft.core.Scale.writePostingStore]] layout promises as
-    * triggers accumulate (ADVICE r18's other half). Assumes storeDir
+    * did-sort also keeps the appended file's row groups did-narrow, so
+    * bm25PostingsDelta's keyPrune'd id probe keeps pruning row groups
+    * as triggers accumulate (ADVICE r18's other half). Assumes storeDir
     * and its parent live on a rename-capable filesystem — the standard
     * Spark-on-HDFS commit assumption this helper makes explicit.
     *
@@ -471,9 +440,6 @@ object Changefeed {
       }
       .start()
 
-  /** One arriving doc of the budgeted-mix stream (id, source group,
-    * token count, plus the deterministic shuffle key/shard assigned
-    * up front by [[graft.functions.Shuffles.hashKey]]). */
   /** One event for the streaming sessionizer (ts in epoch nanos). */
   final case class SessEvent(user_id: Long, ts: Long)
 
@@ -530,44 +496,6 @@ object Changefeed {
       graft.functions.Events.probeJoin(batch, pinned, key, ts, start, end, bucketNs)
     }
   }
-
-  /** Gap sessionization through Spark's NATIVE `session_window`
-    * streaming aggregate: per user, dynamic windows that extend while
-    * events keep arriving within `gap` and close when the watermark
-    * passes the gap — the engine merges overlapping session fragments
-    * across micro-batches itself (no custom state function). Append
-    * mode emits each session ONCE, when it closes: the complement of
-    * [[streamingSessionize]], which emits running per-user counters on
-    * every update. Input: (user_id, ts TIMESTAMP). Output: user_id,
-    * session start/end, nEvents. */
-  def sessionWindows(events: DataFrame, gap: String = "30 minutes",
-                     watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap))
-      .agg(count(lit(1)).as("nEvents"))
-      .select(col("user_id"),
-        col("session_window.start").as("sessStart"),
-        col("session_window.end").as("sessEnd"),
-        col("nEvents"))
-
-  /** Stream-STREAM attribution join — Spark's native watermarked
-    * stream-stream inner join with a time-range condition (the
-    * impression→click attribution shape): each click joins the same
-    * user's impressions at most `window` older. Both sides carry
-    * watermarks, so the state store retains only impressions younger
-    * than watermark + window and clicks younger than watermark — the
-    * engine prunes join state itself; nothing grows with the stream.
-    * This is the one join family the foreachBatch twins can't express:
-    * BOTH sides unbounded, neither pinnable. Inputs:
-    * (user_id, impTime, imp_id) and (c_user_id, clickTime, click_id). */
-  def streamStreamAttribution(impressions: DataFrame, clicks: DataFrame,
-                              window: String = "1 hour",
-                              watermark: String = "2 hours"): DataFrame =
-    impressions.withWatermark("impTime", watermark)
-      .join(clicks.withWatermark("clickTime", watermark),
-        expr(s"""user_id = c_user_id AND
-                |clickTime >= impTime AND
-                |clickTime <= impTime + INTERVAL $window""".stripMargin))
 
   /** Streaming distinct-cardinality via the mergeable KMV sketch: each
     * micro-batch aggregates its OWN bottom-k (the bounded typed
@@ -652,6 +580,9 @@ object Changefeed {
         })
   }
 
+  /** One arriving doc of the budgeted-mix stream (id, source group,
+    * token count, plus the deterministic shuffle key/shard assigned
+    * up front by [[graft.functions.Shuffles.hashKey]]). */
   final case class MixDoc(id: Long, src: String, tok: Long, hkey: Long, shard: Long)
 
   /** Admission decision for one arriving doc. */
@@ -747,284 +678,4 @@ object Changefeed {
         fe + (if (a.keep) 1L else 0L))
     }
   }
-
-  /** D2 fault model (A/distributed/editlogger/DistributedEditLogger.java):
-    * the reference's async edit appliers carry a pause gate
-    * (pauseApply/resumeApply :151-161 — apply() blocks on the flag :90),
-    * a latched failure flag (failToApply set on any error :102-105 while
-    * the queue KEEPS DRAINING), and per-invocation metrics (:94-113).
-    * This wraps a foreachBatch body with the same contract plus bounded
-    * retries: a batch that still fails after `maxRetries` attempts is
-    * QUARANTINED via `poison` (recorded, stream keeps moving) instead of
-    * killing the query — the streaming analog of the reference logging
-    * the bad invocation and latching failToApply. The ledger
-    * (batchId, attempts, outcome, elapsedMs) is the
-    * DistributedMetrics.timeVaryingRateInc analog. */
-  final case class ApplyOutcome(batchId: Long, attempts: Int,
-                                outcome: String, elapsedMs: Long)
-
-  final class RetryingApplier(
-      body: (DataFrame, Long) => Unit,
-      poison: (DataFrame, Long, Throwable) => Unit = (_, _, _) => (),
-      maxRetries: Int = 2) extends ((DataFrame, Long) => Unit) with Serializable {
-
-    private val paused = new java.util.concurrent.atomic.AtomicBoolean(false)
-    private val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    private val log = new java.util.concurrent.ConcurrentLinkedQueue[ApplyOutcome]()
-
-    /** pauseApply :151 — subsequent applies block until resume. */
-    def pause(): Unit = paused.set(true)
-    /** resumeApply :157. */
-    def resume(): Unit = { paused.synchronized { paused.set(false); paused.notifyAll() } }
-    /** failToApply :46 — latched true once any batch is quarantined. */
-    def failedToApply: Boolean = failed.get()
-    def ledger: Seq[ApplyOutcome] = { import scala.jdk.CollectionConverters._; log.asScala.toSeq }
-
-    def apply(batch: DataFrame, id: Long): Unit = {
-      paused.synchronized { while (paused.get()) paused.wait(100) }
-      val t0 = System.nanoTime()
-      var attempt = 0
-      var lastErr: Throwable = null
-      var done = false
-      while (!done && attempt <= maxRetries) {
-        attempt += 1
-        // retry only recoverable failures: fatal JVM errors must surface,
-        // and an interrupt (query.stop() mid-batch) must abort the batch
-        // with the thread's interrupt flag restored, not burn retries
-        try { body(batch, id); done = true }
-        catch {
-          case ie: InterruptedException =>
-            Thread.currentThread().interrupt(); throw ie
-          case scala.util.control.NonFatal(t) => lastErr = t
-        }
-      }
-      val ms = (System.nanoTime() - t0) / 1000000L
-      if (done) log.add(ApplyOutcome(id, attempt, "applied", ms))
-      else {
-        failed.set(true)
-        log.add(ApplyOutcome(id, attempt, "quarantined", ms))
-        poison(batch, id, lastErr)
-      }
-    }
-  }
-
-  /** Balancer iteration loop (Balancer.java main :1240-1330): each tick
-    * re-plans from the CURRENT datanode snapshot and hands `sink` the
-    * (batchId, imbalance row, move schedule). The caller dispatches the
-    * moves; the next tick plans against the updated report — the
-    * reference's while-loop convergence, one iteration per trigger. An
-    * already-balanced tick (bytesLeftToMove == 0, checked BEFORE pairing
-    * exactly like the reference's early exit) short-circuits to an empty
-    * schedule. */
-  def balancerMonitor(ticks: DataFrame, datanode: () => DataFrame,
-                      nowMs: () => Long, thresholdPct: Double,
-                      sink: (Long, DataFrame, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        val dn = datanode()
-        val now = nowMs()
-        // pin: the supplier reads a mutable snapshot — a lazy frame the
-        // sink consumes after dispatching moves would re-plan post-hoc
-        val imb = graft.analytics.Balancer
-          .imbalance(dn, now, thresholdPct).localCheckpoint()
-        val pairs =
-          if (imb.head().getAs[Long]("bytesLeftToMove") == 0L)
-            graft.analytics.Balancer.pairs(dn.limit(0), now, thresholdPct)
-          else graft.analytics.Balancer.pairs(dn, now, thresholdPct)
-        sink(id, imb, pairs)
-      }
-      .start()
-
-  /** S15+N17 LeaseMonitor, full chain: each tick finds the hard-expired
-    * leases AND produces the release write-set for their holders — the
-    * reference's checkLeases → internalReleaseLease composition
-    * (state/StateManager.java:893-914 driving FSNamesystem.java:931-960,
-    * 1506-1563). `sink` receives (batchId, expired-lease candidates,
-    * release write-set) and owns the commit (applyWriteSet) plus the
-    * lease deletion the reference performs after a successful release. */
-  def leaseRecoveryMonitor(ticks: DataFrame, lease: () => DataFrame,
-                           file: () => DataFrame, block: () => DataFrame,
-                           datanode: () => DataFrame, nowMs: () => Long,
-                           sink: (Long, DataFrame, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        val now = nowMs()
-        // pin the candidate scan: the suppliers read MUTABLE snapshots,
-        // so a lazy cands consumed by the sink AFTER it commits the
-        // write-set would re-evaluate against the post-commit tables
-        // (released holders vanish → the post-release lease deletion
-        // would never find them)
-        val cands = graft.state.StateManager
-          .leaseRecoveryCandidates(lease(), file(), now).localCheckpoint()
-        // an idle tick must not pay the full release job graph (file +
-        // block scans, rotation windows) to produce an empty write-set
-        val ws =
-          if (cands.isEmpty)
-            cands.sparkSession.createDataFrame(
-              cands.sparkSession.sparkContext.emptyRDD[Row],
-              graft.state.Mutations.ReleaseWriteSetSchema)
-          else graft.state.Mutations.releaseLeases(file(), block(), datanode(),
-            cands.select(col("holder")).distinct(), now)
-        sink(id, cands, ws)
-      }
-      .start()
-
-  /** N18 DecommissionedMonitor tick loop
-    * (FSNamesystem.decommissionedDatanodeCheck, :3483-3492, driving
-    * checkDecommissionStateInternal :3405-3417): each trigger re-runs the
-    * finish gate for every stored DECOMMISSION_INPROGRESS node against
-    * the CURRENT tables — [[graft.state.Mutations.setAdminState]] with an
-    * empty request batch is exactly that re-check — and hands `sink` the
-    * (batchId, write-set): `admin` rows flip fully-replicated nodes to
-    * DECOMMISSIONED, `status` rows carry the still-blocked nodes'
-    * decommissioningStatus counters. The caller owns the commit
-    * (applyWriteSet), the lease/balancer monitor convention — this closes
-    * the last batch-only lifecycle into a running monitor. */
-  def decommissionMonitor(ticks: DataFrame, datanode: () => DataFrame,
-                          block: () => DataFrame, file: () => DataFrame,
-                          sink: (Long, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val noReqs = batch.sparkSession.emptyDataFrame
-          .withColumn("nodeId", lit(null).cast("long"))
-          .withColumn("op", lit(null).cast("string"))
-        // pin: the suppliers read mutable snapshots — a lazy write-set the
-        // sink consumes after its own commit would re-gate post-commit
-        sink(id, graft.state.Mutations.setAdminState(
-          datanode(), block(), file(), noReqs).localCheckpoint())
-      }
-      .start()
-
-  /** Distribution-drift watchdog tick loop: the streaming face of
-    * [[graft.analytics.TableChecks.distributionDrift]]. The REFERENCE
-    * snapshot is pinned once (its histogram re-aggregates from the
-    * persisted frame, never a fresh corpus scan); each trigger
-    * re-histograms the CURRENT live table against it and hands `sink`
-    * the (batchId, per-bin report with tvd_ppm/drifted) — the nightly
-    * data-quality watchdog that catches a bad upstream delivery before
-    * training reads it, run as a monitor loop. The report
-    * rides distributionDrift's own internal checkpoint (≤ maxBins rows,
-    * snapshot-stable by the time the sink sees it; driver GC reclaims
-    * these bin-sized frames — the explicit-free discipline is for the
-    * corpus-sized copies the compaction monitor pins). */
-  def driftMonitor(ticks: DataFrame, reference: DataFrame,
-                   live: () => DataFrame, valueCol: String, binWidth: Long,
-                   maxBins: Int, thresholdPpm: Long,
-                   sink: (Long, DataFrame) => Unit): StreamingQuery =
-    withStandingFrame(reference, ticks, (report, id) => sink(id, report)) { (pinned, _) =>
-      graft.analytics.TableChecks.distributionDrift(
-        pinned, live(), valueCol, binWidth, maxBins, thresholdPpm)
-    }
-
-  /** D4 history-compaction maintenance loop: each trigger re-reads the
-    * CURRENT ops/version history and sync floor (the slowest syncer's
-    * acknowledged version — compacting above it would break that
-    * syncer's incremental replay) and hands `sink` the (batchId, floor,
-    * compacted history) from [[graft.store.StateStore.compactHistory]].
-    * The caller owns committing the compacted table back, the same
-    * caller-owns-the-commit convention as the other monitors —
-    * and must have STOPPED serving the previous tick's frame by the
-    * time its sink returns: the monitor frees that checkpoint when the
-    * next tick commits (one history copy pinned, never one per tick).
-    * Ticks whose floor has not advanced are skipped outright — a
-    * monotone floor purges nothing new, so an idle tick pays no corpus
-    * job. Laws on the compaction itself (snapshot/diff fidelity
-    * at-or-above the floor) are pinned in AlgebraLawsSpec; this loop is
-    * what keeps the r6 feed from growing without bound at 100 TB. */
-  def compactionMonitor(ticks: DataFrame, history: () => DataFrame,
-                        keyCols: Seq[String], floor: () => Long,
-                        sink: (Long, Long, DataFrame) => Unit): StreamingQuery = {
-    // the floor is monotone (the slowest syncer's ack): an unchanged
-    // floor purges nothing new, so an idle tick must not pay the full
-    // corpus shuffle + checkpoint to hand the sink an identical table
-    // (the leaseRecoveryMonitor idle-tick convention)
-    val lastFloor = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    // the previous tick's checkpoint stays pinned until the NEXT tick
-    // commits — then it is freed explicitly (the dupClusters loop
-    // convention; driver GC alone would accumulate a history copy per
-    // tick, the leak class Caching.free exists for)
-    val prevOut = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        val f = floor()
-        if (f > lastFloor.get()) {
-          lastFloor.set(f)
-          // pin: the supplier reads a mutable snapshot — a lazy compacted
-          // frame the sink consumes after swapping the table would
-          // re-compact its own output
-          val compacted = graft.store.StateStore.compactHistory(
-            history(), keyCols, f).localCheckpoint()
-          sink(id, f, compacted)
-          val prev = prevOut.getAndSet(compacted)
-          if (prev != null) graft.core.Caching.free(prev)
-        }
-      }
-      .start()
-  }
-
-  /** N14 SafeModeMonitor tick loop (SafeModeInfo.SafeModeMonitor
-    * :3684-3700 driving needEnter/canLeave :3560-3600): each trigger
-    * re-evaluates the safe-block ratio against the CURRENT block table —
-    * [[graft.analytics.Dataflows.safeModeStatus]] with the reference's
-    * TRUNCATED threshold — and hands `sink` the (batchId, one-row
-    * status) carrying the enter/leave decision in `inSafeMode`. The
-    * caller owns flipping the namesystem mode (the reference's
-    * leaveSafeMode happens outside the monitor too: the monitor only
-    * reports "threshold reached", :3694-3698), the same
-    * caller-owns-the-commit convention as the other four monitors. */
-  def safeModeMonitor(ticks: DataFrame, block: () => DataFrame,
-                      minReplication: Int, thresholdPct: Double,
-                      sink: (Long, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        // pin: the supplier reads a mutable snapshot — a lazy status the
-        // sink consumes after flipping the mode would re-count post-flip
-        sink(id, graft.analytics.Dataflows.safeModeStatus(
-          block(), minReplication, thresholdPct).localCheckpoint())
-      }
-      .start()
-
-  /** N10 PendingReplicationMonitor tick loop
-    * (PendingReplicationBlocks.java:173-207 driving FSNamesystem
-    * .processPendingReplications :2324-2334): each trigger scans the
-    * CURRENT pending table for timed-out requests and hands `sink` the
-    * (batchId, timed-out entries, survivors, requeue rows) — the caller
-    * owns committing the survivor table back and re-entering the requeue
-    * rows into the under-replication queue, mirroring the reference's
-    * iter.remove + neededReplications.add. Driven by any ticking stream
-    * (rate source in production, MemoryStream in tests). */
-  def pendingReplicationMonitor(ticks: DataFrame, pending: () => DataFrame,
-                                block: () => DataFrame, file: () => DataFrame,
-                                datanode: () => DataFrame, nowMs: () => Long,
-                                timeoutMs: Long = 5 * 60 * 1000L,
-                                sink: (Long, DataFrame, DataFrame, DataFrame) => Unit): StreamingQuery =
-    ticks.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (_: DataFrame, id: Long) =>
-        val now = nowMs()
-        // pin the scan: the suppliers read MUTABLE snapshots — a lazy
-        // timed-out frame the sink consumes AFTER committing the survivor
-        // table would re-evaluate against the post-commit state and see
-        // its own removals
-        val p = pending().localCheckpoint()
-        val timedOut = graft.analytics.Replication
-          .pendingTimedOut(p, now, timeoutMs).localCheckpoint()
-        val survivors = graft.analytics.Replication
-          .pendingSurvivors(p, now, timeoutMs)
-        // an idle tick (nothing timed out) must not pay the block-table
-        // requeue scan to learn there is nothing to requeue
-        val requeue =
-          if (timedOut.isEmpty)
-            graft.analytics.Replication.pendingRequeue(
-              timedOut, block().limit(0), file().limit(0), datanode().limit(0), now)
-          else graft.analytics.Replication.pendingRequeue(
-            timedOut, block(), file(), datanode(), now)
-        sink(id, timedOut, survivors, requeue)
-      }
-      .start()
 }

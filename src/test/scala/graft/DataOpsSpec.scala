@@ -83,45 +83,6 @@ class DataOpsSpec extends SparkSpec {
     assert(counts == Seq((1L, 8L), (2L, 4L)), s"got $counts")
   }
 
-  test("tokenizer artifact round-trip: train → save → fresh read → identical encode") {
-    import graft.functions.TextFunctions
-    def chars(w: String) = w.mkString(" ")
-    val corpus = Seq("low", "low", "lower", "lowest", "newest", "newest")
-      .map(w => Tuple1(chars(w))).toDF("syms")
-    val (merges, _) = TextFunctions.bpeTrain(corpus, "syms", k = 5)
-    assert(merges.nonEmpty)
-    val path = graft.core.Caching.scratchDir("bpe_artifact").toString + "/tok"
-    TextFunctions.bpeSaveMerges(spark, path, merges, "tok-a", version = 1L)
-    // a NEW session sees only the parquet artifact: load from disk and
-    // encode — must equal the in-session encode under the trained list
-    val loaded = TextFunctions.bpeLoadMerges(spark, path, "tok-a")
-    assert(loaded == merges.map(m => (m._1, m._2)))
-    val probe = Seq("lowest", "slower", "newly").map(w => Tuple1(chars(w)))
-      .toDF("syms")
-    val fresh = rows(TextFunctions.bpeEncode(probe, "syms", loaded)
-      .orderBy(col("syms")))
-    val inSession = rows(TextFunctions.bpeEncode(probe, "syms",
-      merges.map(m => (m._1, m._2))).orderBy(col("syms")))
-    assert(fresh == inSession)
-    // a SHORTER retrain appended under version 2 replaces the run whole:
-    // the loader must not inherit version 1's stale tail ranks
-    val retrain = merges.take(1)
-    TextFunctions.bpeSaveMerges(spark, path, retrain, "tok-a", version = 2L)
-    assert(TextFunctions.bpeLoadMerges(spark, path, "tok-a")
-      == retrain.map(m => (m._1, m._2)))
-    // a RETRIED save of the same run (idempotent replay) must not double
-    // the loaded merge list
-    TextFunctions.bpeSaveMerges(spark, path, retrain, "tok-a", version = 2L)
-    assert(TextFunctions.bpeLoadMerges(spark, path, "tok-a")
-      == retrain.map(m => (m._1, m._2)))
-    // ids are isolated; an unknown id fails loudly like a missing index
-    TextFunctions.bpeSaveMerges(spark, path, merges, "tok-b", version = 1L)
-    assert(TextFunctions.bpeLoadMerges(spark, path, "tok-b").size == merges.size)
-    intercept[IllegalArgumentException] {
-      TextFunctions.bpeLoadMerges(spark, path, "tok-c")
-    }
-  }
-
   test("sketch laws on seeded random data: CMS never undercounts, KMV lands close") {
     import graft.functions.Sketches
     val rnd = new scala.util.Random(11)
@@ -1712,7 +1673,7 @@ class DataOpsSpec extends SparkSpec {
   }
 
   test("dsirSelectGumbel: fixed-point Gumbel matches a reference transcription; pick = brute top-k") {
-    // reference transcription of gumbelFixed in plain Scala
+    // reference transcription of gumbelFromR(gumbelR(…)) in plain Scala
     def l2fx(x: Long): Long = {
       val b = 64 - java.lang.Long.numberOfLeadingZeros(x)
       (b - 1).toLong * 1048576L + (((x & ((1L << (b - 1)) - 1)) << 20) >> (b - 1))
@@ -1726,7 +1687,7 @@ class DataOpsSpec extends SparkSpec {
     }
     val ids = (1L to 64L).map(Tuple1(_)).toDF("doc_id")
     val spark = ids.select(col("doc_id"),
-      TextFunctions.gumbelFixed(col("doc_id"), "dsir0").as("g"))
+      TextFunctions.gumbelFromR(TextFunctions.gumbelR(col("doc_id"), "dsir0")).as("g"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (1L to 64L).foreach(i => assert(spark(i) == gRef(i, "dsir0"), s"id $i"))
     // Gumbel shape: right-heavy support around 0 (bounded by the
@@ -1777,7 +1738,7 @@ class DataOpsSpec extends SparkSpec {
   test("bigramPairs: short texts produce an empty melt, not a descending one") {
     val d = Seq((1L, "solo"), (2L, ""), (3L, "two words")).toDF("doc_id", "text")
     val out = rows(d.select(col("doc_id"),
-      size(TextFunctions.bigramPairs(col("text"))).as("n")).orderBy(col("doc_id")))
+      size(TextFunctions.bigramPairsOf(TextFunctions.tokens(col("text")))).as("n")).orderBy(col("doc_id")))
     assert(out == Seq(Seq(1L, 0), Seq(2L, 0), Seq(3L, 1)))
   }
 
@@ -1934,7 +1895,7 @@ class DataOpsSpec extends SparkSpec {
   test("pageText assembles deterministic decorated lines") {
     val text = (1 to 24).map(i => s"w$i").mkString(" ")
     val page = rows(Seq((2L, text)).toDF("doc_id", "text")
-      .select(TextFunctions.pageText(col("doc_id"), col("text"))))
+      .select(TextFunctions.pageTextOf(col("doc_id"), TextFunctions.tokens(col("text")))))
       .head.head.asInstanceOf[String]
     // doc_id 2, line 0: (2+0)%17=2 → bullet; 0%3=0 → terminal period
     // line 1: no bullet ((2+1)%17=3), no suffix (3%13≠5, 1%3≠0)
@@ -1945,7 +1906,7 @@ class DataOpsSpec extends SparkSpec {
 
   test("pageText appends boilerplate marker lines on the fixed residues") {
     val p = rows(Seq((31L * 41L, "alpha beta")).toDF("doc_id", "text")
-      .select(TextFunctions.pageText(col("doc_id"), col("text"))))
+      .select(TextFunctions.pageTextOf(col("doc_id"), TextFunctions.tokens(col("text")))))
       .head.head.asInstanceOf[String]
     assert(p.contains("enable javascript to continue"))
     assert(p.contains("config { options }"))

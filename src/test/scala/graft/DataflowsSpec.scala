@@ -50,6 +50,15 @@ class DataflowsSpec extends SparkSpec {
     assert(inSafe(b98))
     // an empty namespace: threshold 0 → OUT of safe mode
     assert(!inSafe(b99.filter(col("id") > 999L)))
+    // 4 blocks: threshold (int)(4 × .999) = 3, where rounding up would
+    // give 4 — 2 safe keeps the namenode in, exactly 3 lets it out
+    def status(b: DataFrame) = Dataflows.safeModeStatus(b, 2, 0.999)
+      .select(col("totalBlocks"), col("safeBlocks"), col("inSafeMode")).collect()
+      .map(_.toSeq).toSeq
+    val two = blks(Seq(1L -> Seq(1L, 2L), 2L -> Seq(1L, 2L), 3L -> Seq(1L), 4L -> Seq(1L)))
+    assert(status(two) == Seq(Seq(4L, 2L, true)))
+    val three = blks(Seq(1L -> Seq(1L, 2L), 2L -> Seq(1L, 2L), 3L -> Seq(1L, 3L), 4L -> Seq(1L)))
+    assert(status(three) == Seq(Seq(4L, 3L, false)))
   }
 
   test("N5: blockReport classification matrix") {

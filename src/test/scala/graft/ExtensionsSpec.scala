@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-
 import graft.functions.expr.FixedPointDot
 
-/** SQL-surface registration of the native expressions. (A fully fresh
-  * session with withExtensions can't be built here — getOrCreate reuses
-  * the suite JVM's session — so the spec registers through the same
-  * function-registry path the extension uses and smokes the injection.) */
+/** The native Catalyst expressions: FixedPointDot's rounding fast path
+  * and its evaluation through the SQL function registry. */
 class ExtensionsSpec extends SparkSpec {
-
-  test("GraftExtensions injection applies cleanly") {
-    new graft.core.GraftExtensions().apply(new SparkSessionExtensions)
-  }
 
   test("halfUpToLong fast path is bit-identical to the BigDecimal rounding") {
     import java.math.{BigDecimal => JBigDecimal, RoundingMode}

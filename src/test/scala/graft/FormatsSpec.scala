@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Sketches
 import graft.sources.Formats
-import graft.store.{IndexDef, Tdhs}
 
 class FormatsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,48 +39,29 @@ class FormatsSpec extends SparkSpec {
         assert(reader.isBlockCompressed == (mode == "block"), s"mode=$mode block flag")
       } finally reader.close()
     }
-    // Sorter.sort analog: unsorted file in, sorted (block-compressed) file out
-    Formats.writeSequenceFile(df.orderBy(col("value")), s"$base/unsorted")
-    Formats.sortSequenceFile(spark, s"$base/unsorted", s"$base/sorted",
-      compression = "block")
-    assert(rows(Formats.readSequenceFile(spark, s"$base/sorted")
-      .orderBy(col("key"))) == expected)
   }
 
-  test("F1 typed: LongWritable/BytesWritable pairs round-trip; numeric comparator sort") {
+  test("F1 typed: LongWritable/BytesWritable pairs read back as long/binary columns") {
     import org.apache.hadoop.fs.Path
-    import org.apache.hadoop.io.{LongWritable, SequenceFile}
-    val base = graft.core.Caching.scratchDir("seqtyped").toString
-    val df = Seq((20L, Array[Byte](1, 2)), (3L, Array[Byte](3)),
-      (100L, Array[Byte](4, 5, 6))).toDF("key", "value")
-    Formats.writeSequenceFileTyped(df, s"$base/t")
-    val back = Formats.readSequenceFileTyped(spark, s"$base/t")
+    import org.apache.hadoop.io.{BytesWritable, LongWritable, SequenceFile}
+    // written by the raw Hadoop writer: the reader takes the key/value
+    // classes from the file header, not from a Text assumption
+    val file = graft.core.Caching.scratchDir("seqtyped").resolve("part-00000").toString
+    val w = SequenceFile.createWriter(spark.sparkContext.hadoopConfiguration,
+      SequenceFile.Writer.file(new Path(file)),
+      SequenceFile.Writer.keyClass(classOf[LongWritable]),
+      SequenceFile.Writer.valueClass(classOf[BytesWritable]))
+    try Seq((20L, Array[Byte](1, 2)), (3L, Array[Byte](3)), (100L, Array[Byte](4, 5, 6)))
+      .foreach { case (k, v) => w.append(new LongWritable(k), new BytesWritable(v)) }
+    finally w.close()
+    val back = Formats.readSequenceFileTyped(spark, file)
     assert(back.schema.fields.map(_.dataType.typeName).toSeq == Seq("long", "binary"))
     val got = rows(back.orderBy(col("key")))
     assert(got.map(_.head) == Seq(3L, 20L, 100L)
       && got(2)(1).asInstanceOf[Array[Byte]].toSeq == Seq[Byte](4, 5, 6))
-
-    // the typed sort is the RawComparator behavior: LongWritable keys
-    // order NUMERICALLY on disk (Text order would give 100 < 20 < 3)
-    def diskKeys(dir: String): Seq[Long] = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = org.apache.hadoop.fs.FileSystem.getLocal(conf)
-      fs.globStatus(new Path(s"$dir/part-*")).map(_.getPath).sortBy(_.getName)
-        .flatMap { p =>
-          val r = new SequenceFile.Reader(conf, SequenceFile.Reader.file(p))
-          val k = new LongWritable; val v = new org.apache.hadoop.io.BytesWritable
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-          try { while (r.next(k, v)) buf += k.get } finally r.close()
-          buf
-        }.toSeq
-    }
-    Formats.sortSequenceFile(spark, s"$base/t", s"$base/asc")
-    assert(diskKeys(s"$base/asc") == Seq(3L, 20L, 100L))
-    Formats.sortSequenceFile(spark, s"$base/t", s"$base/desc", descending = true)
-    assert(diskKeys(s"$base/desc") == Seq(100L, 20L, 3L))
   }
 
-  test("F2 interop: a REAL MapFile directory reads back (data + index + get)") {
+  test("F2 interop: a REAL MapFile directory reads back (data + get)") {
     import org.apache.hadoop.fs.Path
     import org.apache.hadoop.io.{MapFile, Text}
     val conf = spark.sparkContext.hadoopConfiguration
@@ -94,10 +74,6 @@ class FormatsSpec extends SparkSpec {
     val back = Formats.readMapFileDir(spark, dir)
     assert(back.count() == 300)
     assert(rows(Formats.mapFileGet(spark, dir, "k0042")) == Seq(Seq("k0042", "v42")))
-    // default index interval 128 → ceil(300/128) index entries, offsets long
-    val idx = Formats.readMapFileIndex(spark, dir)
-    assert(idx.columns.toSeq == Seq("key", "offset"))
-    assert(idx.count() == 3 && idx.schema("offset").dataType.typeName == "long")
   }
 
   test("F2 interop: SetFile and BloomMapFile dirs read back; bloom miss skips the scan") {
@@ -256,27 +232,6 @@ class FormatsSpec extends SparkSpec {
     assert(rows(back.filter(col("k") === 42L)).head == Seq(42L, "v42"))
   }
 
-  test("F2 read path: point lookup skips row groups via the key stats index") {
-    val dir = graft.core.Caching.scratchDir("mapread").toString + "/kv"
-    val df = spark.range(100000).select(col("id").as("k"), (col("id") * 2L).as("v"))
-    Formats.writeSortedKeyed(df, "k", dir)
-    val out = Formats.pointLookup(spark, dir, "k", 73333L)
-    assert(rows(out) == Seq(Seq(73333L, 146666L)))
-    // the scan must have read ONE range partition's row group, not the
-    // table: the pushed key predicate + row-group min/max skip the rest
-    val planStr = out.queryExecution.executedPlan.toString
-    assert(planStr.contains("PushedFilters") && planStr.contains("EqualTo(k,73333)"),
-      s"key predicate must reach the parquet scan:\n$planStr")
-    val scan = out.queryExecution.executedPlan.collectLeaves()
-      .find(_.nodeName.toLowerCase.contains("scan")).get
-    val produced = scan.metrics("numOutputRows").value
-    assert(produced > 0 && produced <= 100000 / 4 + 1000,
-      s"row groups outside the key range must be skipped, scan read $produced rows")
-    // getClosest: smallest key at-or-after a probe BETWEEN stored keys
-    val closest = Formats.closestLookup(spark, dir, "k", 500L)
-    assert(rows(closest) == Seq(Seq(500L, 1000L)))
-  }
-
   test("F8: har:// — an archive written by createHar reads back through the scheme") {
     val base = graft.core.Caching.scratchDir("har").toString
     val srcDir = s"$base/src"
@@ -300,36 +255,6 @@ class FormatsSpec extends SparkSpec {
     val back = spark.read.parquet("viewfs://graftcluster/data")
     assert(back.count() == 50
       && rows(back.filter(col("id") === 7L)) == Seq(Seq(7L, "w7")))
-  }
-
-  test("F11: namespace export to json") {
-    val dir = graft.core.Caching.scratchDir("ns").toString + "/ns"
-    val file = Seq(
-      (0L, -1L, "", -1L, 0L, 0L, 0L, 0L, 0L, None: Option[String], 0L, 1L),
-      (1L, 0L, "a", 10L, 0L, 0L, 0L, 0L, 0L, None: Option[String], 0L, 2L),
-    ).toDF("id", "parentId", "name", "length", "blockSize", "replication",
-      "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
-    Formats.exportNamespace(file, dir, "json")
-    val back = spark.read.json(dir)
-    assert(back.count() == 2)
-    assert(rows(back.filter(col("id") === 1L).select(col("path"))).head == Seq("/a"))
-  }
-
-  test("F7: bloom filter prunes with no false negatives") {
-    val keys = (1L to 1000L).filter(_ % 3 == 0)
-    val build = keys.toDF("k")
-    val bloom = Sketches.buildBloom(build, "k", expectedItems = 400)
-    val probe = (1L to 1000L).toDF("k")
-    val kept = rows(Sketches.mightContain(probe, "k", bloom)).map(_.head.asInstanceOf[Long]).toSet
-    assert(keys.forall(kept.contains)) // no false negatives
-    assert(kept.size < 1000)           // pruned most non-members
-    // oversized builds clamp to the session's runtime-bloom maxima
-    // inside BloomFilterAggregate — and the clamped filter still never
-    // false-negatives
-    val big = Sketches.buildBloom(build, "k", expectedItems = 100000000L, fpp = 0.0001)
-    val keptBig = rows(Sketches.mightContain(probe, "k", big))
-      .map(_.head.asInstanceOf[Long]).toSet
-    assert(keys.forall(keptBig.contains))
   }
 
   test("F7: approx distinct close to exact") {
@@ -393,29 +318,5 @@ class FormatsSpec extends SparkSpec {
       Mutations.commitBatch(Map("file" -> file),
         Map("file" -> file, "laese" -> lease), Map("file" -> Seq("id")))
     }
-  }
-
-  test("P7: TDHS fluent DSL composes index find + post filters + limit") {
-    val kv = Seq(
-      (1L, 10L, "x", 1L), (2L, 10L, "y", 2L), (3L, 20L, "y", 3L),
-      (4L, 10L, "z", 4L), (5L, 10L, null, 5L),
-    ).toDF("id", "grp", "tag", "version")
-    val out = rows(Tdhs.from(kv)
-      .select("id", "tag")
-      .index(IndexDef("GRP", Seq("grp")))
-      .equal(10L)
-      .and().field("tag").not("x")
-      .limit(0, 10)
-      .get().orderBy(col("id")))
-    assert(out == Seq(Seq(2L, "y"), Seq(4L, "z"))) // null tag excluded by NOT
-    val nulls = rows(Tdhs.from(kv).index(IndexDef("GRP", Seq("grp"))).equal(10L)
-      .and().field("tag").isNull().get().select(col("id")))
-    assert(nulls == Seq(Seq(5L)))
-    // update + delete through the DSL
-    val upd = Tdhs.from(kv).index(IndexDef("GRP", Seq("grp"))).equal(20L)
-      .update(Map("grp" -> graft.store.StateStore.Add(1L)), nowMs = 0L)
-    assert(rows(upd.filter(col("id") === 3L)).head(1) == 21L)
-    val del = Tdhs.from(kv).index(IndexDef("GRP", Seq("grp"))).equal(10L).delete()
-    assert(rows(graft.store.StateStore.live(del)).map(_.head) == Seq(3L))
   }
 }

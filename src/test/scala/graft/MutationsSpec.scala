@@ -543,6 +543,15 @@ class MutationsSpec extends SparkSpec {
       "DECOMMISSION_INPROGRESS", 1L, 0L, 0L, 80L))
     // start on an already-DECOMMISSIONED node is skipped (:3183)
     assert(!out.contains(4L) && out.size == 5)
+    // no requests: the DecommissionedMonitor re-check alone — every
+    // standing in-progress node is re-gated, nothing else is touched
+    val recheck = rows(Mutations.setAdminState(dn, blocks, files,
+        Seq.empty[(Long, String)].toDF("nodeId", "op"))
+      .select(col("id"), col("writeOp"), col("adminState")))
+      .map(r => r.head -> r.tail).toMap
+    assert(recheck == Map(3L -> Seq("admin", "DECOMMISSIONED"),
+      5L -> Seq("admin", "DECOMMISSIONED"),
+      8L -> Seq("status", "DECOMMISSION_INPROGRESS")))
   }
 
   test("lease release: finalize/recover/nnlease transition matrix") {

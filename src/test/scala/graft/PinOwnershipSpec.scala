@@ -81,6 +81,16 @@ class PinOwnershipSpec extends SparkSpec {
       assert(!pinned)
     }
 
+  test("the stream parity entries leave no temp view behind") {
+    DerivedState.register(spark, sf)
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    for (e <- Seq("e4_stream_window_parity", "r9_stream_parity")) {
+      assert(SparkEntry.queries(e)(spark, sf).count() > 0)
+      assert(views == before, s"$e left ${(views -- before).mkString(", ")}")
+    }
+  }
+
   test("n_block_received leaves no graft_*_pin view in views mode") {
     assert(!spark.conf.getOption("graft.layout").contains("bucketed"))
     SparkEntry.queries("n_block_received")(spark, sf).collect()

@@ -29,6 +29,11 @@ class RegisterSpec extends SparkSpec {
 
   private def count(t: String) = spark.table(t).count()
 
+  test("countersDuring counts every SQL execution of a body that collects") {
+    val c = countersDuring { spark.range(3).collect(); spark.range(5).collect() }
+    assert(c.sqlActions == 2, s"$c")
+  }
+
   test("a repeated register runs no SQL and no job, and keeps every view object") {
     // a replaced view makes this call a miss, which also shows the
     // counter sees the view commands a registration runs

@@ -42,8 +42,6 @@ class ReplicationSpec extends SparkSpec {
     ).toDF("blockId", "inFlight", "since")
     val timedOut = Replication.pendingTimedOut(pending, Now)
     assert(timedOut.select("blockId").as[Long].collect().sorted.toSeq == Seq(10L, 11L))
-    assert(Replication.pendingSurvivors(pending, Now)
-      .select("blockId").as[Long].collect().toSeq == Seq(12L))
     val block = Seq(
       (10L, 1L, 100L, 5L, 0L, 1L), // one live replica of a repl-3 file
       (11L, 1L, 101L, 5L, 0L, 2L), (11L, 2L, 101L, 5L, 0L, 3L),
@@ -337,14 +335,5 @@ class ReplicationSpec extends SparkSpec {
       assert(sweepFires == (liveAfter >= repl),
         s"replication=$repl: sweep=$sweepFires, liveAfter=$liveAfter")
     }
-  }
-
-  test("corruptMarksCompact drops marks whose replica row is gone") {
-    val marks = Seq((1L, 1L), (1L, 2L), (2L, 1L)).toDF("blockId", "datanodeId")
-    val block = Seq((1L, 1L, 1L), (2L, 1L, -2L)) // (2,1) tombstoned
-      .toDF("id", "datanodeId", "version")
-    val out = Replication.corruptMarksCompact(marks, block).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.toSeq == Seq((1L, 1L)))
   }
 }

@@ -383,60 +383,6 @@ class ScalingLawsSpec extends SparkSpec {
     }
   }
 
-  test("session_window: the stream emits only whole batch sessions, each once") {
-    def withTimestamps(events: DataFrame) =
-      events.select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("ts"))
-    ks.foreach { k =>
-      val ev = withTimestamps(shards(k).events)
-      val emitted = new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
-      val stream = withTimestamps(eventStream(k))
-      drain(Changefeed.sessionWindows(stream), "append") { (b: Dataset[Row], id: Long) =>
-        emitted.put(id, b.collect())
-      }
-      val streamed = emitted.values.asScala.flatten.toArray
-      // batch truth: 30-minute-gap sessions, each [first event, last + 30 min)
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-      val batch = bag(ev.withColumn("prevTs", lag(col("ts"), 1).over(w))
-        .withColumn("sid", sum(when(col("prevTs").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prevTs")) > 1800000000L, 1L)
-          .otherwise(0L)).over(w))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("ts")).as("sessStart"),
-          (max(col("ts")) + expr("INTERVAL 30 MINUTES")).as("sessEnd"),
-          count(lit(1)).as("nEvents"))
-        .select(col("user_id"), col("sessStart"), col("sessEnd"), col("nEvents"))
-        .collect())
-      assert(streamed.nonEmpty, s"k=$k emitted no session")
-      assert(bag(streamed).forall { case (s, n) => n == 1 && batch.contains(s) },
-        s"k=$k: a streamed session is not a batch session, or came twice")
-    }
-  }
-
-  test("streamingDedup: two deliveries of every id emit each id once") {
-    ks.foreach { k =>
-      val docs = (0 until k).map { j =>
-        graft.core.Tables.documents(spark, sf)
-          .select((col("doc_id") + lit(j * Off)).as("doc_id"), col("lang"))
-      }.reduce(_ unionByName _)
-        // one watermark window: every second delivery is a state hit
-        .withColumn("arrival",
-          timestamp_micros(lit(1700000000000000L) + (col("doc_id") % 300000000L)))
-      val feed = Caching.scratchDir("laws-dedup")
-      docs.repartition(4).write.parquet(s"$feed/w0")
-      docs.repartition(4).write.parquet(s"$feed/w1")
-      val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val stream = spark.readStream.option("maxFilesPerTrigger", "3")
-        .schema(docs.schema).parquet(s"$feed/w*")
-      val triggers = drain(Changefeed.streamingDedup(stream, "doc_id", "arrival"), "append") {
-        (b: Dataset[Row], _: Long) =>
-          b.select(col("doc_id")).collect().foreach(r => emitted.add(r.getLong(0)))
-      }
-      val ids = docs.select(col("doc_id")).collect().map(_.getLong(0))
-      assert(triggers >= 2, s"k=$k ran $triggers data triggers")
-      assert(emitted.asScala.toSeq.sorted == ids.distinct.toSeq.sorted, s"k=$k")
-    }
-  }
-
   // ---- retrieval quality ----------------------------------------------
 
   test("truncated BM25 serve keeps its recall@10 and MRR on a Zipf corpus") {

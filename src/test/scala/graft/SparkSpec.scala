@@ -29,19 +29,20 @@ trait SparkSpec extends AnyFunSuite {
     * the shuffle records read, the input records read and the largest
     * shuffle read of one task. Listener delivery is asynchronous but
     * ordered, so what `body` caused is what is delivered between a
-    * `head` marker run before it and a `collect` marker run after it;
-    * an earlier action's event may still be queued when the listeners
-    * are added. */
+    * marker action run before it and one run after it. The markers are
+    * told apart by their QueryExecution, not by action name: `body` may
+    * run the same actions, and an earlier action's event may still be
+    * queued when the listeners are added. */
   def countersDuring(body: => Unit): Counters = {
     val sc = spark.sparkContext
     val group = "graft-counted"
-    val sqls = new ConcurrentLinkedQueue[String]
+    val sqls = new ConcurrentLinkedQueue[QueryExecution]
     val groups = new ConcurrentLinkedQueue[String]
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val (shuffle, input, maxShuffle) = (new AtomicLong, new AtomicLong, new AtomicLong)
     val qel = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = sqls.add(f)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = sqls.add(f)
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = sqls.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = sqls.add(qe)
     }
     val sl = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -61,17 +62,20 @@ trait SparkSpec extends AnyFunSuite {
     spark.listenerManager.register(qel)
     sc.addSparkListener(sl)
     try {
-      spark.range(1).head()
+      // collect() reports the Dataset's own QueryExecution to the listener
+      val (start, end) = (spark.range(1), spark.range(1))
+      start.collect()
       sc.setJobGroup(group, "counted")
       try body finally sc.clearJobGroup()
       sc.setJobGroup("graft-marker", "marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      def window = sqls.asScala.toSeq.dropWhile(_ != "head").drop(1)
-      def delivered = window.contains("collect") && groups.contains("graft-marker")
+      try end.collect() finally sc.clearJobGroup()
+      def window = sqls.asScala.toSeq.dropWhile(_ ne start.queryExecution).drop(1)
+      def delivered = window.exists(_ eq end.queryExecution) && groups.contains("graft-marker")
       val deadline = System.nanoTime() + 60L * 1000000000L
       while (!delivered && System.nanoTime() < deadline) Thread.sleep(20)
       assert(delivered, "marker actions never delivered")
-      Counters(groups.asScala.count(_ == group), window.takeWhile(_ != "collect").size,
+      Counters(groups.asScala.count(_ == group),
+        window.takeWhile(_ ne end.queryExecution).size,
         shuffle.get, input.get, maxShuffle.get)
     } finally {
       sc.removeSparkListener(sl)

@@ -161,5 +161,10 @@ class StateManagerSpec extends SparkSpec {
     val exp = rows(StateManager.expiredLeases(lease, now)
       .select(col("holder"), col("hardExpired"))).map(r => r.head -> r.last).toMap
     assert(exp == Map("soft" -> false, "hard" -> true))
+    // S15: only the hard-expired holder's files are recovery candidates
+    val held = Seq((100L, Some("hard"), 10L), (101L, Some("soft"), 11L),
+      (102L, Some("fresh"), 12L)).toDF("id", "leaseHolder", "version")
+    assert(rows(StateManager.leaseRecoveryCandidates(lease, held, now)
+      .select(col("holder"), col("id"))) == Seq(Seq("hard", 100L)))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.store.{Comparator, IndexDef, PostNot, StateStore}
+import graft.store.{Comparator, IndexDef, PostIsNull, PostNot, StateStore}
 
 class StateStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -77,6 +77,15 @@ class StateStoreSpec extends SparkSpec {
 
   test("post filters and version scans") {
     assert(rows(StateStore.postFilter(kv, Seq(PostNot("name", "a")))).size == 4)
+    // on a non-unique index: NOT drops a null like SQL's <>, IS NULL
+    // keeps only the null
+    val grp = Seq((1L, 10L, "x", 1L), (2L, 10L, "y", 2L), (3L, 20L, "y", 3L),
+      (4L, 10L, "z", 4L), (5L, 10L, null, 5L)).toDF("id", "grp", "tag", "version")
+    val inGrp = StateStore.find(grp, IndexDef("GRP", Seq("grp")), Seq(10L), Comparator.EQ)
+    assert(rows(StateStore.postFilter(inGrp, Seq(PostNot("tag", "x")))
+      .select(col("id")).orderBy(col("id"))) == Seq(Seq(2L), Seq(4L)))
+    assert(rows(StateStore.postFilter(inGrp, Seq(PostIsNull("tag"))).select(col("id")))
+      == Seq(Seq(5L)))
     assert(rows(StateStore.versionsGreaterThan(kv, 3L, 10)).map(_.head) == Seq(4L, 5L))
     assert(rows(StateStore.maxVersion(kv)).head.head == 5L)
   }

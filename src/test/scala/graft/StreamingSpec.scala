@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,8 +9,8 @@ import graft.streaming.Changefeed
 import graft.streaming.Changefeed.{KeyState, Op}
 
 /** Streaming behavior on FIXTURES.md §2 fixtures: out-of-order/duplicate
-  * op-log replay, watermarked windowed aggregation, and the per-batch
-  * block-report reconciliation. */
+  * op-log replay, the capped heartbeat command dequeue, and each stream
+  * twin landing on its gated batch operator. */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -175,25 +173,6 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("heartbeat windowed rates with watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, Long, Long)]
-    val hb = mem.toDF().toDF("time", "datanodeId", "xceiverCount", "remaining")
-    val q = Changefeed.heartbeatRates(hb, "1 minute", "2 minutes")
-      .writeStream.format("memory").queryName("hbrates")
-      .outputMode(OutputMode.Update).start()
-    try {
-      val t0 = 1700000000000L
-      mem.addData((new Timestamp(t0), 1L, 3L, 900L), (new Timestamp(t0 + 10000), 1L, 5L, 890L),
-        (new Timestamp(t0 + 70000), 1L, 2L, 880L))
-      q.processAllAvailable()
-      val out = spark.table("hbrates")
-        .select(col("datanodeId"), col("beats"), col("peakLoad")).collect().map(_.toSeq)
-      assert(out.contains(Seq(1L, 2L, 5L))) // first minute: 2 beats, peak 5
-      assert(out.contains(Seq(1L, 1L, 2L))) // second minute
-    } finally q.stop()
-  }
-
   test("heartbeat command dequeue hands work to beating nodes only") {
     implicit val sqlCtx = spark.sqlContext
     val work = Seq((11L, 201L, "replicate"), (12L, 202L, "invalidate"),
@@ -231,147 +210,12 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       assert(got.toSet == Set((201L, "replicate"),
         (301L, "invalidate"), (302L, "invalidate")))
-    } finally q.stop()
-  }
-
-  test("lease recovery monitor: each tick releases the hard-expired holders") {
-    implicit val sqlCtx = spark.sqlContext
-    val nowMs = 1000000000L
-    val lease = Seq(
-      ("h1", nowMs - 4000000L, 1L), // hard-expired (limit 3600s)
-      ("h2", nowMs - 100L, 2L),     // fresh — must not release
-    ).toDF("holder", "leaseTime", "version")
-    val file = Seq(
-      (100L, Some("h1"), 10L), (101L, Some("h2"), 11L),
-    ).toDF("id", "leaseHolder", "version")
-    val block = Seq.empty[(Long, Long, Long, Long, Long, Long, Long)]
-      .toDF("id", "datanodeId", "length", "generationStamp", "fileId",
-        "fileIndex", "version")
-    val dn = Seq.empty[(Long, Long, Long)].toDF("id", "lastUpdated", "version")
-    val mem = MemoryStream[Long]
-    val got = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Any])]
-    val q = Changefeed.leaseRecoveryMonitor(mem.toDF().toDF("tick"),
-      () => lease, () => file, () => block, () => dn, () => nowMs,
-      (_, cands, ws) => {
-        cands.select(col("holder")).collect()
-          .foreach(r => got += (("cand", Seq(r.getString(0)))))
-        ws.collect().foreach(r => got += (("ws", r.toSeq)))
-      })
-    try {
-      mem.addData(1L)
-      q.processAllAvailable()
-      // h1's file finalizes (no blocks → immediate commit); h2 untouched
-      assert(got.toList == List(
-        ("cand", Seq("h1")),
-        ("ws", Seq("finalize", "file", 100L, 0L, null, 0L, null, null, 11L))))
-    } finally q.stop()
-  }
-
-  test("balancer monitor: re-plans per tick, early-exits once balanced") {
-    implicit val sqlCtx = spark.sqlContext
-    val now = 1700000000000L
-    def cluster(skewed: Boolean) = {
-      val used = if (skewed) Seq(5000L, 1000L, 4000L, 2500L, 1500L, 2000L)
-                 else Seq(2700L, 2600L, 2700L, 2700L, 2600L, 2700L)
-      used.zipWithIndex.map { case (u, i) =>
-        (i.toLong + 1, 10000L, u, 9000L, now,
-          if (i < 3) "/rackA" else "/rackB", "NORMAL", i.toLong + 1)
-      }.toDF("id", "capacity", "dfsUsed", "remaining", "lastUpdated",
-        "location", "adminState", "version")
-    }
-    // mutable snapshot: tick 1 sees the skew, the "dispatch" flips it to
-    // the balanced report, tick 2 must early-exit
-    var snapshot = cluster(skewed = true)
-    val mem = MemoryStream[Long]
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Seq[Seq[Any]])]
-    val q = Changefeed.balancerMonitor(mem.toDF().toDF("tick"),
-      () => snapshot, () => now, thresholdPct = 10.0,
-      (id, imb, pairs) => {
-        got += ((id, imb.head().getAs[Long]("bytesLeftToMove"),
-          rows(pairs.orderBy(col("pass"), col("sourceId"), col("targetId")))))
-        snapshot = cluster(skewed = false)
-      })
-    try {
-      mem.addData(1L)
-      q.processAllAvailable()
-      mem.addData(2L)
-      q.processAllAvailable()
-      val (_, left1, pairs1) = got(0)
-      // tick 1: the BalancerSpec fixture's schedule, verbatim
-      assert(left1 > 0 && pairs1 == rows(
-        graft.analytics.Balancer.pairs(cluster(skewed = true), now, 10.0)
-          .orderBy(col("pass"), col("sourceId"), col("targetId"))))
-      // tick 2: balanced — the reference's pre-pairing early exit
-      val (_, left2, pairs2) = got(1)
-      assert(left2 == 0L && pairs2.isEmpty)
-    } finally q.stop()
-  }
-
-  test("D2 retrying applier: transient failures retry, poisoned batches quarantine") {
-    implicit val sqlCtx = spark.sqlContext
-    val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val poisoned = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var flakyLeft = 2 // batch 0's body fails twice, then succeeds
-    val applier = new Changefeed.RetryingApplier(
-      body = (batch, id) => {
-        if (id == 0L && flakyLeft > 0) { flakyLeft -= 1; sys.error("transient") }
-        if (id == 1L) sys.error("permanent")
-        applied += id; batch.count(); ()
-      },
-      poison = (_, id, _) => poisoned += id,
-      maxRetries = 2)
-    val mem = MemoryStream[Long]
-    val q = mem.toDF().writeStream.foreachBatch(applier).start()
-    try {
-      mem.addData(1L); q.processAllAvailable() // batch 0: flaky → applied on try 3
-      mem.addData(2L); q.processAllAvailable() // batch 1: permanent → quarantined
-      mem.addData(3L); q.processAllAvailable() // batch 2: the stream keeps moving
-      assert(applied.toSeq == Seq(0L, 2L))
-      assert(poisoned.toSeq == Seq(1L))
-      assert(applier.failedToApply) // latched by the quarantine, like failToApply
-      val byId = applier.ledger.map(o => o.batchId -> (o.attempts, o.outcome)).toMap
-      assert(byId(0L) == ((3, "applied")))
-      assert(byId(1L) == ((3, "quarantined")))
-      assert(byId(2L) == ((1, "applied")))
-    } finally q.stop()
-  }
-
-  test("D2 pause gate: applies block while paused, drain after resume") {
-    implicit val sqlCtx = spark.sqlContext
-    val applied = new java.util.concurrent.atomic.AtomicInteger(0)
-    val applier = new Changefeed.RetryingApplier(
-      body = (_, _) => { applied.incrementAndGet(); () })
-    applier.pause()
-    val mem = MemoryStream[Long]
-    val q = mem.toDF().writeStream.foreachBatch(applier).start()
-    try {
-      mem.addData(1L)
-      Thread.sleep(300)
-      assert(applied.get() == 0) // gated, like pauseApply :151
-      applier.resume()
-      q.processAllAvailable()
-      assert(applied.get() == 1)
-    } finally q.stop()
-  }
-
-  test("block-report pipeline classifies each micro-batch against stored") {
-    implicit val sqlCtx = spark.sqlContext
-    val stored = Seq(
-      (201L, 11L, 40L, 5L, 3L, 1L, 10L),
-      (202L, 11L, 30L, 7L, 3L, 2L, 12L),
-    ).toDF("id", "datanodeId", "length", "generationStamp", "fileId", "fileIndex", "version")
-    val mem = MemoryStream[(Long, Long, Long, Long)]
-    val reports = mem.toDF().toDF("datanodeId", "blockId", "repLength", "repGenStamp")
-    val acc = scala.collection.mutable.Map.empty[(Long, Long), String]
-    val q = Changefeed.blockReportPipeline(stored, reports, (_, actions) =>
-      actions.select(col("datanodeId"), col("blockId"), col("action"))
-        .collect().foreach(r => acc((r.getLong(0), r.getLong(1))) = r.getString(2)))
-    try {
-      mem.addData((11L, 201L, 40L, 5L), (11L, 299L, 10L, 1L))
-      q.processAllAvailable()
-      assert(acc((11L, 201L)) == "ok")
-      assert(acc((11L, 299L)) == "toAdd")
-      assert(acc((11L, 202L)) == "toRemove") // stored but absent from report
+      // stream == batch: the beat's commands are the gated n9 capping
+      val batch = graft.analytics.Replication.capCommands(work,
+          Seq((11L, 1L)).toDF("datanodeId", "xmitsInProgress"), 2, 2)
+        .select(col("blockId"), col("command")).collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+      assert(got.toSet == batch.toSet && got.size == batch.length)
     } finally q.stop()
   }
 
@@ -604,69 +448,6 @@ class StreamingSpec extends SparkSpec {
             r.getString(5)))).toMap
       assert(acc.toMap == expect)
       assert(acc(1L)._4 == 3L && acc(2L)._4 == 0L) // hits only where planted
-    } finally q.stop()
-  }
-
-  test("native session_window: fragments merge across batches, close on watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(m: Long) = new Timestamp(t0 + m * 60000L)
-    val mem = MemoryStream[(Long, Timestamp)]
-    val q = Changefeed.sessionWindows(mem.toDF().toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("sw_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: user 1 events at 0 and 20 min (one session, still open)
-      mem.addData((1L, ts(0)), (1L, ts(20))); q.processAllAvailable()
-      // batch 2: 25 min EXTENDS the session (fragment merge across the
-      // trigger); user 2 opens its own; late watermark driver at 600 min
-      // closes everything older
-      mem.addData((1L, ts(25)), (2L, ts(30)), (1L, ts(600)))
-      q.processAllAvailable()
-      mem.addData((1L, ts(1000))); q.processAllAvailable() // push watermark
-      val got = spark.table("sw_out")
-        .select(col("user_id"), col("sessStart"), col("sessEnd"), col("nEvents"))
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(3))).toSet
-      // user 1 session: events 0/20/25 → [0, 55) with 3 events (the
-      // engine merged the cross-batch fragments); user 2: [30, 60) / 1
-      assert(got.contains((1L, t0, t0 + 55L * 60000L, 3L)), s"got $got")
-      assert(got.contains((2L, t0 + 30L * 60000L, t0 + 60L * 60000L, 1L)), s"got $got")
-    } finally q.stop()
-  }
-
-  test("stream-stream attribution join: watermarked time-range join, batch parity") {
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    def ts(m: Long) = new Timestamp(t0 + m * 60000L)
-    // impressions at minutes 0, 30, 90 per user; clicks at 20, 75, 200
-    val imps = for { u <- 1L to 3L; (m, i) <- Seq((0L, 1L), (30L, 2L), (90L, 3L)) }
-      yield (u, ts(m), u * 10L + i)
-    val clks = for { u <- 1L to 3L; (m, i) <- Seq((20L, 1L), (75L, 2L), (200L, 3L)) }
-      yield (u, ts(m), u * 100L + i)
-    val memI = MemoryStream[(Long, Timestamp, Long)]
-    val memC = MemoryStream[(Long, Timestamp, Long)]
-    val joined = Changefeed.streamStreamAttribution(
-      memI.toDF().toDF("user_id", "impTime", "imp_id"),
-      memC.toDF().toDF("c_user_id", "clickTime", "click_id"))
-    val q = joined.writeStream.format("memory").queryName("attr_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two triggers, clicks split across them — the join state must
-      // hold the early impressions until their window closes
-      memI.addData(imps.take(6): _*); memC.addData(clks.take(3): _*)
-      q.processAllAvailable()
-      memI.addData(imps.drop(6): _*); memC.addData(clks.drop(3): _*)
-      q.processAllAvailable()
-      val got = spark.table("attr_out").select(col("imp_id"), col("click_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-      // batch truth: click within [impTime, impTime + 1h]
-      val want = (for { (u, it, ii) <- imps; (cu, ct, ci) <- clks
-        if u == cu && ct.getTime >= it.getTime &&
-           ct.getTime <= it.getTime + 3600000L } yield (ii, ci)).sorted
-      assert(got.sameElements(want), s"got ${got.toSeq} want $want")
-      // click at minute 200 attributes to NO impression (all > 1h old)
-      assert(!got.exists(_._2 % 100 == 3))
     } finally q.stop()
   }
 
@@ -1143,174 +924,6 @@ class StreamingSpec extends SparkSpec {
       // block 1 drains exactly (3 receipts), block 3 over-receives (late
       // no-op), block 2 keeps one in flight
       assert(streamed == batched && streamed == Set((2L, 1L)))
-    } finally q.stop()
-  }
-
-  test("compaction monitor: each tick compacts below the advancing sync floor, snapshots above it unchanged") {
-    implicit val sqlCtx = spark.sqlContext
-    // 3 keys × versions 1..12, key 1's v4 and v8 are tombstones
-    val histRef = new java.util.concurrent.atomic.AtomicReference(
-      (1 to 12).flatMap(v => Seq(1L, 2L, 3L).map(k =>
-        (k, k * 100 + v, if (k == 1 && (v == 4 || v == 8)) -v.toLong else v.toLong)))
-        .toDF("id", "value", "version"))
-    val floorRef = new java.util.concurrent.atomic.AtomicLong(5L)
-    val mem = MemoryStream[Long]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = Changefeed.compactionMonitor(mem.toDF(), () => histRef.get(),
-      Seq("id"), () => floorRef.get(),
-      sink = (_, f, compacted) => {
-        seen += ((f, compacted.count()))
-        histRef.set(compacted) // commit the compacted table back
-      })
-    try {
-      // tick 1 at floor 5: below-floor history (15 rows incl. key 1's
-      // tombstone at 4) collapses to one live row per key → 3 + 21 = 24
-      mem.addData(1L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((5L, 24L)))
-      // the floor advances past key 1's second tombstone; tick 2
-      // compacts the ALREADY-compacted table further → 3 floor rows +
-      // 9 above-floor (v10-12 × 3 keys) = 12, and the surviving live
-      // state per key is intact
-      // an idle tick (floor unchanged) must skip the corpus job entirely
-      mem.addData(2L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((5L, 24L)))
-      floorRef.set(9L)
-      mem.addData(3L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((5L, 24L), (9L, 12L)))
-      val live = graft.store.StateStore.snapshotAsOf(histRef.get(), Seq("id"), 12L)
-        .orderBy(col("id")).collect().map(r => (r.getLong(0), r.getLong(2)))
-      assert(live.toSeq == Seq((1L, 12L), (2L, 12L), (3L, 12L)))
-    } finally q.stop()
-  }
-
-  test("safe-mode monitor: in safe mode below the truncated threshold, out once it is reached") {
-    implicit val sqlCtx = spark.sqlContext
-    // 4 blocks, minReplication 2, pct .999 → blockThreshold =
-    // (int)(4 × .999) = 3 (the reference truncates, never rounds up)
-    val blockRef = new java.util.concurrent.atomic.AtomicReference(
-      Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 1L), (4L, 1L))
-        .toDF("id", "datanodeId").withColumn("version", lit(1L)))
-    val mem = MemoryStream[Long]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
-    val q = Changefeed.safeModeMonitor(mem.toDF(), () => blockRef.get(),
-      minReplication = 2, thresholdPct = 0.999,
-      sink = (_, st) => st.collect().foreach(r => seen +=
-        ((r.getAs[Long]("totalBlocks"), r.getAs[Long]("safeBlocks"),
-          r.getAs[Boolean]("inSafeMode")))))
-    try {
-      // tick 1: 2 of 4 blocks safe < threshold 3 → IN safe mode
-      mem.addData(1L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((4L, 2L, true)))
-      // block 3 reaches minimal replication → exactly 3 safe of 4; the
-      // truncated threshold (3) is MET, so the monitor reports leave —
-      // a round-up threshold (4) would keep the cluster stuck here
-      blockRef.set(
-        Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), (3L, 1L), (3L, 3L), (4L, 1L))
-          .toDF("id", "datanodeId").withColumn("version", lit(1L)))
-      seen.clear()
-      mem.addData(2L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((4L, 3L, false)))
-    } finally q.stop()
-  }
-
-  test("decommission monitor: a drained node retires on the tick, a blocked one waits") {
-    implicit val sqlCtx = spark.sqlContext
-    // node 1 decommissioning, holds block 10 whose OTHER replicas (2,3)
-    // satisfy replication 2 → retires; node 4 decommissioning, holds
-    // block 20 as its ONLY replica of a replication-2 file → must wait
-    val dnRef = new java.util.concurrent.atomic.AtomicReference(
-      Seq((1L, "DECOMMISSION_INPROGRESS"), (2L, "NORMAL"), (3L, "NORMAL"),
-        (4L, "DECOMMISSION_INPROGRESS"))
-        .toDF("id", "adminState").withColumn("version", lit(1L)))
-    val block = Seq((10L, 1L), (10L, 2L), (10L, 3L), (20L, 4L))
-      .toDF("id", "datanodeId")
-      .withColumn("fileId", lit(100L)).withColumn("length", lit(5L))
-      .withColumn("generationStamp", lit(7L)).withColumn("fileIndex", col("id"))
-      .withColumn("version", col("id"))
-    val file = Seq((100L, 2L, 1000L, 1L)).toDF("id", "replication", "length", "version")
-      .withColumn("leaseHolder", lit(null).cast("string"))
-    val mem = MemoryStream[Long]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
-    val q = Changefeed.decommissionMonitor(mem.toDF(),
-      () => dnRef.get(), () => block, () => file,
-      sink = (_, ws) => ws.collect().foreach(r => seen +=
-        ((r.getAs[Long]("id"), r.getAs[String]("writeOp"), r.getAs[String]("adminState")))))
-    try {
-      mem.addData(1L); q.processAllAvailable()
-      assert(seen.toSet == Set((1L, "admin", "DECOMMISSIONED"),
-        (4L, "status", "DECOMMISSION_INPROGRESS")))
-      // commit node 1's retirement; the next tick re-gates ONLY node 4
-      dnRef.set(Seq((1L, "DECOMMISSIONED"), (2L, "NORMAL"), (3L, "NORMAL"),
-        (4L, "DECOMMISSION_INPROGRESS"))
-        .toDF("id", "adminState").withColumn("version", lit(2L)))
-      seen.clear()
-      mem.addData(2L); q.processAllAvailable()
-      assert(seen.toSet == Set((4L, "status", "DECOMMISSION_INPROGRESS")))
-    } finally q.stop()
-  }
-
-  test("drift monitor: a healthy tick stays quiet, a shifted delivery trips") {
-    implicit val sqlCtx = spark.sqlContext
-    val reference = (1L to 200L).map(i => Tuple1(i % 40L)).toDF("v")
-    // tick 1 serves the same distribution; tick 2 a +2-bin shift
-    val liveRef = new java.util.concurrent.atomic.AtomicReference(
-      (1L to 200L).map(i => Tuple1(i % 40L)).toDF("v"))
-    val mem = MemoryStream[Long]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
-    val q = Changefeed.driftMonitor(mem.toDF(), reference, () => liveRef.get(),
-      "v", binWidth = 10L, maxBins = 8, thresholdPpm = 150000L,
-      sink = (id, rep) => rep.select(col("tvd_ppm"), col("drifted"))
-        .distinct().collect()
-        .foreach(r => seen += ((id, r.getLong(0), r.getBoolean(1)))))
-    try {
-      mem.addData(1L); q.processAllAvailable()
-      assert(seen.toSeq == Seq((0L, 0L, false)))
-      liveRef.set((1L to 200L).map(i => Tuple1(i % 40L + 20L)).toDF("v"))
-      seen.clear()
-      mem.addData(2L); q.processAllAvailable()
-      assert(seen.size == 1 && seen.head._3,
-        s"shifted delivery must trip: $seen")
-    } finally q.stop()
-  }
-
-  test("pending-replication monitor: timed-out requests requeue, fresh ones survive") {
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    // mutable clock + mutable pending table — the sink commits survivors
-    // back, exactly the caller contract the monitor documents
-    val clock = new java.util.concurrent.atomic.AtomicLong(t0)
-    val pendingRef = new java.util.concurrent.atomic.AtomicReference(
-      Seq((10L, 1L, t0 - 60000L), (11L, 1L, t0 - 400000L))
-        .toDF("blockId", "inFlight", "since"))
-    val block = Seq((10L, 1L, 100L, 1L), (11L, 1L, 101L, 2L))
-      .toDF("id", "datanodeId", "fileId", "version")
-      .withColumn("length", lit(1000L)).withColumn("generationStamp", lit(5L))
-      .withColumn("fileIndex", lit(0L))
-    val file = Seq((100L, 3L, 1000L, 1L), (101L, 3L, 1000L, 2L))
-      .toDF("id", "replication", "length", "version")
-    val datanode = Seq(1L).toDF("id")
-      .withColumn("lastUpdated", lit(t0 + 600000L))
-      .withColumn("adminState", lit("NORMAL")).withColumn("version", lit(1L))
-    val mem = MemoryStream[Long]
-    val requeued = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Changefeed.pendingReplicationMonitor(
-      mem.toDF(), () => pendingRef.get(), () => block, () => file,
-      () => datanode, () => clock.get(), timeoutMs = 300000L,
-      sink = (_, _, survivors, requeue) => {
-        requeued ++= requeue.select("blockId").collect().map(_.getLong(0))
-        pendingRef.set(survivors.localCheckpoint())
-      })
-    try {
-      // tick 1 at t0: block 11 (aged 400 s) times out and requeues with
-      // its current 1-of-3 replica state; block 10 (60 s) survives
-      mem.addData(1L); q.processAllAvailable()
-      assert(requeued.toSeq == Seq(11L))
-      assert(pendingRef.get().select("blockId").collect().map(_.getLong(0)).toSeq == Seq(10L))
-      // tick 2, clock +4 min: block 10 has now aged past the timeout too
-      clock.set(t0 + 240001L)
-      mem.addData(2L); q.processAllAvailable()
-      assert(requeued.toSeq == Seq(11L, 10L))
-      assert(pendingRef.get().isEmpty)
     } finally q.stop()
   }
 
