@@ -32,13 +32,15 @@ import graft.state.StateManager
   *    the cumulative-sum intervals of source availabilities against
   *    target availabilities, which allocates at least as many bytes,
   *    keeps the same pass order (over→under, over→belowAvg,
-  *    aboveAvg→under; same-rack passes before cross-rack, :1081-1100) and
-  *    is a pure window-function dataflow — at 10k nodes the plan is still
-  *    a few narrow windows over a dimension table, with no driver loop.
+  *    aboveAvg→under; same-rack passes before cross-rack, :1081-1100).
+  *    Up to [[PairsDriverLimit]] live nodes the passes run on the driver
+  *    over the collected node report, as the single-process reference
+  *    does; above it they run as window functions.
   *
-  * Same-rack passes run partitioned by rack; cross-rack passes run over
-  * the whole (node-count-bounded) dimension, so the single global window
-  * is bounded by the cluster size, not the data volume. Cross-rack
+  * In the window form, same-rack passes run partitioned by rack and
+  * cross-rack passes over the whole (node-count-bounded) dimension, so
+  * the single global window is bounded by the cluster size, not the
+  * data volume. Cross-rack
   * passes cannot produce a same-rack pair: availabilities only decrease,
   * and the matching same-rack pass has already driven one side of every
   * (rack, class-pair) to zero — BalancerSpec pins that invariant.

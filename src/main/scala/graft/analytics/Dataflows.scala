@@ -1,10 +1,11 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.state.StateManager
+import graft.state.{Mutations, StateManager}
 
 /** Namenode dataflow operators (SURVEY §2.4,
   * H/org/apache/hadoop/hdfs/server/namenode/FSNamesystem.java) as
@@ -402,89 +403,6 @@ object Dataflows {
       .drop("__cnt", "__surv", "__rack", "location")
   }
 
-  // ---- N10: ReplicationMonitor tick (FSNamesystem.java:1936-2041) ------
-
-  /** One computeDatanodeWork cycle: budget = liveNodes ×
-    * blocksReplWorkMultiplier (reference default 2); pick the top-budget
-    * under-replicated blocks (N6), choose a source + targets for each
-    * over the live topology snapshot (N7, driver-side), and compute the
-    * excess-replica invalidation work (N8). Returns (replication work
-    * with source + targets, invalidation work) — the two per-datanode
-    * command queues the heartbeat handler (N9) drains.
-    *
-    * `pending` = blockId → replications already scheduled and in flight
-    * (pendingReplications): live + pending replicas count as effective,
-    * so a block with enough work in flight schedules nothing more and
-    * the target count is expected − effective, not expected − live
-    * (computeReplicationWorkForBlock, FSNamesystem.java:2120-2128,2140). */
-  def computeDatanodeWork(block: DataFrame, file: DataFrame, datanode: DataFrame,
-                          nowMs: Long, workMultiplier: Int = 2,
-                          pending: Map[Long, Int] = Map.empty): (DataFrame, DataFrame) = {
-    val liveNodes = StateManager.liveDatanodes(datanode, nowMs)
-      .select(col("id"), col("location"), col("remaining"),
-        col("xceiverCount"), col("adminState"))
-      .collect()
-      .map(r => Placement.Node(r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getString(4)))
-      .toSeq
-    val nodeById = liveNodes.map(n => n.id -> n).toMap
-    val budget = math.max(1, liveNodes.size * workMultiplier)
-    // underReplicated returns a driver-local frame (≤ budget rows, no
-    // persisted storage) — collect is free and nothing needs releasing
-    val work = underReplicated(block, file, datanode, nowMs, budget).collect()
-    // current replica holders of the picked blocks (≤ budget × replication
-    // rows): the reference seeds chooseTarget with them so a new replica
-    // never lands on a node that already holds one
-    val workIds = work.map(_.getAs[Long]("blockId")).toSeq
-    val holders: Map[Long, Seq[Long]] =
-      if (workIds.isEmpty) Map.empty
-      else live(block).filter(col("id").isin(workIds: _*))
-        .select(col("id"), col("datanodeId")).collect()
-        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
-    val spark = block.sparkSession
-    import spark.implicits._
-    // replication source per block (chooseSourceDatanode,
-    // FSNamesystem.java:2210-2262): prefer DECOMMISSION_INPROGRESS
-    // holders (no write traffic), never DECOMMISSIONED, skip nodes
-    // already at the per-tick replication-stream limit; a deterministic
-    // min-id pick within the preferred class replaces the reference's
-    // coin-flip reservoir. No usable source (or no targets) → the block
-    // schedules nothing this tick, like the reference's false return.
-    val MaxReplicationStreams = 2
-    val streams = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
-    val replicationWork = work.toSeq.flatMap { r =>
-      val blockId = r.getAs[Long]("blockId")
-      val effective = r.getAs[Long]("liveReplicaCount") + pending.getOrElse(blockId, 0)
-      val need = (r.getAs[Long]("expectedReplication") - effective).toInt
-      if (need <= 0) None // enough replicas already live or in flight
-      else {
-        // sorted: the case ladder is order-sensitive (chosen(1) picks the
-        // next rack), and collect order is not a replay-stable input
-        val holderNodes = holders.getOrElse(blockId, Nil).sorted.flatMap(nodeById.get)
-        val usable = holderNodes.filter(n =>
-          n.adminState != "DECOMMISSIONED" && streams(n.id) < MaxReplicationStreams)
-        val preferred = usable.filter(_.adminState == "DECOMMISSION_INPROGRESS")
-        val src = (if (preferred.nonEmpty) preferred else usable)
-          .sortBy(_.id).headOption
-        // the case ladder counts only LIVE replicas (the reference's
-        // chosenNodes); non-NORMAL holders can never be targets anyway
-        // (isGood requires NORMAL), so they need no explicit exclusion
-        val existing = holderNodes.filter(_.adminState == "NORMAL")
-        src.flatMap { s =>
-          val targets = Placement.chooseTargets(liveNodes, need, None,
-            blockSize = 1024L, seed = blockId, existing = existing)
-          if (targets.isEmpty) None
-          else {
-            streams(s.id) += 1
-            Some((blockId, r.getAs[Long]("fileId"), r.getAs[Int]("priority"),
-              s.id, targets.map(_.id)))
-          }
-        }
-      }
-    }.toDF("blockId", "fileId", "priority", "srcDatanodeId", "targetDatanodeIds")
-    (replicationWork, excessReplicas(block, file, datanode))
-  }
-
   // ---- N11: fsck (NamenodeFsck.java:149-353, Result :556-640) ----------
 
   /** Live-node → dense INT rack-id dimension + the cluster rack count.
@@ -767,18 +685,18 @@ object Dataflows {
   }
 
   /** N11 `-move`: the lost+found write-set (NamenodeFsck.lostFoundMove
-    * :355-420). Per corrupt CLOSED file (missing > 0; an open file is
-    * never checked, so the reference's !isOpen gate :340-345 is already
-    * satisfied):
+    * :355-420). Per corrupt CLOSED file under `pathPrefix` (missing > 0;
+    * an open file is never checked, so the reference's !isOpen gate
+    * :340-345 is already satisfied):
     *  - `insert` rows creating `/lost+found<fullPath>` as a DIRECTORY
     *    chain (mkdirs(target) :371 — the file's own name becomes a dir)
-    *    — ids `idBase + rank` over lexicographic created-path order, a
-    *    parent path sorting before its children;
-    *  - `insert` rows for the chain files under it: each maximal run of
-    *    blocks (fileIndex order) that still have a live replica becomes
-    *    one file named by its 0-based run ordinal (:377-397 — a
-    *    replica-less block closes the current chain and is skipped),
-    *    length = Σ BlockEntry-primary lengths of the run;
+    *    and the chain files under it: each maximal run of blocks
+    *    (fileIndex order) that still have a live replica becomes one file
+    *    named by its 0-based run ordinal (:377-397 — a replica-less block
+    *    closes the current chain and is skipped), length = Σ
+    *    BlockEntry-primary lengths of the run. Dirs and chain files take
+    *    their ids from one ranking (Mutations.mirrorChains), so chain "10"
+    *    ranks before chain "2" — ids only need determinism;
     *  - `tombstone` rows for the original file row and every live block
     *    row (dfs.delete(fullName, true) :412);
     *  - `touch` rows: the old parent dir and pre-existing dirs reused as
@@ -786,97 +704,37 @@ object Dataflows {
     *  - `reject` when the mirror chain is blocked by an existing FILE
     *    row ("lost+found path blocked by a file" — mkdirs would fail
     *    :372-374).
-    * Chain-file ids share the one lexicographic ranking with the created
-    * dirs (chain "10" therefore ranks before chain "2" — ids only need
-    * determinism, not numeric order). Request-batch-bounded like
-    * moveToTrash: the corrupt set is a findings-sized frame. */
+    * The corrupt set is collected once, up to Mutations.MirrorSourceCap
+    * files; a larger one is refused — narrow it with `pathPrefix`. */
   def fsckMove(file: DataFrame, block: DataFrame, datanode: DataFrame,
                nowMs: Long, idBase: Long, pathPrefix: String = "/"): DataFrame = {
-    // findings-sized frame; pinned because it feeds four branches below.
-    // The reference's fsck walks only the requested subtree, so a scoped
-    // -move must never rescue (write!) outside it.
-    val corrupt = fsckFiles(file, block, datanode, nowMs)
-      .filter(col("missingBlocks") > 0 &&
-        scopeFilter(col("path"), normScope(pathPrefix)))
-      .select(col("fileId").as("__cfid"), col("path").as("__cpath"))
-      .localCheckpoint()
-    // localCheckpoint: the path frame feeds existing/fileTombs/touchRows
-    // (and dirs under needs' several consumers) — without the pin each
-    // consumer re-runs the whole path materialization (file derivation +
-    // broadcast dir join), measured ~1.5 s per re-derivation at sf0.1
-    // over ~6 evaluations. NOTE the storage cost: this frame is
-    // namespace-sized (one row per live file/dir — ~150k at sf0.1, but
-    // the FULL namespace at cluster scale), orders of magnitude larger
-    // than the findings-sized corrupt pin above; a cluster-scale pass
-    // should reconsider the pin (e.g. persist with spill) before
-    // adopting it beyond the derivation-backed bench layout
-    val paths = StateManager.materializePaths(file)
-      .select(col("id").as("__lid"), col("parentId").as("__lpar"),
-        col("name").as("__lname"), col("length").as("__llen"),
-        col("mtime").as("__lmtime"), col("version").as("__lver"),
-        col("path").as("__lpath"))
-      .localCheckpoint()
-    val dirs = paths.filter(col("__llen") === -1L && col("__lid") =!= 0L)
-      .select(col("__lpath").as("__dpath"))
-    // needed mirror prefixes per corrupt file: /lost+found, one per
-    // ancestor dir, and the full path itself (which becomes a dir).
-    // The ancestor probe is a KEYED join: each corrupt path expands
-    // map-side into its proper '/'-boundary prefixes (O(depth) rows),
-    // which equi-join the dir dimension. The r19 profile measured the
-    // previous formulation — broadcast(corrupt) ⋈ dirs on
-    // startsWith(dpath || '/'), a broadcast nested-loop join — at 31 s
-    // per evaluation at sf0.1 (51,575 corrupt × 15,025 dirs ≈ 775M
-    // string probes), and `needs` is re-derived by several consumers
-    // (blocked / existing / missingDirs), so the BNL dominated the
-    // whole write-set build (213 s → ~15 s). Row-multiset-identical:
-    // "cpath startsWith (dpath || '/')" holds exactly when dpath is a
-    // proper '/'-boundary prefix of cpath, i.e. when dpath equals one
-    // of the generated prefixes — including the duplicate-path dir
-    // case, where both forms emit one row per matching dir row. At
-    // cluster scale this is the difference between findings × namespace
-    // and findings × depth.
-    // leading-'/' invariant: the prefix generation assumes every corrupt
-    // path starts with '/' (split yields a leading empty part, so slice
-    // from index 1 rebuilds rooted prefixes); materializePaths guarantees
-    // it today — a path source that dropped the leading '/' would
-    // silently lose each file's single-component ancestor here
-    val prefixes = corrupt
-      .select(col("__cfid"), split(col("__cpath"), "/").as("__parts"))
-      .filter(size(col("__parts")) >= 3)
-      .select(col("__cfid"), explode(
-        transform(sequence(lit(2), size(col("__parts")) - 1),
-          i => array_join(slice(col("__parts"), lit(1), i), "/")))
-        .as("__apath"))
-    val needAnc = broadcast(prefixes).join(dirs, col("__apath") === col("__dpath"))
-      .select(col("__cfid"),
-        concat(lit("/lost+found"), col("__dpath")).as("cpath"))
-    val needs = corrupt.select(col("__cfid"), lit("/lost+found").as("cpath"))
-      .unionByName(needAnc)
-      .unionByName(corrupt.select(col("__cfid"),
-        concat(lit("/lost+found"), col("__cpath")).as("cpath")))
-    val existing = needs.select(col("cpath")).distinct()
-      .join(paths, col("cpath") === col("__lpath"))
-      .select(col("cpath").as("__epath"), col("__lid").as("__eid"),
-        col("__llen").as("__elen"))
-    // a FILE row anywhere on a mirror chain blocks that corrupt file
-    val blocked = needs
-      .join(existing.filter(col("__elen") =!= -1L),
-        col("cpath") === col("__epath"), "left_semi")
-      .select(col("__cfid")).distinct()
-    val ok = corrupt.join(blocked, Seq("__cfid"), "left_anti").localCheckpoint()
-    // chain files: per ok file, maximal runs of blocks with a live replica
+    val sp = file.sparkSession
+    // the corrupt files in scope, with the rows -move tombstones: the
+    // reference's fsck walks only the requested subtree, so a scoped
+    // -move must never rescue (write!) outside it
+    val corrupt = Mutations.collectSources(fsckFiles(file, block, datanode, nowMs)
+        .filter(col("missingBlocks") > 0 &&
+          scopeFilter(col("path"), normScope(pathPrefix)))
+        .join(live(file), col("fileId") === col("id"))
+        .select(col("fileId"), col("path"), col("parentId"), col("name"),
+          col("length"), col("version")),
+      "narrow fsck -move with a pathPrefix")
+    val mirrorOf = corrupt.map(r => r.getLong(0) -> ("/lost+found" + r.getString(1))).toMap
+    def idFrame(ids: Seq[Long]): DataFrame = StateManager.localRelation(sp,
+      ids.map(Row(_)).toArray, StructType.fromDDL("__cfid BIGINT"))
+    // chain files: per corrupt file, maximal runs of blocks with a live replica
     val liveNIds = StateManager.liveDatanodes(datanode, nowMs)
       .select(col("id").as("__nid"))
     val ordB = struct(col("generationStamp"), col("version"))
-    val pb = graft.core.Scale.keyPrune(live(block), "fileId", ok, "__cfid")
+    val w = Window.partitionBy(col("fileId"))
+      .orderBy(col("fileIndex"), col("blockId"))
+    val leaves = graft.core.Scale.keyPrune(live(block), "fileId",
+        idFrame(mirrorOf.keys.toSeq), "__cfid")
       .join(liveNIds, col("datanodeId") === col("__nid"), "left")
       .groupBy(col("fileId"), col("id").as("blockId"))
       .agg(max(col("fileIndex")).as("fileIndex"),
         count(col("__nid")).as("__live"),
         max_by(col("length"), ordB).as("__blen"))
-    val w = Window.partitionBy(col("fileId"))
-      .orderBy(col("fileIndex"), col("blockId"))
-    val chains = pb
       .withColumn("__has", col("__live") > 0)
       .withColumn("__start",
         when(col("__has") && !coalesce(lag(col("__has"), 1).over(w),
@@ -885,46 +743,20 @@ object Dataflows {
       .filter(col("__has"))
       .groupBy(col("fileId"), col("__chain"))
       .agg(sum(greatest(col("__blen"), lit(0L))).as("__clen"))
-      .join(ok, col("fileId") === col("__cfid"))
-      .select(col("__cfid").as("__chfid"),
-        concat(lit("/lost+found"), col("__cpath")).as("__chdir"),
-        col("__chain").cast("string").as("__chname"), col("__clen"))
-    // one lexicographic ranking over every created path (dirs + chains)
-    val missingDirs = needs.join(ok.select(col("__cfid")), Seq("__cfid"), "left_semi")
-      .select(col("cpath")).distinct()
-      .join(existing, col("cpath") === col("__epath"), "left_anti")
-      .select(col("cpath"), lit(true).as("__isDir"),
-        lit(null).cast("long").as("__clen"))
-    val createdAll = missingDirs.unionByName(
-        chains.select(concat(col("__chdir"), lit("/"), col("__chname"))
-          .as("cpath"), lit(false).as("__isDir"), col("__clen")))
-      .withColumn("nid",
-        lit(idBase) + row_number().over(Window.orderBy(col("cpath"))))
-      .localCheckpoint() // bounded by the findings set; ranked once
-    val dirIds = createdAll.filter(col("__isDir"))
-      .select(col("cpath").as("__ppath"), col("nid").as("__ppid"))
-      .unionByName(existing.filter(col("__elen") === -1L)
-        .select(col("__epath").as("__ppath"), col("__eid").as("__ppid")))
-    val parentPath = expr(
-      "substring(cpath, 1, length(cpath) - length(reverse(split_part(reverse(cpath), '/', 1))) - 1)")
-    val insRows = createdAll
-      .withColumn("__par", parentPath)
-      .join(dirIds, col("__par") === col("__ppath"), "left")
-      .select(lit("insert").as("writeOp"), lit("file").as("tbl"),
-        col("nid").as("id"), lit(null).cast("long").as("datanodeId"),
-        coalesce(col("__ppid"), lit(0L)).as("parentId"),
-        expr("reverse(split_part(reverse(cpath), '/', 1))").as("name"),
-        when(col("__isDir"), lit(-1L)).otherwise(col("__clen")).as("length"),
-        lit(nowMs).as("mtime"), col("nid").as("version"),
-        lit(null).cast("string").as("reject"))
-    // tombstones: the original file row + every live block row
-    val fileTombs = ok.join(paths, col("__cfid") === col("__lid"))
-      .select(lit("tombstone").as("writeOp"), lit("file").as("tbl"),
-        col("__cfid").as("id"), lit(null).cast("long").as("datanodeId"),
-        col("__lpar").as("parentId"), col("__lname").as("name"),
-        col("__llen").as("length"), lit(null).cast("long").as("mtime"),
-        (-col("__lver")).as("version"), lit(null).cast("string").as("reject"))
-    val blockTombs = graft.core.Scale.keyPrune(live(block), "fileId", ok, "__cfid")
+      .collect().toSeq
+      .map(r => (r.getLong(0), mirrorOf(r.getLong(0)) + "/" + r.getLong(1), r.getLong(2)))
+    val mc = Mutations.mirrorChains(file,
+      Mutations.dirPaths(file, StateManager.DirMapCap), mirrorOf.toSeq, leaves, idBase)
+    val ok = corrupt.toSeq.filterNot(r => mc.blocked(r.getLong(0)))
+    // inserts, file tombstones and rejects are driver rows
+    val driverRows = mc.created.map(c => Row("insert", "file", c.id, null,
+        c.parentId, c.name, c.length, nowMs, c.id, null)) ++
+      ok.map(r => Row("tombstone", "file", r.getLong(0), null, r.getLong(2),
+        r.getString(3), r.getLong(4), null, -r.getLong(5), null)) ++
+      mc.blocked.toSeq.map(id => Row("reject", "file", id, null, null, null,
+        null, null, null, "lost+found path blocked by a file"))
+    val blockTombs = graft.core.Scale.keyPrune(live(block), "fileId",
+        idFrame(ok.map(_.getLong(0))), "__cfid")
       .select(lit("tombstone").as("writeOp"), lit("block").as("tbl"),
         col("id"), col("datanodeId"),
         lit(null).cast("long").as("parentId"),
@@ -933,30 +765,17 @@ object Dataflows {
         (-col("version")).as("version"), lit(null).cast("string").as("reject"))
     // touch: old parents of moved-away files + pre-existing dirs reused
     // as insert parents (the mkdirs/delete mtime convention)
-    val touchIds = ok.join(paths, col("__cfid") === col("__lid"))
-      .select(col("__lpar").as("__tid"))
-      .unionByName(insRows
-        .join(createdAll.select(col("nid")),
-          col("parentId") === col("nid"), "left_anti")
-        .select(col("parentId").as("__tid")))
-      .distinct()
-    val touchRows = touchIds.join(paths, col("__tid") === col("__lid"))
+    val touchRows = live(file)
+      .join(broadcast(idFrame((ok.map(_.getLong(2)) ++ mc.reused).distinct)),
+        col("id") === col("__cfid"))
       .select(lit("touch").as("writeOp"), lit("file").as("tbl"),
-        col("__lid").as("id"), lit(null).cast("long").as("datanodeId"),
-        col("__lpar").as("parentId"), col("__lname").as("name"),
-        col("__llen").as("length"), lit(nowMs).as("mtime"),
-        col("__lver").as("version"), lit(null).cast("string").as("reject"))
-    val rejRows = blocked
-      .select(lit("reject").as("writeOp"), lit("file").as("tbl"),
-        col("__cfid").as("id"), lit(null).cast("long").as("datanodeId"),
-        lit(null).cast("long").as("parentId"),
-        lit(null).cast("string").as("name"),
-        lit(null).cast("long").as("length"),
-        lit(null).cast("long").as("mtime"),
-        lit(null).cast("long").as("version"),
-        lit("lost+found path blocked by a file").as("reject"))
-    insRows.unionByName(fileTombs).unionByName(blockTombs)
-      .unionByName(touchRows).unionByName(rejRows)
+        col("id"), lit(null).cast("long").as("datanodeId"),
+        col("parentId"), col("name"), col("length"), lit(nowMs).as("mtime"),
+        col("version"), lit(null).cast("string").as("reject"))
+    StateManager.localRelation(sp, driverRows.toArray, StructType.fromDDL(
+        "writeOp STRING, tbl STRING, id BIGINT, datanodeId BIGINT, parentId BIGINT, " +
+          "name STRING, length BIGINT, mtime BIGINT, version BIGINT, reject STRING"))
+      .unionByName(blockTombs).unionByName(touchRows)
   }
 
   /** N11 `-delete` (FIXING_DELETE :346-349 — namenode.delete(path, true)
@@ -1073,7 +892,7 @@ object Dataflows {
     * (`quotas`: dirId, nsQuota, dsQuota) keyed by the ROOT dir, −1 = not
     * set (INode.getNsQuota/getDsQuota default). */
   def contentSummary(file: DataFrame, rootIds: Seq[Long], maxDepth: Int = 16,
-                     dirBroadcastLimit: Long = 2000000L,
+                     dirBroadcastLimit: Long = StateManager.DirMapCap,
                      quotas: Option[DataFrame] = None): DataFrame = {
     // (rootId, id, length, replication) rows → one summary row per root
     val summary = (rows: DataFrame) => attachQuotas(summarize(rows), quotas)

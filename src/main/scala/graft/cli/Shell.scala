@@ -613,8 +613,7 @@ object Shell {
         // is scale-invariant instead of the 48%-of-corpus hot-list
         // join. `bm25index [maxPostings]` overrides the bound
         // EXPLICITLY; 0 asks for the exact unbounded index (the gates'
-        // config — the writePostingIndex hot-list warning is the only
-        // guard rail on that path, by design).
+        // config, with no guard rail against a hot list, by design).
         val bound = args.headOption.filter(_.nonEmpty).map(_.toLong)
           .getOrElse(graft.functions.TextFunctions.ServeMaxPostings)
         val docs = graft.core.Tables.documents(spark, sfDir)

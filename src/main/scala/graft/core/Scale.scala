@@ -170,49 +170,6 @@ object Scale {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Cluster layout for the BM25 posting index: bucketed by term — the
-    * serve join's key ([[graft.functions.TextFunctions.bm25TopKAgainst]]
-    * joins the query melt on term), so on this layout the corpus-sized
-    * index side never re-shuffles per query batch; only the batch's own
-    * melt pays an exchange (ScaleSpec-pinned). The documents-backed gate
-    * families are views-only in the bucketed VERIFY layout (QUERIES.md
-    * "Layout coverage"), so this layout is spec-pinned rather than
-    * gate-replayed. Same layout root as the state tables.
-    *
-    * After the write, ONE aggregate over the materialized table reads
-    * the hottest actual posting-list length (rows per term — the
-    * post-elision, post-truncation candidate-generation cost) and warns
-    * loudly when it exceeds `warnHotPpm` of nDocs: the production
-    * elision default alone does NOT bound the hot term (measured on the
-    * 500k-doc Zipf rehearsal corpus: only ~15 terms elide and the
-    * hottest SURVIVING list is 48% of the corpus — every query with
-    * that term joins O(N) candidate rows). The check rides the eager
-    * build path deliberately — warning inside the lazy
-    * [[graft.functions.TextFunctions.bm25IndexFrom]] builder would
-    * force a hidden job per composition. `warnHotPpm = 0` disables. */
-  def writePostingIndex(index: DataFrame, prefix: String = "graft_state",
-                        buckets: Int = 32,
-                        warnHotPpm: Long = 100000L): String = {
-    val tbl = s"${prefix}_bm25_index"
-    writeBucketed(index, tbl, "term", buckets)
-    if (warnHotPpm > 0) {
-      val row = index.sparkSession.table(tbl)
-        .groupBy(col("term")).agg(count(lit(1)).as("__rows"),
-          first(col("nDocs")).as("__n"))
-        .agg(max(col("__rows")), max(col("__n"))).first()
-      if (!row.isNullAt(0) && !row.isNullAt(1)) {
-        val (hot, n) = (row.getLong(0), row.getLong(1))
-        if (n > 0 && hot * 1000000L > warnHotPpm * n)
-          System.err.println(f"[graft] WARN $tbl%s: hottest posting list " +
-            f"$hot%d rows = ${hot * 100.0 / n}%.1f%% of the $n%d-doc corpus " +
-            f"(> ${warnHotPpm / 10000.0}%.1f%%) — every query containing " +
-            f"that term joins O(corpus) candidates; bound the serve with " +
-            f"bm25IndexFrom(maxPostings=...) (recall table in BASELINE.md)")
-      }
-    }
-    tbl
-  }
-
   /** The maintained serve-STATS store — the persistence of
     * [[graft.functions.TextFunctions.Bm25Stats]] that makes the
     * maintained index O(batch) END-TO-END (r19; the r18 verdict's one

@@ -1102,9 +1102,7 @@ object TextFunctions {
     * **1000 → 0.960 / 1.000 — the recommended serve setting**;
     * 10000 → 0.982 / 1.000. At 1000 the serve is measured
     * scale-invariant (per-query candidates ≤ maxPostings×|q|) while the
-    * untruncated default carries the hot-list hazard
-    * ([[graft.core.Scale.writePostingIndex]] warns at build time when
-    * the hottest surviving list exceeds a corpus fraction). */
+    * untruncated default carries the hot-list hazard. */
   def bm25IndexFrom(postings: DataFrame, maxDfPpm: Long = 500000L,
                     maxPostings: Long = Long.MaxValue): DataFrame = {
     val docLen = bm25DocLens(postings)
@@ -1214,7 +1212,7 @@ object TextFunctions {
     * maxPostings = [[ServeMaxPostings]] caps every surviving term's
     * posting list at its highest-impact entries, so no query ever
     * joins an O(corpus) candidate bucket (the 48.4%-of-corpus hot-list
-    * hazard [[graft.core.Scale.writePostingIndex]] warns about). A
+    * hazard). A
     * deployer reaching for "the serve index" gets the priced bounded
     * configuration without reading BASELINE.md; exact-BM25 consumers
     * (the gates) use [[bm25IndexFrom]] and opt into unboundedness

@@ -287,30 +287,6 @@ object Vectors {
       .select(col("qid"), col("vec_id").as("nid"), col("cellId"), col("cosine"), col("rank"))
   }
 
-  /** IVF probe against a PREBUILT celled corpus — the production shape:
-    * assign cells once ([[withIvfCell]] + [[kmeansCentroids]]), write the
-    * (vec_id, embedding, cellId) table BUCKETED BY cellId, then serve
-    * many probe batches. Queries rank the broadcast centroid frame for
-    * their top-nProbe cells; the candidate join is an equi-join on
-    * cellId, so a cellId-bucketed corpus satisfies it from the scan's
-    * own distribution — the corpus is never re-shuffled per probe batch
-    * (ScaleSpec proves this on a bucketed table). Returns the same
-    * (qid, nid, cellId, cosine, rank) shape as [[ivfSearch]]. */
-  def ivfProbe(celled: DataFrame, centroids: DataFrame, queries: DataFrame,
-               nProbe: Int, k: Int): DataFrame = {
-    val cn = centroids.withColumn("cnrm", centroidNorm(col("cv")))
-    val probes = queries
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        norm(col("embedding")).as("qn"))
-      .crossJoin(broadcast(cn))
-      .withColumn("cellCos", dot(col("qv"), col("cv")) / (col("qn") * col("cnrm")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cellCos").desc, col("cellId"))))
-      .filter(col("__rn") <= nProbe)
-      .select(col("qid"), col("qv"), col("qn"), col("cellId"))
-    scoreCells(probes, celled, k)
-  }
-
   /** IVF search: top-k neighbors for `queryPred` vectors probing the
     * query's own cell plus the next (nProbe-1) best cells. `iters` > 0
     * trains the coarse quantizer with that many Lloyd rounds first
@@ -573,8 +549,7 @@ object Vectors {
     * per-batch distance table is tiny (nq·m·kCode rows) and broadcast,
     * so a probe is ONE linear scan of the codes table with
     * partial-aggregated SUM — cost independent of dimensionality and of
-    * how many batches came before. `queries` has (vec_id, embedding) —
-    * the same contract as [[ivfProbe]].
+    * how many batches came before. `queries` has (vec_id, embedding).
     * [[pqAdcSearch]] is this probe over freshly built codes. */
   def pqAdcProbe(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
                  dsub: Int, k: Int): DataFrame = {

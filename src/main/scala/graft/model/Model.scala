@@ -54,21 +54,6 @@ object TestdataSchema {
   def apply(name: String): StructType = schemas(name)
 }
 
-/** Version/tombstone algebra
-  * (A/distributed/DistributedDataRepositoryBaseOnTable.java:316-330,438-451):
-  * positive version = live row, negative = tombstone; abs(version) is the
-  * total order used for idempotent latest-wins replay. Pure, property-tested.
-  */
-object Versions {
-  def isLive(v: Long): Boolean = v > 0L
-  def tombstone(v: Long): Long = -math.abs(v)
-  def order(v: Long): Long = math.abs(v)
-  /** Apply `incoming` over `current` iff it is at least as new —
-    * insertDirectly/deleteDirectly replay rule (:438-470). */
-  def wins(current: Long, incoming: Long): Boolean =
-    order(incoming) >= order(current)
-}
-
 /** Datanode id packing: id = ip<<32 | port
   * (A/util/IpAddress.java:111-118, A/datanode/Datanode.java:166-172). */
 object DatanodeId {

@@ -300,9 +300,8 @@ object StateQueries {
         |ORDER BY action""".stripMargin)),
     // D3: the version/tombstone algebra and datanode id bit-packing as
     // data — per-key live/order/tombstone aggregates over the ops feed
-    // (the column forms of Versions.isLive/order/tombstone, whose pure
-    // laws ModelSpec scalachecks), joined to an ip:port <-> id packing
-    // table built through the REAL DatanodeId.pack/ip/port functions
+    // (live = version > 0, order = abs, tombstone = -abs), joined to an
+    // ip:port <-> id packing table built through the REAL DatanodeId.pack/ip/port functions
     // (bounded node dimension, driver-side); the oracle replays the
     // bit math — a packing that dropped or misplaced a field diverges
     GateEntry("d3_version_ids", { (s, dir) =>

@@ -269,7 +269,7 @@ object Mutations {
 
   def rename(file: DataFrame, renames: DataFrame, nowMs: Long,
              versionBump: Long = 1000000000L, maxDepth: Int = 64,
-             dirBroadcastLimit: Long = 2000000L): DataFrame = {
+             dirBroadcastLimit: Long = StateManager.DirMapCap): DataFrame = {
     // maxDepth 64 (vs the BFS ops' 16): the ancestry walk is O(depth)
     // per DESTINATION dir — driver-trivial on the fast path — so the cap
     // exists only to refuse corrupt cycles, and a legal deep namespace
@@ -910,15 +910,120 @@ object Mutations {
     graft.core.Caching.materializeAndRelease(out, Seq(allMembers))
   }
 
+  /** Most sources a mirror-chain batch holds on the driver: the requests
+    * of one moveToTrash batch or the corrupt files of one fsck -move
+    * (sf0.1 has 51,575). A larger set is refused, never cut. */
+  val MirrorSourceCap: Int = 65536
+
+  /** The rows of `sources`, collected once up to `cap`; a larger set
+    * fails with an error naming the cap and `remedy`. */
+  private[graft] def collectSources(sources: DataFrame, remedy: String,
+                                    cap: Int = MirrorSourceCap): Array[Row] = {
+    val rows = sources.limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"more than $cap sources (Mutations.MirrorSourceCap) in one batch: $remedy")
+    rows
+  }
+
+  /** The live dir tree as dirId → absolute path (the root is ""), when it
+    * has at most `cap` dirs; None above it. Dirs to depth 15, so a leaf
+    * appended to a mapped path lands at depth ≤ 16, materializePaths'
+    * bound. A dead root yields the empty map, as materializePaths
+    * resolves nothing then. */
+  private[graft] def dirPaths(file: DataFrame, cap: Long): Option[Map[Long, String]] =
+    StateManager.collectDirChildren(live(file), cap).map { ch =>
+      if (ch.valuesIterator.flatten.exists(_._1 == 0L))
+        StateManager.dirPathPairs(ch, 15).toMap
+      else Map.empty
+    }
+
+  /** A row [[mirrorChains]] creates: a dir (length -1) or a leaf. */
+  private[graft] case class Mirrored(path: String, id: Long, parentId: Long,
+                                     name: String, length: Long)
+
+  /** What [[mirrorChains]] resolved: the sources a FILE row blocks, the
+    * created rows in id order, the id of every chain path of an unblocked
+    * source, and the pre-existing dirs the created rows hang under. */
+  private[graft] case class MirrorChains(blocked: Set[Long], created: Seq[Mirrored],
+                                         idOf: Map[String, Long], reused: Seq[Long])
+
+  /** The mirror-dir batch behind Trash.moveToTrash (:128) and
+    * NamenodeFsck.lostFoundMove (:371): both create their mirror dirs
+    * through the namenode's one mkdirs. `mirrors` gives each source its
+    * mirror dir; the source's chain is every '/'-prefix of that path.
+    * `leaves` (source, path, length) are new rows under a chain (fsck's
+    * chain files), never probed. Each chain path resolves against the
+    * live namespace:
+    *  - a path a live dir holds is that dir — the lowest id when live
+    *    rows share one (parentId, name), so a FILE beside it blocks
+    *    nothing;
+    *  - a path only a FILE holds blocks every source whose chain has it;
+    *  - every other path of an unblocked source is created, together with
+    *    its leaves: ids `idBase + rank` over the created paths in Spark's
+    *    string order, so a parent ranks before its children.
+    * `dirs` is [[dirPaths]]. With the map, dirs answer from it and only
+    * the chain paths no mapped dir holds are probed, as (parentId, name)
+    * pairs; None resolves the chain paths against materializePaths. */
+  private[graft] def mirrorChains(file: DataFrame, dirs: Option[Map[Long, String]],
+                                  mirrors: Seq[(Long, String)],
+                                  leaves: Seq[(Long, String, Long)],
+                                  idBase: Long): MirrorChains = {
+    def parentPath(p: String): String = p.substring(0, p.lastIndexOf('/'))
+    def leaf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
+    val chains = mirrors.map { case (s, m) =>
+      s -> (m.indices.filter(i => i > 0 && m(i) == '/').map(m.substring(0, _)) :+ m)
+    }
+    val needed = chains.flatMap(_._2).distinct
+    // (path, id, is a dir) of every live row holding a needed path
+    val holders: Seq[(String, Long, Boolean)] = if (needed.isEmpty) Nil else dirs match {
+      case Some(pathOf) =>
+        val dirAt = pathOf.groupMapReduce(_._2)(_._1)(math.min)
+        val probe = needed.filterNot(dirAt.contains)
+          .flatMap(p => dirAt.get(parentPath(p)).map(d => (d, leaf(p)) -> p)).toMap
+        val probed =
+          if (probe.isEmpty) Seq.empty
+          else live(file).filter(col("parentId").isin(probe.keys.map(_._1).toSeq.distinct: _*) &&
+              col("name").isin(probe.keys.map(_._2).toSeq.distinct: _*))
+            .select(col("parentId"), col("name"), col("id"), col("length")).collect().toSeq
+            .flatMap(r => probe.get((r.getLong(0), r.getString(1)))
+              .map(p => (p, r.getLong(2), r.getLong(3) == -1L)))
+        needed.flatMap(p => dirAt.get(p).map((p, _, true))) ++ probed
+      case None =>
+        val sp = file.sparkSession
+        import sp.implicits._
+        StateManager.materializePaths(file)
+          .join(broadcast(needed.toDF("__c")), col("path") === col("__c"), "left_semi")
+          .select(col("path"), col("id"), col("length")).collect().toSeq
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2) == -1L))
+    }
+    // path → Some(lowest dir id), or None where only FILE rows hold it
+    val held = holders.groupBy(_._1).map { case (p, hs) =>
+      p -> hs.filter(_._3).map(_._2).minOption
+    }
+    val blocked = chains.collect {
+      case (s, c) if c.exists(p => held.get(p).exists(_.isEmpty)) => s
+    }.toSet
+    val fresh = (chains.filterNot(c => blocked(c._1)).flatMap(_._2).distinct
+        .filterNot(held.contains).map(_ -> -1L) ++
+      leaves.collect { case (s, p, len) if !blocked(s) => p -> len })
+      .sortBy(_._1)(StateManager.SparkStringOrder)
+    val newId = fresh.iterator.zipWithIndex.map { case ((p, _), i) => p -> (idBase + i + 1) }.toMap
+    val idOf = held.collect { case (p, Some(d)) => p -> d } ++ newId
+    val created = fresh.map { case (p, len) =>
+      val pp = parentPath(p)
+      Mirrored(p, newId(p), if (pp.isEmpty) 0L else idOf(pp), leaf(p), len)
+    }
+    MirrorChains(blocked, created, idOf,
+      created.map(_.parentId).distinct.filterNot(newId.values.toSet))
+  }
+
   /** Trash.moveToTrash (fs/Trash.java:103-152 — FsShell delete calls it
     * first when fs.trash.interval > 0): move each live source under
     * `<trash>/Current` at a mirror of its ORIGINAL full path
     * (makeTrashRelativePath :120-121), creating the missing mirror
-    * directories (:128) and suffixing ".j" (j = 1..) when the mirror
-    * name is taken (:142-145). Batch write-set rows:
-    *  - `insert`: created mirror dirs — ids `idBase + rank` over
-    *    lexicographic mirror-path order (a parent path sorts before its
-    *    children), mkdirs attribute conventions;
+    * directories (:128, [[mirrorChains]]) and suffixing ".j" (j = 1..)
+    * when the mirror name is taken (:142-145). Batch write-set rows:
+    *  - `insert`: created mirror dirs, mkdirs attribute conventions;
     *  - `move`: one per source — new parentId/name, version bumped;
     *  - `touch`: rename semantics — old parents, pre-existing
     *    destination dirs, and live parents of created dirs;
@@ -928,160 +1033,63 @@ object Mutations {
     *    FILE row.
     * Requests are independent — a nested dir+child batch mirrors each at
     * its pre-move path, where the sequential reference would see the
-    * child's post-move path; don't batch nested requests. The driver
-    * composition is request-batch-bounded (the rename-anchor convention)
-    * and the collision probe reads only destination-dir children whose
-    * names extend a requested base name. */
+    * child's post-move path; don't batch nested requests. The batch is
+    * collected once, up to [[MirrorSourceCap]] requests; paths come from
+    * the driver dir map ([[dirPaths]]), or from materializePaths above
+    * `dirBroadcastLimit` dirs. */
   def moveToTrash(file: DataFrame, ids: DataFrame, idBase: Long, nowMs: Long,
                   trashName: String = ".Trash",
                   versionBump: Long = 1000000000L,
-                  dirBroadcastLimit: Long = 2000000L): DataFrame = {
+                  dirBroadcastLimit: Long = StateManager.DirMapCap): DataFrame = {
     val sp = file.sparkSession
     import sp.implicits._
     val f = live(file)
     val trashRoot = "/" + trashName
     val currentRoot = trashRoot + "/Current"
-    // Path resolution strategy. Fast path (dir tree fits on the driver —
-    // the namenode-memory convention): request paths come from ONE
-    // batch-bounded probe of the file table plus the driver dir map, and
-    // mirror-chain existence is a map lookup for dirs plus one
-    // (parentId, name)-bounded probe for blocking files — the old route
-    // materialized the WHOLE namespace's paths and scanned it three
-    // times for what is usually a handful of ids. The iterative fallback
-    // keeps the whole-namespace probes for trees too big to collect.
-    // depth 15 + the leaf append below = inodes at depth ≤ 16, the SAME
-    // bound the materializePaths fallback answers (dirPathPairs(maxDepth-1)
-    // + one child join) — the two routes must accept identical requests.
-    // A tombstoned root yields the empty map: dirPathPairs would happily
-    // walk children of the dead root, where the fallback resolves nothing.
-    val dirMap = graft.state.StateManager
-      .collectDirChildren(f, dirBroadcastLimit)
-      .map { ch =>
-        if (ch.valuesIterator.flatten.exists(_._1 == 0L))
-          graft.state.StateManager.dirPathPairs(ch, 15).toMap
-        else Map.empty[Long, String]
-      }
-    lazy val pathsFull = graft.state.StateManager.materializePaths(file)
-      .select(col("id").as("__lid"), col("path").as("__path"),
-        col("length").as("__len"))
-    // request rows + live row + original path (batch-bounded collect)
-    val reqRows: Array[(Long, Boolean, Long, String, String)] = dirMap match {
-      case Some(pathOf) =>
-        ids.select(col("id").as("__rid")).distinct()
-          .join(f.select(col("id"), col("parentId").as("__op"), col("name")),
-            col("__rid") === col("id"), "left")
-          .collect().map { r =>
-            val rid = r.getLong(0)
-            if (r.isNullAt(1)) (rid, false, 0L, null: String, null: String)
-            else {
-              val parent = r.getLong(2)
-              val name = if (r.isNullAt(3)) null else r.getString(3)
-              // every inode (dir or file) appends its leaf to the PARENT
-              // dir's mapped path — the same depth bound and null-name
-              // handling as the fallback (a null-named or unrooted row
-              // resolves no path and classifies "no such file"; Scala's
-              // `s + null` would fabricate a "/null" segment and NPE in
-              // the suffix arithmetic below)
-              val path: String =
-                if (rid == 0L) ""
-                else if (name == null) null
-                else pathOf.get(parent).map(_ + "/" + name).orNull
-              (rid, path != null || rid == 0L, parent, name, path)
-            }
-          }
-      case None =>
-        ids.select(col("id").as("__rid")).distinct()
-          .join(f.select(col("id"), col("parentId").as("__op"), col("name")),
-            col("__rid") === col("id"), "left")
-          .join(pathsFull, col("__rid") === col("__lid"), "left")
-          .select(col("__rid"), col("id"), col("__op"), col("name"), col("__path"))
-          .collect().map { r =>
-            val rid = r.getLong(0)
-            if (r.isNullAt(1)) (rid, false, 0L, null: String, null: String)
-            else (rid, !r.isNullAt(4), r.getLong(2), r.getString(3), r.getString(4))
-          }
+    val dirs = dirPaths(file, dirBroadcastLimit)
+    val reqs = ids.select(col("id").as("__rid")).distinct()
+      .join(f.select(col("id"), col("parentId"), col("name")),
+        col("__rid") === col("id"), "left")
+    val withPaths = dirs match {
+      case Some(_) => reqs.withColumn("__path", lit(null).cast("string"))
+      case None => reqs.join(StateManager.materializePaths(file)
+          .select(col("id").as("__lid"), col("path").as("__path")),
+        col("__rid") === col("__lid"), "left").drop("__lid")
     }
     case class Req(rid: Long, oldParent: Long, name: String, ppath: String)
     val rejects = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     val ok = scala.collection.mutable.ArrayBuffer.empty[Req]
-    reqRows.sortBy(_._1).foreach { case (rid, found, parent, name, path) =>
-      if (!found) rejects += ((rid, "no such file"))
-      else if (rid == 0L) rejects += ((rid, "cannot move root to trash"))
-      else {
-        if (path == trashRoot || path.startsWith(trashRoot + "/"))
+    collectSources(withPaths.select(col("__rid"), col("id"), col("parentId"),
+        col("name"), col("__path")), "trash a smaller batch")
+      .sortBy(_.getLong(0)).foreach { r =>
+        val rid = r.getLong(0)
+        val name = r.getString(3)
+        // every inode appends its leaf to the PARENT dir's mapped path; a
+        // null-named or unrooted row resolves no path ("no such file")
+        val path: String =
+          if (r.isNullAt(1)) null
+          else dirs match {
+            case Some(pathOf) =>
+              if (rid == 0L) ""
+              else if (name == null) null
+              else pathOf.get(r.getLong(2)).map(_ + "/" + name).orNull
+            case None => r.getString(4)
+          }
+        if (path == null) rejects += ((rid, "no such file"))
+        else if (rid == 0L) rejects += ((rid, "cannot move root to trash"))
+        else if (path == trashRoot || path.startsWith(trashRoot + "/"))
           rejects += ((rid, "already in trash"))
-        else ok += Req(rid, parent, name,
+        else ok += Req(rid, r.getLong(2), name,
           path.substring(0, path.length - name.length - 1))
       }
-    }
-    // mirror-dir chains: /.Trash, /.Trash/Current, then Current + each
-    // prefix of the source's parent path
-    def chainOf(ppath: String): Seq[String] = {
-      val b = Seq.newBuilder[String]
-      b += trashRoot
-      b += currentRoot
-      var acc = currentRoot
-      ppath.split("/").filter(_.nonEmpty).foreach { c =>
-        acc = acc + "/" + c; b += acc
-      }
-      b.result()
-    }
-    val neededPaths = ok.toSeq.flatMap(r => chainOf(r.ppath)).distinct.sorted
-    val existing: Map[String, (Long, Long)] = if (neededPaths.isEmpty) Map.empty
-      else dirMap match {
-        case Some(pathOf) =>
-          // dirs answer from the driver map; only paths NOT known as dirs
-          // can be blocking FILE rows — probe those via their (parent
-          // dir, leaf) pairs, a needed-set-bounded pushdown scan
-          val revDir = pathOf.collect { case (id, p) if p.nonEmpty => p -> id }
-          val dirHits = neededPaths.flatMap(p => revDir.get(p).map(p -> (_, -1L)))
-          val candidates = neededPaths.filterNot(revDir.contains).flatMap { p =>
-            val cut = p.lastIndexOf('/')
-            val pp = if (cut == 0) "" else p.substring(0, cut)
-            val leaf = p.substring(cut + 1)
-            val pid = if (pp.isEmpty) Some(0L) else revDir.get(pp)
-            pid.map(d => (d, leaf, p))
-          }
-          val fileHits =
-            if (candidates.isEmpty) Seq.empty
-            else {
-              val wanted = candidates.map(c => (c._1, c._2)).toSet
-              val byPair = candidates.map(c => (c._1, c._2) -> c._3).toMap
-              f.filter(col("parentId").isin(candidates.map(_._1).distinct: _*) &&
-                  col("name").isin(candidates.map(_._2).distinct: _*))
-                .select(col("parentId"), col("name"), col("id"), col("length"))
-                .collect()
-                .filter(r => wanted((r.getLong(0), r.getString(1))))
-                .map(r => byPair((r.getLong(0), r.getString(1))) ->
-                  ((r.getLong(2), r.getLong(3))))
-                .toSeq
-            }
-          (dirHits ++ fileHits).toMap
-        case None =>
-          pathsFull.filter(col("__path").isin(neededPaths: _*))
-            .collect().map(r => r.getString(1) -> ((r.getLong(0), r.getLong(2)))).toMap
-      }
-    // a FILE row anywhere on a source's mirror chain blocks that source
-    val blockedPaths = existing.collect { case (p, (_, len)) if len != -1L => p }.toSet
-    val (okClear, blocked) = ok.partition(r => !chainOf(r.ppath).exists(blockedPaths))
+    val destOf: Req => String = r => currentRoot + r.ppath
+    val mc = mirrorChains(file, dirs, ok.toSeq.map(r => r.rid -> destOf(r)), Nil, idBase)
+    val (blocked, okClear) = ok.toSeq.partition(r => mc.blocked(r.rid))
     blocked.foreach(r => rejects += ((r.rid, "trash path blocked by a file")))
-    val missing = okClear.flatMap(r => chainOf(r.ppath)).distinct.sorted
-      .filterNot(existing.contains)
-    val newDirIds: Map[String, Long] =
-      missing.zipWithIndex.map { case (p, i) => p -> (idBase + i + 1) }.toMap
-    def dirId(p: String): Long = existing.get(p).map(_._1).getOrElse(newDirIds(p))
-    def parentPathOf(p: String): String = {
-      val cut = p.lastIndexOf('/'); if (cut == 0) "" else p.substring(0, cut)
-    }
-    def parentIdOf(p: String): Long = {
-      val pp = parentPathOf(p); if (pp.isEmpty) 0L else dirId(pp)
-    }
     // collision probe: live children of PRE-EXISTING destination dirs
     // whose names extend a requested base (new dirs start empty)
-    val destOf: Req => String =
-      r => if (r.ppath.isEmpty) currentRoot else currentRoot + r.ppath
-    val existingDestIds = okClear.toSeq.map(destOf).distinct
-      .flatMap(p => existing.get(p).map(_._1))
+    val createdPaths = mc.created.map(_.path).toSet
+    val existingDestIds = okClear.map(destOf).distinct.filterNot(createdPaths).map(mc.idOf)
     val bases = okClear.map(_.name).distinct
     val taken = scala.collection.mutable.Set.empty[(Long, String)]
     if (existingDestIds.nonEmpty && bases.nonEmpty) {
@@ -1095,37 +1103,27 @@ object Mutations {
     // either (a dir and its own descendant in one batch both claim the
     // dir's mirror name — the sequential reference cannot produce the
     // mix; the batch form resolves it with the same ".j" rule)
-    missing.foreach { p =>
-      taken += ((parentIdOf(p), p.substring(p.lastIndexOf('/') + 1)))
-    }
-    // deterministic in-batch order (dest path, base name, id): each
-    // claimant takes the first free of base, base.1, base.2, ...
-    val moveAssign = okClear.sortBy(r => (destOf(r), r.name, r.rid)).map { r =>
-      val d = dirId(destOf(r))
+    mc.created.foreach(c => taken += ((c.parentId, c.name)))
+    // deterministic in-batch order (dest path, base name, id) in Spark's
+    // string order: each claimant takes the first free of base, base.1, …
+    val moveAssign = okClear.sortBy(r => (destOf(r), r.name, r.rid))(Ordering.Tuple3(
+        StateManager.SparkStringOrder, StateManager.SparkStringOrder, Ordering.Long)).map { r =>
+      val d = mc.idOf(destOf(r))
       var j = 0
       var cand = r.name
       while (taken((d, cand))) { j += 1; cand = r.name + "." + j }
       taken += ((d, cand))
       (r.rid, d, cand, r.oldParent)
-    }.toSeq
-    // write-set assembly — uniform (writeOp, id, parentId, name, length,
-    // mtime, version, reject)
-    val inserts = missing.map { p =>
-      val id = dirId(p)
-      ("insert", id, parentIdOf(p), p.substring(p.lastIndexOf('/') + 1),
-        -1L, nowMs, id, null: String)
-    }.toSeq.toDF("writeOp", "id", "parentId", "name", "length", "mtime",
-      "version", "reject")
+    }
+    val inserts = mc.created.map(c => ("insert", c.id, c.parentId, c.name,
+        -1L, nowMs, c.id, null: String))
+      .toDF("writeOp", "id", "parentId", "name", "length", "mtime", "version", "reject")
     val movedIds = moveAssign.map(_._1).toSet
-    val touchIds = (moveAssign.map(_._4) ++ existingDestIds ++
-        missing.map(parentPathOf).filter(p => p.isEmpty || existing.contains(p))
-          .map(p => if (p.isEmpty) 0L else existing(p)._1))
+    val touchIds = (moveAssign.map(_._4) ++ existingDestIds ++ mc.reused)
       .distinct.filterNot(movedIds)
     // ONE probe of the file table serves both moves and touches: the
-    // batch-bounded (id, op, newParent, newName) frame joins f once, the
-    // checkpointed result feeds both branches — the returned write-set
-    // plan carries no namespace scan (the old shape joined f for moves
-    // and scanned it again for touches)
+    // batch-bounded (id, op, newParent, newName) frame joins f once, and
+    // the returned write-set plan carries no namespace scan
     val probe = (moveAssign.map(m => (m._1, "move", m._2, m._3)) ++
         touchIds.map(t => (t, "touch", 0L, null: String)))
       .toDF("__pid", "__pop", "__np", "__nn")
@@ -1140,13 +1138,10 @@ object Mutations {
       .select(lit("touch").as("writeOp"), col("id"), col("parentId"),
         col("name"), col("length"), lit(nowMs).as("mtime"), col("version"),
         lit(null).cast("string").as("reject"))
-    val rej = rejects.toSeq.map { case (rid, msg) =>
-      ("reject", rid, null.asInstanceOf[java.lang.Long],
-        null: String, null.asInstanceOf[java.lang.Long],
-        null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long], msg)
-    }.toDF("writeOp", "id", "parentId", "name", "length", "mtime",
-      "version", "reject")
-    inserts.unionByName(moves).unionByName(touches).unionByName(rej)
+    val rej = rejects.toSeq.map { case (rid, msg) => ("reject", rid, msg) }
+      .toDF("writeOp", "id", "reject")
+    inserts.unionByName(moves).unionByName(touches)
+      .unionByName(rej, allowMissingColumns = true)
   }
 
   /** FsShell expunge (fs/FsShell.java:1122-1125 → Trash.expunge +

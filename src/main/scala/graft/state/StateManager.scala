@@ -29,6 +29,11 @@ object StateManager {
 
   // ---- S1: path resolution (StateManager.java:681-699) -----------------
 
+  /** Most live dirs the dir-map fast paths collect to the driver
+    * (`dirBroadcastLimit` of resolvePaths, materializePaths, rename,
+    * moveToTrash and Dataflows.contentSummary). */
+  val DirMapCap: Long = 2000000L
+
   /** Collect the live directory tree as a parent → children adjacency
     * when it fits under `limit` rows of driver memory; None above it.
     * The dir subset is tiny relative to files (the reference's namenode
@@ -88,7 +93,7 @@ object StateManager {
     * up in the broadcast dir-path map and resolve the leaf with one join
     * — no per-level walk. Falls back to the per-depth join loop. */
   def resolvePaths(file: DataFrame, paths: DataFrame, maxDepth: Int = 16,
-                   dirBroadcastLimit: Long = 2000000L): DataFrame = {
+                   dirBroadcastLimit: Long = DirMapCap): DataFrame = {
     val fBase = live(file)
     // absolute paths only — a relative path is unresolvable by contract
     // (consistent across the fast and iterative routes)
@@ -245,7 +250,7 @@ object StateManager {
     * every row resolves with ONE broadcast join — no per-level jobs.
     * Larger trees fall back to the iterative per-level join loop. */
   def materializePaths(file: DataFrame, maxDepth: Int = 16,
-                       dirBroadcastLimit: Long = 2000000L): DataFrame = {
+                       dirBroadcastLimit: Long = DirMapCap): DataFrame = {
     val f = live(file)
     collectDirChildren(f, dirBroadcastLimit) match {
       case Some(children) =>
@@ -425,7 +430,7 @@ object StateManager {
 
   /** Driver rows as a local relation: projections and filters over it
     * fold in the optimizer, so collecting them starts no Spark job. */
-  private[state] def localRelation(sp: SparkSession, rows: Array[Row],
+  private[graft] def localRelation(sp: SparkSession, rows: Array[Row],
                                    schema: StructType): DataFrame =
     sp.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 

@@ -322,26 +322,6 @@ class DataflowsSpec extends SparkSpec {
     assert(t1.map(_.id) == t2.map(_.id))
   }
 
-  test("N10: pending replications discount the scheduled work") {
-    val now = 1000000L
-    val dn = Seq(11L, 12L, 13L).map(i => (i, s"dn$i", s"DS-$i", 0L, 0L, 1L << 30, 0L,
-      (1L << 29) + i, now - 1L, 0L, s"/r${i % 2}", "NORMAL", i))
-      .toDF("id", "name", "storageId", "ipcPort", "infoPort", "capacity", "dfsUsed",
-        "remaining", "lastUpdated", "xceiverCount", "location", "adminState", "version")
-    val files = Seq((3L, 100L, 2L, 1L)).toDF("id", "length", "replication", "version")
-    val blocks = Seq((201L, 11L, 3L, 1L), (202L, 12L, 3L, 1L))
-      .toDF("id", "datanodeId", "fileId", "version")
-    // both blocks have 1/2 replicas; 201 already has one replication in
-    // flight → only 202 schedules, and its target avoids the holder
-    val (repl, _) = Dataflows.computeDatanodeWork(blocks, files, dn, now,
-      pending = Map(201L -> 1))
-    val r = rows(repl.select(col("blockId"), col("srcDatanodeId"), col("targetDatanodeIds")))
-    assert(r.map(_.head) == Seq(202L))
-    assert(r.head(1) == 12L) // the copy is sourced from the block's holder
-    val targets = r.head.last.asInstanceOf[scala.collection.Seq[Long]]
-    assert(targets.size == 1 && !targets.contains(12L))
-  }
-
   test("N7: placement respects racks, space and determinism") {
     val nodes = (1 to 6).map(i => Placement.Node(i.toLong, s"/r${i % 2}",
       remaining = 1000000L, xceiverCount = 2, adminState = "NORMAL"))
@@ -414,6 +394,53 @@ class DataflowsSpec extends SparkSpec {
     assert(del.count(r => r.head == "tombstone" && r(1) == "block") == 5
       && del.exists(r => r.head == "tombstone" && r(1) == "file" && r(2) == 2L)
       && del.exists(r => r.head == "touch" && r(2) == 1L))
+  }
+
+  /** fsckMove over /d/f (id 2, parent 1) beside `extra` (id, parentId,
+    * name, length) rows; block i of f sits on `holders(i)`, and holder 99
+    * is dead. Rows are (writeOp, id, parentId, name, length), sorted. */
+  private def fsckMoveOf(holders: Seq[Long],
+                         extra: Seq[(Long, Long, String, Long)] = Nil): Seq[Seq[Any]] = {
+    val files = (Seq((0L, 0L, "", -1L), (1L, 0L, "d", -1L), (2L, 1L, "f", 500L)) ++ extra)
+      .map { case (id, p, n, len) =>
+        (id, p, n, len, 64L, 2L, 0L, 0L, 0L, None: Option[String], 0L, id + 1L)
+      }.toDF("id", "parentId", "name", "length", "blockSize", "replication",
+        "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
+    val blocks = holders.zipWithIndex.map { case (h, i) =>
+      (90L + i, h, 100L + i, 1L, 2L, i.toLong, 20L + i)
+    }.toDF("id", "datanodeId", "length", "generationStamp", "fileId",
+      "fileIndex", "version")
+    val dn = Seq((11L, "/r0", now, 1L), (12L, "/r1", now, 2L), (99L, "/r0", 0L, 3L))
+      .toDF("id", "location", "lastUpdated", "version")
+    rows(Dataflows.fsckMove(files, blocks, dn, now, idBase = 1000L)
+      .filter(col("tbl") === "file")
+      .select(col("writeOp"), col("id"), col("parentId"), col("name"), col("length"))
+      .orderBy(col("writeOp"), col("id")))
+  }
+
+  test("N11 -move: a FILE on the /lost+found chain rejects the source") {
+    assert(fsckMoveOf(Seq(11L, 99L), extra = Seq((50L, 0L, "lost+found", 10L))) ==
+      Seq(Seq("reject", 2L, null, null, null)))
+  }
+
+  test("N11 -move: a pre-existing /lost+found dir is reused and touched") {
+    val mv = fsckMoveOf(Seq(11L, 99L, 12L), extra = Seq((50L, 0L, "lost+found", -1L)))
+    assert(mv.filter(_.head == "insert") == Seq(
+      Seq("insert", 1001L, 50L, "d", -1L),
+      Seq("insert", 1002L, 1001L, "f", -1L),
+      Seq("insert", 1003L, 1002L, "0", 100L),
+      Seq("insert", 1004L, 1002L, "1", 102L)))
+    // the old parent and the reused /lost+found; the root gains no child
+    assert(mv.filter(_.head == "touch").map(_(1)) == Seq(1L, 50L))
+  }
+
+  test("N11 -move: chain files rank with the created dirs, so chain 10 precedes chain 2") {
+    // 21 blocks alternating live/dead: chains 0..10, one live block each
+    val mv = fsckMoveOf((0 until 21).map(i => if (i % 2 == 0) 11L else 99L))
+    val chainFiles = mv.filter(r => r.head == "insert" && r(4) != -1L)
+    assert(chainFiles.map(_(1)) == (1004L to 1014L))
+    assert(chainFiles.map(_(3)) ==
+      Seq("0", "1", "10", "2", "3", "4", "5", "6", "7", "8", "9"))
   }
 
   test("N11: a live null-location node holds live replicas but no rack, as in the oracle") {

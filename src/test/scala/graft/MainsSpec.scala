@@ -97,4 +97,22 @@ class MainsSpec extends AnyFunSuite {
     }
     assert(mustRelease.isEmpty, mustRelease)
   }
+
+  test("every Window.orderBy in main code is an allow-listed window with a named bound") {
+    // (file, enclosing def) → what bounds the one partition the window
+    // sorts; a new site needs a partition key or a row here
+    val allowed = Map(
+      ("StateManager.scala", "liveNodeRacks") ->
+        "distinct live racks, past LiveNodeCap live nodes only",
+      ("Balancer.scala", "packPass") ->
+        "live nodes, cross-rack pass past PairsDriverLimit nodes only",
+      ("Vectors.scala", "pqCodebook") -> "kCode codebook rows")
+    val sites = for {
+      (p, src) <- mainSources
+      code = "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(src, "")
+      m <- "Window\\.orderBy\\(".r.findAllMatchIn(code)
+    } yield (p.getFileName.toString,
+      "def (\\w+)".r.findAllMatchIn(code.substring(0, m.start)).map(_.group(1)).toSeq.last)
+    assert(sites.toSet == allowed.keySet, sites)
+  }
 }

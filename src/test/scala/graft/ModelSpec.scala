@@ -1,48 +1,11 @@
 package graft
 
-import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.{DatanodeId, Versions}
+import graft.model.DatanodeId
 
-/** Property-style tests (seeded samples) for the pure version/tombstone
-  * algebra and id packing (SURVEY §7.4 risk item 5). */
+/** Datanode id packing (SURVEY §7.4 risk item 5). */
 class ModelSpec extends AnyFunSuite {
-
-  private val rnd = new scala.util.Random(42)
-  private def longs(n: Int): Seq[Long] =
-    Seq(1L, -1L, 2L, Long.MaxValue, -Long.MaxValue) ++
-      Seq.fill(n)(rnd.nextLong() match { case Long.MinValue => 7L; case 0 => 7L; case v => v })
-
-  test("tombstone flips to negative and preserves order") {
-    for (v <- longs(200)) {
-      assert(Versions.tombstone(v) <= 0)
-      assert(Versions.order(Versions.tombstone(v)) == Versions.order(v))
-      assert(!Versions.isLive(Versions.tombstone(v)))
-    }
-  }
-
-  test("wins is monotone in abs(version)") {
-    for (a <- longs(50); b <- longs(50).take(20))
-      assert(Versions.wins(a, b) == (math.abs(b) >= math.abs(a)))
-  }
-
-  test("scalacheck properties: version algebra total order") {
-    import org.scalacheck.{Prop, Test => SCTest}
-    val params = SCTest.Parameters.default.withMinSuccessfulTests(500)
-    val prop = Prop.forAll { (a: Long, b: Long) =>
-      (a != Long.MinValue && b != Long.MinValue) ==> {
-        val t = Versions.tombstone(a)
-        (!Versions.isLive(t)) &&
-          (Versions.order(t) == Versions.order(a)) &&
-          (Versions.wins(a, b) == (math.abs(b) >= math.abs(a))) &&
-          // wins is reflexive and total
-          Versions.wins(a, a) && (Versions.wins(a, b) || Versions.wins(b, a))
-      }
-    }
-    val res = SCTest.check(params, prop)
-    assert(res.passed, res.status.toString)
-  }
 
   test("datanode id packs ip<<32|port and round-trips") {
     assert(DatanodeId.pack("10.2.3.4", 50010) ==

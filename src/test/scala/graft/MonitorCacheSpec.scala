@@ -71,31 +71,4 @@ class MonitorCacheSpec extends SparkSpec {
       assert(m.nonEmpty && m.exists(_.head == "count"))
     } finally rec.clear()
   }
-
-  test("N10: one monitor tick yields budgeted replication + invalidation work") {
-    val now = 1000000L
-    val file = Seq(
-      (3L, 2L, "f1", 100L, 64L, 2L, 0L, 0L, 0L, None: Option[String], 0L, 4L),
-      (4L, 2L, "f2", 100L, 64L, 1L, 0L, 0L, 0L, None: Option[String], 0L, 5L),
-    ).toDF("id", "parentId", "name", "length", "blockSize", "replication",
-      "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
-    val block = Seq(
-      (201L, 11L, 40L, 5L, 3L, 1L, 10L),               // under-replicated (expect 2)
-      (202L, 11L, 30L, 5L, 4L, 1L, 11L),               // ok (expect 1)
-      (203L, 11L, 20L, 5L, 4L, 2L, 12L),               // over-replicated (expect 1)
-      (203L, 12L, 20L, 5L, 4L, 2L, 13L),
-    ).toDF("id", "datanodeId", "length", "generationStamp", "fileId", "fileIndex", "version")
-    val dn = Seq(11L, 12L, 13L).map(i => (i, s"dn$i", s"DS-$i", 0L, 0L, 1L << 30, 0L,
-      (1L << 29) + i, now - 1L, 0L, s"/r${i % 2}", "NORMAL", i))
-      .toDF("id", "name", "storageId", "ipcPort", "infoPort", "capacity", "dfsUsed",
-        "remaining", "lastUpdated", "xceiverCount", "location", "adminState", "version")
-
-    val (repl, inval) = Dataflows.computeDatanodeWork(block, file, dn, now)
-    val r = rows(repl.select(col("blockId"), col("priority"), col("targetDatanodeIds")))
-    assert(r.map(_.head) == Seq(201L))
-    val targets = r.head.last.asInstanceOf[scala.collection.Seq[Long]]
-    assert(targets.size == 1 && !targets.contains(11L)) // a NEW node for the replica
-    val iv = rows(inval.select(col("id"), col("datanodeId")))
-    assert(iv.size == 1 && iv.head.head == 203L) // one excess replica dropped
-  }
 }

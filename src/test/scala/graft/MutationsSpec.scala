@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Placement
-import graft.state.Mutations
+import graft.state.{Mutations, StateManager}
 import graft.store.StateStore
 
 /** Write-path semantics: R11-R13 guards, S5 batch mkdirs, S17 upsert,
@@ -489,6 +489,62 @@ class MutationsSpec extends SparkSpec {
         idBase = 300L, nowMs = 777L)
       .select(col("writeOp"), col("id"), col("reject")))
     assert(out == Seq(Seq("reject", 3L, "trash path blocked by a file")))
+  }
+
+  test("moveToTrash: mirror dirs rank in Spark's string order, not UTF-16's") {
+    // U+E000 sorts after a surrogate pair in UTF-16 but before it in UTF-8
+    // bytes (Spark's and DuckDB's order): x\uE000 ranks first
+    val f = Seq(
+      (0L, -1L, "", -1L, 1L),
+      (1L, 0L, "x\uE000", -1L, 2L),
+      (2L, 0L, "x\uD83D\uDE00", -1L, 3L),
+      (3L, 1L, "f", 10L, 4L),
+      (4L, 2L, "g", 10L, 5L),
+    ).toDF("id", "parentId", "name", "length", "version")
+    val ins = rows(Mutations.moveToTrash(f, Seq(3L, 4L).toDF("id"),
+        idBase = 200L, nowMs = 777L)
+      .filter(col("writeOp") === "insert")
+      .select(col("id"), col("parentId"), col("name")).orderBy(col("id")))
+    assert(ins == Seq(Seq(201L, 0L, ".Trash"), Seq(202L, 201L, "Current"),
+      Seq(203L, 202L, "x\uE000"), Seq(204L, 202L, "x\uD83D\uDE00")))
+  }
+
+  test("mirrorChains: the dir-map and materializePaths routes agree; duplicate paths take the lowest dir") {
+    // /m/x is held by two live dirs (2, 3) and a file (4): the chain takes
+    // dir 2 and the file blocks nothing; /m/blk is only a file, so source
+    // 11 is blocked and its leaf dropped; /m/x/deep (6) hangs under dir 2
+    val f = Seq(
+      (0L, -1L, "", -1L, 1L),
+      (1L, 0L, "m", -1L, 2L),
+      (2L, 1L, "x", -1L, 3L),
+      (3L, 1L, "x", -1L, 4L),
+      (4L, 1L, "x", 9L, 5L),
+      (5L, 1L, "blk", 9L, 6L),
+      (6L, 2L, "deep", -1L, 7L),
+    ).toDF("id", "parentId", "name", "length", "version")
+    val mirrors = Seq(10L -> "/m/x/new", 11L -> "/m/blk/q", 12L -> "/m/x/deep/z")
+    val leaves = Seq((10L, "/m/x/new/0", 5L), (11L, "/m/blk/q/0", 7L))
+    def chains(dirs: Option[Map[Long, String]]) =
+      Mutations.mirrorChains(f, dirs, mirrors, leaves, idBase = 100L)
+    val viaMap = chains(Mutations.dirPaths(f, StateManager.DirMapCap))
+    assert(Mutations.dirPaths(f, 0L).isEmpty)
+    assert(viaMap == chains(None))
+    assert(viaMap.blocked == Set(11L))
+    assert(viaMap.created == Seq(
+      Mutations.Mirrored("/m/x/deep/z", 101L, 6L, "z", -1L),
+      Mutations.Mirrored("/m/x/new", 102L, 2L, "new", -1L),
+      Mutations.Mirrored("/m/x/new/0", 103L, 102L, "0", 5L)))
+    assert(viaMap.idOf("/m/x") == 2L && viaMap.reused == Seq(6L, 2L))
+  }
+
+  test("collectSources: a source set over the cap is refused with the cap and the remedy") {
+    val three = Seq(1L, 2L, 3L).toDF("id")
+    assert(Mutations.collectSources(three, "narrow it", cap = 3).length == 3)
+    val e = intercept[IllegalArgumentException] {
+      Mutations.collectSources(three, "narrow it", cap = 2)
+    }
+    assert(e.getMessage.contains("Mutations.MirrorSourceCap") &&
+      e.getMessage.contains("narrow it"))
   }
 
   test("decommission lifecycle: start/stop/check transition matrix") {

@@ -51,7 +51,7 @@ class ScaleSpec extends SparkSpec {
 
   test("term-bucketed posting index: the BM25 serve join re-shuffles only the query melt") {
     // the bm25Index scaladoc's own advice, pinned: bucketing the
-    // standing index by term (Scale.writePostingIndex) drops the
+    // standing index by term (Scale.writeBucketed on term) drops the
     // index-side exchange from the serve join — per query batch only
     // the batch's melt repartitions on term. Unbucketed, BOTH sides
     // exchange on term (the baseline asserted below), and at corpus
@@ -62,7 +62,7 @@ class ScaleSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val idx = TextFunctions.bm25Index(corpus, "doc_id", "text",
       maxDfPpm = 1000000L)
-    Scale.writePostingIndex(idx, prefix = "graft_spec_bm25", buckets = 4)
+    Scale.writeBucketed(idx, "graft_spec_bm25_bm25_index", "term", buckets = 4)
     val queries = Seq((1000L, "w3 w7 x2"), (1001L, "w12 w1 x5"))
       .toDF("doc_id", "text")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -426,40 +426,6 @@ class ScaleSpec extends SparkSpec {
     assert(app.count() == store.count() + delta.count())
   }
 
-  test("writePostingIndex warns when the hottest surviving posting list exceeds warnHotPpm") {
-    import graft.functions.TextFunctions
-    // 'hot' sits in 4/10 docs (400000 ppm: SURVIVES the 500000 elision
-    // bar, breaches the 10% hot-list default) — the eager build path
-    // must say so; a unique-term corpus must stay quiet
-    val hotCorpus = ((1 to 4).map(i => (i.toLong, s"hot u$i")) ++
-      (5 to 10).map(i => (i.toLong, s"v$i w$i"))).toDF("doc_id", "text")
-    def captureErr(body: => Unit): String = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val old = System.err
-      System.setErr(new java.io.PrintStream(buf, true))
-      try body finally System.setErr(old)
-      buf.toString
-    }
-    val warned = captureErr {
-      graft.core.Scale.writePostingIndex(
-        TextFunctions.bm25Index(hotCorpus, "doc_id", "text"),
-        prefix = "graft_hotwarn")
-    }
-    assert(warned.contains("WARN") && warned.contains("hottest posting list"),
-      s"hot list must warn at build time, got: $warned")
-    // truncation bounds the actual list — the SAME corpus served through
-    // maxPostings=1 must build quietly (df stays the true stat; the
-    // warning reads rows per term, the real candidate-generation cost)
-    val quiet = captureErr {
-      graft.core.Scale.writePostingIndex(
-        TextFunctions.bm25IndexFrom(
-          TextFunctions.bm25Postings(hotCorpus, "doc_id", "text"),
-          maxDfPpm = 500000L, maxPostings = 1L),
-        prefix = "graft_hotwarn2")
-    }
-    assert(!quiet.contains("WARN"), s"truncated build must not warn: $quiet")
-  }
-
   test("stats store: write/fold/read roundtrip serves == rebuild; folds are per-version idempotent; orphaned stages never read") {
     import graft.core.Scale
     import graft.functions.TextFunctions
@@ -760,38 +726,6 @@ class ScaleSpec extends SparkSpec {
     val reused = "ReusedExchange".r.findAllIn(plan).size
     assert(reused >= 2, s"expected >=2 ReusedExchange in the executed plan, got $reused:\n" +
       plan.linesIterator.take(40).mkString("\n"))
-  }
-
-  test("IVF probe over a cellId-bucketed celled corpus never re-shuffles the corpus") {
-    import graft.functions.Vectors
-    // build once: trained centroids + cell assignment, stored bucketed by
-    // cellId — the production layout the ivfProbe docstring names
-    val emb = (0 until 64).map { i =>
-      val v = Array.fill(8)(0.1f * ((i * 3 + 1) % 7)); v(i % 4) = 1.5f
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    val cents = Vectors.kmeansCentroids(emb, 4, 2)
-    Scale.writeBucketed(Vectors.withIvfCell(emb, cents), "graft_bucketed_cells",
-      "cellId", buckets = 4)
-    val celled = spark.table("graft_bucketed_cells")
-    // probe WITHOUT broadcast (hint the shuffle path): the bucketed corpus
-    // side must satisfy the cellId join from its scan distribution
-    val queries = emb.filter(col("vec_id") % 16 === 0)
-    val out = Vectors.ivfProbe(celled.hint("shuffle_hash"), cents, queries,
-      nProbe = 2, k = 3)
-    assert(out.count() > 0)
-    val plan = out.queryExecution.executedPlan.toString
-    // exactly the probe side may exchange on cellId; the corpus scan must not
-    val corpusExchanges = plan.linesIterator
-      .filter(_.contains("Exchange hashpartitioning(cellId"))
-      .size
-    assert(corpusExchanges <= 1,
-      s"bucketed corpus must not re-shuffle on cellId (probe side only):\n$plan")
-    // parity: prebuilt probe == the one-shot ivfSearch on the same centroids
-    val oneShot = Vectors.ivfSearch(emb, 4, 2, col("vec_id") % 16 === 0, 3, iters = 2)
-      .select("qid", "nid", "rank").collect().map(_.toSeq).toSet
-    val preBuilt = out.select("qid", "nid", "rank").collect().map(_.toSeq).toSet
-    assert(preBuilt == oneShot, "prebuilt probe must equal one-shot search")
   }
 
   test("PQ probe over a prebuilt codes table equals the one-shot search") {

@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.streaming.Changefeed
 import graft.streaming.Changefeed.{KeyState, Op}
@@ -14,13 +14,24 @@ import graft.streaming.Changefeed.{KeyState, Op}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  private val sinks = scala.collection.mutable.ArrayBuffer.empty[String]
+
+  /** Run `body` over `stream` writing (Update mode) into a memory sink
+    * named for this call; the query stops and the sink's view is dropped
+    * after it, so no two tests share a sink and none outlives its test. */
+  private def withMemorySink[T](stream: Dataset[_])(body: (StreamingQuery, String) => T): T = {
+    val sink = s"streaming_spec_sink_${sinks.size}"
+    sinks += sink
+    val q = stream.writeStream.format("memory").queryName(sink)
+      .outputMode(OutputMode.Update).start()
+    try body(q, sink)
+    finally { q.stop(); spark.catalog.dropTempView(sink) }
+  }
+
   test("changefeed: out-of-order and duplicate versions resolve latest-wins") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Op]
-    val q = Changefeed.applyOps(spark, mem.toDS())
-      .writeStream.format("memory").queryName("kvstate")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.applyOps(spark, mem.toDS())) { (q, sink) =>
       mem.addData(Op(1L, "INSERT", 10L, 1L), Op(2L, "INSERT", 20L, 2L))
       q.processAllAvailable()
       // late arrival (version 1 dup), newer update, tombstone for key 2
@@ -30,11 +41,11 @@ class StreamingSpec extends SparkSpec {
       // stale ops must NOT regress the state
       mem.addData(Op(1L, "UPDATE", 99L, 3L), Op(2L, "INSERT", 21L, 4L))
       q.processAllAvailable()
-      val last = spark.table("kvstate").as[KeyState].collect()
+      val last = spark.table(sink).as[KeyState].collect()
         .groupBy(_.key).map { case (k, vs) => k -> vs.maxBy(s => math.abs(s.version)) }
       assert(last(1L) == KeyState(1L, 11L, 5L, live = true))
       assert(last(2L) == KeyState(2L, 20L, -7L, live = false))
-    } finally q.stop()
+    }
   }
 
   test("streamingBm25Ingest: per-trigger delta append; cross-trigger replay is a no-op") {
@@ -512,21 +523,18 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.Changefeed.{AsofEvent, AsofMatch}
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[AsofEvent]
-    val q = Changefeed.streamingAsof(mem.toDS())
-      .writeStream.format("memory").queryName("asof_late_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingAsof(mem.toDS())) { (q, sink) =>
       mem.addData(AsofEvent(1L, 100L, 0, 0L, 5.0)); q.processAllAvailable()
       // batch 2 delivers an OLDER quote (contract violation) + a probe:
       // the probe must still see the ts=100 quote, not the stale ts=50
       mem.addData(AsofEvent(1L, 50L, 0, 0L, 9.0),
         AsofEvent(1L, 200L, 1, 42L, 0.0))
       q.processAllAvailable()
-      val m = spark.table("asof_late_out").as[AsofMatch].collect()
+      val m = spark.table(sink).as[AsofMatch].collect()
         .find(_.id == 42L).get
       assert(m.matchedTs.contains(100L) && m.value.contains(5.0),
         s"late quote rolled the state back: $m")
-    } finally q.stop()
+    }
   }
 
   test("streamed range join attributes each batch against standing windows") {
@@ -578,15 +586,12 @@ class StreamingSpec extends SparkSpec {
       (u * 1000000L + i * 600L + (i / 4L) * 2700L) * 1000000000L
     val evs = for { u <- 1L to 6L; i <- 0L until 10L } yield SessEvent(u, ts(u, i))
     val mem = MemoryStream[SessEvent]
-    val q = Changefeed.streamingSessionize(mem.toDS())
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingSessionize(mem.toDS())) { (q, sink) =>
       Seq(0L until 2L, 2L until 6L, 6L until 10L).foreach { r =>
         mem.addData((for { u <- 1L to 6L; i <- r } yield SessEvent(u, ts(u, i))): _*)
         q.processAllAvailable()
       }
-      val finalStates = spark.table("sess_out").as[SessCount].collect()
+      val finalStates = spark.table(sink).as[SessCount].collect()
         .groupBy(_.user_id).map { case (_, rs) => rs.maxBy(_.events) }
       // batch truth: the e1 window-lag sessionization on the same events
       val base = evs.toDF()
@@ -604,7 +609,7 @@ class StreamingSpec extends SparkSpec {
           s"user ${st.user_id}: streamed (${st.events},${st.sessions}) vs batch ${batch(st.user_id)}")
       }
       assert(finalStates.forall(_.sessions == 3L))
-    } finally q.stop()
+    }
   }
 
   test("streamed as-of join: batch parity, latest quote carries across batches") {
@@ -618,10 +623,7 @@ class StreamingSpec extends SparkSpec {
     val all = for { k <- 1L to 4L; i <- 0L until 6L; e <- Seq(quote(k, i), probe(k, i)) } yield e
     val early = (1L to 4L).map(k => AsofEvent(k, -5L, 1, k * 1000L + 999L, 0.0))
     val mem = MemoryStream[AsofEvent]
-    val q = Changefeed.streamingAsof(mem.toDS())
-      .writeStream.format("memory").queryName("asof_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingAsof(mem.toDS())) { (q, sink) =>
       // batch 1: the early unmatched probes + i ∈ [0, 2); batch 2: [2, 4);
       // batch 3: [4, 6) — every split lands between a quote and probes
       // that still need it
@@ -631,7 +633,7 @@ class StreamingSpec extends SparkSpec {
         mem.addData(batch: _*)
         q.processAllAvailable()
       }
-      val streamed = spark.table("asof_out").as[AsofMatch].collect()
+      val streamed = spark.table(sink).as[AsofMatch].collect()
         .map(m => m.id -> ((m.matchedTs, m.value))).toMap
       // batch truth: Events.asofJoin over the same rows as DataFrames
       val quotes = (all).filter(_.side == 0)
@@ -647,7 +649,7 @@ class StreamingSpec extends SparkSpec {
         assert(mts == Option(r(1)) && v == Option(r(2)),
           s"probe ${r.head}: streamed ($mts,$v) vs batch (${r(1)},${r(2)})")
       }
-    } finally q.stop()
+    }
   }
 
   test("streamed budgeted mix: batch-1 parity, quota persists across batches") {
@@ -663,13 +665,10 @@ class StreamingSpec extends SparkSpec {
       .map(r => MixDoc(r(0).asInstanceOf[Long], r(1).asInstanceOf[String],
         r(2).asInstanceOf[Long], r(3).asInstanceOf[Long], r(4).asInstanceOf[Long]))
     val mem = MemoryStream[MixDoc]
-    val q = Changefeed.streamingBudgetedMix(mem.toDS(), budgets, nShards = 4)
-      .writeStream.format("memory").queryName("mix_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingBudgetedMix(mem.toDS(), budgets, nShards = 4)) { (q, sink) =>
       mem.addData(docs: _*)
       q.processAllAvailable()
-      val streamed = spark.table("mix_out").as[MixAdmit].collect()
+      val streamed = spark.table(sink).as[MixAdmit].collect()
         .filter(_.keep).map(_.id).toSet
       // one batch holding the whole corpus = the batch op exactly
       val batchKept = rows(Shuffles.budgetedMix(base, "doc_id", "src", "tok",
@@ -682,10 +681,10 @@ class StreamingSpec extends SparkSpec {
       mem.addData(MixDoc(1001L, "a", 10L, 0L, 0L), MixDoc(1002L, "b", 10L, 0L, 1L),
         MixDoc(1003L, "c", 10L, 0L, 2L))
       q.processAllAvailable()
-      val late = spark.table("mix_out").as[MixAdmit].collect()
+      val late = spark.table(sink).as[MixAdmit].collect()
         .filter(a => a.id >= 1001L)
       assert(late.length == 3 && late.forall(!_.keep))
-    } finally q.stop()
+    }
   }
 
   test("streamed temperature mix: group-whole batch split reproduces temperatureMixAlpha") {
@@ -703,11 +702,8 @@ class StreamingSpec extends SparkSpec {
         r(2).asInstanceOf[Long], r(3).asInstanceOf[Long], r(4).asInstanceOf[Long]))
     val totals = docs.groupBy(_.src).map { case (s, ds) => s -> ds.map(_.tok).sum }
     val mem = MemoryStream[MixDoc]
-    val q = Changefeed.streamingTemperatureMix(mem.toDS(), totals,
-        totalBudget = 900L, nShards = 3, p = 3, q = 10)
-      .writeStream.format("memory").queryName("tmix_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingTemperatureMix(mem.toDS(), totals,
+        totalBudget = 900L, nShards = 3, p = 3, q = 10)) { (q, sink) =>
       // MULTI-batch feed split along (src, shard) group boundaries — each
       // ledger group arrives whole, in three separate triggers
       val groups = docs.groupBy(d => (d.src, d.shard)).values.toSeq
@@ -716,7 +712,7 @@ class StreamingSpec extends SparkSpec {
         if (i % 2 == 1) q.processAllAvailable()
       }
       q.processAllAvailable()
-      val streamed = spark.table("tmix_out").as[MixAdmit].collect()
+      val streamed = spark.table(sink).as[MixAdmit].collect()
         .filter(_.keep).map(_.id).toSet
       val batchKept = rows(Shuffles.temperatureMixAlpha(base, "doc_id", "src",
           "tok", totalBudget = 900L, nShards = 3, p = 3, q = 10, salt = "tmix0")
@@ -725,10 +721,10 @@ class StreamingSpec extends SparkSpec {
       assert(streamed == batchKept && streamed.nonEmpty,
         s"streamed ${streamed.size} vs batch ${batchKept.size}")
       // both sources admit: the α-budget keeps the small source alive
-      val srcs = spark.table("tmix_out").as[MixAdmit].collect()
+      val srcs = spark.table(sink).as[MixAdmit].collect()
         .filter(_.keep).map(_.src).toSet
       assert(srcs == Set("big", "small"))
-    } finally q.stop()
+    }
   }
 
   test("streamed epoch mix: whole epochs are arithmetic, remainder rides the ledger — batch parity") {
@@ -746,15 +742,12 @@ class StreamingSpec extends SparkSpec {
         r(2).asInstanceOf[Long], r(3).asInstanceOf[Long], r(4).asInstanceOf[Long]))
     val totals = docs.groupBy(_.src).map { case (s, ds) => s -> ds.map(_.tok).sum }
     val mem = MemoryStream[MixDoc]
-    val q = Changefeed.streamingEpochMix(mem.toDS(), totals, budgets, nShards = 2)
-      .writeStream.format("memory").queryName("emix_out")
-      .outputMode(OutputMode.Update).start()
-    try {
+    withMemorySink(Changefeed.streamingEpochMix(mem.toDS(), totals, budgets, nShards = 2)) { (q, sink) =>
       // two triggers, split on a (src, shard) group boundary
       val (g1, g2) = docs.partition(d => d.src == "a")
       mem.addData(g1: _*); q.processAllAvailable()
       mem.addData(g2: _*); q.processAllAvailable()
-      val streamed = spark.table("emix_out").as[EpochAdmit].collect()
+      val streamed = spark.table(sink).as[EpochAdmit].collect()
       val batch = rows(Shuffles.epochMix(base, "doc_id", "src", "tok",
           budgets, nShards = 2)
         .select(col("doc_id"), col("keep"), col("fullEpochs"), col("totalEpochs")))
@@ -768,7 +761,7 @@ class StreamingSpec extends SparkSpec {
           s"doc ${a.id}: streamed (${a.keep},${a.fullEpochs},${a.totalEpochs}) vs batch ($k,$fe,$te)")
       }
       assert(streamed.filter(_.src == "a").forall(_.fullEpochs == 2L))
-    } finally q.stop()
+    }
   }
 
   test("streamed budgeted mix: spent quota survives a kill-and-resume") {
@@ -934,5 +927,9 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains(s"$dir/events.parquet"), e.getMessage)
     assert(spark.streams.active.isEmpty)
+  }
+
+  test("no memory sink outlives its test") {
+    assert(sinks.filter(spark.catalog.tableExists).isEmpty, sinks)
   }
 }
