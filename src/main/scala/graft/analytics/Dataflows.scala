@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -408,24 +408,28 @@ object Dataflows {
   /** Live-node → dense INT rack-id dimension + the cluster rack count.
     * Rack STRINGS must not ride the per-block shuffle — 6M '/rackN'
     * payloads through the aggregation measured 2× the whole query — so
-    * the block side joins the broadcast dimension for two ints. The rack
-    * count comes back as a plan-time LITERAL (a 1-row crossJoin would sit
-    * as a BroadcastNestedLoopJoin between the file⋈block join and the
-    * per-file aggregation, breaking their codegen fusion). A null-location
-    * node keeps a null rack: its replicas are live but span no rack. */
+    * the block side joins the broadcast dimension for two ints (the
+    * string stays in the dimension for fsckBlocks' -racks surface). The
+    * rack count comes back as a plan-time LITERAL (a 1-row crossJoin
+    * would sit as a BroadcastNestedLoopJoin between the file⋈block join
+    * and the per-file aggregation, breaking their codegen fusion). A
+    * null-location node keeps a null rack: its replicas are live but
+    * span no rack. */
   private def nodeRackDim(datanode: DataFrame, nowMs: Long): (DataFrame, Long) = {
     val (nodes, clusterRacks) = StateManager.liveNodeRacks(datanode, nowMs)
-    (nodes.select(col("id").as("__nid"), col("rack").as("__rid")), clusterRacks)
+    (nodes.select(col("id").as("__nid"), col("rack").as("__rid"),
+      col("location").as("__rack")), clusterRacks)
   }
 
-  /** Per-block liveness/rack-spread/length off ONE block scan: live
-    * replica count, min/max rack ordinal (the placement rule only asks
-    * "≥ 2 racks?", so min/max replaces a countDistinct that would force
-    * the expand plan), and max stored length. Length is max-stored, not
-    * the BlockEntry argmax: it is only reported for MISSING blocks,
-    * whose rows are all dead replicas — no live primary exists to rank
-    * by (genStamp, version), and max is the conservative lost-bytes
-    * bound (an argmax struct here measured ~2/3 of the whole query).
+  /** Per-block liveness/rack-spread/length off ONE scan of `blocks` (live
+    * rows): live replica count, min/max rack ordinal (the placement rule
+    * only asks "≥ 2 racks?", so min/max replaces a countDistinct that
+    * would force the expand plan), max stored length, then `extra`
+    * aggregates. Length is max-stored, not the BlockEntry argmax: it is
+    * only reported for MISSING blocks, whose rows are all dead replicas —
+    * no live primary exists to rank by (genStamp, version), and max is
+    * the conservative lost-bytes bound (an argmax struct here measured
+    * ~2/3 of the whole query).
     *
     * Deliberately NOT pre-partitioned by fileId: a repartition(fileId)
     * here would let one hash exchange serve both the (id, fileId)
@@ -436,34 +440,92 @@ object Dataflows {
     * bench A/B read 5.0-6.1 s vs 1.3-2.0 s for this plan in a warm
     * session — the two-exchange plan AQE manages beats the one-exchange
     * plan it can't touch (round-12 measurement). */
-  private def fsckPerBlock(block: DataFrame, dim: DataFrame): DataFrame =
-    live(block)
+  private def fsckPerBlock(blocks: DataFrame, dim: DataFrame, extra: Column*): DataFrame =
+    blocks
       .join(broadcast(dim), col("datanodeId") === col("__nid"), "left")
       .groupBy(col("id").as("blockId"), col("fileId").as("__bfid"))
-      .agg(count(col("__nid")).as("__live"),
-        min(col("__rid")).as("__rkMin"),
+      .agg(count(col("__nid")).as("__live"), Seq(min(col("__rid")).as("__rkMin"),
         max(col("__rid")).as("__rkMax"),
-        max(greatest(col("length"), lit(0L))).as("__blockLen"))
+        max(greatest(col("length"), lit(0L))).as("__blockLen")) ++ extra: _*)
 
-  /** Whole-namespace health report — the full Result field set
+  /** THE block finding ladder of NamenodeFsck.check, one definition for
+    * every mode, over fsckPerBlock's `__live`/`__rkMin`/`__rkMax` and the
+    * file's `replication`, against the live-datanode set:
+    *  - missing: no holder is live (:305-312; locs.length == 0);
+    *  - under-replicated: 0 < live < target (:272-283);
+    *  - over-replicated: live > target (:264-267);
+    *  - mis-replicated: live replicas span fewer than
+    *    min(2, replication, clusterRacks) racks while the cluster has
+    *    more than one rack (:285-299, ReplicationTargetChooser
+    *    .verifyBlockPlacement :431-461). Given clusterRacks > 1 that is
+    *    repl ≥ 2 with at most one rack (min/max equal or both null), or
+    *    repl = 1 with no racked live replica (a live replica on a
+    *    null-location node spans no rack), never repl ≤ 0; a missing
+    *    block counts too, its rack set is empty. */
+  private def fsckLadder(clusterRacks: Long): (Column, Column, Column, Column) = {
+    val (reps, repl, rkMin) = (col("__live"), col("replication"), col("__rkMin"))
+    (reps === 0, reps > 0 && reps < repl, reps > repl,
+      lit(clusterRacks > 1) && ((repl >= 2 && (rkMin.isNull || rkMin === col("__rkMax"))) ||
+        (repl === 1 && rkMin.isNull)))
+  }
+
+  /** Normalize a user path scope: strip ALL trailing slashes (stored
+    * paths carry none — "/n_7//" must scope like "/n_7", never silently
+    * match nothing), keeping "/" for the root. */
+  private def normScope(p: String): String = {
+    val t = p.replaceAll("/+$", "")
+    if (t.isEmpty) "/" else t
+  }
+
+  private def scopeFilter(pathCol: Column, prefix: String): Column =
+    if (prefix == "/") lit(true)
+    else pathCol === prefix || pathCol.startsWith(prefix + "/")
+
+  /** fsck's walk from `pathPrefix` (NamenodeFsck.fsck :149-170 — every
+    * mode checks only the requested subtree): the live rows passing
+    * `keep` at or under the prefix, with their `path`, plus the live
+    * block rows of those files. A scope other than "/" makes the file
+    * side subtree-sized: it is pinned (it feeds the key collect and the
+    * caller's join; re-deriving would re-walk materializePaths), its ids
+    * push into the block scan as an IN predicate (Scale.keyPrune —
+    * row-group/bucket pruning, never a filter after the whole scan), and
+    * `pinned` lets the caller broadcast it into its join. "/" keeps the
+    * whole namespace, where neither a key list nor a broadcast could be
+    * assumed to fit. */
+  private def fsckScope(file: DataFrame, block: DataFrame, pathPrefix: String,
+                        keep: Column): (DataFrame, DataFrame, Boolean) = {
+    val prefix = normScope(pathPrefix)
+    val files = StateManager.materializePaths(file)
+      .filter(keep && scopeFilter(col("path"), prefix))
+    if (prefix == "/") (files, live(block), false)
+    else {
+      val pinned = files.localCheckpoint()
+      (pinned, graft.core.Scale.keyPrune(live(block), "fileId", pinned, "id"), true)
+    }
+  }
+
+  private val checkedFile = col("length") =!= -1L && col("leaseHolder").isNull
+
+  /** Health report from `pathPrefix` — the full Result field set
     * (NamenodeFsck.Result :556-640) as ONE row. Faithful to the default
     * walk: OPEN files are skipped before any check (:227-233) and
     * surface only as the totalOpenFiles/Blocks/Size triple (Result
     * prints them apart from the validated totals, :605-621); dirs count
-    * every live directory the walk visits, root included (:199). Per
-    * CLOSED-file block, against the live-datanode set: missing (no live
-    * holder, :305-312, with its bytes → missingSize), under/over vs the
-    * file's target (:264-283), minimally-replicated (≥ minReplication,
-    * :269-270), mis-replicated (the min(2, repl, clusterRacks) placement
-    * rule, :285-299). corruptFiles counts files with ≥1 missing block
-    * (:327-331); avgReplication is getReplicationFactor :598-602 (0.0
-    * on an empty namespace). totalSize sums the files' namespace
-    * lengths (file.getLen, :234), not block bytes. */
+    * every live directory the walk visits, its start included (:199 —
+    * the root at "/"). Per CLOSED-file block, [[fsckLadder]]'s findings
+    * plus minimally-replicated (≥ minReplication, :269-270); a missing
+    * block's bytes → missingSize. corruptFiles counts files with ≥1
+    * missing block (:327-331); avgReplication is getReplicationFactor
+    * :598-602 (0.0 on an empty namespace). totalSize sums the files'
+    * namespace lengths (file.getLen, :234), not block bytes. At "/" no
+    * path is built and nothing is pinned. */
   def fsck(file: DataFrame, block: DataFrame, datanode: DataFrame, nowMs: Long,
-           minReplication: Int = 1): DataFrame = {
-    val files = live(file)
+           minReplication: Int = 1, pathPrefix: String = "/"): DataFrame = {
+    val (files, blocks, _) =
+      if (normScope(pathPrefix) == "/") (live(file), live(block), false)
+      else fsckScope(file, block, pathPrefix, lit(true))
     val (dim, clusterRacks) = nodeRackDim(datanode, nowMs)
-    val perBlock = fsckPerBlock(block, dim)
+    val perBlock = fsckPerBlock(blocks, dim)
     // ONE scan of the file table: rows are status-tagged and every
     // Result field routes off the status in the final aggregation.
     // Separate dir/open/openBlocks branches would re-derive the file and
@@ -475,213 +537,146 @@ object Dataflows {
           .otherwise("closed"))
       .select(col("id").as("__fid"), col("replication"),
         col("length").as("__flen"), col("__status"))
-    val hasB = col("blockId").isNotNull
     val isClosed = col("__status") === "closed"
-    // numRacks < min(2, repl, clusterRacks) given clusterRacks > 1 ⟺
-    //   repl ≥ 2: block spans ≤ 1 rack (min/max equal or both null)
-    //   repl = 1: no live replica on a rack (numRacks = 0; a live
-    //             replica on a null-location node spans no rack)
-    //   repl ≤ 0: never (minRacks = 0)
-    val spans1 = col("__rkMin").isNull || col("__rkMin") === col("__rkMax")
+    val checked = isClosed && col("blockId").isNotNull
+    val (missing, under, over, misRep) = fsckLadder(clusterRacks)
+    def flag(c: Column) = when(checked && c, 1L).otherwise(0L)
     // shuffle_hash, not sort-merge: both sides partition on the file id
     // (no broadcast — perBlock is block-dimension-sized and would OOM a
     // 100 TB driver; the old plan only broadcast it through a local-mode
     // size underestimate), and hashing skips SMJ's two sorts
     val perFile = fAll
       .join(perBlock.hint("shuffle_hash"), col("__fid") === col("__bfid"), "left")
-      .withColumn("__missing",
-        when(isClosed && hasB && col("__live") === 0, 1L).otherwise(0L))
-      .withColumn("__missSize", when(isClosed && hasB && col("__live") === 0,
-        col("__blockLen")).otherwise(0L))
-      .withColumn("__under", when(isClosed && col("__live") > 0 &&
-        col("__live") < col("replication"), 1L).otherwise(0L))
-      .withColumn("__over",
-        when(isClosed && col("__live") > col("replication"), 1L).otherwise(0L))
-      .withColumn("__minR",
-        when(isClosed && col("__live") >= minReplication, 1L).otherwise(0L))
-      .withColumn("__misR", when(isClosed && lit(clusterRacks) > 1 && hasB &&
-        ((col("replication") >= 2 && spans1) ||
-         (col("replication") === 1 && col("__rkMin").isNull)), 1L).otherwise(0L))
       .groupBy(col("__fid"), col("__flen"), col("__status"))
       .agg(count(col("blockId")).as("__nb"),
-        sum(col("__missing")).as("__miss"), sum(col("__missSize")).as("__msz"),
-        sum(col("__under")).as("__und"), sum(col("__over")).as("__ovr"),
-        sum(col("__minR")).as("__min"), sum(col("__misR")).as("__mis"),
+        sum(flag(missing)).as("__miss"),
+        sum(when(checked && missing, col("__blockLen")).otherwise(0L)).as("__msz"),
+        sum(flag(under)).as("__und"), sum(flag(over)).as("__ovr"),
+        sum(flag(col("__live") >= minReplication)).as("__min"),
+        sum(flag(misRep)).as("__mis"),
         sum(when(isClosed, coalesce(col("__live"), lit(0L))).otherwise(0L))
           .as("__reps"))
-    val closedRow = col("__status") === "closed"
     perFile.agg(
-      count(when(closedRow, 1)).as("totalFiles"),
+      count(when(isClosed, 1)).as("totalFiles"),
       count(when(col("__status") === "dir", 1)).as("totalDirs"),
-      coalesce(sum(when(closedRow, col("__nb"))), lit(0L)).as("totalBlocks"),
-      coalesce(sum(when(closedRow, col("__flen"))), lit(0L)).as("totalSize"),
+      coalesce(sum(when(isClosed, col("__nb"))), lit(0L)).as("totalBlocks"),
+      coalesce(sum(when(isClosed, col("__flen"))), lit(0L)).as("totalSize"),
       sum(col("__und")).as("underReplicatedBlocks"),
       sum(col("__ovr")).as("overReplicatedBlocks"),
       sum(col("__min")).as("minReplicatedBlocks"),
       sum(col("__mis")).as("misReplicatedBlocks"),
       sum(col("__miss")).as("missingBlocks"),
       sum(col("__msz")).as("missingSize"),
-      count(when(closedRow && col("__miss") > 0, 1)).as("corruptFiles"),
-      when(coalesce(sum(when(closedRow, col("__nb"))), lit(0L)) === 0, lit(0.0))
+      count(when(isClosed && col("__miss") > 0, 1)).as("corruptFiles"),
+      when(coalesce(sum(when(isClosed, col("__nb"))), lit(0L)) === 0, lit(0.0))
         .otherwise(sum(col("__reps")).cast("double") /
-          sum(when(closedRow, col("__nb"))))
+          sum(when(isClosed, col("__nb"))))
         .as("avgReplication"),
       count(when(col("__status") === "open", 1)).as("totalOpenFiles"),
       coalesce(sum(when(col("__status") === "open", col("__nb"))), lit(0L))
         .as("totalOpenFilesBlocks"),
       coalesce(sum(when(col("__status") === "open", col("__flen"))), lit(0L))
         .as("totalOpenFilesSize"))
-      .select(col("totalFiles"), col("totalDirs"), col("totalBlocks"),
-        col("totalSize"), col("underReplicatedBlocks"),
-        col("overReplicatedBlocks"), col("minReplicatedBlocks"),
-        col("misReplicatedBlocks"), col("missingBlocks"), col("missingSize"),
-        col("corruptFiles"), col("avgReplication"), col("totalOpenFiles"),
-        col("totalOpenFilesBlocks"), col("totalOpenFilesSize"))
   }
 
-  /** N11 per-file findings (NamenodeFsck.check :193-353): one row per
-    * CLOSED file with at least one finding — default fsck skips open
-    * files before any check (:227-233), so leaseHolder-bearing files
-    * never appear. Per block of the file, counted against the
-    * live-datanode set:
-    *  - MISSING: no holder is live (:305-312; locs.length == 0);
-    *  - under-replicated: 0 < live < target (:272-283);
-    *  - over-replicated: live > target (:264-267);
-    *  - mis-replicated: live replicas span fewer than
-    *    min(2, replication, clusterRacks) racks while the cluster has
-    *    more than one rack (:285-299,
-    *    ReplicationTargetChooser.verifyBlockPlacement :431-461 — a
-    *    missing block counts here too, its rack set is empty).
-    * A file with a missing block is corrupt (:327-331). A missing
-    * block's reported size is its max stored replica length — all its
-    * rows are dead replicas, so no live primary exists for the
-    * BlockEntry argmax to rank, and max is the conservative lost-bytes
-    * bound (fsckMove's chain lengths, which do have live primaries,
-    * keep the argmax convention).
+  /** N11 `-files` (NamenodeFsck.check :193-353): one row per CLOSED file
+    * under `pathPrefix` with at least one [[fsckLadder]] finding, with
+    * its per-class block counts — default fsck skips open files before
+    * any check (:227-233). A file with a missing block is corrupt
+    * (:327-331); missingSize sums the missing blocks' max stored
+    * replica lengths (fsckMove's chain lengths, which do have live
+    * primaries, keep the BlockEntry argmax convention).
     *
     * `showOpenFiles` is the -openforwrite flag (:118-126): open files
     * skip the early return, get the same checks, and carry
     * openForWrite = true (:237-239 prints the OPENFORWRITE marker). */
   def fsckFiles(file: DataFrame, block: DataFrame, datanode: DataFrame,
-                nowMs: Long, showOpenFiles: Boolean = false): DataFrame = {
+                nowMs: Long, showOpenFiles: Boolean = false,
+                pathPrefix: String = "/"): DataFrame = {
     val (dim, clusterRacks) = nodeRackDim(datanode, nowMs)
-    val perBlock = fsckPerBlock(block, dim)
-      .withColumnRenamed("__live", "__liveReplicas")
-    val files = live(file)
-      .filter(col("length") =!= -1L &&
-        (lit(showOpenFiles) || col("leaseHolder").isNull))
-      .select(col("id").as("fileId"), col("replication"),
-        col("length").as("fileSize"),
-        col("leaseHolder").isNotNull.as("openForWrite"))
-    val spans1 = col("__rkMin").isNull || col("__rkMin") === col("__rkMax")
-    val perFile = files
-      .join(perBlock, col("fileId") === col("__bfid"))
-      .withColumn("__missing", (col("__liveReplicas") === 0).cast("int"))
-      .withColumn("__under", (col("__liveReplicas") > 0 &&
-        col("__liveReplicas") < col("replication")).cast("int"))
-      .withColumn("__over", (col("__liveReplicas") > col("replication")).cast("int"))
-      .withColumn("__misrep", (lit(clusterRacks) > 1 &&
-        ((col("replication") >= 2 && spans1) ||
-         (col("replication") === 1 && col("__rkMin").isNull))).cast("int"))
-      .groupBy(col("fileId"), col("replication"), col("fileSize"),
-        col("openForWrite"))
+    val (files, blocks, pinned) = fsckScope(file, block, pathPrefix,
+      if (showOpenFiles) col("length") =!= -1L else checkedFile)
+    val (missing, under, over, misRep) = fsckLadder(clusterRacks)
+    fsckPerBlock(blocks, dim)
+      .join(if (pinned) broadcast(files) else files, col("__bfid") === col("id"))
+      .groupBy(col("path"), col("id").as("fileId"), col("replication"),
+        col("length").as("fileSize"), col("leaseHolder").isNotNull.as("openForWrite"))
       .agg(count(col("blockId")).as("nBlocks"),
-        sum(col("__missing")).cast("long").as("missingBlocks"),
-        sum(when(col("__missing") === 1, col("__blockLen"))
-          .otherwise(0L)).as("missingSize"),
-        sum(col("__under")).cast("long").as("underBlocks"),
-        sum(col("__over")).cast("long").as("overBlocks"),
-        sum(col("__misrep")).cast("long").as("misReplicatedBlocks"))
+        count(when(missing, 1)).as("missingBlocks"),
+        sum(when(missing, col("__blockLen")).otherwise(0L)).as("missingSize"),
+        count(when(under, 1)).as("underBlocks"),
+        count(when(over, 1)).as("overBlocks"),
+        count(when(misRep, 1)).as("misReplicatedBlocks"))
       .filter(col("missingBlocks") > 0 || col("underBlocks") > 0 ||
         col("overBlocks") > 0 || col("misReplicatedBlocks") > 0)
-    val paths = StateManager.materializePaths(file)
-      .select(col("id").as("__pid"), col("path"))
-    perFile.join(paths, col("fileId") === col("__pid"))
       .select(col("path"), col("fileId"), col("replication"), col("fileSize"),
         col("nBlocks"), col("missingBlocks"), col("missingSize"),
         col("underBlocks"), col("overBlocks"), col("misReplicatedBlocks"),
         col("openForWrite"))
   }
 
-  /** Normalize a user path scope: strip ALL trailing slashes (stored
-    * paths carry none — "/n_7//" must scope like "/n_7", never silently
-    * match nothing), keeping "/" for the root. */
-  private def normScope(p: String): String = {
-    val t = p.replaceAll("/+$", "")
-    if (t.isEmpty) "/" else t
-  }
-
-  private def scopeFilter(pathCol: org.apache.spark.sql.Column,
-                          prefix: String): org.apache.spark.sql.Column =
-    if (prefix == "/") lit(true)
-    else pathCol === prefix || pathCol.startsWith(prefix + "/")
-
   /** N11 `-blocks/-locations/-racks` detail (NamenodeFsck.java:99-103
     * option flags; per-block report loop :254-312): one row per block of
-    * every checked (closed, live) file whose path starts with
-    * `pathPrefix` — fsck is path-scoped in the reference, and the prefix
+    * every checked (closed, live) file under `pathPrefix` — the prefix
     * is also the 100 TB valve: the block detail is subtree-sized, not
-    * namespace-sized, with blocks pruned to the subtree (left-semi)
-    * BEFORE any aggregation. Per block: live replica count, stored
-    * length, the missing/under/over/mis-replication classification
-    * against the file's target (the same ladder fsck/fsckFiles use),
-    * and the -locations/-racks surfaces — live holders in datanodeId
-    * order with their rack strings, comma-joined (the reference prints
-    * locations only for known datanodes: dead holders never appear). */
+    * namespace-sized. Per block: live replica count, stored length, the
+    * [[fsckLadder]] flags, and the -locations/-racks surfaces — live
+    * holders in datanodeId order with their rack strings, comma-joined
+    * (the reference prints locations only for known datanodes: dead
+    * holders never appear). */
   def fsckBlocks(file: DataFrame, block: DataFrame, datanode: DataFrame,
                  nowMs: Long, pathPrefix: String = "/"): DataFrame = {
-    val (nodes, clusterRacks) = StateManager.liveNodeRacks(datanode, nowMs)
-    val liveN = nodes.select(col("id").as("__nid"), col("location").as("__rack"))
-    val paths = StateManager.materializePaths(file)
-      .select(col("id").as("__pid"), col("path"))
-    val prefix = normScope(pathPrefix)
-    val prefixOk = scopeFilter(col("path"), prefix)
-    val files0 = live(file)
-      .filter(col("length") =!= -1L && col("leaseHolder").isNull)
-      .join(paths, col("id") === col("__pid"))
-      .filter(prefixOk)
-      .select(col("id").as("__fid"), col("replication"), col("path"))
-    // a scoped prefix makes the file side subtree-sized — pin it (it
-    // feeds the keyPrune key collect and the final join; re-deriving
-    // would re-walk materializePaths twice), push its fileIds into the
-    // block scan as an IN predicate (Scale.keyPrune — row-group/bucket
-    // pruning; the semi-join it replaced filtered AFTER streaming the
-    // whole block table), and broadcast it into the final join only:
-    // keyPrune projects its keys, and a hint under a projection reaches
-    // no join. The whole-namespace scope ("/") keeps the semi + shuffled
-    // join, where neither a key list nor a broadcast could be assumed
-    // to fit
-    val files = if (prefix == "/") files0 else files0.localCheckpoint()
-    val blocksScoped =
-      if (prefix == "/")
-        live(block).join(files.select(col("__fid")),
-          col("fileId") === col("__fid"), "left_semi")
-      else graft.core.Scale.keyPrune(live(block), "fileId", files, "__fid")
-    val perBlock = blocksScoped
-      .join(broadcast(liveN), col("datanodeId") === col("__nid"), "left")
-      .groupBy(col("id").as("blockId"), col("fileId"), col("fileIndex"))
-      .agg(count(col("__nid")).as("liveReplicas"),
-        max(greatest(col("length"), lit(0L))).as("blockLen"),
+    val (dim, clusterRacks) = nodeRackDim(datanode, nowMs)
+    val (files, blocks, pinned) = fsckScope(file, block, pathPrefix, checkedFile)
+    val (missing, under, over, misRep) = fsckLadder(clusterRacks)
+    fsckPerBlock(blocks, dim, max(col("fileIndex")).as("fileIndex"),
         array_sort(collect_list(when(col("__nid").isNotNull,
           struct(col("datanodeId"), col("__rack"))))).as("__locs"))
-      .withColumn("numRacks", size(array_distinct(filter(
-        transform(col("__locs"), x => x.getField("__rack")), _.isNotNull))))
-    perBlock.join(if (prefix == "/") files else broadcast(files),
-        col("fileId") === col("__fid"))
-      .select(col("path"), col("fileId"), col("blockId"), col("fileIndex"),
-        col("blockLen"), col("liveReplicas"),
+      .join(if (pinned) broadcast(files) else files, col("__bfid") === col("id"))
+      .select(col("path"), col("id").as("fileId"), col("blockId"), col("fileIndex"),
+        col("__blockLen").as("blockLen"), col("__live").as("liveReplicas"),
         col("replication").cast("long").as("expectedReplication"),
-        (col("liveReplicas") === 0).as("missing"),
-        (col("liveReplicas") > 0 &&
-          col("liveReplicas") < col("replication")).as("underReplicated"),
-        (col("liveReplicas") > col("replication")).as("overReplicated"),
-        (lit(clusterRacks) > 1L && col("numRacks").cast("long") <
-          least(lit(2L), col("replication").cast("long"), lit(clusterRacks)))
-          .as("misReplicated"),
+        missing.as("missing"), under.as("underReplicated"),
+        over.as("overReplicated"), misRep.as("misReplicated"),
         array_join(transform(col("__locs"),
           x => x.getField("datanodeId").cast("string")), ",").as("locations"),
         array_join(transform(col("__locs"), x => x.getField("__rack")), ",")
           .as("racks"))
+  }
+
+  private def idFrame(sp: SparkSession, ids: Iterable[Long]): DataFrame =
+    StateManager.localRelation(sp, ids.map(Row(_)).toArray, StructType.fromDDL("__cfid BIGINT"))
+
+  /** The removal write-set of fsck's -delete and -move
+    * (namenode.delete(path, true), NamenodeFsck.java:346-349 and :412)
+    * for the files in `ids` (column `__cfid`): a tombstone for each file
+    * row and for every live block row of those files (the ids push into
+    * the block scan, Scale.keyPrune), and an mtime touch of each parent
+    * dir and of each `alsoTouch` dir (the mkdirs/delete convention). */
+  private def fsckRemoval(file: DataFrame, block: DataFrame, ids: DataFrame,
+                          nowMs: Long, alsoTouch: Seq[Long] = Nil): DataFrame = {
+    val f = live(file).select(col("id").as("__lid"),
+      col("parentId").as("__lpar"), col("name").as("__lname"),
+      col("length").as("__llen"), col("version").as("__lver"))
+    def fileRows(op: String, mtime: Column, version: Column)(df: DataFrame) =
+      df.select(lit(op).as("writeOp"), lit("file").as("tbl"),
+        col("__lid").as("id"), lit(null).cast("long").as("datanodeId"),
+        col("__lpar").as("parentId"), col("__lname").as("name"),
+        col("__llen").as("length"), mtime.as("mtime"), version.as("version"))
+    val removed = ids.join(f, col("__cfid") === col("__lid"))
+    val blockTombs = graft.core.Scale.keyPrune(live(block), "fileId", ids, "__cfid")
+      .select(lit("tombstone").as("writeOp"), lit("block").as("tbl"),
+        col("id"), col("datanodeId"),
+        lit(null).cast("long").as("parentId"),
+        lit(null).cast("string").as("name"),
+        col("length"), lit(null).cast("long").as("mtime"),
+        (-col("version")).as("version"))
+    val touched = removed.select(col("__lpar").as("__tid"))
+      .unionByName(idFrame(file.sparkSession, alsoTouch).select(col("__cfid").as("__tid")))
+      .distinct().join(f, col("__tid") === col("__lid"))
+    fileRows("tombstone", lit(null).cast("long"), -col("__lver"))(removed)
+      .unionByName(blockTombs)
+      .unionByName(fileRows("touch", lit(nowMs), col("__lver"))(touched))
   }
 
   /** N11 `-move`: the lost+found write-set (NamenodeFsck.lostFoundMove
@@ -697,10 +692,8 @@ object Dataflows {
     *    BlockEntry-primary lengths of the run. Dirs and chain files take
     *    their ids from one ranking (Mutations.mirrorChains), so chain "10"
     *    ranks before chain "2" — ids only need determinism;
-    *  - `tombstone` rows for the original file row and every live block
-    *    row (dfs.delete(fullName, true) :412);
-    *  - `touch` rows: the old parent dir and pre-existing dirs reused as
-    *    insert parents (the mkdirs/delete mtime convention);
+    *  - the [[fsckRemoval]] rows of every unblocked source, whose touches
+    *    also cover the pre-existing dirs reused as insert parents;
     *  - `reject` when the mirror chain is blocked by an existing FILE
     *    row ("lost+found path blocked by a file" — mkdirs would fail
     *    :372-374).
@@ -709,19 +702,11 @@ object Dataflows {
   def fsckMove(file: DataFrame, block: DataFrame, datanode: DataFrame,
                nowMs: Long, idBase: Long, pathPrefix: String = "/"): DataFrame = {
     val sp = file.sparkSession
-    // the corrupt files in scope, with the rows -move tombstones: the
-    // reference's fsck walks only the requested subtree, so a scoped
-    // -move must never rescue (write!) outside it
-    val corrupt = Mutations.collectSources(fsckFiles(file, block, datanode, nowMs)
-        .filter(col("missingBlocks") > 0 &&
-          scopeFilter(col("path"), normScope(pathPrefix)))
-        .join(live(file), col("fileId") === col("id"))
-        .select(col("fileId"), col("path"), col("parentId"), col("name"),
-          col("length"), col("version")),
-      "narrow fsck -move with a pathPrefix")
-    val mirrorOf = corrupt.map(r => r.getLong(0) -> ("/lost+found" + r.getString(1))).toMap
-    def idFrame(ids: Seq[Long]): DataFrame = StateManager.localRelation(sp,
-      ids.map(Row(_)).toArray, StructType.fromDDL("__cfid BIGINT"))
+    val mirrorOf = Mutations.collectSources(
+        fsckFiles(file, block, datanode, nowMs, pathPrefix = pathPrefix)
+          .filter(col("missingBlocks") > 0).select(col("fileId"), col("path")),
+        "narrow fsck -move with a pathPrefix")
+      .map(r => r.getLong(0) -> ("/lost+found" + r.getString(1))).toMap
     // chain files: per corrupt file, maximal runs of blocks with a live replica
     val liveNIds = StateManager.liveDatanodes(datanode, nowMs)
       .select(col("id").as("__nid"))
@@ -729,7 +714,7 @@ object Dataflows {
     val w = Window.partitionBy(col("fileId"))
       .orderBy(col("fileIndex"), col("blockId"))
     val leaves = graft.core.Scale.keyPrune(live(block), "fileId",
-        idFrame(mirrorOf.keys.toSeq), "__cfid")
+        idFrame(sp, mirrorOf.keys), "__cfid")
       .join(liveNIds, col("datanodeId") === col("__nid"), "left")
       .groupBy(col("fileId"), col("id").as("blockId"))
       .agg(max(col("fileIndex")).as("fileIndex"),
@@ -747,73 +732,27 @@ object Dataflows {
       .map(r => (r.getLong(0), mirrorOf(r.getLong(0)) + "/" + r.getLong(1), r.getLong(2)))
     val mc = Mutations.mirrorChains(file,
       Mutations.dirPaths(file, StateManager.DirMapCap), mirrorOf.toSeq, leaves, idBase)
-    val ok = corrupt.toSeq.filterNot(r => mc.blocked(r.getLong(0)))
-    // inserts, file tombstones and rejects are driver rows
     val driverRows = mc.created.map(c => Row("insert", "file", c.id, null,
         c.parentId, c.name, c.length, nowMs, c.id, null)) ++
-      ok.map(r => Row("tombstone", "file", r.getLong(0), null, r.getLong(2),
-        r.getString(3), r.getLong(4), null, -r.getLong(5), null)) ++
       mc.blocked.toSeq.map(id => Row("reject", "file", id, null, null, null,
         null, null, null, "lost+found path blocked by a file"))
-    val blockTombs = graft.core.Scale.keyPrune(live(block), "fileId",
-        idFrame(ok.map(_.getLong(0))), "__cfid")
-      .select(lit("tombstone").as("writeOp"), lit("block").as("tbl"),
-        col("id"), col("datanodeId"),
-        lit(null).cast("long").as("parentId"),
-        lit(null).cast("string").as("name"),
-        col("length"), lit(null).cast("long").as("mtime"),
-        (-col("version")).as("version"), lit(null).cast("string").as("reject"))
-    // touch: old parents of moved-away files + pre-existing dirs reused
-    // as insert parents (the mkdirs/delete mtime convention)
-    val touchRows = live(file)
-      .join(broadcast(idFrame((ok.map(_.getLong(2)) ++ mc.reused).distinct)),
-        col("id") === col("__cfid"))
-      .select(lit("touch").as("writeOp"), lit("file").as("tbl"),
-        col("id"), lit(null).cast("long").as("datanodeId"),
-        col("parentId"), col("name"), col("length"), lit(nowMs).as("mtime"),
-        col("version"), lit(null).cast("string").as("reject"))
     StateManager.localRelation(sp, driverRows.toArray, StructType.fromDDL(
         "writeOp STRING, tbl STRING, id BIGINT, datanodeId BIGINT, parentId BIGINT, " +
           "name STRING, length BIGINT, mtime BIGINT, version BIGINT, reject STRING"))
-      .unionByName(blockTombs).unionByName(touchRows)
+      .unionByName(fsckRemoval(file, block,
+          idFrame(sp, mirrorOf.keys.filterNot(mc.blocked)), nowMs, mc.reused)
+        .withColumn("reject", lit(null).cast("string")))
   }
 
   /** N11 `-delete` (FIXING_DELETE :346-349 — namenode.delete(path, true)
-    * per corrupt closed file): tombstone the file row and every live
-    * block row, touch the parent dir. Same write-set schema as
-    * fsckMove minus the lost+found machinery. */
+    * per corrupt closed file under `pathPrefix`): the [[fsckRemoval]]
+    * write-set of the corrupt set, which stays distributed. */
   def fsckDelete(file: DataFrame, block: DataFrame, datanode: DataFrame,
-                 nowMs: Long, pathPrefix: String = "/"): DataFrame = {
-    val corrupt = fsckFiles(file, block, datanode, nowMs)
-      .filter(col("missingBlocks") > 0 &&
-        scopeFilter(col("path"), normScope(pathPrefix)))
-      .select(col("fileId").as("__cfid")).localCheckpoint()
-    val f = live(file).select(col("id").as("__lid"),
-      col("parentId").as("__lpar"), col("name").as("__lname"),
-      col("length").as("__llen"), col("version").as("__lver"))
-    val fileTombs = corrupt.join(f, col("__cfid") === col("__lid"))
-      .select(lit("tombstone").as("writeOp"), lit("file").as("tbl"),
-        col("__cfid").as("id"), lit(null).cast("long").as("datanodeId"),
-        col("__lpar").as("parentId"), col("__lname").as("name"),
-        col("__llen").as("length"), lit(null).cast("long").as("mtime"),
-        (-col("__lver")).as("version"))
-    val blockTombs = graft.core.Scale.keyPrune(live(block), "fileId", corrupt, "__cfid")
-      .select(lit("tombstone").as("writeOp"), lit("block").as("tbl"),
-        col("id"), col("datanodeId"),
-        lit(null).cast("long").as("parentId"),
-        lit(null).cast("string").as("name"),
-        col("length"), lit(null).cast("long").as("mtime"),
-        (-col("version")).as("version"))
-    val touchRows = corrupt.join(f, col("__cfid") === col("__lid"))
-      .select(col("__lpar").as("__tid")).distinct()
-      .join(f, col("__tid") === col("__lid"))
-      .select(lit("touch").as("writeOp"), lit("file").as("tbl"),
-        col("__lid").as("id"), lit(null).cast("long").as("datanodeId"),
-        col("__lpar").as("parentId"), col("__lname").as("name"),
-        col("__llen").as("length"), lit(nowMs).as("mtime"),
-        col("__lver").as("version"))
-    fileTombs.unionByName(blockTombs).unionByName(touchRows)
-  }
+                 nowMs: Long, pathPrefix: String = "/"): DataFrame =
+    fsckRemoval(file, block,
+      fsckFiles(file, block, datanode, nowMs, pathPrefix = pathPrefix)
+        .filter(col("missingBlocks") > 0)
+        .select(col("fileId").as("__cfid")).localCheckpoint(), nowMs)
 
   /** getStats' block counters (FSNamesystem.java:3040-3042 — the
     * dfsadmin -report header next to S13's capacity aggregates):
@@ -838,10 +777,9 @@ object Dataflows {
       .groupBy(col("id").as("blockId"), col("fileId"))
       .agg(count(col("nodeId")).as("__live"))
       .join(fdim, col("fileId") === col("fid"))
-    val counts = perBlock.agg(
-      count(when(col("__live") > 0 && col("__live") < col("replication"), 1))
-        .as("underReplicatedBlocks"),
-      count(when(col("__live") === 0, 1)).as("missingBlocks"))
+    val (missing, under, _, _) = fsckLadder(clusterRacks = 0L)
+    val counts = perBlock.agg(count(when(under, 1)).as("underReplicatedBlocks"),
+      count(when(missing, 1)).as("missingBlocks"))
     val corrupt = corruptMarks.agg(
       count_distinct(col("blockId")).as("corruptReplicaBlocks"))
     counts.crossJoin(corrupt)

@@ -1,102 +1,26 @@
 package graft.analytics
 
-import scala.util.Random
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** N7 replica placement (ReplicationTargetChooser.java:77-178) — the one
-  * genuinely sequential, topology-aware algorithm in the reference. Kept
-  * as driver-side Scala over a broadcast topology snapshot (SURVEY §4):
-  * forcing the pipeline case-ladder into SQL would serialize through a
-  * single partition anyway.
+/** N7 replica placement (ReplicationTargetChooser.java:77-178) — the
+  * one topology-aware target choice of the reference, run as ONE
+  * declarative dataflow over a broadcast topology snapshot.
   *
-  * Case ladder (:138-178): 1st replica on the writer's node/rack, 2nd on a
-  * remote rack, 3rd on the same rack as the 2nd, rest random —
-  * subject to isGoodTarget (space, load, per-rack quota).
+  * Case ladder (:138-178): 1st replica on the writer's rack, 2nd on a
+  * remote rack, 3rd on the same rack as the 2nd — subject to
+  * isGoodTarget (space, load, per-rack quota).
   */
 object Placement {
 
-  final case class Node(id: Long, rack: String, remaining: Long,
-                        xceiverCount: Long, adminState: String)
-
-  /** isGoodTarget (ReplicationTargetChooser.java): enough space, not
-    * overloaded vs cluster average, rack not over quota, not
-    * decommissioning. */
-  private def isGood(n: Node, blockSize: Long, avgLoad: Double,
-                     chosen: Seq[Node], maxPerRack: Int): Boolean =
-    n.adminState == "NORMAL" &&
-      n.remaining >= blockSize * 2 &&
-      n.xceiverCount <= 2.0 * avgLoad + 2 &&
-      chosen.count(_.rack == n.rack) < maxPerRack &&
-      !chosen.exists(_.id == n.id)
-
-  /** Choose `replication` NEW targets. Deterministic given `seed` (the
-    * caller passes e.g. the block id) so tests and replays are stable.
-    *
-    * `existing` = nodes already holding a replica (the reference seeds
-    * chooseTarget with them, ReplicationTargetChooser.java:84-103): they
-    * are never chosen again, they count toward the per-rack quota, and
-    * they shift the case ladder the same way the reference's
-    * numOfResults switch does (a block with one live replica places its
-    * next one on a REMOTE rack, etc.). Only the new targets return. */
-  def chooseTargets(nodes: Seq[Node], replication: Int, writerRack: Option[String],
-                    blockSize: Long, seed: Long,
-                    existing: Seq[Node] = Nil): Seq[Node] = {
-    if (nodes.isEmpty || replication <= 0) return Nil
-    val rnd = new Random(seed)
-    val racks = nodes.map(_.rack).distinct.size.max(1)
-    val chosen = scala.collection.mutable.ArrayBuffer.empty[Node]
-    chosen ++= existing
-    val want = chosen.size + replication
-    val maxPerRack = (want - 1) / racks + 2
-    val avgLoad = nodes.map(_.xceiverCount).sum.toDouble / nodes.size
-
-    def pick(candidates: Seq[Node]): Option[Node] = {
-      val good = candidates.filter(isGood(_, blockSize, avgLoad, chosen.toSeq, maxPerRack))
-      if (good.isEmpty) None
-      else Some(good(rnd.nextInt(good.size)))
-    }
-
-    // 1st overall: writer-local rack if possible, else anywhere
-    if (chosen.isEmpty) {
-      writerRack.flatMap(r => pick(nodes.filter(_.rack == r))).orElse(pick(nodes))
-        .foreach(chosen += _)
-    }
-    // 2nd overall: remote rack from the 1st
-    if (chosen.size == 1 && chosen.size < want) {
-      val f = chosen.head
-      pick(nodes.filter(_.rack != f.rack)).orElse(pick(nodes)).foreach(chosen += _)
-    }
-    // 3rd overall: same rack as the 2nd — unless the first two already
-    // share a rack, in which case a REMOTE rack (ReplicationTargetChooser
-    // case 2: two same-rack replicas must not become three)
-    if (chosen.size == 2 && chosen.size < want) {
-      val (a, b) = (chosen(0), chosen(1))
-      val cand =
-        if (a.rack == b.rack) nodes.filter(_.rack != b.rack)
-        else nodes.filter(_.rack == b.rack)
-      pick(cand).orElse(pick(nodes)).foreach(chosen += _)
-    }
-    // rest: random fill — the guard and the placement consume the SAME
-    // draw, so each filled slot advances the RNG exactly once (replay
-    // traces match a single-draw reference walk)
-    var fill = if (chosen.size < want) pick(nodes) else None
-    while (fill.isDefined) {
-      fill.foreach(chosen += _)
-      fill = if (chosen.size < want) pick(nodes) else None
-    }
-    chosen.drop(existing.size).toSeq
-  }
-
-  /** The candidates-SCORING variant of chooseTarget (SURVEY §2.4 N7):
-    * the same case ladder and isGoodTarget checks as [[chooseTargets]],
-    * but the random draw is replaced by a deterministic per-(request,
-    * node, slot) arithmetic score, so the whole placement is ONE
-    * declarative dataflow a differential oracle can replay — and the
-    * shape that places a million blocks per tick on a real cluster,
-    * where the driver-side walk would serialize.
+  /** chooseTarget as candidate scoring (SURVEY §2.4 N7): the case
+    * ladder and isGoodTarget checks, with the reference's random draw
+    * replaced by a deterministic per-(request, node, slot) arithmetic
+    * score, so the whole placement is ONE declarative dataflow a
+    * differential oracle can replay — and the shape that places a
+    * million blocks per tick on a real cluster, where a driver-side walk
+    * would serialize.
     *
     * Per request (reqId, writerRack, blockSize), over live NORMAL nodes
     * (ReplicationTargetChooser.isGoodTarget :260-319): space

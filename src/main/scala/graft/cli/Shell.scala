@@ -32,7 +32,11 @@ import graft.store.StateStore
   *   chmod <path> <octal> validate + resolve, then reference-faithful no-op
   *   chgrp <path> <group> validate + resolve, then reference-faithful no-op
   *   df                  cluster capacity/used/remaining (S13 agg)
-  *   fsck            namespace health report
+  *   fsck [path] [-files|-openforwrite|-blocks|-locations|-racks|-move|-delete]
+  *                   health report of the subtree at path (default /): the
+  *                   Result row, or per-file findings (-openforwrite adds
+  *                   open files), per-block detail, or the -move/-delete
+  *                   write-set; the path bounds every surface
   *   report          datanode report
   *   stats           dfsadmin -report header: capacity + block counters
   *   oiv [-xml]      offline image viewer: ls lines / XML INODE elements
@@ -511,9 +515,9 @@ object Shell {
           detail.drop(drop: _*).orderBy(col("path"), col("fileIndex"))
         } else if (args.contains("-files") || args.contains("-openforwrite"))
           Dataflows.fsckFiles(file, block, datanode, Now,
-              showOpenFiles = args.contains("-openforwrite"))
+              showOpenFiles = args.contains("-openforwrite"), pathPrefix = scope)
             .orderBy(col("path"))
-        else Dataflows.fsck(file, block, datanode, Now)
+        else Dataflows.fsck(file, block, datanode, Now, pathPrefix = scope)
       case "report" =>
         Dataflows.datanodeReport(datanode, Now)
           .select(col("id"), col("name"), col("alive"), col("adminState"),

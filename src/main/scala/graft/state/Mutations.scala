@@ -748,9 +748,9 @@ object Mutations {
     * minReplication finished (length ≥ 0) replicas (the reference's
     * penultimate-block check — the client is writing the next one).
     * newBlockId = idBase + fileId (deterministic allocation); target
-    * choice is N7 (driver-side Placement over the broadcast topology);
-    * the reference then inserts one block row per target plus a
-    * NULL_DATANODE row (:1172-1181). */
+    * choice is N7 (Placement.chooseTargetsScored, a dataflow over the
+    * live topology); the reference then inserts one block row per
+    * target plus a NULL_DATANODE row (:1172-1181). */
   def addBlock(file: DataFrame, block: DataFrame, idBase: Long,
                minReplication: Int = 1): DataFrame = {
     val uc = live(file).filter(col("leaseHolder").isNotNull)

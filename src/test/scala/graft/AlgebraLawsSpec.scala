@@ -316,20 +316,6 @@ class AlgebraLawsSpec extends SparkSpec {
     }
   }
 
-  test("placement: degenerate topologies") {
-    // all decommissioned → nothing placeable
-    val dead = (1 to 4).map(i =>
-      Placement.Node(i.toLong, "/r0", 1L << 30, 0, "DECOMMISSIONED"))
-    assert(Placement.chooseTargets(dead, 3, None, 1024, seed = 1L).isEmpty)
-    // single rack: all replicas land there, still distinct nodes
-    val oneRack = (1 to 5).map(i => Placement.Node(i.toLong, "/r0", 1L << 30, 0, "NORMAL"))
-    val t = Placement.chooseTargets(oneRack, 3, Some("/r0"), 1024, seed = 2L)
-    assert(t.size == 3 && t.map(_.id).distinct.size == 3)
-    // replication larger than cluster → capped at cluster size
-    val tiny = oneRack.take(2)
-    assert(Placement.chooseTargets(tiny, 5, None, 1024, seed = 3L).size == 2)
-  }
-
   // ---- bounded driver paths == their distributed fallbacks ------------
 
   private def bag(df: org.apache.spark.sql.DataFrame): Map[String, Int] =

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.analytics.{Dataflows, Placement}
+import graft.analytics.Dataflows
 
 /** N-layer behavioral tests on FIXTURES.md §2-shaped inputs, mirroring
   * the FSNamesystem.java:2520-2594 classification matrix. */
@@ -295,48 +295,6 @@ class DataflowsSpec extends SparkSpec {
     assert(out(2L) == Seq(5L, 1L, 1L))
   }
 
-  test("N7: existing holders are never re-chosen and shift the case ladder") {
-    val nodes = (1 to 6).map(i => Placement.Node(i.toLong, s"/r${i % 2}",
-      remaining = 1000000L, xceiverCount = 2, adminState = "NORMAL"))
-    for (seed <- 1L to 50L) {
-      val holder = nodes.head // node 1, /r1
-      val t = Placement.chooseTargets(nodes, 2, None, blockSize = 100,
-        seed = seed, existing = Seq(holder))
-      assert(t.size == 2 && !t.map(_.id).contains(holder.id)) // never re-chosen
-      assert(t.head.rack != holder.rack) // 2nd overall goes to a remote rack
-      assert(t(1).rack == t.head.rack)   // 3rd overall stays with the 2nd
-    }
-    // two existing holders already SHARING a rack: the next replica must
-    // go to a remote rack (case 2 — never three replicas on one rack
-    // while another rack is available)
-    for (seed <- 1L to 50L) {
-      val sameRack = Seq(nodes(1), nodes(3)) // ids 2, 4 — both /r0
-      val t = Placement.chooseTargets(nodes, 1, None, blockSize = 100,
-        seed = seed, existing = sameRack)
-      assert(t.size == 1 && t.head.rack != "/r0")
-    }
-    // existing = Nil keeps the exact draw sequence of the old surface
-    val t1 = Placement.chooseTargets(nodes, 3, Some("/r0"), blockSize = 100, seed = 7L)
-    val t2 = Placement.chooseTargets(nodes, 3, Some("/r0"), blockSize = 100, seed = 7L,
-      existing = Nil)
-    assert(t1.map(_.id) == t2.map(_.id))
-  }
-
-  test("N7: placement respects racks, space and determinism") {
-    val nodes = (1 to 6).map(i => Placement.Node(i.toLong, s"/r${i % 2}",
-      remaining = 1000000L, xceiverCount = 2, adminState = "NORMAL"))
-    val t1 = Placement.chooseTargets(nodes, 3, Some("/r0"), blockSize = 100, seed = 7L)
-    val t2 = Placement.chooseTargets(nodes, 3, Some("/r0"), blockSize = 100, seed = 7L)
-    assert(t1.map(_.id) == t2.map(_.id)) // deterministic under same seed
-    assert(t1.size == 3 && t1.map(_.id).distinct.size == 3)
-    assert(t1.head.rack == "/r0")         // writer-local first
-    assert(t1(1).rack != t1.head.rack)    // second on a remote rack
-    assert(t1(2).rack == t1(1).rack)      // third with the second
-    // no-space nodes are never chosen
-    val tight = nodes.map(_.copy(remaining = 10L))
-    assert(Placement.chooseTargets(tight, 3, Some("/r0"), blockSize = 100, seed = 7L).isEmpty)
-  }
-
   test("N11 -move: chain runs split on replica-less blocks; mirror dirs + tombstones") {
     // /d/f has five blocks: [live, MISSING, live, live, MISSING] →
     // chain 0 = {b0}, chain 1 = {b2, b3} (the reference closes the
@@ -443,31 +401,34 @@ class DataflowsSpec extends SparkSpec {
       Seq("0", "1", "10", "2", "3", "4", "5", "6", "7", "8", "9"))
   }
 
+  // the null-location fixture: the DuckDB oracle counts a null-location
+  // node's replicas through COUNT(n.id) and leaves null out of
+  // COUNT(DISTINCT location)
+  private lazy val nlFiles = Seq(
+    (0L, 0L, "", -1L, 0L, 1L),
+    (1L, 0L, "d", -1L, 0L, 2L),
+    (10L, 1L, "a", 64L, 1L, 3L),
+    (11L, 1L, "b", 64L, 2L, 4L),
+  ).map { case (id, p, n, len, repl, v) =>
+    (id, p, n, len, 64L, repl, 0L, 0L, 0L, None: Option[String], 0L, v)
+  }.toDF("id", "parentId", "name", "length", "blockSize", "replication",
+    "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
+  private lazy val nlBlocks = Seq(
+    (100L, 3L, 64L, 1L, 10L, 0L, 20L), // /d/a: only on the null-location node
+    (101L, 1L, 64L, 1L, 11L, 0L, 21L), // /d/b: one racked + the null node
+    (101L, 3L, 64L, 1L, 11L, 0L, 22L),
+  ).toDF("id", "datanodeId", "length", "generationStamp", "fileId",
+    "fileIndex", "version")
+  private def nodes(racks: (Long, Option[String], Long)*) = racks
+    .map { case (id, loc, seen) => (id, loc, seen, id) }
+    .toDF("id", "location", "lastUpdated", "version")
+  // one live rack (node 4's rack is dead): no placement finding at all
+  private lazy val oneRack = nodes((1L, Some("/r1"), now), (3L, None, now), (4L, Some("/r2"), 0L))
+  // two live racks: /d/a spans 0 racks of 1 wanted, /d/b 1 of 2
+  private lazy val twoRacks = nodes((1L, Some("/r1"), now), (2L, Some("/r2"), now), (3L, None, now))
+
   test("N11: a live null-location node holds live replicas but no rack, as in the oracle") {
-    // the DuckDB oracle counts a null-location node's replicas through
-    // COUNT(n.id) and leaves null out of COUNT(DISTINCT location)
-    val files = Seq(
-      (0L, 0L, "", -1L, 0L, 1L),
-      (1L, 0L, "d", -1L, 0L, 2L),
-      (10L, 1L, "a", 64L, 1L, 3L),
-      (11L, 1L, "b", 64L, 2L, 4L),
-    ).map { case (id, p, n, len, repl, v) =>
-      (id, p, n, len, 64L, repl, 0L, 0L, 0L, None: Option[String], 0L, v)
-    }.toDF("id", "parentId", "name", "length", "blockSize", "replication",
-      "atime", "mtime", "owner", "leaseHolder", "leaseRecoveryTime", "version")
-    val blocks = Seq(
-      (100L, 3L, 64L, 1L, 10L, 0L, 20L), // /d/a: only on the null-location node
-      (101L, 1L, 64L, 1L, 11L, 0L, 21L), // /d/b: one racked + the null node
-      (101L, 3L, 64L, 1L, 11L, 0L, 22L),
-    ).toDF("id", "datanodeId", "length", "generationStamp", "fileId",
-      "fileIndex", "version")
-    def nodes(racks: (Long, Option[String], Long)*) = racks
-      .map { case (id, loc, seen) => (id, loc, seen, id) }
-      .toDF("id", "location", "lastUpdated", "version")
-    // one live rack (node 4's rack is dead): no placement finding at all
-    val oneRack = nodes((1L, Some("/r1"), now), (3L, None, now), (4L, Some("/r2"), 0L))
-    // two live racks: /d/a spans 0 racks of 1 wanted, /d/b 1 of 2
-    val twoRacks = nodes((1L, Some("/r1"), now), (2L, Some("/r2"), now), (3L, None, now))
+    val (files, blocks) = (nlFiles, nlBlocks)
     val summary = Seq("missingBlocks", "underReplicatedBlocks",
       "misReplicatedBlocks", "minReplicatedBlocks", "corruptFiles", "avgReplication")
     def fsck(dn: DataFrame) =
@@ -486,5 +447,76 @@ class DataflowsSpec extends SparkSpec {
       Seq(101L, 2L, false, false, "1,3", "/r1")))
     assert(detail(twoRacks) == Seq(Seq(100L, 1L, false, true, "3", ""),
       Seq(101L, 2L, false, true, "1,3", "/r1")))
+  }
+
+  /** The sf0.001 views with the gate's dead-node datanode projection,
+    * under which every finding class fires. */
+  private def sf0001: (DataFrame, DataFrame, DataFrame) = {
+    graft.model.DerivedState.register(spark, TestdataDirs.scale("sf0.001"))
+    (spark.table("file"), spark.table("block"),
+      spark.sql(graft.queries.AnalyticsQueries.FsckDeadNodesSql))
+  }
+
+  test("N11 one ladder: fsck, fsckFiles and fsckBlocks count the same findings") {
+    def counts(files: DataFrame, blocks: DataFrame, dn: DataFrame, nowMs: Long) = Seq(
+      Dataflows.fsck(files, blocks, dn, nowMs).select(col("missingBlocks"),
+        col("underReplicatedBlocks"), col("overReplicatedBlocks"),
+        col("misReplicatedBlocks")),
+      Dataflows.fsckFiles(files, blocks, dn, nowMs).agg(
+        coalesce(sum(col("missingBlocks")), lit(0L)),
+        coalesce(sum(col("underBlocks")), lit(0L)),
+        coalesce(sum(col("overBlocks")), lit(0L)),
+        coalesce(sum(col("misReplicatedBlocks")), lit(0L))),
+      Dataflows.fsckBlocks(files, blocks, dn, nowMs).agg(
+        count(when(col("missing"), 1)), count(when(col("underReplicated"), 1)),
+        count(when(col("overReplicated"), 1)), count(when(col("misReplicated"), 1))))
+      .map(df => rows(df).head)
+    for (dn <- Seq(oneRack, twoRacks)) {
+      val c = counts(nlFiles, nlBlocks, dn, now)
+      assert(c.distinct.size == 1, c)
+    }
+    val (f, b, dn) = sf0001
+    val c = counts(f, b, dn, graft.model.DerivedState.NowMs)
+    assert(c.distinct.size == 1 && c.head.forall(_ != 0L), c)
+  }
+
+  test("N11 scope: each mode answers for the subtree at its path only") {
+    val (f, b, dn) = sf0001
+    val nowMs = graft.model.DerivedState.NowMs
+    def bag(df: DataFrame) = df.collect().groupBy(_.toString).view.mapValues(_.length).toMap
+    val allFiles = Dataflows.fsckFiles(f, b, dn, nowMs).localCheckpoint()
+    val allBlocks = Dataflows.fsckBlocks(f, b, dn, nowMs).localCheckpoint()
+    val filePath = allFiles.filter(col("missingBlocks") > 0 && col("path").startsWith("/n_7/"))
+      .orderBy(col("path")).select(col("path")).head().getString(0)
+    for (p <- Seq("/n_7", "/n_7//", filePath, "/no/such/dir")) {
+      val root = p.replaceAll("/+$", "")
+      val in = col("path") === root || col("path").startsWith(root + "/")
+      assert(bag(Dataflows.fsckFiles(f, b, dn, nowMs, pathPrefix = p)) ==
+        bag(allFiles.filter(in)), p)
+      assert(bag(Dataflows.fsckBlocks(f, b, dn, nowMs, pathPrefix = p)) ==
+        bag(allBlocks.filter(in)), p)
+      // -delete and -move remove exactly the corrupt files in scope, their
+      // live block rows, and touch only those files' parents (and, for
+      // -move, the root that gains /lost+found)
+      val corrupt = allFiles.filter(in && col("missingBlocks") > 0)
+        .select(col("fileId")).collect().map(_.getLong(0)).toSet
+      assert(corrupt.nonEmpty == (p != "/no/such/dir"), p)
+      val liveF = f.filter(col("version") > 0 && col("id").isInCollection(corrupt))
+      val parents = liveF.select(col("parentId")).collect().map(_.getLong(0)).toSet
+      val blockRows = b.filter(col("version") > 0 && col("fileId").isInCollection(corrupt))
+        .select(col("id"), col("datanodeId")).collect().map(_.toSeq).toSet
+      for (ws <- Seq(Dataflows.fsckDelete(f, b, dn, nowMs, pathPrefix = p),
+                     Dataflows.fsckMove(f, b, dn, nowMs, idBase = 8000000L,
+                       pathPrefix = p))) {
+        val out = rows(ws.select(col("writeOp"), col("tbl"), col("id"),
+          col("datanodeId")))
+        def of(op: String, tbl: String) =
+          out.filter(r => r.head == op && r(1) == tbl).map(_.drop(2))
+        assert(of("tombstone", "file").map(_.head).toSet == corrupt, p)
+        assert(of("tombstone", "block").toSet == blockRows, p)
+        assert(of("touch", "file").map(_.head.asInstanceOf[Long]).toSet
+          .subsetOf(parents + 0L), p)
+      }
+    }
   }
 }

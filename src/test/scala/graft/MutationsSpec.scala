@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.analytics.Placement
 import graft.state.{Mutations, StateManager}
 import graft.store.StateStore
 
@@ -163,17 +162,6 @@ class MutationsSpec extends SparkSpec {
     val renewed = StateStore.update(lease, col("holder") === "writerA",
       Map("leaseTime" -> StateStore.SetNow), nowMs = 999L)
     assert(rows(renewed).head(1) == 999L)
-  }
-
-  test("N3 getAdditionalBlock composition: placement over live topology") {
-    val nodes = (1 to 6).map(i => Placement.Node(i.toLong, s"/r${i % 3}", 1L << 30, 1, "NORMAL"))
-    val targets = Placement.chooseTargets(nodes, 3, Some("/r1"), blockSize = 1024, seed = 42L)
-    assert(targets.size == 3)
-    // new block rows: one per target + the NULL_DATANODE row, next fileIndex
-    val newBlockId = 301L
-    val rowsOut = targets.map(t => (newBlockId, t.id, -1L, 7L, 3L, 2L)) :+
-      ((newBlockId, 0L, -1L, 7L, 3L, 2L))
-    assert(rowsOut.size == 4 && rowsOut.map(_._2).distinct.size == 4)
   }
 
   test("N2 startFile: full case ladder — insert/tombstone/lease/rejects") {

@@ -98,11 +98,14 @@ class ScalingLawsSpec extends SparkSpec {
   private lazy val shardBlockRows = shards(1).block.count()
   private lazy val shard0 = shards(1).block.filter(col("version") > 0)
 
-  /** The counters and rows of `run` over the shards of each k. */
+  /** The counters and rows of `run` over the shards of each k. The
+    * shards are built before counting, so a law run alone counts only
+    * its own work. */
   private def measured(run: Shards => DataFrame): Map[Int, (Counters, Array[Row])] =
     ks.map { k =>
+      val s = shards(k)
       var out: Array[Row] = null
-      val c = countersDuring { out = run(shards(k)).collect() }
+      val c = countersDuring { out = run(s).collect() }
       k -> (c, out)
     }.toMap
 
@@ -174,6 +177,26 @@ class ScalingLawsSpec extends SparkSpec {
       val c = countersDuring(Dataflows.fsck(shards(k).file, shards(k).block, dn, now))
       assert(c.jobs == 1 && c.shuffleRecords == 0, s"fsck build k=$k $c")
     }
+  }
+
+  test("fsck -delete scoped to a shard-0 dir scans that subtree's blocks, not every shard's") {
+    // the gate's dead-node projection, so the subtree holds corrupt files
+    val deadDn = { dn; spark.sql(graft.queries.AnalyticsQueries.FsckDeadNodesSql) }
+    def delete(s: Shards, scope: String) =
+      Dataflows.fsckDelete(s.file, s.block, deadDn, now, pathPrefix = scope)
+    val t = measured(delete(_, "/n_7_0"))
+    val (c1, r1) = t(1)
+    val (c4, r4) = t(4)
+    val whole = countersDuring(delete(shards(4), "/").collect())
+    info(s"scoped k=1 $c1; k=4 $c4; unscoped k=4 $whole")
+    assert(r1.nonEmpty && bag(r4) == bag(r1), "rows changed with the shard count")
+    // the findings scan and the tombstone scan both prune to shard 0: the
+    // other shards add their file rows, not their block rows, ...
+    assert(c4.inputRecords - c1.inputRecords < 3 * shardBlockRows,
+      s"read other shards' block rows: $c1 vs $c4 ($shardBlockRows per shard)")
+    // ... while the unscoped call reads every shard's block rows in both
+    assert(whole.inputRecords - c4.inputRecords >= 2 * 3 * shardBlockRows,
+      s"the scope did not prune the block scans: $c4 vs $whole ($shardBlockRows per shard)")
   }
 
   test("N5 reconcileReports: same jobs, at most linear shuffle, k times each action") {

@@ -47,11 +47,18 @@ class ScenarioSpec extends SparkSpec {
     val hit = rows(StateManager.resolvePaths(file, Seq("/data/f1").toDF("path")).select(col("id")))
     assert(hit.map(_.head) == Seq(f1))
 
-    // -- BlockAllocator: choose targets, insert replica rows (incl NULL_DATANODE)
-    val topo = (1 to 4).map(i => Placement.Node(i.toLong, s"/r${i % 2}", 1L << 30, 0, "NORMAL"))
-    val targets = Placement.chooseTargets(topo, 2, Some("/r0"), blockSize = 64, seed = f1)
-    assert(targets.size == 2)
-    var block: DataFrame = (targets.map(t => (100L, t.id, -1L, 1L, f1, 1L, 20L)) :+
+    // -- BlockAllocator: choose two targets (N7 scoring over the live
+    // topology), insert replica rows (incl NULL_DATANODE)
+    val dn = (1 to 4).map(i => (i.toLong, s"dn$i", s"DS-$i", 0L, 0L, 1L << 30, 0L,
+      1L << 30, 999999L, 0L, s"/r${i % 2}", "NORMAL", i.toLong))
+      .toDF("id", "name", "storageId", "ipcPort", "infoPort", "capacity", "dfsUsed",
+        "remaining", "lastUpdated", "xceiverCount", "location", "adminState", "version")
+    val targets = rows(Placement.chooseTargetsScored(
+        Seq((f1, "/r0", 64L)).toDF("reqId", "writerRack", "blockSize"), dn, 1000000L)
+      .filter(col("slot") <= 2L).orderBy(col("slot")).select(col("datanodeId")))
+      .map(_.head.asInstanceOf[Long])
+    assert(targets.size == 2 && targets.distinct.size == 2)
+    var block: DataFrame = (targets.map(t => (100L, t, -1L, 1L, f1, 1L, 20L)) :+
       ((100L, 0L, -1L, 1L, f1, 1L, 21L)))
       .toDF("id", "datanodeId", "length", "generationStamp", "fileId", "fileIndex", "version")
 
@@ -75,18 +82,14 @@ class ScenarioSpec extends SparkSpec {
     assert(moved == Seq(Seq(f1, 0L, "f1moved")))
 
     // -- FileReplication: one replica lost → under-replicated top-k picks it
-    val lost = StateStore.delete(block, col("datanodeId") === targets.head.id)
-    val dn = topo.map(n => (n.id, s"dn${n.id}", s"DS-${n.id}", 0L, 0L, 1L << 30, 0L,
-      n.remaining, 999999L, n.xceiverCount, n.rack, n.adminState, n.id))
-      .toDF("id", "name", "storageId", "ipcPort", "infoPort", "capacity", "dfsUsed",
-        "remaining", "lastUpdated", "xceiverCount", "location", "adminState", "version")
+    val lost = StateStore.delete(block, col("datanodeId") === targets.head)
     val under = rows(Dataflows.underReplicated(lost, file.withColumn("length",
         when(col("id") === f1, 640L).otherwise(col("length"))), dn,
       nowMs = 1000000L, k = 5).select(col("blockId"), col("liveReplicaCount")))
     assert(under == Seq(Seq(100L, 1L)))
 
     // -- BlockSynchronization: genstamp bump on one replica wins
-    val diverged = StateStore.update(block, col("datanodeId") === targets.head.id,
+    val diverged = StateStore.update(block, col("datanodeId") === targets.head,
       Map("generationStamp" -> StateStore.Assign(2L),
           "length" -> StateStore.Assign(600L)), nowMs = 8L)
     val sync = rows(Dataflows.blockSynchronization(diverged)
@@ -94,11 +97,11 @@ class ScenarioSpec extends SparkSpec {
     assert(sync == Seq(Seq(100L, 2L, 600L)))
 
     // -- DatanodeReg: re-register node under new id, same storageId
-    val reg = Seq((99L, "dn99", s"DS-${targets.head.id}", 0L, 0L, 1L << 30, 0L, 1L << 30,
+    val reg = Seq((99L, "dn99", s"DS-${targets.head}", 0L, 0L, 1L << 30, 0L, 1L << 30,
       999999L, 0L, "/r0", "NORMAL", 99L))
       .toDF("id", "name", "storageId", "ipcPort", "infoPort", "capacity", "dfsUsed",
         "remaining", "lastUpdated", "xceiverCount", "location", "adminState", "version")
     val after = rows(Mutations.datanodeUpsert(dn, reg).select(col("id"))).map(_.head).toSet
-    assert(after.contains(99L) && !after.contains(targets.head.id))
+    assert(after.contains(99L) && !after.contains(targets.head))
   }
 }

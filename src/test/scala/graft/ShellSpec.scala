@@ -244,6 +244,28 @@ class ShellSpec extends SparkSpec {
     assert(sm == expect)
   }
 
+  test("fsck <path>: the report and -files cover only the subtree at the path") {
+    DerivedState.register(spark, sf)
+    def totals(args: String*) = Shell.run(spark, sf, "fsck", args)
+      .select(col("totalFiles"), col("totalDirs"), col("totalOpenFiles"))
+      .collect().head.toSeq
+    val under = StateManager.materializePaths(spark.table("file"))
+      .filter(col("path") === "/n_7" || col("path").startsWith("/n_7/"))
+    val expect = under.agg(
+      count(when(col("length") =!= -1L && col("leaseHolder").isNull, 1)),
+      count(when(col("length") === -1L, 1)),
+      count(when(col("length") =!= -1L && col("leaseHolder").isNotNull, 1)))
+      .collect().head.toSeq
+    val (scoped, whole) = (totals("/n_7"), totals())
+    assert(scoped == expect)
+    assert(scoped.zip(whole).forall { case (s0, w) => s0.asInstanceOf[Long] <= w.asInstanceOf[Long] }
+      && scoped.head.asInstanceOf[Long] < whole.head.asInstanceOf[Long], s"$scoped vs $whole")
+    val files = Shell.run(spark, sf, "fsck", Seq("-files", "/n_7")).collect().toSeq
+    val filtered = Shell.run(spark, sf, "fsck", Seq("-files"))
+      .filter(col("path") === "/n_7" || col("path").startsWith("/n_7/")).collect().toSeq
+    assert(files.nonEmpty && files == filtered)
+  }
+
   test("put writes the namenode-side block chain from a real local file; get reads the manifest") {
     DerivedState.register(spark, sf)
     // a real local file whose length spans 2 blocks at a small blockSize

@@ -7,9 +7,10 @@ A member is a `def`, `val`, `class`, `case class`, `object` or `trait`
 declared at the top level or directly inside a top-level object or class
 (indent <= 2), without `private`. Comments are stripped before matching,
 so a name that only a doc comment mentions still counts as unreferenced.
-Each row is a candidate: a main (Bench, Verify, ...) or a framework
-override is reached from outside src/main, everything else needs a gate
-entry, a cli verb or a stream == batch law to stay (ROADMAP item 7).
+An object that declares `def main(` (Bench, Verify, ...) and an `override`
+member are reached from outside src/main, so neither is listed: each row
+is a candidate that needs a gate entry, a cli verb or a stream == batch
+law to stay (ROADMAP item 7).
 """
 import os
 import re
@@ -25,6 +26,17 @@ DECL = re.compile(r"^([ \t]*)(?:(?:override|final|implicit|lazy|sealed|abstract)
                   r"(def|val|class|case class|object|trait)\s+([A-Za-z_][A-Za-z0-9_]*)")
 
 
+def declares_main(lines, i, indent):
+    """Whether the object declared on line i has a `def main(` in its body,
+    the lines up to the next non-blank line at its own indent or less."""
+    for x in lines[i + 1:]:
+        if x.strip() and len(x) - len(x.lstrip()) <= indent:
+            return False
+        if re.search(r"\bdef main\(", x):
+            return True
+    return False
+
+
 def main(root):
     code = {}
     for d, _, files in os.walk(root):
@@ -38,8 +50,12 @@ def main(root):
             m = DECL.match(line)
             if not m or "private" in line or len(m.group(1)) > 2:
                 continue
+            if "override" in line[:m.start(2)]:
+                continue
             name = m.group(3)
             if name in ("main", "apply"):
+                continue
+            if m.group(2) == "object" and declares_main(lines, i, len(m.group(1))):
                 continue
             word = re.compile(r"\b" + re.escape(name) + r"\b")
             used = any(word.search(x) for q, ls in code.items()
